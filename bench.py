@@ -552,14 +552,13 @@ def _odim_ingest(spark) -> dict:
         out["decode_files_per_sec"] = round(n_files / decode_sec)
 
         # daily job over ALL radar-days (full backfill shape)
-        days = (
-            read_vp_files(spark, glob)
-            .select(
-                F.col("radar").alias("radar_code"),
-                F.date_format("ts", "yyyyMMdd").alias("date"),
-            )
+        days = [
+            (r["radar"], r["date"])
+            for r in read_vp_files(spark, glob)
+            .select("radar", F.date_format("ts", "yyyyMMdd").alias("date"))
             .distinct()
-        )
+            .collect()
+        ]
         daily_dir = os.path.join(tmp, "daily")
         t0 = time.perf_counter()
         daily_vpts_job(

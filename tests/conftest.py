@@ -15,8 +15,13 @@ SF_SMALL = "/root/testdata/sf0.001"
 #: Regenerate after a big suite change:
 #:   pytest tests/ -q -m "" --durations=0 | awk '$1+0>=4 && $2=="call"
 #:     {print $3}' | sed 's/^tests\///' | sort -u > tests/slow_tests.txt
-with open(os.path.join(os.path.dirname(__file__), "slow_tests.txt")) as _fh:
-    _SLOW_NODE_IDS = {ln.strip() for ln in _fh if ln.strip()}
+#: A missing list marks nothing slow (the default selection is then the
+#: full suite) rather than failing collection.
+try:
+    with open(os.path.join(os.path.dirname(__file__), "slow_tests.txt")) as _fh:
+        _SLOW_NODE_IDS = {ln.strip() for ln in _fh if ln.strip()}
+except FileNotFoundError:
+    _SLOW_NODE_IDS = set()
 
 
 def pytest_collection_modifyitems(config, items):
@@ -24,8 +29,9 @@ def pytest_collection_modifyitems(config, items):
         # nodeid relative to tests/: "test_x.py::test_y[param]" — match
         # both the exact (parametrized) id and the bare function id so a
         # listed parametrization marks only itself while a listed bare id
-        # marks every parametrization
-        nodeid = item.nodeid.split("/")[-1]
+        # marks every parametrization. removeprefix, not split("/"): a "/"
+        # inside a parametrization id must not cut the id
+        nodeid = item.nodeid.removeprefix("tests/")
         bare = nodeid.split("[")[0]
         if nodeid in _SLOW_NODE_IDS or bare in _SLOW_NODE_IDS:
             item.add_marker(pytest.mark.slow)

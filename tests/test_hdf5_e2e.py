@@ -72,9 +72,7 @@ def test_daily_csv_byte_equals_reference_golden(spark, tmp_path):
 
 def test_monthly_gz_content_equals_reference_golden(spark, tmp_path):
     profiles = read_vp_files(spark, f"{VP_DIR}/*.h5")
-    days = spark.createDataFrame(
-        [("nosta", "20230311")], "radar_code string, date string"
-    )
+    days = [("nosta", "20230311")]
     daily, monthly = str(tmp_path / "daily"), str(tmp_path / "monthly")
     daily_vpts_job(spark, profiles, days, daily)
     monthly_vpts_job(spark, daily, monthly)
@@ -135,9 +133,7 @@ def test_streaming_sink_matches_batch_daily_artifacts(spark, tmp_path):
     profiles = read_vp_files(spark, f"{VP_DIR}/*.h5")
 
     batch_store = str(tmp_path / "batch")
-    days = spark.createDataFrame(
-        [("nosta", "20230311")], "radar_code string, date string"
-    )
+    days = [("nosta", "20230311")]
     daily_vpts_job(spark, profiles, days, batch_store)
 
     landing = str(tmp_path / "landing")

@@ -7,9 +7,10 @@ drives inventory-based incremental selection, ``--path-folder`` (the
 reference's ``--path-s3-folder``) recreates every radar-day under one
 subtree instead. Where the reference loops radar-days on the driver
 (download → pandas convert → upload per day), this CLI runs ONE Spark plan
-per phase: binaryFile scan of all affected days' files → daily
-partition-overwrite write → monthly rollup — then publishes the partition
-files under the reference's S3-style names
+per phase: binaryFile scan of the affected day directories → daily
+partition-overwrite write, restricted to the driver's radar-day list by a
+literal predicate → monthly rollup over the affected months' partitions —
+then publishes the partition files under the reference's S3-style names
 (``{source}/daily/{radar}/{yyyy}/{radar}_vpts_{yyyymmdd}.csv`` and
 ``{source}/monthly/{radar}/{yyyy}/{radar}_vpts_{yyyymm}.csv.gz``,
 reference: src/vptstools/s3.py:133-153).
@@ -44,11 +45,19 @@ from vptstools_spark.operators.pipeline import (
 from vptstools_spark.session import get_spark
 
 
-def _write_single_csv(df, path: str) -> None:
+def _write_single_csv(df, path: str, sort_by: str) -> None:
     """Small driver-published CSV (coverage is radar-days-sized, not data-
-    sized): one part file, renamed to the target path."""
+    sized): one part file sorted by ``sort_by``, renamed to the target path.
+    Sorting inside the one partition gives the bytes of a global ``orderBy``
+    without its range-sampling job."""
     tmp = path + "._spark_tmp"
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
+    (
+        df.coalesce(1)
+        .sortWithinPartitions(sort_by)
+        .write.mode("overwrite")
+        .option("header", "true")
+        .csv(tmp)
+    )
     part = glob.glob(os.path.join(tmp, "part-*"))[0]
     os.makedirs(os.path.dirname(os.path.abspath(path)) or ".", exist_ok=True)
     shutil.move(part, path)
@@ -120,9 +129,7 @@ def run(
             spark, manifest, modified_days_ago=modified_days_ago, now=now
         )
         click.echo("Save coverage file to S3.")
-        _write_single_csv(
-            df_cov.orderBy("directory"), os.path.join(destination, "coverage.csv")
-        )
+        _write_single_csv(df_cov, os.path.join(destination, "coverage.csv"), "directory")
 
     day_rows = days.collect()  # radar-days are driver-sized (the work list)
     click.echo(f"Create {len(day_rows)} daily VPTS files.")
@@ -133,19 +140,18 @@ def run(
     from vptstools_spark.sources.odim import read_vp_files
 
     day_dirs = [r["directory"] for r in day_rows]
-    profiles = read_vp_files(
-        spark, [os.path.join(h5_root, d, "*.h5") for d in day_dirs]
-    )
+    # the radar-day directories, not `{dir}/*.h5` globs: Spark expands a
+    # glob to one path per file and lists more than 32 paths with a parallel
+    # job of one task each; read_vp_files' pathGlobFilter keeps the .h5 files
+    profiles = read_vp_files(spark, [os.path.join(h5_root, d) for d in day_dirs])
+    # directory = source/file_type/radar/yyyy/mm/dd
     keys = []
     for d in day_dirs:
         source, _ftype, radar, yyyy, mm, dd = d.split("/")
         keys.append((source, radar, yyyy, mm, dd, f"{yyyy}{mm}{dd}"))
-    days_keys = spark.createDataFrame(
-        [(k[1], k[5]) for k in keys], "radar_code string, date string"
-    )
     daily_store = os.path.join(destination, "_daily_store")
     monthly_store = os.path.join(destination, "_monthly_store")
-    daily_vpts_job(spark, profiles, days_keys, daily_store)
+    daily_vpts_job(spark, profiles, [(k[1], k[5]) for k in keys], daily_store)
 
     n_daily = 0
     for source, radar, yyyy, mm, dd, ymd in keys:

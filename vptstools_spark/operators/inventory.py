@@ -9,7 +9,7 @@ Catalyst's HashAggregate(partial) → exchange → HashAggregate(final).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vptstools_spark.functions.paths import directory_col, with_parsed_inventory
@@ -65,35 +65,45 @@ def parse_inventory(df: DataFrame, on_malformed: str = "error") -> DataFrame:
     raise ValueError(f"on_malformed must be error|drop|keep, got {on_malformed!r}")
 
 
-def coverage(df_parsed: DataFrame) -> DataFrame:
+def coverage(df_parsed: DataFrame, recent: Column | None = None) -> DataFrame:
     """Files per radar-day A1/A2 (reference: src/vptstools/s3.py:243-260,
     338-366). Catalyst emits partial+final hash aggregation automatically —
-    the reference's chunk-accumulate-concat-regroup pattern is free here."""
+    the reference's chunk-accumulate-concat-regroup pattern is free here.
+    With ``recent``, the same aggregate also counts the rows that predicate
+    accepts, as ``recent_count``."""
+    counts = {"file_count": F.count("*")}
+    if recent is not None:
+        counts["recent_count"] = F.count_if(recent)
     return (
         df_parsed.groupBy(*GROUP_COLS)
-        .agg(F.count("*").alias("file_count"))
+        .agg(*[c.alias(name) for name, c in counts.items()])
         .select(
             directory_col(*[F.col(c) for c in GROUP_COLS]).alias("directory"),
-            "file_count",
+            *counts,
         )
     )
 
 
-def modified_window(df_parsed: DataFrame, days: int, now=None) -> DataFrame:
+def modified_since(days: int, now=None) -> Column:
     """Modified-window predicate F2 (reference: src/vptstools/s3.py:228-240):
-    keep rows whose `modified` falls within the lookback window. `now` is an
-    explicit timestamp for deterministic tests (defaults to current time)."""
+    true for rows whose `modified` falls within the lookback window. `now`
+    is an explicit timestamp for deterministic tests (defaults to current
+    time)."""
     now_col = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
-    return df_parsed.filter(
-        F.col("modified") > now_col - F.make_interval(days=F.lit(days))
-    )
+    return F.col("modified") > now_col - F.make_interval(days=F.lit(days))
+
+
+def modified_window(df_parsed: DataFrame, days: int, now=None) -> DataFrame:
+    """Keep the rows of ``df_parsed`` that ``modified_since`` accepts."""
+    return df_parsed.filter(modified_since(days, now))
 
 
 def days_to_create_vpts(df_parsed: DataFrame, days: int, now=None) -> DataFrame:
     """Radar-days needing (re)derivation A3 (reference: src/vptstools/s3.py:368-382):
     group-count of the window-filtered subset. This is the incremental
-    partition-selection input — at scale, this tiny result broadcasts into a
-    semi-join against the file listing."""
+    partition-selection input: it is radar-days-sized, so callers collect
+    it and hand the day list to ``pipeline.daily_vpts_job`` as a literal
+    predicate."""
     return coverage(modified_window(df_parsed, days, now))
 
 
@@ -141,6 +151,12 @@ def handle_manifest(
     aggregates the WHOLE inventory; days_to_create_vpts group-counts only
     the files modified inside the lookback window.
 
+    Both come from ONE per-radar-day aggregate, ``count(*)`` next to
+    ``count_if(modified_since)``, materialized once with
+    ``localCheckpoint``: the inventory is gzip-scanned and regex-parsed once,
+    not once per result. Both frames are projections of that
+    radar-days-sized checkpoint.
+
     ``key_to_path`` maps a manifest key to a readable path (production: an
     s3:// URL; tests: the fixture directory) — same dependency-injection
     seam as operators/transfer.py.
@@ -151,4 +167,8 @@ def handle_manifest(
     resolve = key_to_path or (lambda k: os.path.join(root, os.path.basename(k)))
     paths = [resolve(k) for k in list_manifest_file_keys(manifest_path)]
     parsed = parse_inventory(read_inventory(spark, paths))
-    return coverage(parsed), days_to_create_vpts(parsed, modified_days_ago, now)
+    per_day = coverage(parsed, modified_since(modified_days_ago, now)).localCheckpoint()
+    days = per_day.filter(F.col("recent_count") > 0).select(
+        "directory", F.col("recent_count").alias("file_count")
+    )
+    return per_day.select("directory", "file_count"), days

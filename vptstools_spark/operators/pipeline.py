@@ -15,16 +15,12 @@ import json
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vptstools_spark.operators.inventory import (
-    GROUP_COLS,
-    days_to_create_vpts,
-    parse_inventory,
-    select_affected_files,
-)
+from vptstools_spark.functions.scalars import sql_in_strings
+from vptstools_spark.operators.inventory import days_to_create_vpts, parse_inventory
 from vptstools_spark.operators.vpts import to_vpts_table
 from vptstools_spark.schemas import get_vpts_version
 
@@ -50,28 +46,39 @@ def resolve_source_file(path: str, transform: str | Callable[[str], str] | None)
     return str(transform)
 
 
+def radar_day_filter(days: list[tuple[str, str]]) -> Column:
+    """True for profile rows whose content radar and ``yyyyMMdd`` date form
+    one of the ``(radar, yyyymmdd)`` pairs in ``days``: one literal ``IN``
+    over ``radar/yyyymmdd`` keys, built in one JVM call however long the
+    list is."""
+    return sql_in_strings(
+        "concat_ws('/', radar, date_format(ts, 'yyyyMMdd'))",
+        sorted({f"{radar}/{date}" for radar, date in days}),
+    )
+
+
 def daily_vpts_job(
     spark: SparkSession,
     profiles: DataFrame,
-    days_df: DataFrame,
+    days: list[tuple[str, str]],
     output_path: str,
     vpts_csv_version: str = "v1.0",
 ) -> None:
     """Daily phase (reference bin/vph5_to_vpts.py:153-202): restrict profiles
-    to affected radar-days (broadcast semi-join), project to VPTS, write
-    hive-partitioned by (radar, date) with dynamic partition overwrite.
+    to the affected radar-days, project to VPTS, write hive-partitioned by
+    (radar, date) with dynamic partition overwrite.
+
+    ``days`` is the driver's ``(radar, yyyymmdd)`` work list. Rows whose
+    content radar or date falls outside it are dropped by one literal
+    predicate (``radar_day_filter``, which starts no Spark job), so dynamic
+    overwrite can never replace another day's partition.
 
     Where the reference loops radar-days on the driver (download → fork →
     convert → upload per day), this is ONE plan over all affected days; Spark
     schedules per-partition tasks, and only the recomputed partitions are
     replaced."""
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    keyed = profiles.withColumn("date", F.date_format("ts", "yyyyMMdd"))
-    days_keys = days_df.select(
-        F.col("radar_code").alias("radar"), F.col("date")
-    ).distinct()
-    affected = keyed.join(F.broadcast(days_keys), on=["radar", "date"], how="left_semi")
-    table = to_vpts_table(affected.drop("date"), vpts_csv_version)
+    table = to_vpts_table(profiles.filter(radar_day_filter(days)), vpts_csv_version)
     # re-derive partition cols from the rendered table (radar + yyyymmdd)
     out = table.withColumn(
         "p_radar", F.col("radar")
@@ -95,10 +102,20 @@ def daily_vpts_job(
 
 #: all-string read of daily VPTS CSVs, preserving tri-state text exactly
 #: (reference S7: bin/vph5_to_vpts.py:230-240 — dtype=str, no NA parsing)
-def read_daily_csv_string_preserving(spark: SparkSession, path: str | list[str]) -> DataFrame:
+def read_daily_csv_string_preserving(
+    spark: SparkSession, path: str | list[str], months: list[str] | None = None
+) -> DataFrame:
+    """``months`` (``yyyymm``) restricts a partitioned daily store to those
+    months' ``p_date=`` directories, so Spark lists and reads only them."""
     spec = get_vpts_version("v1.0")
     schema = T.StructType([T.StructField(c, T.StringType(), True) for c in spec.columns])
     df = spark.read.schema(schema).option("header", "true").csv(path)
+    if months:
+        # a predicate on the partition column alone prunes directories; it
+        # must run before the projection below drops p_date
+        df = df.filter(
+            sql_in_strings("substring(CAST(p_date AS STRING), 1, 6)", months)
+        )
     # NaN/Inf-looking text stays literal under the all-string schema, but
     # unquoted empty fields surface as NULL from the CSV parser - restore
     # them to "": in VPTS CSV the empty string IS the nodata value, not SQL
@@ -114,19 +131,14 @@ def monthly_vpts_job(
     months: list[str] | None = None,
 ) -> None:
     """Monthly phase (reference bin/vph5_to_vpts.py:204-250): re-read the
-    affected months' daily CSVs string-preserving, union, re-sort, write
-    gzip CSV partitioned by (radar, month) with dynamic overwrite."""
+    affected months' daily CSVs string-preserving (only their partitions
+    are read), union, re-sort, write gzip CSV partitioned by (radar, month)
+    with dynamic overwrite."""
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spec = get_vpts_version("v1.0")
-    df = read_daily_csv_string_preserving(spark, daily_path)
-    # partition discovery appends p_radar/p_date dir columns — keep only the
-    # normative 26 before re-partitioning by month
-    df = df.select(*[c for c in df.columns if c in spec.columns])
+    df = read_daily_csv_string_preserving(spark, daily_path, months)
     df = df.withColumn("p_radar", F.col("radar")).withColumn(
         "p_month", F.regexp_replace(F.substring("datetime", 1, 7), "-", "")
     )
-    if months:
-        df = df.filter(F.col("p_month").isin(months))
     (
         df.repartition("p_radar", "p_month")
         # partition cols lead the sort: the partitioned-file writer requires
@@ -181,14 +193,14 @@ def incremental_run(
     Returns the days_to_create_vpts frame (what was recomputed)."""
     parsed = parse_inventory(inventory_df)
     days = days_to_create_vpts(parsed, modified_days_ago, now)
-    parts = F.split(F.col("directory"), "/")
-    days_keys = days.select(
-        *[F.element_at(parts, i + 1).alias(c) for i, c in enumerate(GROUP_COLS)]
-    ).withColumn("date", F.concat("year", "month", "day"))
-    daily_vpts_job(spark, profiles, days_keys, os.path.join(output_root, "daily"))
-    months = sorted(
-        {r["year"] + r["month"] for r in days_keys.select("year", "month").distinct().collect()}
+    # directory = source/file_type/radar/yyyy/mm/dd; the day list is
+    # driver-sized, collected once for both phases
+    keys = [r["directory"].split("/")[2:] for r in days.select("directory").collect()]
+    daily_vpts_job(
+        spark, profiles, [(radar, y + m + d) for radar, y, m, d in keys],
+        os.path.join(output_root, "daily"),
     )
+    months = sorted({y + m for _radar, y, m, _d in keys})
     monthly_vpts_job(
         spark, os.path.join(output_root, "daily"), os.path.join(output_root, "monthly"), months
     )

@@ -550,13 +550,16 @@ def _read_filters(f: _File, pos: int) -> list[tuple[int, tuple[int, ...]]]:
         raise H5FormatError(f"unsupported filter pipeline version {version}")
     for _ in range(nfilters):
         fid = f.read_uint(p, 2)
-        name_len = f.read_uint(p + 2, 2)
-        ncdv = f.read_uint(p + 6, 2)
-        p += 8
-        if version == 1:
-            p += _pad8(name_len)
+        if version == 2 and fid < 256:
+            # v2 has no Name Length (and no name) for the predefined
+            # filters: id, flags, number of values
+            ncdv = f.read_uint(p + 4, 2)
+            p += 6
         else:
-            p += name_len if fid >= 256 else 0
+            # id, name length, flags, number of values; v1 pads the name to 8
+            name_len = f.read_uint(p + 2, 2)
+            ncdv = f.read_uint(p + 6, 2)
+            p += 8 + (_pad8(name_len) if version == 1 else name_len)
         cdata = tuple(f.read_uint(p + 4 * i, 4) for i in range(ncdv))
         p += 4 * ncdv
         if version == 1 and ncdv % 2 == 1:
