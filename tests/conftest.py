@@ -1,11 +1,22 @@
 import datetime
+import importlib.util
 import os
+from dataclasses import dataclass
 
 import pytest
 
 from vptstools_spark.schemas import STATE_NODATA, STATE_UNDETECT, STATE_VALUE
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+#: the benchmark's seeded ODIM VP writer and its plain-Python VPTS CSV
+#: oracle; perfbench/ is not a package, so the module is loaded by path
+_spec = importlib.util.spec_from_file_location(
+    "odim_fleet",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "odim_fleet.py"),
+)
+odim_fleet = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(odim_fleet)
 
 #: Node ids of the exhaustive walks / full-registry sweeps / property
 #: batteries that put the full suite past the grading driver's window
@@ -43,6 +54,69 @@ def spark():
 
     spark = get_spark("vptstools_spark_tests", shuffle_partitions=8)
     yield spark
+
+
+@dataclass(frozen=True)
+class VpCase:
+    """A directory of ODIM VP files and what a scan of it must return."""
+
+    path: str  #: directory the ``odim`` source loads (recursively)
+    scan: list[str]  #: the same files, as ``read_vp_files`` paths
+    radar_files: dict[str, int]
+    radar_rows: dict[str, int]
+
+
+_FLEET_PER_DAY = 3
+
+
+@pytest.fixture(scope="session")
+def vp_fleet(tmp_path_factory) -> VpCase:
+    """A seeded fleet (``perfbench/odim_fleet.py``), 2 radars x 1 day x
+    ``_FLEET_PER_DAY`` files, with expectations taken from its oracle."""
+    root = str(tmp_path_factory.mktemp("vp_fleet"))
+    oracle = odim_fleet.write_fleet(
+        root, seed=11, n_radars=2, days=[datetime.date(2023, 5, 1)], per_day=_FLEET_PER_DAY
+    )
+    files: dict[str, int] = {}
+    rows: dict[str, int] = {}
+    for rel, lines in oracle["days"].items():
+        radar = rel.split("/")[2]
+        files[radar] = files.get(radar, 0) + _FLEET_PER_DAY
+        rows[radar] = rows.get(radar, 0) + len(lines)
+    assert sum(files.values()) == oracle["files"]
+    return VpCase(
+        path=root,
+        scan=[os.path.join(root, rel) for rel in sorted(oracle["days"])],
+        radar_files=files,
+        radar_rows=rows,
+    )
+
+
+@pytest.fixture(
+    params=[
+        # the string condition is evaluated in the test module, which
+        # names the reference's VP directory as VP_DIR
+        pytest.param(
+            "reference",
+            marks=pytest.mark.skipif(
+                "not os.path.isdir(VP_DIR)", reason="reference fixtures unavailable"
+            ),
+        ),
+        "fleet",
+    ],
+)
+def vp_case(request, vp_fleet) -> VpCase:
+    """The reference's 6 VP files (radars bejab and bewid) where present,
+    and the seeded fleet everywhere."""
+    if request.param == "fleet":
+        return vp_fleet
+    vp_dir = request.module.VP_DIR
+    return VpCase(
+        path=vp_dir,
+        scan=[f"{vp_dir}/*/*.h5", f"{vp_dir}/*/*/*/*/*.h5"],
+        radar_files={"bejab": 5, "bewid": 1},
+        radar_rows={"bejab": 125, "bewid": 25},
+    )
 
 
 def make_profile_record(

@@ -1,7 +1,8 @@
 """Spark 4 Python Data Source face of the ODIM byte path:
 `spark.read.format("odim")` and SQL `USING odim` must produce the same
-typed long-format rows as the binaryFile+mapInPandas scan
-(`sources/odim.py:read_vp_files`) over the reference's real .h5 files."""
+typed long-format rows as the binaryFile+mapInArrow scan
+(`sources/odim.py:read_vp_files`), over the reference's real .h5 files
+where present and over a seeded fleet (`vp_case` in conftest) everywhere."""
 
 from __future__ import annotations
 
@@ -24,20 +25,18 @@ def _key(r):
     return (r.radar, r.ts, r.height, r.source_file.rsplit("/", 1)[-1])
 
 
-def test_load_recursive_directory(spark):
-    df = spark.read.format("odim").load(VP_DIR)
+def test_load_recursive_directory(spark, vp_case):
+    df = spark.read.format("odim").load(vp_case.path)
     rows = df.collect()
-    assert len(rows) == 150  # 6 files x 25 levels
-    assert {r.radar for r in rows} == {"bejab", "bewid"}
+    assert len(rows) == sum(vp_case.radar_rows.values())  # files x 25 levels
+    assert {r.radar for r in rows} == set(vp_case.radar_rows)
 
 
-def test_matches_binaryfile_scan(spark):
+def test_matches_binaryfile_scan(spark, vp_case):
     from vptstools_spark.sources.odim import read_vp_files
 
-    ds = spark.read.format("odim").load(VP_DIR)
-    bf = read_vp_files(spark, f"{VP_DIR}/*/*.h5").unionByName(
-        read_vp_files(spark, f"{VP_DIR}/*/*/*/*/*.h5")
-    )
+    ds = spark.read.format("odim").load(vp_case.path)
+    bf = read_vp_files(spark, vp_case.scan)
     a = sorted(ds.collect(), key=_key)
     b = sorted(bf.collect(), key=_key)
     assert len(a) == len(b)
@@ -46,23 +45,24 @@ def test_matches_binaryfile_scan(spark):
     assert [r.ff for r in a] == [r.ff for r in b]
 
 
-def test_sql_using_odim(spark):
+def test_sql_using_odim(spark, vp_case):
     spark.sql(
         "CREATE OR REPLACE TEMPORARY VIEW vp_ds "
-        f"USING odim OPTIONS (path '{VP_DIR}')"
+        f"USING odim OPTIONS (path '{vp_case.path}')"
     )
     out = spark.sql(
         "SELECT radar, COUNT(*) AS n FROM vp_ds GROUP BY radar ORDER BY radar"
     ).collect()
-    assert [(r.radar, r.n) for r in out] == [("bejab", 125), ("bewid", 25)]
+    assert [(r.radar, r.n) for r in out] == sorted(vp_case.radar_rows.items())
 
 
-def test_partition_packing(spark):
+def test_partition_packing(spark, vp_case):
     from vptstools_spark.sources.odim_datasource import OdimReader
 
-    r = OdimReader({"path": VP_DIR, "files_per_task": 2})
+    n = sum(vp_case.radar_files.values())
+    r = OdimReader({"path": vp_case.path, "files_per_task": 2})
     parts = r.partitions()
-    assert [len(p.paths) for p in parts] == [2, 2, 2]
+    assert [len(p.paths) for p in parts] == [2] * (n // 2) + [1] * (n % 2)
 
 
 def test_on_error_fail_raises(spark, tmp_path):
@@ -75,35 +75,37 @@ def test_on_error_fail_raises(spark, tmp_path):
     assert spark.read.format("odim").load(str(tmp_path)).count() == 0
 
 
-def test_filter_pushdown_prunes_files(spark):
-    """radar = 'bewid' prunes the bejab files at planning time (5 of 6
-    files never opened) and still returns correct rows."""
+def test_filter_pushdown_prunes_files(spark, vp_case):
+    """radar = <the radar with fewest files> prunes every other radar's
+    files at planning time (reference: 5 of 6 files never opened) and
+    still returns correct rows."""
     from pyspark.sql import functions as F
 
+    radar = min(vp_case.radar_files, key=vp_case.radar_files.get)
     df = (
         spark.read.format("odim")
         .option("files_per_task", 1)
         .option("pushdown", "true")
-        .load(VP_DIR)
-        .filter(F.col("radar") == "bewid")
+        .load(vp_case.path)
+        .filter(F.col("radar") == radar)
     )
     rows = df.collect()
-    assert len(rows) == 25 and {r.radar for r in rows} == {"bewid"}
-    # the executed plan fans out over 1 pruned file, not 6
+    assert len(rows) == vp_case.radar_rows[radar] and {r.radar for r in rows} == {radar}
+    # the executed plan fans out over the pruned files only, one task each
     n_tasks = df.rdd.getNumPartitions()
-    assert n_tasks == 1
+    assert n_tasks == vp_case.radar_files[radar]
 
 
-def test_filter_pushdown_is_partial_not_contractual(spark):
+def test_filter_pushdown_is_partial_not_contractual(spark, vp_case):
     """The pushed filter is also re-evaluated by Spark (partial pushdown):
     a filter on a non-filename column still works unpruned."""
     from pyspark.sql import functions as F
 
-    df = spark.read.format("odim").load(VP_DIR).filter(F.col("height") == 0)
-    assert df.count() == 6  # one level-0 row per file
+    df = spark.read.format("odim").load(vp_case.path).filter(F.col("height") == 0)
+    assert df.count() == sum(vp_case.radar_files.values())  # one level-0 row per file
 
 
-def test_stream_reader_incremental_ingest(spark, tmp_path):
+def test_stream_reader_incremental_ingest(spark, vp_case, tmp_path):
     """spark.readStream.format('odim'): first availableNow batch ingests the
     initial files; files landing later are picked up by a subsequent run
     from the same checkpoint WITHOUT reprocessing the old ones (filename-
@@ -112,7 +114,7 @@ def test_stream_reader_incremental_ingest(spark, tmp_path):
     import os
     import shutil
 
-    src_files = sorted(glob.glob(f"{VP_DIR}/**/*.h5", recursive=True))
+    src_files = sorted(glob.glob(f"{vp_case.path}/**/*.h5", recursive=True))
     assert len(src_files) >= 4
     land = tmp_path / "land"
     land.mkdir()

@@ -1,0 +1,64 @@
+"""One per-file failure policy for both ODIM faces, binaryFile
+``read_vp_files`` and the ``odim`` DataSource: a day directory holding a
+truncated and a random-bytes ``.h5`` next to good files written by the
+benchmark's fleet writer, so it needs no reference fixtures."""
+
+import datetime as dt
+import os
+import random
+
+import pytest
+
+from tests.conftest import odim_fleet
+from vptstools_spark.sources.odim import read_vp_files
+
+FACES = ["read_vp_files", "odim"]
+
+
+@pytest.fixture(scope="module")
+def bad_day(spark, tmp_path_factory):
+    """-> (fleet root, day directory, good file names, good files' rows)."""
+    from vptstools_spark.sources.odim_datasource import OdimDataSource
+
+    spark.dataSource.register(OdimDataSource)
+    root = str(tmp_path_factory.mktemp("bad_day"))
+    oracle = odim_fleet.write_fleet(root, seed=23, n_radars=1, days=[dt.date(2023, 6, 1)], per_day=4)
+    ((rel, lines),) = oracle["days"].items()
+    day = os.path.join(root, rel)
+    good = sorted(os.listdir(day))
+    with open(os.path.join(day, good[0]), "rb") as fh:
+        content = fh.read()
+    with open(os.path.join(day, "zz_truncated.h5"), "wb") as fh:
+        fh.write(content[: len(content) // 2])
+    with open(os.path.join(day, "zz_random.h5"), "wb") as fh:
+        fh.write(random.Random(23).randbytes(len(content)))
+    return root, day, good, len(lines)
+
+
+def _scan(spark, face: str, root: str, day: str, on_error: str):
+    if face == "read_vp_files":
+        return read_vp_files(spark, day, on_error=on_error)
+    return spark.read.format("odim").option("on_error", on_error).load(root)
+
+
+def test_warn_skips_corrupt_files_in_both_faces_alike(spark, bad_day):
+    root, day, good, n_rows = bad_day
+    got = {face: sorted(map(tuple, _scan(spark, face, root, day, "warn").collect())) for face in FACES}
+    for face in FACES:
+        assert len(got[face]) == n_rows, face
+        assert {r[0] for r in got[face]} == set(good), face
+    assert got["read_vp_files"] == got["odim"]
+
+
+@pytest.mark.parametrize("face", FACES)
+def test_fail_aborts_on_corrupt_file(spark, bad_day, face):
+    root, day, _good, _n = bad_day
+    with pytest.raises(Exception, match="parse_odim_bytes"):
+        _scan(spark, face, root, day, "fail").collect()
+
+
+@pytest.mark.parametrize("face", FACES)
+def test_unknown_on_error_is_rejected_at_plan_time(spark, bad_day, face):
+    root, day, _good, _n = bad_day
+    with pytest.raises(Exception, match="on_error must be one of"):
+        _scan(spark, face, root, day, "skip")

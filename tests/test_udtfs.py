@@ -31,18 +31,18 @@ def test_chunk_text_matches_jvm_operator(spark):
     assert sorted(map(tuple, via_sql.collect())) == sorted(map(tuple, via_op.collect()))
 
 
-def test_parse_odim_matches_datasource(spark):
+def test_parse_odim_matches_datasource(spark, vp_case):
     from vptstools_spark.sources.odim_datasource import OdimDataSource
 
     spark.dataSource.register(OdimDataSource)
-    files = sorted(glob.glob(f"{VP_DIR}/**/*.h5", recursive=True))
+    files = sorted(glob.glob(f"{vp_case.path}/**/*.h5", recursive=True))
     spark.createDataFrame([(p,) for p in files], "path string").createOrReplaceTempView(
         "udtf_files"
     )
     via_sql = spark.sql("SELECT p.* FROM udtf_files f, LATERAL parse_odim(f.path) p")
-    via_ds = spark.read.format("odim").load(VP_DIR)
-    assert via_sql.columns == via_ds.columns
+    via_ds = spark.read.format("odim").load(vp_case.path)
+    assert via_sql.schema == via_ds.schema  # nullability included
     key = ["source_file", "ts", "height"]
     a = sorted(map(tuple, via_sql.select(*key).collect()))
     b = sorted(map(tuple, via_ds.select(*key).collect()))
-    assert a == b and len(a) == 150
+    assert a == b and len(a) == sum(vp_case.radar_rows.values())

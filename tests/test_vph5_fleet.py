@@ -6,21 +6,14 @@ byte-level oracle."""
 
 import datetime as dt
 import gzip
-import importlib.util
 import json
 import os
 
 import pytest
 
+from tests.conftest import odim_fleet
 from vptstools_spark.bin.vph5_to_vpts import run
 from vptstools_spark.operators.pipeline import read_daily_csv_string_preserving
-
-_spec = importlib.util.spec_from_file_location(
-    "odim_fleet",
-    os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "odim_fleet.py"),
-)
-odim_fleet = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(odim_fleet)
 
 #: two days across a month boundary: every radar gets two monthly files
 DAYS = [dt.date(2023, 3, 31), dt.date(2023, 4, 1)]

@@ -10,7 +10,7 @@ Public API mirrors the reference's four entry points
 - :func:`validate_vpts` — schema-conformance check of a VPTS DataFrame
 
 Everything is expressed as Spark DataFrame plans (Catalyst-optimizable); the
-only imperative code is the per-file HDF5 parse inside ``mapInPandas``.
+only imperative code is the per-file HDF5 parse (``sources.odim.decode_files``).
 
 Engine extensions (training-data pipeline surface) are exported lazily:
 ``curate_corpus`` (end-to-end corpus curation), ``run_suite`` (declarative

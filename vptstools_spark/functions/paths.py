@@ -93,41 +93,6 @@ def directory_col(*cols: Column) -> Column:
     return F.concat_ws("/", *cols)
 
 
-def radar_from_code(radar_code: Column) -> dict[str, Column]:
-    """country = first 2 chars, radar = last 3
-    (reference: src/vptstools/s3.py:124-131)."""
-    return {
-        "country": F.substring(radar_code, 1, 2),
-        "radar": F.substring(radar_code, 3, 3),
-    }
-
-
-def daily_vpts_key(source: Column, radar_code: Column, year: Column, month: Column, day: Column) -> Column:
-    """`{source}/daily/{radar}/{yyyy}/{radar}_vpts_{yyyymmdd}.csv`
-    (reference: src/vptstools/s3.py:133-143)."""
-    return F.concat_ws(
-        "/",
-        source,
-        F.lit("daily"),
-        radar_code,
-        year,
-        F.concat(radar_code, F.lit("_vpts_"), year, month, day, F.lit(".csv")),
-    )
-
-
-def monthly_vpts_key(source: Column, radar_code: Column, year: Column, month: Column) -> Column:
-    """`{source}/monthly/{radar}/{yyyy}/{radar}_vpts_{yyyymm}.csv.gz`
-    (reference: src/vptstools/s3.py:145-153)."""
-    return F.concat_ws(
-        "/",
-        source,
-        F.lit("monthly"),
-        radar_code,
-        year,
-        F.concat(radar_code, F.lit("_vpts_"), year, month, F.lit(".csv.gz")),
-    )
-
-
 def with_parsed_inventory(df: DataFrame, file_col: str = "file") -> DataFrame:
     """Attach all path-derived columns to an inventory DataFrame in one select
     (single projection → Catalyst column pruning decides what survives)."""

@@ -6,8 +6,9 @@ function).
 These are ergonomic faces, not perf paths: a Python UDTF evaluates
 row-at-a-time on executors. The scale paths remain the all-JVM operators
 (`operators/pretrain.py:chunk_documents` — sequence/posexplode/substr) and
-the Arrow-batched sources (`sources/odim.py:read_vp_files`,
-`sources/odim_datasource.py`). Parity tests pin the faces to the fast
+the Arrow-batched ODIM sources, binaryFile+mapInArrow `read_vp_files` and
+the `odim` DataSource, which share one decode loop
+(`sources/odim.py:decode_files`). Parity tests pin the faces to the fast
 paths so they can't drift.
 
 Usage:
@@ -21,20 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql.functions import udtf
 
-#: long-format profile schema as a DDL string (UDTF returnType)
-_PROFILE_DDL = (
-    "source_file string, radar string, ts timestamp, height int, "
-    "u double, u__state tinyint, v double, v__state tinyint, "
-    "w double, w__state tinyint, ff double, ff__state tinyint, "
-    "dd double, dd__state tinyint, sd_vvp double, sd_vvp__state tinyint, "
-    "gap boolean, eta double, eta__state tinyint, dens double, "
-    "dens__state tinyint, dbz double, dbz__state tinyint, dbz_all double, "
-    "dbz_all__state tinyint, n bigint, n__state tinyint, n_dbz bigint, "
-    "n_dbz__state tinyint, n_all bigint, n_all__state tinyint, "
-    "n_dbz_all bigint, n_dbz_all__state tinyint, rcs double, "
-    "sd_vvp_threshold double, vcp string, radar_latitude double, "
-    "radar_longitude double, radar_height int, radar_wavelength double"
-)
+from vptstools_spark.schemas import profile_long_schema
 
 
 @udtf(returnType="chunk_id int, chunk_start int, chunk_text string")
@@ -52,15 +40,14 @@ class ChunkText:
             yield i, start + 1, s[start : start + chunk_size]
 
 
-@udtf(returnType=_PROFILE_DDL)
+@udtf(returnType=profile_long_schema())
 class ParseOdim:
     """LATERAL parse_odim(path): one ODIM HDF5 VP file → N typed long-format
     rows — the reference's conversion (BirdProfile.from_odim + explode,
-    src/vptstools/vpts.py:138-177) as a SQL table function. Column order
-    matches `schemas.profile_long_schema`."""
+    src/vptstools/vpts.py:138-177) as a SQL table function, typed by
+    `schemas.profile_long_schema` like the other ODIM faces."""
 
     def eval(self, path: str):
-        from vptstools_spark.schemas import profile_long_schema
         from vptstools_spark.sources.odim import parse_odim_bytes
 
         cols = [f.name for f in profile_long_schema().fields]

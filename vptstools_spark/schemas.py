@@ -217,12 +217,3 @@ def inventory_schema() -> T.StructType:
         ]
     )
 
-
-def coverage_schema() -> T.StructType:
-    """Coverage aggregate output (reference: src/vptstools/s3.py:363-366)."""
-    return T.StructType(
-        [
-            T.StructField("directory", T.StringType(), False),
-            T.StructField("file_count", T.LongType(), False),
-        ]
-    )

@@ -24,8 +24,8 @@ API mirrors the h5py subset the ODIM decode layer uses: ``H5File(data)``,
 ``group.keys()``, ``dataset[()]`` → numpy array, ``dataset.dtype``.
 
 Everything here runs executor-side on small in-memory byte strings (VP
-files are ~25 KB); Spark parallelism comes from the binaryFile scan in
-``sources.odim.read_vp_files``, one file per row.
+files are ~25 KB), inside ``sources.odim.decode_files``, the per-file decode
+loop that both ODIM faces (``read_vp_files`` and ``format("odim")``) share.
 """
 
 from __future__ import annotations
@@ -663,3 +663,10 @@ class H5File(H5Group):
         if f.root_addr is None:
             raise H5FormatError("undefined root group address")
         super().__init__(f, f.root_addr, "/")
+
+    # ``with`` shape of h5py.File; in-memory bytes hold no OS resource
+    def __enter__(self) -> H5File:
+        return self
+
+    def __exit__(self, *exc) -> bool:
+        return False

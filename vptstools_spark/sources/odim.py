@@ -8,8 +8,11 @@ array per quantity with per-array gain/offset/nodata/undetect attributes.
 Spark shape: ``spark.read.format("binaryFile")`` over ``*.h5`` (binary scan —
 HDF5 is not splittable, but binaryFile packs MANY small files into one task
 via files.maxPartitionBytes, which solves the small-file problem at 100 TB
-scale) → Arrow-batched ``mapInPandas`` parse, one input file-row → N typed
-long-format rows (the engine's one real UDTF, SURVEY §2.9).
+scale) → ``mapInArrow`` over ``decode_files``, one input file-row → N typed
+long-format rows (the engine's one real UDTF, SURVEY §2.9). ``decode_files``
+is the one per-file decode loop: the ``format("odim")`` DataSource
+(sources/odim_datasource.py) runs it too, so both faces share one failure
+policy (``on_error``: warn | fail).
 
 The HDF5 byte layer prefers h5py when installed and otherwise uses the
 bundled pure-Python reader (sources/hdf5.py — public HDF5 format spec, no
@@ -21,8 +24,9 @@ vpts.py:48-66) are pure functions tested independently of either backend.
 from __future__ import annotations
 
 import io
-from collections.abc import Iterable, Iterator
-from typing import Any
+import warnings
+from collections.abc import Callable, Iterable, Iterator
+from typing import TYPE_CHECKING, Any
 
 import numpy as np
 import pandas as pd
@@ -35,6 +39,9 @@ from vptstools_spark.schemas import (
     V1_QUANTITIES,
     profile_long_schema,
 )
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 class InvalidSourceODIM(ValueError):
@@ -83,20 +90,6 @@ def _parse_source_identifiers(source: str) -> dict[str, str]:
     return dict(item.split(":", 1) for item in source.split(",") if ":" in item)
 
 
-class _H5Handle:
-    """Context-manager wrapper so h5py.File and the pure reader share a
-    ``with`` shape (the pure reader holds no OS resources to release)."""
-
-    def __init__(self, h5):
-        self._h5 = h5
-
-    def __enter__(self):
-        return self._h5
-
-    def __exit__(self, *exc):
-        return False
-
-
 def _open_h5(content: bytes):
     """Open ODIM bytes with h5py when present, else the bundled pure-Python
     reader. Both expose the subset used here: ``[path]``, ``.attrs``,
@@ -108,7 +101,7 @@ def _open_h5(content: bytes):
     except ImportError:
         from vptstools_spark.sources.hdf5 import H5File  # noqa: PLC0415
 
-        return _H5Handle(H5File(content))
+        return H5File(content)
 
 
 def parse_odim_bytes(name: str, content: bytes, source_file: str | None = None) -> list[dict]:
@@ -213,52 +206,76 @@ def _as_float(v: Any) -> float | None:
         return None
 
 
+#: files per Arrow record batch (~25 rows/file ⇒ ~6.4k rows/batch):
+#: bounds executor memory while amortizing the Arrow conversion
+BATCH_FILES = 256
+
+
+def check_on_error(on_error: str) -> None:
+    """Plan-time check of ``decode_files``' failure policy value."""
+    if on_error not in ("warn", "fail"):
+        raise ValueError(f"on_error must be one of ('warn', 'fail'), got {on_error!r}")
+
+
+def decode_files(
+    files: Iterable[tuple[str, Callable[[], bytes]]],
+    on_error: str,
+    source_file: str | None = None,
+) -> Iterator["pa.RecordBatch"]:
+    """Decode ``(path, read)`` pairs, ``read()`` returning the file's bytes,
+    into Arrow record batches of ``profile_long_schema()`` — the one
+    executor-side decode loop behind ``read_vp_files`` and the ``odim``
+    DataSource readers.
+
+    Failure policy, per file (reference warn-and-continue,
+    src/vptstools/bin/vph5_to_vpts.py:198-200): under ``on_error='warn'`` a
+    file that cannot be read or parsed is skipped with a warning naming its
+    path and the exception; under ``'fail'`` the exception aborts the task.
+    """
+    import pyarrow as pa  # noqa: PLC0415 — executor-side
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    schema = to_arrow_schema(profile_long_schema())
+    rows: list[dict] = []
+    for n, (path, read) in enumerate(files, 1):
+        try:
+            rows.extend(parse_odim_bytes(path, read(), source_file))
+        except Exception as exc:  # per-file boundary: the scan goes on under warn
+            if on_error == "fail":
+                raise
+            warnings.warn(f"skipping unreadable ODIM file {path}: {exc!r}")
+        if n % BATCH_FILES == 0 and rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
+            rows = []
+    if rows:
+        yield pa.RecordBatch.from_pylist(rows, schema=schema)
+
+
 def read_vp_files(
     spark: SparkSession,
     path: str | list[str],
     source_file: str | None = None,
     on_error: str = "warn",
 ) -> DataFrame:
-    """Scan ODIM HDF5 VP files into the typed long-format profile DataFrame.
-
-    ``binaryFile`` scan → ``mapInPandas`` h5py parse. Per-file failure policy
-    mirrors the reference's warn-and-continue
-    (src/vptstools/bin/vph5_to_vpts.py:198-200): ``on_error='warn'`` drops the
-    bad file, ``'fail'`` aborts the job.
-    """
-    schema = profile_long_schema()
+    """Scan ODIM HDF5 VP files into the typed long-format profile DataFrame:
+    ``binaryFile`` scan → ``mapInArrow`` over ``decode_files``, with its
+    per-file failure policy (``on_error``: warn | fail)."""
+    check_on_error(on_error)
     binary = spark.read.format("binaryFile").option("pathGlobFilter", "*.h5").load(path)
 
-    def parse(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for _, file_row in pdf.iterrows():
-                try:
-                    out.extend(
-                        parse_odim_bytes(file_row["path"], file_row["content"], source_file)
-                    )
-                except InvalidSourceODIM:
-                    if on_error == "fail":
-                        raise
-            yield _rows_to_pdf(out, schema)
+    def parse(batches: Iterable["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        files = (
+            (p, lambda c=c: c)
+            for b in batches
+            for p, c in zip(b.column("path").to_pylist(), b.column("content").to_pylist())
+        )
+        return decode_files(files, on_error, source_file)
 
-    return binary.select("path", "content").mapInPandas(parse, schema=schema)
+    return binary.select("path", "content").mapInArrow(parse, schema=profile_long_schema())
 
 
 def profiles_from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
     """Build the long-format profile DataFrame from pre-decoded row dicts —
     the h5py-free entry used by tests and by any upstream that already
     landed decoded profiles (e.g. parquet)."""
-    schema = profile_long_schema()
-    return spark.createDataFrame(_rows_to_pdf(records, schema), schema=schema)
-
-
-def _rows_to_pdf(rows: list[dict], schema) -> pd.DataFrame:
-    cols = [f.name for f in schema.fields]
-    if not rows:
-        return pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
-    pdf = pd.DataFrame(rows)
-    for c in cols:
-        if c not in pdf.columns:
-            pdf[c] = None
-    return pdf[cols]
+    return spark.createDataFrame(records, schema=profile_long_schema())

@@ -4,19 +4,20 @@
     df = spark.read.format("odim").load("/data/vp/*.h5")
 
 This is the DataSource-API face of the same byte path `read_vp_files`
-drives through binaryFile+mapInPandas (`sources/odim.py:216`): file
-listing and partition *planning* happen on the driver, parsing happens on
-executors, and Spark sees a first-class source with the long-format
-profile schema — usable from SQL (`CREATE TABLE ... USING odim`) and
-composable with every downstream operator.
+drives through binaryFile+mapInArrow: file listing and partition
+*planning* happen on the driver, parsing happens on executors in the same
+decode loop (`sources/odim.py:decode_files`), and Spark sees a first-class
+source with the long-format profile schema — usable from SQL
+(`CREATE TABLE ... USING odim`) and composable with every downstream
+operator.
 
 Scale notes (100 TB of ~25 KB VP files):
 - `partitions()` packs the file list into `ceil(n_files / files_per_task)`
   input partitions — the DataSource-API equivalent of binaryFile's
   `files.maxPartitionBytes` packing; only file PATHS travel in the plan.
 - each task reads its files independently (no driver I/O after planning);
-  per-file failures follow the reference's warn-and-continue policy
-  (`on_error` option: warn | fail).
+  per-file failures follow `decode_files`' policy, the same as
+  `read_vp_files` (`on_error` option: warn | fail, checked at `.load()`).
 - the parser is the h5py-or-pure-Python byte reader (`sources/hdf5.py`),
   so the source works in containers without native HDF5 libraries.
 """
@@ -25,8 +26,9 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-import warnings
 from collections.abc import Iterator
+from pathlib import Path
+from typing import TYPE_CHECKING
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -38,6 +40,10 @@ from pyspark.sql.datasource import (
 )
 
 from vptstools_spark.schemas import profile_long_schema
+from vptstools_spark.sources.odim import check_on_error, decode_files
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 #: memory ceiling on files per input partition — ~25 KB VP files ⇒
 #: ~50 MB per task at the cap
@@ -68,45 +74,6 @@ def auto_files_per_task(n_files: int) -> int:
     cores = int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
     per_core = -(-n_files // max(cores, 1))  # ceil
     return max(MIN_FILES_PER_TASK, min(per_core, MAX_FILES_PER_TASK))
-
-
-def _arrow_batches(paths: list[str], on_error: str, batch_files: int):
-    """Parse ODIM files into Arrow record batches (one per `batch_files`
-    files, ~25 rows/file): executor-side body shared by the batch and
-    streaming DataSource readers. Per-file failures warn-and-continue
-    (reference policy) unless on_error='fail'."""
-    # executor-side imports: keep the planning path light
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from vptstools_spark.sources.odim import _rows_to_pdf, parse_odim_bytes
-
-    schema = profile_long_schema()
-    arrow_schema = to_arrow_schema(schema)
-    rows: list[dict] = []
-    n_files = 0
-    for p in paths:
-        try:
-            with open(p, "rb") as fh:
-                rows.extend(parse_odim_bytes(p, fh.read()))
-        except Exception as exc:  # per-file isolation, like read_vp_files
-            if on_error == "fail":
-                raise
-            warnings.warn(f"skipping unreadable ODIM file {p}: {exc}")
-            continue
-        n_files += 1
-        if n_files % batch_files == 0 and rows:
-            # Arrow-batch yield (Spark 4 DataSource API): one columnar batch
-            # per file chunk instead of per-row Python tuples — same batching
-            # as the binaryFile+mapInPandas perf path
-            yield pa.RecordBatch.from_pandas(
-                _rows_to_pdf(rows, schema), schema=arrow_schema, preserve_index=False
-            )
-            rows = []
-    if rows:
-        yield pa.RecordBatch.from_pandas(
-            _rows_to_pdf(rows, schema), schema=arrow_schema, preserve_index=False
-        )
 
 
 def pruned_files_after(
@@ -217,12 +184,8 @@ class OdimReader(DataSourceReader):
             OdimFilesPartition(files[i : i + n]) for i in range(0, len(files), n)
         ] or [OdimFilesPartition([])]
 
-    #: files per Arrow record batch (~25 rows/file ⇒ ~6.4k rows/batch):
-    #: bounds executor memory while amortizing the Arrow conversion
-    ARROW_BATCH_FILES = 256
-
     def read(self, partition: OdimFilesPartition) -> Iterator["pa.RecordBatch"]:
-        return _arrow_batches(partition.paths, self.on_error, self.ARROW_BATCH_FILES)
+        return decode_files(((p, Path(p).read_bytes) for p in partition.paths), self.on_error)
 
 
 class OdimPushdownReader(OdimReader):
@@ -255,7 +218,7 @@ class OdimStreamReader(DataSourceStreamReader):
     the offset stays O(1) regardless of history (unlike a processed-file
     set). Each micro-batch covers the files that sorted after the previous
     watermark; `partitions()` packs them per task exactly like the batch
-    reader, and `read()` reuses the shared Arrow-batch parser. Listing is
+    reader, and `read()` runs the shared decode loop (`decode_files`). Listing is
     watermark-pruned (round 4): each trigger walks only the directory
     subtrees that can sort after the current offset (`pruned_files_after`)
     and finds the new offset by descending the greatest-sorting chain
@@ -305,10 +268,8 @@ class OdimStreamReader(DataSourceStreamReader):
             OdimFilesPartition(files[i : i + n]) for i in range(0, len(files), n)
         ]
 
-    def read(self, partition: OdimFilesPartition):
-        return _arrow_batches(
-            partition.paths, self.on_error, OdimReader.ARROW_BATCH_FILES
-        )
+    def read(self, partition: OdimFilesPartition) -> Iterator["pa.RecordBatch"]:
+        return decode_files(((p, Path(p).read_bytes) for p in partition.paths), self.on_error)
 
     def commit(self, end: dict) -> None:
         # nothing to clean up: the watermark in the checkpoint is the state
@@ -316,6 +277,11 @@ class OdimStreamReader(DataSourceStreamReader):
 
 
 class OdimDataSource(DataSource):
+    def __init__(self, options: dict):
+        # built for .load(), batch or stream: a bad policy fails there
+        super().__init__(options)
+        check_on_error(self.options.get("on_error", "warn"))
+
     @classmethod
     def name(cls) -> str:
         return "odim"
