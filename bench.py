@@ -566,7 +566,7 @@ def _odim_ingest(spark) -> dict:
         )
         out["daily_job_sec"] = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        monthly_vpts_job(spark, daily_dir, os.path.join(tmp, "monthly"))
+        monthly_vpts_job(daily_dir, os.path.join(tmp, "monthly"))
         out["monthly_job_sec"] = round(time.perf_counter() - t0, 3)
         out["e2e_files_per_sec"] = round(
             n_files

@@ -191,6 +191,25 @@ def test_incremental_lsh_rejects_cross_run_neardups(spark, tmp_path):
     assert [r.doc_id for r in a1.collect()] == [12]
 
 
+def test_incremental_lsh_empty_first_batch(spark, tmp_path):
+    """A statically empty first batch (empty local relation, ``limit(0)``)
+    reports zero counts instead of failing to read its Observation, and the
+    registry it leaves admits the next batch as a first one."""
+    from vptstools_spark.operators.dedup import incremental_lsh_dedup
+
+    zeros = dict.fromkeys(
+        ["n_batch", "n_seen_ids", "n_candidate_pairs", "n_rejected", "n_admitted"], 0
+    )
+    docs = [(1, "alpha beta gamma delta epsilon zeta"), (2, "alpha beta gamma delta epsilon zeta")]
+    for i, empty in enumerate([_ilsh_docs(spark, []), _ilsh_docs(spark, docs).limit(0)]):
+        reg = str(tmp_path / f"reg{i}")
+        a, r = incremental_lsh_dedup(spark, reg, empty)
+        assert r == zeros and a.count() == 0
+    a, r = incremental_lsh_dedup(spark, reg, _ilsh_docs(spark, docs))
+    assert (r["n_rejected"], r["n_admitted"]) == (1, 1)
+    assert [row.doc_id for row in a.collect()] == [1]
+
+
 def test_incremental_lsh_replay_admits_nothing(spark, tmp_path):
     from vptstools_spark.operators.dedup import incremental_lsh_dedup
 

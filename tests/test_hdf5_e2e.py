@@ -75,7 +75,7 @@ def test_monthly_gz_content_equals_reference_golden(spark, tmp_path):
     days = [("nosta", "20230311")]
     daily, monthly = str(tmp_path / "daily"), str(tmp_path / "monthly")
     daily_vpts_job(spark, profiles, days, daily)
-    monthly_vpts_job(spark, daily, monthly)
+    monthly_vpts_job(daily, monthly)
     parts = glob.glob(f"{monthly}/p_radar=nosta/p_month=202303/*.csv.gz")
     assert len(parts) == 1
     # gzip container bytes differ (mtime/os); the decompressed CSV must not

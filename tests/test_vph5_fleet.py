@@ -5,6 +5,7 @@ h5py, no reference fixtures). Its plain-Python VPTS CSV rendering is the
 byte-level oracle."""
 
 import datetime as dt
+import glob
 import gzip
 import json
 import os
@@ -13,10 +14,11 @@ import pytest
 
 from tests.conftest import odim_fleet
 from vptstools_spark.bin.vph5_to_vpts import run
-from vptstools_spark.operators.pipeline import read_daily_csv_string_preserving
+from vptstools_spark.operators.pipeline import monthly_vpts_job
 
-#: two days across a month boundary: every radar gets two monthly files
-DAYS = [dt.date(2023, 3, 31), dt.date(2023, 4, 1)]
+#: three days across a month boundary: every radar gets two monthly files,
+#: and March holds two days
+DAYS = [dt.date(2023, 3, 30), dt.date(2023, 3, 31), dt.date(2023, 4, 1)]
 PER_DAY = 4
 
 
@@ -24,7 +26,7 @@ PER_DAY = 4
 def fleet(tmp_path_factory):
     root = str(tmp_path_factory.mktemp("fleet"))
     oracle = odim_fleet.write_fleet(root, seed=7, n_radars=2, days=DAYS, per_day=PER_DAY)
-    assert oracle["files"] == 16
+    assert oracle["files"] == 24
     return root, oracle
 
 
@@ -61,7 +63,7 @@ def _expect(dest: str, oracle: dict, day_dirs: list[str]) -> None:
                 assert fh.read() == "\n".join([header, *lines]) + "\n", path
 
 
-def test_path_folder_run_matches_oracle_in_six_jobs(spark, fleet, tmp_path):
+def test_path_folder_run_matches_oracle_in_four_jobs(spark, fleet, tmp_path):
     h5_root, oracle = fleet
     dest = str(tmp_path / "dest")
     result, jobs = _jobs_in_group(
@@ -69,11 +71,11 @@ def test_path_folder_run_matches_oracle_in_six_jobs(spark, fleet, tmp_path):
         lambda: run(path_folder="baltrad", h5_root=h5_root, destination=dest, spark=spark),
     )
     assert sorted(result["days"]) == sorted(oracle["days"])
-    assert (result["daily"], result["monthly"]) == (4, 4)
+    assert (result["daily"], result["monthly"]) == (6, 4)
     _expect(dest, oracle, list(oracle["days"]))
-    # coverage 2, daily 2 (decode/render stage + write), monthly 2: no
+    # coverage 2, daily 2 (decode/render stage + write), monthly none: no
     # file-listing job and no distinct/broadcast of the day list
-    assert jobs <= 6, f"{jobs} Spark jobs"
+    assert jobs <= 4, f"{jobs} Spark jobs"
 
 
 def test_manifest_run_recomputes_window_days_and_coverage(spark, fleet, tmp_path):
@@ -83,6 +85,13 @@ def test_manifest_run_recomputes_window_days_and_coverage(spark, fleet, tmp_path
     h5_root, oracle = fleet
     dest = str(tmp_path / "dest")
     run(path_folder="baltrad", h5_root=h5_root, destination=dest, spark=spark)
+    march = {}
+    published = os.path.join(dest, "baltrad", "monthly", "*", "2023", "*_202303.csv.gz")
+    stored = os.path.join(dest, "_monthly_store", "*", "p_month=202303", "*")
+    for path in glob.glob(published) + glob.glob(stored):
+        with open(path, "rb") as fh:
+            march[path] = (os.stat(path).st_mtime_ns, fh.read())
+    assert len(march) == 4  # per radar: the published file and the store's part
 
     inv = tmp_path / "inventory"
     inv.mkdir()
@@ -115,11 +124,52 @@ def test_manifest_run_recomputes_window_days_and_coverage(spark, fleet, tmp_path
             f"{d},{PER_DAY}\n" for d in sorted(oracle["days"])
         )
     # one inventory scan into a checkpointed per-day aggregate (2), the
-    # coverage write and the day collect from it (2), daily 2, monthly 2
-    assert jobs <= 8, f"{jobs} Spark jobs"
-    # the monthly re-read scans only the affected month's daily partitions
-    # (one file per radar-day): 2 of the store's 4 files
-    store = read_daily_csv_string_preserving(spark, os.path.join(dest, "_daily_store"), ["202304"])
-    assert {r["datetime"][:7] for r in store.collect()} == {"2023-04"}
-    scan = store._jdf.queryExecution().executedPlan().collectLeaves().head()
-    assert scan.metrics().apply("numFiles").value() == 2
+    # coverage write and the day collect from it (2), daily 2, monthly none
+    assert jobs <= 6, f"{jobs} Spark jobs"
+    # the untouched month is neither re-joined nor republished
+    for path, (mtime, data) in march.items():
+        assert os.stat(path).st_mtime_ns == mtime, path
+        with open(path, "rb") as fh:
+            assert fh.read() == data, path
+
+
+def test_rerun_of_a_months_earlier_day_keeps_date_order(spark, fleet, tmp_path):
+    """Recomputing only the first day of a two-day month rewrites that
+    day's daily partition last; the monthly file still lists the days in
+    date order, as the oracle does."""
+    h5_root, oracle = fleet
+    dest = str(tmp_path / "dest")
+    run(path_folder="baltrad", h5_root=h5_root, destination=dest, spark=spark)
+    first = sorted(d for d in oracle["days"] if d.endswith("2023/03/30"))[0]
+    result = run(path_folder=first, h5_root=h5_root, destination=dest, spark=spark)
+    assert result["days"] == [first] and (result["daily"], result["monthly"]) == (1, 1)
+    radar = first.split("/")[2]
+    store = os.path.join(dest, "_daily_store", f"p_radar={radar}")
+    written = {
+        day: os.stat(glob.glob(os.path.join(store, f"p_date={day}", "*.csv"))[0]).st_mtime_ns
+        for day in ("20230330", "20230331")
+    }
+    assert written["20230330"] > written["20230331"]
+    _expect(dest, oracle, [first])
+
+
+def _daily_part(store: str, day: str, name: str, text: str) -> None:
+    os.makedirs(os.path.join(store, "p_radar=abcde", f"p_date={day}"), exist_ok=True)
+    with open(os.path.join(store, "p_radar=abcde", f"p_date={day}", name), "w") as fh:
+        fh.write(text)
+
+
+def test_monthly_join_rejects_split_partitions_and_header_mismatch(tmp_path):
+    header = odim_fleet.CSV_HEADER + "\n"
+    split = str(tmp_path / "split")
+    _daily_part(split, "20230301", "part-00000-a.c000.csv", header)
+    _daily_part(split, "20230301", "part-00001-b.c000.csv", header)
+    with pytest.raises(ValueError, match="2 part files"):
+        monthly_vpts_job(split, str(tmp_path / "out"))
+
+    mixed = str(tmp_path / "mixed")
+    _daily_part(mixed, "20230301", "part-00000.csv", header)
+    _daily_part(mixed, "20230302", "part-00000.csv", "radar,datetime\n")
+    with pytest.raises(ValueError, match="header differs"):
+        monthly_vpts_job(mixed, str(tmp_path / "out"))
+    assert not os.path.exists(tmp_path / "out")  # checked before any write

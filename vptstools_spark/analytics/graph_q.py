@@ -21,23 +21,6 @@ _PR_ITERS = 3
 _PR_DAMPING = 0.85
 
 
-def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
-    o = table(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
-    # distinct on the INT key pair, label-concat after: the dedup shuffle
-    # then carries 16 bytes/row instead of two strings (same result —
-    # prefixed concat is injective on the key pair)
-    return (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-    )
-
-
 def _trade_edges_int(spark: SparkSession, sf: str) -> DataFrame:
     """Distinct (customer, supplier) trade edges on INT node ids:
     customer c → node 2c, supplier s → node 2s+1 (bijective to the

@@ -7,17 +7,20 @@ drives inventory-based incremental selection, ``--path-folder`` (the
 reference's ``--path-s3-folder``) recreates every radar-day under one
 subtree instead. Where the reference loops radar-days on the driver
 (download → pandas convert → upload per day), this CLI runs ONE Spark plan
-per phase: binaryFile scan of the affected day directories → daily
+for the daily phase: binaryFile scan of the affected day directories → daily
 partition-overwrite write, restricted to the driver's radar-day list by a
-literal predicate → monthly rollup over the affected months' partitions —
-then publishes the partition files under the reference's S3-style names
-(``{source}/daily/{radar}/{yyyy}/{radar}_vpts_{yyyymmdd}.csv`` and
-``{source}/monthly/{radar}/{yyyy}/{radar}_vpts_{yyyymm}.csv.gz``,
+literal predicate. The monthly phase starts no Spark job: it joins each
+affected month's daily files in date order under one header into a gzip
+CSV. The run then publishes the partition files under the reference's
+S3-style names (``{source}/daily/{radar}/{yyyy}/{radar}_vpts_{yyyymmdd}.csv``
+and ``{source}/monthly/{radar}/{yyyy}/{radar}_vpts_{yyyymm}.csv.gz``,
 reference: src/vptstools/s3.py:133-153).
 
 Storage roots come from environment variables (the reference reads bucket
-names the same way; here they are filesystem URIs, so any Hadoop-supported
-store works — local paths in tests, ``s3a://`` buckets in production):
+names the same way). Spark reads the inventory and the HDF5 files, so any
+Hadoop-supported URI works for those. The destination must be a local
+directory, since the monthly join and the publish step use local file I/O
+(``--path-folder`` also lists the HDF5 tree locally):
 
 - ``VPTS_MANIFEST``: inventory manifest JSON (reference ``INVENTORY_BUCKET``)
 - ``VPTS_H5_ROOT``: root of the HDF5 tree the inventory keys point into
@@ -168,9 +171,7 @@ def run(
 
     months = sorted({(s, r, y, m) for s, r, y, m, _d, _ymd in keys})
     click.echo(f"Create {len(months)} monthly VPTS files.")
-    monthly_vpts_job(
-        spark, daily_store, monthly_store, [f"{y}{m}" for _s, _r, y, m in months]
-    )
+    monthly_vpts_job(daily_store, monthly_store, [f"{y}{m}" for _s, _r, y, m in months])
     n_monthly = 0
     for source, radar, yyyy, mm in months:
         target = os.path.join(

@@ -22,11 +22,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from vptstools_spark.operators.dedup import (
     lsh_candidates,
     minhash_signatures,
+    observed_counts,
     shingles,
 )
 from vptstools_spark.operators.graph import connected_components
@@ -57,8 +58,6 @@ def curate_corpus(
     keeps the smallest id per duplicate component (the component label IS
     the min reachable id).
     """
-    from pyspark.sql import Observation
-
     text, did = F.col(text_col), F.col(id_col)
 
     # The first three funnel counts are per-row predicates over the RAW
@@ -106,12 +105,10 @@ def curate_corpus(
     # The raw-corpus funnel counts were collected by the Observation
     # during the d_exact checkpoint above (obs.get blocks until that
     # action's metrics arrive — it already ran). An empty corpus yields
-    # null sums: report zeros, not nulls. The 1-row head frame is built
-    # JVM-side (range), never via createDataFrame's pickled partitions.
-    m = obs.get
-    n_input = int(m["n_input"] or 0)
-    n_lang = int(m["n_lang"] or 0)
-    n_qual = int(m["n_qual"] or 0)
+    # zeros. The 1-row head frame is built JVM-side (range), never via
+    # createDataFrame's pickled partitions.
+    m = observed_counts(obs, ["n_input", "n_lang", "n_qual"])
+    n_input, n_lang, n_qual = m["n_input"], m["n_lang"], m["n_qual"]
     head = docs.sparkSession.range(0, 1, 1, 1).select(
         F.expr(
             f"stack(3, 0, 'input', CAST({n_input} AS BIGINT), "

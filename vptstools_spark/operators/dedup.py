@@ -14,10 +14,23 @@ Scale design notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from vptstools_spark.operators.text import fingerprint, tokens
+
+
+def observed_counts(obs: Observation, names: list[str]) -> dict[str, int]:
+    """The integer metrics ``names`` of ``obs`` once its first action has
+    run, null sums read as 0. When the plan is statically empty (an empty
+    local relation, ``limit(0)``, ``filter("false")``), empty-relation
+    propagation can remove the ``CollectMetrics`` node: the observation then
+    holds a schemaless row, which ``Observation.get`` cannot convert, and
+    every count is 0."""
+    if obs._jo.getRow().schema() is None:
+        return dict.fromkeys(names, 0)
+    row = obs.get
+    return {n: int(row[n] or 0) for n in names}
 
 
 def exact_dedup_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -898,8 +911,6 @@ def incremental_lsh_dedup(
     # listener), but the checkpoint itself is LAZY so its count() both
     # materializes the cache and answers n_after_replay in ONE job (the
     # r9 sssp/graph-loop pattern).
-    from pyspark.sql import Observation
-
     have_registry = bool(_list_versions(spark, bands_path))
     bands_old = None
     obs = None
@@ -1008,7 +1019,7 @@ def incremental_lsh_dedup(
     if n_after_replay is None:
         # no-registry path: the pair count above materialized the shingle
         # cache over the observed batch, so the submitted count is ready
-        n_submitted = int(obs.get["n"])
+        n_submitted = observed_counts(obs, ["n"])["n"]
         n_after_replay = n_submitted
     verified = jaccard_verify_hashed(hashed_all, pairs, threshold)
     # min-id dominance: the larger side of any verified pair is rejected

@@ -2,17 +2,23 @@
 reference's `vph5_to_vpts` CLI (src/vptstools/bin/vph5_to_vpts.py:59-251).
 
 Reference shape: inventory → modified radar-days → per-day download+convert →
-daily CSV → per-month concat → monthly gzip CSV. Spark shape: the same
-semantics as three declarative jobs with *partition-granularity idempotence*
-(SURVEY §2.8): a radar-day is always recomputed whole and overwritten
-atomically (`partitionOverwriteMode=dynamic`), which makes re-runs and
-late-arriving files exactly-once-by-idempotence — no row-level upsert state.
+daily CSV → per-month concat → monthly gzip CSV. Spark shape: the inventory
+and daily phases are declarative Spark jobs; the monthly phase is the
+reference's ordered concat, a local-file join of each month's daily files
+in date order (no Spark job). Both write with *partition-granularity
+idempotence* (SURVEY §2.8): a radar-day or radar-month is always recomputed
+whole and replaced (`partitionOverwriteMode=dynamic` for the daily store, an
+`os.replace` for the monthly one), which makes re-runs and late-arriving
+files exactly-once-by-idempotence — no row-level upsert state.
 """
 
 from __future__ import annotations
 
+import glob
+import gzip
 import json
 import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -102,20 +108,10 @@ def daily_vpts_job(
 
 #: all-string read of daily VPTS CSVs, preserving tri-state text exactly
 #: (reference S7: bin/vph5_to_vpts.py:230-240 — dtype=str, no NA parsing)
-def read_daily_csv_string_preserving(
-    spark: SparkSession, path: str | list[str], months: list[str] | None = None
-) -> DataFrame:
-    """``months`` (``yyyymm``) restricts a partitioned daily store to those
-    months' ``p_date=`` directories, so Spark lists and reads only them."""
+def read_daily_csv_string_preserving(spark: SparkSession, path: str | list[str]) -> DataFrame:
     spec = get_vpts_version("v1.0")
     schema = T.StructType([T.StructField(c, T.StringType(), True) for c in spec.columns])
     df = spark.read.schema(schema).option("header", "true").csv(path)
-    if months:
-        # a predicate on the partition column alone prunes directories; it
-        # must run before the projection below drops p_date
-        df = df.filter(
-            sql_in_strings("substring(CAST(p_date AS STRING), 1, 6)", months)
-        )
     # NaN/Inf-looking text stays literal under the all-string schema, but
     # unquoted empty fields surface as NULL from the CSV parser - restore
     # them to "": in VPTS CSV the empty string IS the nodata value, not SQL
@@ -124,37 +120,50 @@ def read_daily_csv_string_preserving(
     return df.select(*[F.coalesce(F.col(c), F.lit("")).alias(c) for c in spec.columns])
 
 
-def monthly_vpts_job(
-    spark: SparkSession,
-    daily_path: str,
-    output_path: str,
-    months: list[str] | None = None,
-) -> None:
-    """Monthly phase (reference bin/vph5_to_vpts.py:204-250): re-read the
-    affected months' daily CSVs string-preserving (only their partitions
-    are read), union, re-sort, write gzip CSV partitioned by (radar, month)
-    with dynamic overwrite."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df = read_daily_csv_string_preserving(spark, daily_path, months)
-    df = df.withColumn("p_radar", F.col("radar")).withColumn(
-        "p_month", F.regexp_replace(F.substring("datetime", 1, 7), "-", "")
-    )
-    (
-        df.repartition("p_radar", "p_month")
-        # partition cols lead the sort: the partitioned-file writer requires
-        # rows clustered by partition values and would otherwise re-sort by
-        # them alone, destroying the data order
-        .sortWithinPartitions(
-            "p_radar", "p_month", "radar", "datetime", F.col("height").cast("int"), "source_file"
-        )
-        .write.mode("overwrite")
-        .partitionBy("p_radar", "p_month")
-        .option("header", "true")
-        .option("emptyValue", "")
-        .option("nullValue", "")
-        .option("compression", "gzip")
-        .csv(output_path)
-    )
+def monthly_vpts_job(daily_path: str, output_path: str, months: list[str] | None = None) -> None:
+    """Monthly phase (reference bin/vph5_to_vpts.py:204-250): for each
+    ``(p_radar, month)`` of the daily store whose ``yyyymm`` is in ``months``
+    (every month when None), join the month's daily part files in date order
+    under the first file's header into ``p_radar=…/p_month=yyyymm/`` as gzip
+    CSV, replacing that partition whole. Starts no Spark job.
+
+    A daily partition is one radar-day written sorted by (radar, datetime,
+    height::int, source_file), and days are disjoint in ``datetime``, so date
+    order of the files is the VPTS sort order; data lines are copied
+    unchanged. Raises ValueError unless each daily partition holds exactly
+    one part file with the same header as the month's first."""
+    headers: dict[tuple[str, str], bytes] = {}
+    by_month: dict[tuple[str, str], list[str]] = {}
+    for day_dir in sorted(glob.glob(os.path.join(daily_path, "p_radar=*", "p_date=*"))):
+        radar_dir, date_dir = day_dir.split(os.sep)[-2:]
+        month = date_dir.removeprefix("p_date=")[:6]
+        if months is not None and month not in months:
+            continue
+        parts = glob.glob(os.path.join(day_dir, "*.csv"))
+        if len(parts) != 1:
+            raise ValueError(f"daily partition {day_dir} holds {len(parts)} part files, not 1")
+        with open(parts[0], "rb") as fh:
+            header = fh.readline()
+        key = (radar_dir, month)
+        if headers.setdefault(key, header) != header:
+            raise ValueError(f"{parts[0]}: header differs from {by_month[key][0]}")
+        by_month.setdefault(key, []).append(parts[0])
+    # every precondition holds before the first partition is replaced
+    for (radar_dir, month), days in by_month.items():
+        out_dir = os.path.join(output_path, radar_dir, f"p_month={month}")
+        os.makedirs(out_dir, exist_ok=True)
+        tmp = os.path.join(out_dir, ".part-00000.csv.gz.tmp")
+        # mtime=0 and no file name: the same daily files give the same bytes
+        with open(tmp, "wb") as raw, gzip.GzipFile("", "wb", 6, raw, mtime=0) as out:
+            out.write(headers[radar_dir, month])
+            for day in days:
+                with open(day, "rb") as src:
+                    src.readline()
+                    shutil.copyfileobj(src, out)
+        os.replace(tmp, os.path.join(out_dir, "part-00000.csv.gz"))
+        for name in os.listdir(out_dir):
+            if name != "part-00000.csv.gz":
+                os.remove(os.path.join(out_dir, name))
 
 
 def write_descriptor(path: str, vpts_csv_version: str = "v1.0") -> str:
@@ -202,7 +211,7 @@ def incremental_run(
     )
     months = sorted({y + m for _radar, y, m, _d in keys})
     monthly_vpts_job(
-        spark, os.path.join(output_root, "daily"), os.path.join(output_root, "monthly"), months
+        os.path.join(output_root, "daily"), os.path.join(output_root, "monthly"), months
     )
     write_descriptor(output_root)
     return days

@@ -139,18 +139,6 @@ def register_table_branch(
     return name
 
 
-def register_table_tag(
-    spark: SparkSession, path: str, tag: str, name: str
-) -> str:
-    """Tag reads' SQL face (`plans/branches.py:read_tag`): a named pinned
-    snapshot as a temp view — the durable cousin of
-    `register_table_as_of` (tagged versions survive retention sweeps)."""
-    from vptstools_spark.plans.branches import read_tag
-
-    read_tag(spark, path, tag).createOrReplaceTempView(name)
-    return name
-
-
 def register_metadata_tables(
     spark: SparkSession, path: str, prefix: str
 ) -> list[str]:

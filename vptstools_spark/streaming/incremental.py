@@ -434,26 +434,6 @@ def incremental_rollup_sink(
     )
 
 
-def run_available_now(
-    df: DataFrame,
-    sink_format: str,
-    path: str,
-    checkpoint: str,
-    output_mode: str = "append",
-) -> StreamingQuery:
-    """Cron-style one-shot streaming run (process everything available, then
-    stop) — the Trigger.AvailableNow equivalent of the reference's scheduled
-    CLI invocations (transfer_baltrad.py:80-82)."""
-    return (
-        df.writeStream.format(sink_format)
-        .option("checkpointLocation", checkpoint)
-        .option("path", path)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def cdc_merge_sink(
     cdc_stream: DataFrame,
     target_path: str,
