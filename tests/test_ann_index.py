@@ -16,6 +16,15 @@ def _corpus(spark, n=64, dim=4):
     )
 
 
+def _mark_appended(spark, path, n_base, n_appended):
+    """Sidecar state of an index whose last `n_appended` vectors were
+    encoded with a model fitted on the first `n_base`."""
+    from vptstools_spark.operators.ann_index import _read_model, _write_model
+
+    model = _read_model(spark, path)
+    _write_model(spark, path, {**model, "n_base": n_base, "n_appended": n_appended})
+
+
 def test_index_search_equals_inline_ivfpq(spark, tmp_path):
     from vptstools_spark.operators.ann_index import (
         build_ivfpq_index,
@@ -60,67 +69,12 @@ def test_index_scan_prunes_unprobed_cells(spark, tmp_path):
     assert df.count() == 3
 
 
-def test_incremental_append_equals_rebuild(spark, tmp_path):
-    """Two delta batches appended with the frozen model must search
-    IDENTICALLY to a full rebuild over base+deltas with the same model."""
-    from vptstools_spark.operators.ann_index import (
-        append_ivfpq_index,
-        build_ivfpq_index,
-        search_ivfpq_index,
-    )
-    from vptstools_spark.operators.similarity import kmeans_fit, pq_fit
-
-    full = _corpus(spark, n=96)
-    base = full.filter(F.col("vec_id") < 64)
-    delta1 = full.filter((F.col("vec_id") >= 64) & (F.col("vec_id") < 80))
-    delta2 = full.filter(F.col("vec_id") >= 80)
-    queries = _corpus(spark, n=8)
-    anchors = kmeans_fit(base, k=4, iters=1)
-    books = pq_fit(base, m=2, k=4, iters=1)
-
-    inc_path = str(tmp_path / "inc")
-    build_ivfpq_index(base, inc_path, anchors, books)
-    s1 = append_ivfpq_index(delta1, inc_path)
-    s2 = append_ivfpq_index(delta2, inc_path)
-
-    rebuilt_path = str(tmp_path / "rebuilt")
-    build_ivfpq_index(full, rebuilt_path, anchors, books)
-
-    got = search_ivfpq_index(spark, inc_path, queries, k=5, nprobe=2).collect()
-    want = search_ivfpq_index(spark, rebuilt_path, queries, k=5, nprobe=2).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-
-    # sidecar staleness bookkeeping
-    assert (s1["n_appended"], s2["n_appended"]) == (16, 32)
-    assert s2["n_base"] == 64
-    assert s2["stale_fraction"] == 32 / 96
-
-
-def test_append_upserts_same_cell_id(spark, tmp_path):
-    """Re-appending an existing vec_id replaces its row (no duplicates)."""
-    from vptstools_spark.operators.ann_index import (
-        append_ivfpq_index,
-        build_ivfpq_index,
-    )
-    from vptstools_spark.operators.similarity import kmeans_fit, pq_fit
-
-    base = _corpus(spark, n=32)
-    anchors = kmeans_fit(base, k=4, iters=1)
-    books = pq_fit(base, m=2, k=4, iters=1)
-    path = str(tmp_path / "up")
-    build_ivfpq_index(base, path, anchors, books)
-    append_ivfpq_index(base.filter(F.col("vec_id") < 8), path)
-    idx = spark.read.parquet(f"{path}/index")
-    assert idx.count() == 32
-    assert idx.groupBy("n_id").count().filter("count > 1").count() == 0
-
-
 def test_optimize_table_auto_rebuilds_stale_ann_index(spark, tmp_path):
-    """VERDICT r4 #6: appends push stale_fraction over the threshold →
-    optimize_table re-fits + rebuilds and search equals a fresh full
-    build; below threshold → index untouched (no-op)."""
+    """VERDICT r4 #6: vectors encoded with a frozen model push
+    stale_fraction over the threshold → optimize_table re-fits + rebuilds
+    and search equals a fresh full build; below threshold → index
+    untouched (no-op)."""
     from vptstools_spark.operators.ann_index import (
-        append_ivfpq_index,
         build_ivfpq_index,
         index_stale_fraction,
         search_ivfpq_index,
@@ -130,7 +84,6 @@ def test_optimize_table_auto_rebuilds_stale_ann_index(spark, tmp_path):
 
     full = _corpus(spark, n=96)
     base = full.filter(F.col("vec_id") < 64)
-    delta = full.filter(F.col("vec_id") >= 64)
     queries = _corpus(spark, n=6)
     anchors = kmeans_fit(base, k=4, iters=1)
     books = pq_fit(base, m=2, k=4, iters=1)
@@ -155,13 +108,16 @@ def test_optimize_table_auto_rebuilds_stale_ann_index(spark, tmp_path):
     )
     assert after == before
 
-    # append a third of the corpus -> 33% stale -> rebuild at 20% threshold
-    s = append_ivfpq_index(delta, idx)
-    assert s["stale_fraction"] > 0.2
+    # a third of the corpus encoded with the base model -> 33% stale ->
+    # rebuild at 20% threshold
+    build_ivfpq_index(full, idx, anchors, books)
+    _mark_appended(spark, idx, 64, 32)
+    stale = index_stale_fraction(spark, idx)
+    assert stale == 32 / 96
     rep = optimize_table(
         spark, tbl, ["day"], ["id"], ann_index_path=idx, ann_vectors=full
     )
-    assert rep["ann"]["rebuilt"] and rep["ann"]["stale_fraction"] == s["stale_fraction"]
+    assert rep["ann"]["rebuilt"] and rep["ann"]["stale_fraction"] == stale
     assert index_stale_fraction(spark, idx) == 0.0
 
     # rebuilt index == a from-scratch same-hyperparameter build over full
@@ -181,20 +137,16 @@ def test_optimize_table_auto_rebuilds_stale_ann_index(spark, tmp_path):
 def test_optimize_table_stale_without_corpus_raises(spark, tmp_path):
     import pytest
 
-    from vptstools_spark.operators.ann_index import (
-        append_ivfpq_index,
-        build_ivfpq_index,
-    )
+    from vptstools_spark.operators.ann_index import build_ivfpq_index
     from vptstools_spark.operators.similarity import kmeans_fit, pq_fit
     from vptstools_spark.plans.maintenance import optimize_table
 
     base = _corpus(spark, n=32)
-    delta = _corpus(spark, n=64).filter(F.col("vec_id") >= 32)
     anchors = kmeans_fit(base, k=4, iters=1)
     books = pq_fit(base, m=2, k=4, iters=1)
     idx = str(tmp_path / "idx")
     build_ivfpq_index(base, idx, anchors, books)
-    append_ivfpq_index(delta, idx)
+    _mark_appended(spark, idx, 32, 32)
     tbl = str(tmp_path / "tbl")
     spark.range(10).withColumn("day", F.lit(1)).write.partitionBy("day").parquet(tbl)
     with pytest.raises(ValueError, match="stale"):

@@ -1,71 +1,4 @@
-"""Bucketed co-located joins: the shuffle really disappears, results match."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from vptstools_spark.io import table
-from vptstools_spark.plans.bucketing import has_shuffle, read_table, write_bucketed
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def bucketed(spark, tmp_path_factory):
-    base = tmp_path_factory.mktemp("bucketed")
-    write_bucketed(
-        table(spark, SF, "orders"), "b_orders", ["o_orderkey"], 4,
-        path=str(base / "orders"),
-    )
-    write_bucketed(
-        table(spark, SF, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem", ["o_orderkey"], 4,
-        path=str(base / "lineitem"),
-    )
-    yield
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def _join(spark):
-    return (
-        read_table(spark, "b_orders")
-        .join(read_table(spark, "b_lineitem"), "o_orderkey")
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def test_bucketed_join_has_no_shuffle(spark, bucketed):
-    # force the sort-merge path (broadcast would hide the exchange question)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = read_table(spark, "b_orders").join(
-            read_table(spark, "b_lineitem"), "o_orderkey"
-        )
-        # the join itself reads co-located buckets: zero Exchange operators
-        assert not has_shuffle(joined)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan
-        # downstream re-aggregation on another key still shuffles (expected),
-        # but only the pre-aggregated rows — the join output never moves twice
-        assert has_shuffle(_join(spark))
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_bucketed_join_matches_plain_join(spark, bucketed):
-    got = {r["o_orderstatus"]: r["n"] for r in _join(spark).collect()}
-    plain = (
-        table(spark, SF, "orders")
-        .join(
-            table(spark, SF, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"))
-    )
-    want = {r["o_orderstatus"]: r["n"] for r in plain.collect()}
-    assert got == want
+"""Join-strategy hints surface as the requested physical join."""
 
 
 def test_hinted_join_strategies(spark):

@@ -82,136 +82,3 @@ def test_add_table_retention_and_sql_face(spark, warehouse, tmp_path):
     # pinned view of the PREVIOUS catalog version is the old warehouse
     register_catalog(spark, cat, 1)
     assert spark.sql("SELECT count(*) n FROM orders").collect()[0]["n"] == 2
-
-
-def test_catalog_publish_stream_sink_multi_table_exactly_once(spark, tmp_path):
-    """Stream → fact commits + derived rollup recompute + ONE catalog
-    swap per batch; catalog readers always see fact and rollup from the
-    same batch; quiet re-run changes nothing."""
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.streaming.incremental import catalog_publish_stream_sink
-    from vptstools_spark.plans.timetravel import history
-
-    src = str(tmp_path / "src")
-    fact = str(tmp_path / "fact")
-    roll = str(tmp_path / "roll")
-    cat = str(tmp_path / "cat")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "k long, grp string, v double"
-
-    def totals(snapshot):
-        return snapshot.groupBy("grp").agg(
-            F.sum("v").alias("total"), F.count("*").alias("n")
-        )
-
-    def run():
-        stream = spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(src)
-        catalog_publish_stream_sink(
-            stream, cat, fact, ckpt, keys=["k"],
-            derived={"rollup": (roll, totals)},
-        ).awaitTermination()
-
-    spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], schema).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-    pins1 = __import__(
-        "vptstools_spark.plans.catalog", fromlist=["catalog_pins"]
-    ).catalog_pins(spark, cat)
-    f1 = read_catalog_table(spark, cat, "fact")
-    r1 = read_catalog_table(spark, cat, "rollup")
-    assert sorted((r["grp"], r["total"]) for r in r1.collect()) == [
-        ("a", 1.0), ("b", 2.0),
-    ]
-    assert f1.count() == 2
-
-    # second wave: update k=1, insert k=3 (both in group a)
-    spark.createDataFrame([(1, "a", 5.0), (3, "a", 3.0)], schema).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-    r2 = read_catalog_table(spark, cat, "rollup")
-    assert sorted((r["grp"], r["total"], r["n"]) for r in r2.collect()) == [
-        ("a", 8.0, 2), ("b", 2.0, 1),
-    ]
-    # cross-table consistency at EVERY catalog version: the pinned rollup
-    # always equals totals() of the SAME version's pinned fact — the
-    # property per-table logs alone cannot give a reader
-    from vptstools_spark.plans.catalog import _cat_versions
-
-    for cv in _cat_versions(spark, cat):
-        fact_cv = read_catalog_table(spark, cat, "fact", cv)
-        roll_cv = read_catalog_table(spark, cat, "rollup", cv)
-        assert sorted(map(tuple, roll_cv.collect())) == sorted(
-            map(tuple, totals(fact_cv).collect())
-        ), cv
-
-    # quiet re-run: no new versions anywhere
-    nf, nr = len(history(spark, fact)), len(history(spark, roll))
-    nc = len(_cat_versions(spark, cat))
-    run()
-    assert len(history(spark, fact)) == nf
-    assert len(history(spark, roll)) == nr
-    assert len(_cat_versions(spark, cat)) == nc
-
-
-def test_catalog_publish_replay_recomputes_lagging_derived(spark, tmp_path):
-    """Crash window: fact committed for a batch, derived NOT, catalog
-    stale. The replayed batch must recompute the lagging derived table
-    from this batch's fact snapshot BEFORE the catalog swap — guarding
-    on the fact alone would pin new-fact with stale-rollup (ADVICE r5)."""
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.plans.catalog import _cat_versions
-    from vptstools_spark.plans.timetravel import commit_upsert, history
-    from vptstools_spark.streaming.incremental import catalog_publish_stream_sink
-
-    src = str(tmp_path / "src")
-    fact = str(tmp_path / "fact")
-    roll = str(tmp_path / "roll")
-    cat = str(tmp_path / "cat")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "k long, grp string, v double"
-
-    def totals(snapshot):
-        return snapshot.groupBy("grp").agg(
-            F.sum("v").alias("total"), F.count("*").alias("n")
-        )
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(src)
-        catalog_publish_stream_sink(
-            stream, cat, fact, ckpt, keys=["k"],
-            derived={"rollup": (roll, totals)},
-        ).awaitTermination()
-
-    spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], schema).write.mode(
-        "append"
-    ).parquet(src)
-    run()
-
-    # Simulate the crash state for the NEXT batch: the fact upsert
-    # landed (with its batch_id guard) but the derived recompute and
-    # catalog swap never ran.
-    wave2 = spark.createDataFrame([(1, "a", 5.0), (3, "a", 3.0)], schema)
-    wave2.write.mode("append").parquet(src)
-    commit_upsert(spark, fact, wave2, keys=["k"], extra={"batch_id": 1})
-    n_fact = len(history(spark, fact))
-
-    run()  # the replay
-
-    assert len(history(spark, fact)) == n_fact  # fact commit NOT repeated
-    r = read_catalog_table(spark, cat, "rollup")
-    assert sorted((x["grp"], x["total"], x["n"]) for x in r.collect()) == [
-        ("a", 8.0, 2), ("b", 2.0, 1),
-    ]
-    # every catalog version stays internally consistent
-    for cv in _cat_versions(spark, cat):
-        fact_cv = read_catalog_table(spark, cat, "fact", cv)
-        roll_cv = read_catalog_table(spark, cat, "rollup", cv)
-        assert sorted(map(tuple, roll_cv.collect())) == sorted(
-            map(tuple, totals(fact_cv).collect())
-        ), cv

@@ -208,38 +208,3 @@ def test_commit_upsert_eq_change_feed(spark, tmp_path):
         for r in table_changes(spark, path, 0).collect()
     )
     assert ch == [(2, "delete", 2.0), (2, "insert", 22.0), (9, "insert", 99.0)]
-
-
-def test_eq_stream_sink_mode(spark, tmp_path):
-    """timetravel_stream_sink(mode='eq'): CDC batches land as zero-scan
-    equality-merge commits, exactly-once across a quiet rerun."""
-    from vptstools_spark.plans.timetravel import _list_versions
-    from vptstools_spark.streaming.incremental import timetravel_stream_sink
-
-    src = str(tmp_path / "src")
-    path = str(tmp_path / "t")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "k long, part int, v double, is_del boolean"
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(src)
-        timetravel_stream_sink(
-            stream, path, ckpt, keys=["k"], partition_cols=["part"],
-            delete_col="is_del", mode="eq",
-        ).awaitTermination()
-
-    spark.createDataFrame(
-        [(1, 0, 1.0, False), (2, 1, 2.0, False)], schema
-    ).write.mode("append").parquet(src)
-    run()
-    spark.createDataFrame(
-        [(1, 0, 10.0, False), (2, 1, 0.0, True), (3, 0, 3.0, False)], schema
-    ).write.mode("append").parquet(src)
-    run()
-    rows = {r["k"]: r["v"] for r in read_version(spark, path).collect()}
-    assert rows == {1: 10.0, 3: 3.0}
-    c = _read_commit(spark, path, 1)
-    assert c["op"] == "upsert_eq" and len(c["eq_deletes"]) == 1
-    n = len(_list_versions(spark, path))
-    run()  # quiet rerun: nothing new
-    assert len(_list_versions(spark, path)) == n

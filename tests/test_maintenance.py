@@ -87,49 +87,6 @@ def test_optimize_incremental_second_run_is_cheap_noop(spark, tmp_path):
     assert len(files_on_disk) == 3
 
 
-def test_optimize_versioned_table_lifecycle(spark, tmp_path):
-    from vptstools_spark.plans.maintenance import optimize_versioned_table
-    from vptstools_spark.plans.timetravel import (
-        commit_initial,
-        delete_where,
-        history,
-        read_version,
-    )
-
-    path = str(tmp_path / "vt")
-    df = spark.createDataFrame(
-        [(i, i % 2, float(i)) for i in range(20)], "k long, day int, v double"
-    )
-    commit_initial(df, path, ["day"])
-    delete_where(spark, path, "k % 4 = 0")
-
-    # below threshold: metadata peek, no purge, no new version
-    n = len(history(spark, path))
-    rep = optimize_versioned_table(spark, path, max_dv_rows=100)
-    assert rep == {
-        "dv_rows": 5, "eq_entries": 0, "purged": False,
-        "compacted": None, "expired": [], "vacuumed": [],
-    }
-    assert len(history(spark, path)) == n
-
-    # above threshold: purge commits, values unchanged
-    rep = optimize_versioned_table(spark, path, max_dv_rows=3)
-    assert rep["purged"] and rep["dv_rows"] == 5
-    assert sorted(r["k"] for r in read_version(spark, path).collect()) == [
-        k for k in range(20) if k % 4
-    ]
-
-    # full lifecycle: expire history + vacuum the now-orphaned artifacts
-    rep = optimize_versioned_table(
-        spark, path, max_dv_rows=10**6, expire_keep_last=1, vacuum=True,
-        vacuum_min_age_seconds=0,
-    )
-    assert rep["expired"] and rep["vacuumed"]
-    assert sorted(r["k"] for r in read_version(spark, path).collect()) == [
-        k for k in range(20) if k % 4
-    ]
-
-
 # ----------------------------------------------- versioned-table compaction
 
 
@@ -319,40 +276,6 @@ def test_compact_with_zorder_and_vacuum_dry_run(spark, tmp_path):
     assert sorted(
         tuple(r) for r in read_version(spark, path).collect()
     ) == want
-
-
-def test_optimize_purges_on_eq_entry_count(spark, tmp_path):
-    """Equality-delete entries have their own health bound: exceeding
-    max_eq_entries triggers the purge even with few vector rows."""
-    from vptstools_spark.plans.maintenance import optimize_versioned_table
-    from vptstools_spark.plans.timetravel import (
-        _read_commit,
-        _resolve_version,
-        commit_initial,
-        delete_where_eq,
-        read_version,
-    )
-
-    path = str(tmp_path / "t")
-    commit_initial(
-        spark.createDataFrame(
-            [(i, float(i)) for i in range(40)], "k long, v double"
-        ),
-        path,
-    )
-    for k in range(3):
-        delete_where_eq(
-            spark, path, spark.createDataFrame([(k,)], "k long"), ["k"]
-        )
-    rep = optimize_versioned_table(spark, path, max_eq_entries=2)
-    assert rep["eq_entries"] == 3 and rep["purged"]
-    head = _read_commit(spark, path, _resolve_version(spark, path, None))
-    assert not head.get("eq_deletes")
-    assert sorted(r["k"] for r in read_version(spark, path).collect()) == list(
-        range(3, 40)
-    )
-    rep2 = optimize_versioned_table(spark, path, max_eq_entries=2)
-    assert rep2["eq_entries"] == 0 and not rep2["purged"]  # quiet no-op
 
 
 # ---------------------------------------------------------------------------

@@ -165,32 +165,6 @@ def test_mv_answer_scans_only_the_mv(spark, tmp_path):
     assert "ReadSchema: struct<prio:string,n:bigint>" in plan
 
 
-def test_rollup_from_mv_matches_base_rollup(spark, tmp_path):
-    base = _base(
-        spark,
-        [("HIGH", "m1", 10.0), ("HIGH", "m2", 40.0),
-         ("LOW", "m1", 1.0), ("LOW", "m2", 3.0), ("LOW", "m2", 5.0)],
-    )
-    path = str(tmp_path / "mv")
-    create_matview(base, path, MV)
-    mv_df, mv = read_matview(spark, path)
-    from vptstools_spark.plans.matview import answer_rollup_from_mv
-
-    got = answer_rollup_from_mv(
-        mv_df, mv, ["prio", "month"],
-        {"n_rows": ("count", "*"), "total": ("sum", "price")},
-    )
-    want = base.rollup("prio", "month").agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.col("price").cast("decimal(18,2)")).alias("total"),
-        F.grouping_id("prio", "month").alias("grouping_id"),
-    )
-    key = lambda r: (r["prio"] or "", r["month"] or "", r["grouping_id"])
-    g = {key(r): (r["n_rows"], float(r["total"])) for r in got.collect()}
-    w = {key(r): (r["n_rows"], float(r["total"])) for r in want.collect()}
-    assert g == w and len(g) == 2 * 2 + 2 + 1  # cells + prio subtotals + grand
-
-
 def test_avg_on_nullable_column_uses_count_of_column(spark, tmp_path):
     """avg(col) must divide by count(col), not count(*), when the column
     has NULLs — the MV stores both counts and the NULL-exact one wins."""

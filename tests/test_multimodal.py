@@ -1,9 +1,8 @@
-"""Multimodal blob plumbing: schema, magic detection, Arrow-batched extract."""
+"""Multimodal blob plumbing: schema and Arrow-batched extract."""
 
 from vptstools_spark.operators.multimodal import (
     _fake_decode,
     extract_features,
-    with_blob_meta,
 )
 
 BLOBS = [
@@ -18,15 +17,6 @@ def _df(spark):
     return spark.createDataFrame(BLOBS, "id long, blob binary")
 
 
-def test_blob_meta(spark):
-    rows = {r["id"]: r["blob_meta"] for r in with_blob_meta(_df(spark), "blob").collect()}
-    assert rows[0]["modality"] == "image/jpeg"
-    assert rows[1]["modality"] == "image/png"
-    assert rows[2]["modality"] == "audio/wav"
-    assert rows[3]["modality"] == "application/octet-stream"
-    assert rows[0]["n_bytes"] == 104
-
-
 def test_extract_features_shape(spark):
     out = extract_features(_df(spark), dim=4)
     rows = {r["id"]: r for r in out.collect()}
@@ -39,24 +29,6 @@ def test_fake_decode_deterministic():
     assert _fake_decode(b"abcdef", 3) == _fake_decode(b"abcdef", 3)
     assert _fake_decode(None, 3) is None
     assert _fake_decode(b"", 3) == [0.0, 0.0, 0.0]
-
-
-def test_sample_frames_shape_and_determinism(spark):
-    from vptstools_spark.operators.multimodal import sample_frames
-
-    rows = [(1, bytes(range(16))), (2, b"abc"), (3, None)]
-    df = spark.createDataFrame(rows, "id long, blob binary")
-    out = sample_frames(df, n_frames=4).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r["id"], {})[r["frame_idx"]] = bytes(r["frame"])
-    # 16 bytes / 4 frames -> contiguous 4-byte windows
-    assert by_id[1] == {0: bytes([0, 1, 2, 3]), 1: bytes([4, 5, 6, 7]),
-                        2: bytes([8, 9, 10, 11]), 3: bytes([12, 13, 14, 15])}
-    # short blob: span=1, offsets clamp into range; still 4 frames
-    assert len(by_id[2]) == 4
-    # NULL blob contributes no rows
-    assert 3 not in by_id
 
 
 def test_pcm_frame_energy_real_signal(spark):

@@ -254,41 +254,6 @@ def test_merge_branch_rebase_refuses_nonadditive_main(spark, tmp_path):
         merge_branch(spark, path, "wip", rebase=True)
 
 
-def test_eq_delete_rebases_over_cow_and_compaction(spark, tmp_path, monkeypatch):
-    """An equality entry references no files: it rebases even over a
-    compaction winner (the rewritten files inherit the keys and sit
-    below the entry's final version under the strict seq rule)."""
-    from vptstools_spark.plans.maintenance import compact_versioned_table
-    from vptstools_spark.plans.occ import delete_where_eq_atomic
-
-    path = _init(spark, tmp_path)
-    for i in range(4):
-        commit_append(spark, path, _df(spark, [(10 + i, 0, 0.5)]))
-    winner = lambda: compact_versioned_table(spark, path, min_files=2)
-    _lose_first_race(monkeypatch, winner)
-    v = delete_where_eq_atomic(
-        spark, path,
-        spark.createDataFrame([(11,), (3,)], "k long"), ["k"],
-    )
-    c = _read_commit(spark, path, v)
-    assert c["txn"]["rebased_over"]  # it DID lose and rebase
-    ks = {r[0] for r in _rows(spark, path)}
-    assert 11 not in ks and 3 not in ks and {10, 12, 13} <= ks
-
-
-def test_eq_delete_atomic_blocked_by_rename(spark, tmp_path, monkeypatch):
-    from vptstools_spark.plans.occ import delete_where_eq_atomic
-    from vptstools_spark.plans.timetravel import rename_columns
-
-    path = _init(spark, tmp_path)
-    winner = lambda: rename_columns(spark, path, {"k": "key"})
-    _lose_first_race(monkeypatch, winner)
-    with pytest.raises(ConcurrentTransactionError, match="rename"):
-        delete_where_eq_atomic(
-            spark, path, spark.createDataFrame([(1,)], "k long"), ["k"]
-        )
-
-
 def test_vacuum_never_reaps_inflight_writer_files(spark, tmp_path, monkeypatch):
     """VERDICT r6 #5: a vacuum with min_age=0 injected INTO the
     prepare→publish window (files written, commit JSON not yet) must not

@@ -10,8 +10,10 @@ import time
 import pytest
 
 from tests.conftest import make_profile_record
+from vptstools_spark.operators.inventory import days_to_create_vpts, parse_inventory
 from vptstools_spark.operators.pipeline import (
-    incremental_run,
+    daily_vpts_job,
+    monthly_vpts_job,
     radar_day_filter,
     read_daily_csv_string_preserving,
     resolve_source_file,
@@ -107,14 +109,21 @@ def pipeline_output(spark, tmp_path_factory):
     inventory = spark.createDataFrame(
         inv_rows, "repo string, file string, size long, modified timestamp"
     )
-    days = incremental_run(
-        spark,
-        inventory,
-        profiles,
-        root,
-        modified_days_ago=2,
-        now=datetime.datetime(2023, 3, 13, 0, 0),
+    # inventory → affected radar-days → daily overwrite → monthly join
+    days = days_to_create_vpts(
+        parse_inventory(inventory), 2, now=datetime.datetime(2023, 3, 13, 0, 0)
     )
+    # directory = source/file_type/radar/yyyy/mm/dd
+    keys = [r["directory"].split("/")[2:] for r in days.select("directory").collect()]
+    daily_vpts_job(
+        spark, profiles, [(radar, y + m + d) for radar, y, m, d in keys],
+        os.path.join(root, "daily"),
+    )
+    monthly_vpts_job(
+        os.path.join(root, "daily"), os.path.join(root, "monthly"),
+        sorted({(radar, y + m) for radar, y, m, _d in keys}),
+    )
+    write_descriptor(root)
     return root, days
 
 
@@ -178,7 +187,6 @@ def test_odim_fleet_small_file_packing_and_e2e(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from tools.gen_odim import main as gen_odim
-    from vptstools_spark.operators.pipeline import daily_vpts_job
     from vptstools_spark.sources.odim import read_vp_files
 
     fleet = str(tmp_path / "fleet")

@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from vptstools_spark.operators.retrieval import (
-    dsir_bucket_logratios,
     dsir_weights,
     rrf_fuse,
 )
@@ -43,14 +42,6 @@ DOCS = [
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string, lang string")
-
-
-def test_dsir_bucket_table_shape(spark, docs):
-    lrs = dsir_bucket_logratios(docs, F.col("lang") == "en", buckets=8)
-    rows = lrs.collect()
-    # only buckets that actually occur appear; each has one exact decimal lr
-    assert 1 <= len(rows) <= 8
-    assert all(r["lr"] is not None for r in rows)
 
 
 def test_dsir_weights_favor_target_tokens(spark, docs):

@@ -23,36 +23,3 @@ def test_salted_agg_matches_plain(spark):
         .collect()
     }
     assert salted == plain
-
-
-def test_salted_join_matches_plain_join(spark):
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.plans.skew import salted_join
-
-    # 90% of fact rows share one hot key
-    fact = spark.range(0, 5000).select(
-        F.when(F.col("id") % 10 < 9, 1).otherwise(F.col("id") % 100).alias("k"),
-        F.col("id").alias("v"),
-    )
-    dim = spark.range(0, 100).select(
-        F.col("id").alias("k"), F.concat(F.lit("d"), F.col("id")).alias("name")
-    )
-    plain = fact.join(dim, "k").groupBy("k", "name").agg(
-        F.count("*").alias("n"), F.sum("v").alias("sv")
-    )
-    salted = salted_join(fact, dim, "k", salt_buckets=8).groupBy("k", "name").agg(
-        F.count("*").alias("n"), F.sum("v").alias("sv")
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.plans.skew import salted_join
-
-    fact = spark.createDataFrame([(1, 10.0), (2, 20.0), (99, 1.0)], "k long, v double")
-    dim = spark.createDataFrame([(1, "a"), (2, "b")], "k long, name string")
-    out = {(r["k"], r["name"]) for r in salted_join(fact, dim, "k", 4, "left").collect()}
-    assert out == {(1, "a"), (2, "b"), (99, None)}

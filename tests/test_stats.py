@@ -348,36 +348,6 @@ def test_auto_analyze_refreshes_and_flips_strategy(spark, tmp_path):
     assert st.version == 1  # the stale pin, served as-is
 
 
-def test_ordered_join_versioned_auto_refresh(spark, tmp_path):
-    """The Selinger path re-derives order + strategy from refreshed
-    stats too."""
-    from vptstools_spark.plans.joinorder import JoinEdge, ordered_join_versioned
-    from vptstools_spark.plans.stats import analyze_versioned_table, stats_stale
-    from vptstools_spark.plans.timetravel import commit_append, commit_initial
-
-    a = str(tmp_path / "a")
-    b = str(tmp_path / "b")
-    commit_initial(
-        spark.createDataFrame([(i, i * 2) for i in range(20)], "k long, x long"), a
-    )
-    commit_initial(
-        spark.createDataFrame([(i % 20, i) for i in range(200)], "k long, y long"), b
-    )
-    analyze_versioned_table(spark, a)
-    analyze_versioned_table(spark, b)
-    commit_append(
-        spark, b,
-        spark.createDataFrame([(i % 20, -i) for i in range(300)], "k long, y long"),
-    )
-    assert stats_stale(spark, b)
-    df, plan = ordered_join_versioned(
-        spark, {"a": a, "b": b}, [JoinEdge("a", "b", ["k"])]
-    )
-    assert not stats_stale(spark, b)  # refreshed before enumeration
-    assert df.count() == 500  # 20-key fact side of 200+300 rows
-    assert plan["joins"][0]["rows_est"] > 0
-
-
 def test_hist_roundtrip_and_exact_incremental(spark, tmp_path):
     """Histogram bucket counts survive the sidecar round-trip and are
     maintained EXACTLY (not bounded) through MOR churn with deletes —

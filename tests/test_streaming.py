@@ -1,5 +1,4 @@
-"""Structured-Streaming incrementality (availableNow + foreachBatch overwrite,
-watermarked windows)."""
+"""Structured-Streaming incrementality (availableNow + foreachBatch overwrite)."""
 
 import datetime
 import glob
@@ -8,12 +7,11 @@ import os
 import pytest
 
 from tests.conftest import make_profile_record
-from vptstools_spark.schemas import STATE_VALUE, profile_long_schema
+from vptstools_spark.schemas import STATE_VALUE
 from vptstools_spark.sources.odim import profiles_from_records
 from vptstools_spark.streaming.incremental import (
     incremental_vpts_sink,
     stream_profiles,
-    windowed_event_counts,
 )
 
 
@@ -52,926 +50,5 @@ def test_available_now_vpts_sink(spark, landing, tmp_path):
     assert glob.glob(os.path.join(out, "p_radar=nosta", "p_date=20230311", "*.csv"))
 
 
-def test_windowed_event_counts_batch_parity(spark):
-    # the streaming aggregation expression tree also evaluates in batch mode;
-    # check window math there (deterministic, no triggers involved)
-    rows = [
-        (1, datetime.datetime(2024, 1, 1, 10, 5), 7, "click", 1.0, "{}"),
-        (2, datetime.datetime(2024, 1, 1, 10, 55), 7, "click", 2.0, "{}"),
-        (3, datetime.datetime(2024, 1, 1, 11, 5), 7, "view", 3.0, "{}"),
-    ]
-    events = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    )
-    out = {
-        (r["window_start"].hour, r["event_type"]): r["n_events"]
-        for r in windowed_event_counts(events).collect()
-    }
-    assert out == {(10, "click"): 2, (11, "view"): 1}
-
-
 def test_stream_is_streaming(spark, landing):
     assert stream_profiles(spark, landing).isStreaming
-
-
-def _write_events(spark, path, rows):
-    df = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long, value double")
-    df.write.mode("append").parquet(path)
-
-
-def test_stateful_sessionize(spark, tmp_path):
-    """applyInPandasWithState sessionization: gap-split emission and
-    event-time-timeout emission, state carried across availableNow runs."""
-    from vptstools_spark.streaming.incremental import sessionize_stateful
-
-    src = str(tmp_path / "ev")
-    ckpt = str(tmp_path / "ck")
-
-    def t(h, m):
-        return datetime.datetime(2024, 1, 1, h, m)
-
-    def run(name):
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
-        ).parquet(src)
-        rows = []
-
-        def sink(batch_df, _bid):
-            rows.extend(batch_df.collect())
-
-        q = (
-            sessionize_stateful(stream, gap_seconds=1800, watermark="1 hour")
-            .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {
-            (r.user_id, r.session_start, r.session_end): (r.n_events, r.total_value)
-            for r in rows
-        }
-
-    _write_events(spark, src, [(1, t(10, 0), 1, 1.0), (2, t(10, 5), 1, 2.0), (3, t(10, 1), 2, 5.0)])
-    out1 = run("sess1")
-    assert out1 == {}  # nothing closed yet — all sessions open in state
-
-    # a post-gap event for user 1 closes their first session immediately
-    # (gap-split); the advanced watermark (14:00 - 1h) then times out user
-    # 2's idle session (timeout 10:31) in the trailing no-data microbatch
-    _write_events(spark, src, [(4, t(14, 0), 1, 7.0)])
-    out2 = run("sess2")
-    assert out2[(1, t(10, 0), t(10, 5))] == (2, 3.0)
-    assert out2[(2, t(10, 1), t(10, 1))] == (1, 5.0)
-    assert len(out2) == 2  # user 1's 14:00 session still open
-
-    # next run: watermark reaches 17:00 → user 1's second session times out;
-    # nothing already emitted is emitted again
-    _write_events(spark, src, [(5, t(18, 0), 9, 1.0)])
-    out3 = run("sess3")
-    assert out3 == {(1, t(14, 0), t(14, 0)): (1, 7.0)}
-
-
-def test_dedup_stream_drops_repeats(spark, tmp_path):
-    from vptstools_spark.streaming.incremental import dedup_stream
-
-    src = str(tmp_path / "dup_ev")
-    ckpt = str(tmp_path / "dup_ck")
-    t0 = datetime.datetime(2024, 1, 1, 10, 0)
-    _write_events(spark, src, [(1, t0, 1, 1.0), (2, t0, 2, 2.0)])
-    _write_events(spark, src, [(1, t0, 1, 1.0), (3, t0, 3, 3.0)])  # replay of id 1
-
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, value double"
-    ).parquet(src)
-    rows = []
-    q = (
-        dedup_stream(stream, keys=["event_id"], watermark="1 hour")
-        .writeStream.foreachBatch(lambda b, _i: rows.extend(b.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert sorted(r.event_id for r in rows) == [1, 2, 3]
-
-
-def test_enrich_stream_static_join(spark, tmp_path):
-    from vptstools_spark.streaming.incremental import enrich_stream
-
-    src = str(tmp_path / "en_ev")
-    ckpt = str(tmp_path / "en_ck")
-    t0 = datetime.datetime(2024, 1, 1, 10, 0)
-    _write_events(spark, src, [(1, t0, 7, 1.0), (2, t0, 8, 2.0), (3, t0, 99, 3.0)])
-    dim = spark.createDataFrame(
-        [(7, "gold"), (8, "silver")], "user_id long, segment string"
-    )
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, value double"
-    ).parquet(src)
-    enriched = enrich_stream(stream, dim, on="user_id")
-    assert enriched.isStreaming
-    rows = []
-    q = (
-        enriched.writeStream.foreachBatch(lambda b, _i: rows.extend(b.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    seg = {r.event_id: r.segment for r in rows}
-    assert seg == {1: "gold", 2: "silver", 3: None}  # left join keeps unmatched
-
-
-def test_interval_join_streams(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.streaming.incremental import interval_join_streams
-
-    clicks = str(tmp_path / "clicks")
-    convs = str(tmp_path / "convs")
-    ckpt = str(tmp_path / "ij_ck")
-
-    def t(h, m):
-        return datetime.datetime(2024, 1, 1, h, m)
-
-    _write_events(spark, clicks, [(10, t(10, 0), 1, 0.0), (11, t(10, 0), 2, 0.0)])
-    # user 1 converts within the hour; user 2 converts 3h later (outside)
-    _write_events(spark, convs, [(20, t(10, 30), 1, 9.0), (21, t(13, 0), 2, 9.0)])
-
-    schema = "event_id long, ts timestamp, user_id long, value double"
-    l = spark.readStream.schema(schema).parquet(clicks)
-    r = spark.readStream.schema(schema).parquet(convs)
-    joined = interval_join_streams(l, r, key="user_id", max_delay="1 hour").select(
-        F.col("l.event_id").alias("click_id"),
-        F.col("r.event_id").alias("conv_id"),
-    )
-    rows = []
-    q = (
-        joined.writeStream.foreachBatch(lambda b, _i: rows.extend(b.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert [(r.click_id, r.conv_id) for r in rows] == [(10, 20)]
-
-
-def test_incremental_rollup_matches_batch_recompute(spark, tmp_path):
-    """Materialized-rollup maintenance: two availableNow runs must leave the
-    same table a one-shot batch aggregation over all data would produce,
-    including a same-day update arriving in the second run."""
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.streaming.incremental import incremental_rollup_sink
-
-    src = str(tmp_path / "roll_ev")
-    out = str(tmp_path / "roll_out")
-    ckpt = str(tmp_path / "roll_ck")
-
-    def t(d, h):
-        return datetime.datetime(2024, 1, d, h, 0)
-
-    def run():
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        ).parquet(src)
-        q = incremental_rollup_sink(stream, out, ckpt)
-        q.awaitTermination(120)
-
-    def write(rows):
-        spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, value double",
-        ).write.mode("append").parquet(src)
-
-    write([(1, t(1, 9), 1, "click", 1.0), (2, t(1, 10), 2, "view", 2.0),
-           (3, t(2, 9), 1, "click", 4.0)])
-    run()
-    write([(4, t(2, 18), 3, "click", 8.0),   # same-day late addition
-           (5, t(3, 9), 1, "view", 16.0)])   # new day
-    run()
-
-    got = {
-        (str(r["p_day"]), r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.read.parquet(out).collect()
-    }
-    want = {
-        ("2024-01-01", "click"): (1, 1.0),
-        ("2024-01-01", "view"): (1, 2.0),
-        ("2024-01-02", "click"): (2, 12.0),
-        ("2024-01-03", "view"): (1, 16.0),
-    }
-    assert got == want
-
-
-def test_transform_with_state_topk(spark, tmp_path):
-    """transformWithStateInPandas top-k: MapState counts accumulate across
-    availableNow runs; each batch emits the key's current deterministic
-    top-k. Needs the RocksDB state store provider (transformWithState
-    requirement) and google.protobuf (the TWS state-server protocol —
-    absent in this container, so the full path is env-gated like h5py)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's state-server protocol needs protobuf",
-    )
-    from vptstools_spark.streaming.incremental import event_type_topk_stateful
-
-    src = str(tmp_path / "ev")
-    ckpt = str(tmp_path / "ck")
-    prev_provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    def _write(rows):
-        df = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string"
-        )
-        df.write.mode("append").parquet(src)
-
-    def run():
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string"
-        ).parquet(src)
-        rows = []
-
-        def sink(batch_df, _bid):
-            rows.extend(batch_df.collect())
-
-        q = (
-            event_type_topk_stateful(stream, k=2)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {(r.user_id, r.rank): (r.event_type, r.n) for r in rows}
-
-    t0 = datetime.datetime(2024, 1, 1, 10, 0)
-    try:
-        _write(
-            [
-                (1, t0, 1, "click"),
-                (2, t0, 1, "click"),
-                (3, t0, 1, "view"),
-                (4, t0, 2, "buy"),
-            ]
-        )
-        out1 = run()
-        assert out1[(1, 1)] == ("click", 2)
-        assert out1[(1, 2)] == ("view", 1)
-        assert out1[(2, 1)] == ("buy", 1)
-
-        # second run: counts continue from MapState, ranks flip for user 1
-        _write([(5, t0, 1, "view"), (6, t0, 1, "view"), (7, t0, 2, "buy")])
-        out2 = run()
-        assert out2[(1, 1)] == ("view", 3)
-        assert out2[(1, 2)] == ("click", 2)
-        assert out2[(2, 1)] == ("buy", 2)
-    finally:
-        if prev_provider is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev_provider)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_transform_with_state_topk_plan(spark, tmp_path):
-    """Plan-construction check for the TWS operator (runs without protobuf:
-    only query *execution* needs the state-server protocol): streaming flag,
-    output schema, and grouping key are as declared."""
-    from vptstools_spark.streaming.incremental import event_type_topk_stateful
-
-    src = str(tmp_path / "ev")
-    spark.createDataFrame(
-        [], "event_id long, ts timestamp, user_id long, event_type string"
-    ).write.parquet(src)
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string"
-    ).parquet(src)
-    out = event_type_topk_stateful(stream, k=2)
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == ["user_id", "event_type", "n", "rank"]
-
-
-def test_cdc_merge_sink_applies_batches_incrementally(spark, tmp_path):
-    """Streaming CDC apply (cdc_merge_sink = availableNow + foreachBatch +
-    merge_upsert): first batch creates the table, a later landing file
-    upserts/deletes through the same checkpointed stream — the streaming
-    form of keyed MERGE."""
-    from vptstools_spark.streaming.incremental import cdc_merge_sink
-
-    landing = str(tmp_path / "cdc")
-    target = str(tmp_path / "t")
-    ckpt = str(tmp_path / "ck")
-    schema = "k long, p string, v double, is_delete boolean"
-
-    spark.createDataFrame(
-        [(1, "a", 1.0, False), (2, "a", 2.0, False), (3, "b", 3.0, False)], schema
-    ).write.mode("append").parquet(landing)
-    q = cdc_merge_sink(
-        spark.readStream.schema(schema).parquet(landing),
-        target, keys=["k"], partition_cols=["p"], checkpoint=ckpt,
-        delete_col="is_delete",
-    )
-    q.awaitTermination()
-    rows = {(r.k, r.p): r.v for r in spark.read.parquet(target).collect()}
-    assert rows == {(1, "a"): 1.0, (2, "a"): 2.0, (3, "b"): 3.0}
-
-    # second CDC batch: update k=1, delete k=3 (empties partition b)
-    spark.createDataFrame(
-        [(1, "a", 10.0, False), (3, "b", 0.0, True)], schema
-    ).write.mode("append").parquet(landing)
-    q2 = cdc_merge_sink(
-        spark.readStream.schema(schema).parquet(landing),
-        target, keys=["k"], partition_cols=["p"], checkpoint=ckpt,
-        delete_col="is_delete",
-    )
-    q2.awaitTermination()
-    rows = {(r.k, r.p): r.v for r in spark.read.parquet(target).collect()}
-    assert rows == {(1, "a"): 10.0, (2, "a"): 2.0}
-
-
-def test_dq_gated_sink_admits_and_quarantines(spark, tmp_path):
-    """Clean batch → main table; corrupt batch → quarantine + verdicts;
-    replay with a fresh checkpoint (same batch ids) must not duplicate."""
-    import json
-
-    from vptstools_spark.operators import quality
-    from vptstools_spark.streaming.incremental import dq_gated_sink
-
-    src = str(tmp_path / "in")
-    (tmp_path / "in").mkdir()
-    # file 0: clean; file 1: null name + out-of-domain status
-    (tmp_path / "in" / "f0.json").write_text(
-        "\n".join(json.dumps(r) for r in [
-            {"id": 1, "name": "a", "status": "OK"},
-            {"id": 2, "name": "b", "status": "OK"},
-        ])
-    )
-    (tmp_path / "in" / "f1.json").write_text(
-        "\n".join(json.dumps(r) for r in [
-            {"id": 3, "name": None, "status": "BAD"},
-            {"id": 4, "name": "d", "status": "OK"},
-        ])
-    )
-    checks = [
-        quality.completeness("name_complete", "name"),
-        quality.membership("status_domain", "status", ["OK"]),
-    ]
-    out = str(tmp_path / "out")
-    quar = str(tmp_path / "quar")
-
-    def run(ckpt):
-        stream = (
-            spark.readStream.schema("id long, name string, status string")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-        )
-        q = dq_gated_sink(stream, checks, out, quar, ckpt)
-        q.awaitTermination(120)
-
-    run(str(tmp_path / "ck1"))
-    main = spark.read.parquet(out)
-    assert sorted(r["id"] for r in main.collect()) == [1, 2]
-    quarantined = spark.read.parquet(quar)
-    assert sorted(r["id"] for r in quarantined.collect()) == [3, 4]
-    verdicts = spark.read.parquet(quar + "_verdicts")
-    failed = {r["check"] for r in verdicts.filter("NOT passed").collect()}
-    assert failed == {"name_complete", "status_domain"}
-
-    # replay: fresh checkpoint reprocesses the same files as the same batch
-    # ids — the b_id partition guard must make it a no-op
-    run(str(tmp_path / "ck2"))
-    assert spark.read.parquet(out).count() == 2
-    assert spark.read.parquet(quar).count() == 2
-
-
-def test_hll_distinct_sink_matches_batch_sketch(spark, tmp_path):
-    """Registers merged across micro-batches must equal the registers of a
-    single batch pass over all data (sketch mergeability end-to-end), and
-    the estimate must match the batch-side estimate exactly."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.operators import sketch
-    from vptstools_spark.streaming.incremental import hll_distinct_sink
-
-    src = str(tmp_path / "in")
-    (tmp_path / "in").mkdir()
-    # 3 files → 3 micro-batches; overlapping user ids across batches
-    for i in range(3):
-        rows = [{"g": u % 2, "user": u} for u in range(i * 400, i * 400 + 600)]
-        (tmp_path / "in" / f"f{i}.json").write_text(
-            "\n".join(json.dumps(r) for r in rows)
-        )
-    stream = (
-        spark.readStream.schema("g int, user long")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    state = str(tmp_path / "state")
-    q = hll_distinct_sink(stream, "user", ["g"], state, str(tmp_path / "ck"))
-    q.awaitTermination(120)
-
-    whole = spark.read.json(src, schema="g int, user long")
-    batch_regs = sketch.hll_registers(whole, F.col("user"), ["g"])
-    stream_regs = spark.read.parquet(state).drop("_batch_id")
-    assert stream_regs.exceptAll(batch_regs).count() == 0
-    assert batch_regs.exceptAll(stream_regs).count() == 0
-
-    est = {
-        r["g"]: r["hll_est"]
-        for r in sketch.hll_estimate(stream_regs, ["g"]).collect()
-    }
-    exact = {
-        r["g"]: r["n"]
-        for r in whole.groupBy("g").agg(
-            F.countDistinct("user").alias("n")
-        ).collect()
-    }
-    for g in exact:
-        assert abs(est[g] - exact[g]) / exact[g] < 0.26  # 4σ for 256 regs
-
-    # state is register-bounded: ≤ 2 groups × 256 buckets
-    assert spark.read.parquet(state).count() <= 512
-
-
-def test_cm_heavy_hitter_sink_matches_batch_sketch(spark, tmp_path):
-    """Counters summed across micro-batches must equal a single-pass batch
-    sketch, and candidate estimates must upper-bound true counts."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.operators import sketch
-    from vptstools_spark.streaming.incremental import cm_heavy_hitter_sink
-
-    src = str(tmp_path / "in")
-    (tmp_path / "in").mkdir()
-    for i in range(3):
-        rows = [{"w": f"tok{u % 17}"} for u in range(i * 100, i * 100 + 300)]
-        (tmp_path / "in" / f"f{i}.json").write_text(
-            "\n".join(json.dumps(r) for r in rows)
-        )
-    stream = (
-        spark.readStream.schema("w string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    state = str(tmp_path / "state")
-    q = cm_heavy_hitter_sink(stream, "w", state, str(tmp_path / "ck"))
-    q.awaitTermination(120)
-
-    whole = spark.read.json(src, schema="w string")
-    batch_sk = sketch.cm_sketch(whole, F.col("w"))
-    stream_sk = spark.read.parquet(state).drop("_batch_id")
-    assert stream_sk.exceptAll(batch_sk).count() == 0
-    assert batch_sk.exceptAll(stream_sk).count() == 0
-
-    truth = {
-        r["w"]: r["n"]
-        for r in whole.groupBy("w").agg(F.count("*").alias("n")).collect()
-    }
-    est = sketch.cm_estimate(stream_sk, whole.select("w").distinct(), "w")
-    for r in est.collect():
-        assert r["cm_est"] >= truth[r["w"]]
-    assert spark.read.parquet(state).count() <= 3 * 128
-
-
-def test_drift_monitor_sink_flags_shifted_batch(spark, tmp_path):
-    """Batch matching the baseline scores ~0 PSI; a shifted batch scores
-    high, with the drifted bin attributed."""
-    import json
-
-    from vptstools_spark.streaming.incremental import drift_monitor_sink
-
-    src = str(tmp_path / "in")
-    (tmp_path / "in").mkdir()
-    # batch 0: same distribution as baseline (uniform 0..99);
-    # batch 1: all mass in the top decile
-    (tmp_path / "in" / "f0.json").write_text(
-        "\n".join(json.dumps({"v": float(i % 100)}) for i in range(1000))
-    )
-    (tmp_path / "in" / "f1.json").write_text(
-        "\n".join(json.dumps({"v": 95.0}) for _ in range(1000))
-    )
-    baseline = spark.range(1000).selectExpr("CAST(id % 100 AS DOUBLE) AS v")
-    stream = (
-        spark.readStream.schema("v double")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    log = str(tmp_path / "log")
-    q = drift_monitor_sink(
-        stream, "v", baseline, log, str(tmp_path / "ck"), lo=0.0, hi=100.0
-    )
-    q.awaitTermination(120)
-
-    rows = {r["b_id"]: r for r in spark.read.parquet(log).collect()}
-    assert set(rows) == {0, 1}
-    assert abs(rows[0]["psi"]) < 1e-9
-    assert rows[1]["psi"] > 0.25
-    # the bounded JS companion: ~0 on the matching batch, large (but
-    # capped at ln 2) on the shifted one — one threshold fits all features
-    import math
-
-    assert abs(rows[0]["js"]) < 1e-9
-    assert 0.25 < rows[1]["js"] <= math.log(2) + 1e-9
-    # the bin that captured all the mass carries the largest term:
-    # (0.1-1.0)·ln(0.1/1.0) ≈ 2.07 > any lost-mass bin's (0.1-ε)·ln(0.1/ε)
-    assert rows[1]["worst_bin"] == 9 and rows[1]["worst_term"] > 1.0
-
-
-def test_matview_stream_sink_matches_batch_build_and_serves(spark, tmp_path):
-    """A stream-maintained MatViewDef must equal the batch-built MV over
-    the same data (interchangeable by construction) and serve rollups
-    through the same answer_from_mv path."""
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.plans.matview import (
-        MatViewDef,
-        Measure,
-        answer_from_mv,
-        create_matview,
-        read_matview,
-    )
-    from vptstools_spark.streaming.incremental import matview_stream_sink
-
-    mv = MatViewDef(
-        name="ev_by_day_type",
-        dims=("p_day", "event_type"),
-        measures={
-            "n": Measure("count", "*"),
-            "v_sum": Measure("sum", "value"),
-            "v_max": Measure("max", "value"),
-        },
-        partition_dim="p_day",
-    )
-    src = str(tmp_path / "mv_ev")
-    out = str(tmp_path / "mv_out")
-    ckpt = str(tmp_path / "mv_ck")
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
-
-    def t(d, h):
-        return datetime.datetime(2024, 1, d, h, 0)
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .withColumn("p_day", F.date_format(F.to_date("ts"), "yyyy-MM-dd"))
-        )
-        matview_stream_sink(stream, out, ckpt, mv).awaitTermination(120)
-
-    batch1 = [(1, t(1, 9), 1, "click", 1.0), (2, t(1, 10), 2, "view", 2.0),
-              (3, t(2, 9), 1, "click", 4.0)]
-    batch2 = [(4, t(2, 18), 3, "click", 8.0), (5, t(3, 9), 1, "view", 16.0)]
-    write(batch1)
-    run()
-    write(batch2)
-    run()
-
-    full = str(tmp_path / "mv_full")
-    all_df = spark.createDataFrame(batch1 + batch2, schema).withColumn(
-        "p_day", F.date_format(F.to_date("ts"), "yyyy-MM-dd")
-    )
-    create_matview(all_df, full, mv)
-    cols = ["p_day", "event_type", "n", "v_sum", "v_max"]
-    got_df, got_mv = read_matview(spark, out)
-    want_df, _ = read_matview(spark, full)
-    assert sorted(map(tuple, got_df.select(cols).collect())) == sorted(
-        map(tuple, want_df.select(cols).collect())
-    )
-    served = answer_from_mv(
-        got_df, got_mv, ["event_type"],
-        {"n_rows": ("count", "*"), "total": ("sum", "value")},
-    ).collect()
-    assert {(r["event_type"], r["n_rows"], r["total"]) for r in served} == {
-        ("click", 3, 13.0), ("view", 2, 18.0),
-    }
-
-
-def test_ab_monitor_merge_equals_direct(spark, tmp_path):
-    """Streaming A/B monitor: cumulative moments merged across N
-    micro-batches must equal the single-pass computation over all data
-    (merge ≡ direct), and replaying with the same checkpoint no-ops."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.streaming.incremental import ab_monitor_sink
-
-    landing = str(tmp_path / "ab")
-    log = str(tmp_path / "log")
-    ckpt = str(tmp_path / "ck")
-    schema = "uid long, treated boolean, v double"
-
-    rows1 = [(i, i % 2 == 0, float(10 + (i * 7) % 5)) for i in range(40)]
-    rows2 = [(i, i % 2 == 0, float(12 + (i * 3) % 4)) for i in range(40, 90)]
-    spark.createDataFrame(rows1, schema).write.mode("append").parquet(landing)
-    q = ab_monitor_sink(
-        spark.readStream.schema(schema).parquet(landing),
-        "treated", "v", log, ckpt,
-    )
-    q.awaitTermination()
-    spark.createDataFrame(rows2, schema).write.mode("append").parquet(landing)
-    q2 = ab_monitor_sink(
-        spark.readStream.schema(schema).parquet(landing),
-        "treated", "v", log, ckpt,
-    )
-    q2.awaitTermination()
-
-    latest = (
-        spark.read.parquet(log).orderBy(F.col("b_id").desc()).limit(1).collect()[0]
-    )
-    allrows = rows1 + rows2
-    xs1 = [v for _, t, v in allrows if t]
-    xs2 = [v for _, t, v in allrows if not t]
-    assert latest.c_n1 == len(xs1) and latest.c_n2 == len(xs2)
-    assert latest.c_s1 == pytest.approx(sum(xs1), rel=1e-12)
-    m1, m2 = sum(xs1) / len(xs1), sum(xs2) / len(xs2)
-    v1 = sum((x - m1) ** 2 for x in xs1) / (len(xs1) - 1)
-    v2 = sum((x - m2) ** 2 for x in xs2) / (len(xs2) - 1)
-    want_t = (m1 - m2) / math.sqrt(v1 / len(xs1) + v2 / len(xs2))
-    assert latest.t_stat == pytest.approx(want_t, rel=1e-9)
-
-    # replay with the same checkpoint: no new batches, log unchanged
-    n_rows = spark.read.parquet(log).count()
-    q3 = ab_monitor_sink(
-        spark.readStream.schema(schema).parquet(landing),
-        "treated", "v", log, ckpt,
-    )
-    q3.awaitTermination()
-    assert spark.read.parquet(log).count() == n_rows
-
-
-def test_stat_monitor_conversion_z_merge_equals_direct(spark, tmp_path):
-    """Parameterized 2x2 monitor, conversion z: cumulative counts merged
-    across two micro-batches must reproduce the oracled batch query
-    (q_conversion_ztest) on the same data — merge ≡ direct."""
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.analytics.inference_q import q_conversion_ztest
-    from vptstools_spark.streaming.incremental import stat_monitor_sink
-
-    sf = "/root/testdata/sf0.001"
-    e = spark.read.parquet(f"{sf}/events.parquet").select(
-        (F.col("user_id") % 2 == 0).alias("is_a"),
-        (F.col("event_type") == "purchase").alias("conv"),
-        F.col("event_id"),
-    )
-    landing = str(tmp_path / "landing")
-    log, ckpt = str(tmp_path / "log"), str(tmp_path / "ck")
-    e.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(landing)
-    schema = "is_a boolean, conv boolean, event_id long"
-
-    def run():
-        stat_monitor_sink(
-            spark.readStream.schema(schema).parquet(landing),
-            "is_a", "conv", log, ckpt, statistic="conversion_z",
-        ).awaitTermination()
-
-    run()
-    e.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(landing)
-    run()
-    latest = (
-        spark.read.parquet(log).orderBy(F.col("b_id").desc()).limit(1).collect()[0]
-    )
-    want = q_conversion_ztest(spark, sf).collect()[0]
-    assert latest.c_a + latest.c_b == want.n1
-    assert latest.c_c + latest.c_d == want.n2
-    assert round(latest.rate_a, 6) == want.rate_a
-    assert round(latest.rate_b, 6) == want.rate_b
-    assert round(latest.z_stat, 4) == want.z_stat
-
-
-def test_stat_monitor_odds_ratio_merge_equals_direct(spark, tmp_path):
-    """Same monitor, odds-ratio statistic: cumulative 2x2 across batches
-    must reproduce q_odds_ratio (Woolf CI included), and a replay with
-    the same checkpoint appends nothing."""
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.analytics.inference_q import q_odds_ratio
-    from vptstools_spark.streaming.incremental import stat_monitor_sink
-
-    sf = "/root/testdata/sf0.001"
-    o = spark.read.parquet(f"{sf}/orders.parquet").filter(
-        F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
-    ).select(
-        (F.col("o_orderpriority") == "1-URGENT").alias("urgent"),
-        (F.col("o_totalprice") > 150000).alias("hi"),
-        F.col("o_orderkey"),
-    )
-    landing = str(tmp_path / "landing")
-    log, ckpt = str(tmp_path / "log"), str(tmp_path / "ck")
-    schema = "urgent boolean, hi boolean, o_orderkey long"
-    o.filter(F.col("o_orderkey") % 3 == 0).write.mode("append").parquet(landing)
-
-    def run():
-        stat_monitor_sink(
-            spark.readStream.schema(schema).parquet(landing),
-            "urgent", "hi", log, ckpt, statistic="odds_ratio",
-        ).awaitTermination()
-
-    run()
-    o.filter(F.col("o_orderkey") % 3 != 0).write.mode("append").parquet(landing)
-    run()
-    latest = (
-        spark.read.parquet(log).orderBy(F.col("b_id").desc()).limit(1).collect()[0]
-    )
-    want = q_odds_ratio(spark, sf).collect()[0]
-    assert (latest.c_a, latest.c_b, latest.c_c, latest.c_d) == (
-        want.a, want.b, want.c, want.d,
-    )
-    assert round(latest.odds_ratio, 6) == want.odds_ratio
-    assert round(latest.ci_lo, 6) == want.ci_lo
-    assert round(latest.ci_hi, 6) == want.ci_hi
-    n = spark.read.parquet(log).count()
-    run()  # replay: checkpoint consumed, log unchanged
-    assert spark.read.parquet(log).count() == n
-
-
-def test_stat_monitor_rejects_unknown_statistic(spark, tmp_path):
-    from vptstools_spark.streaming.incremental import stat_monitor_sink
-
-    landing = str(tmp_path / "x")
-    spark.createDataFrame(
-        [(True, False)], "g boolean, o boolean"
-    ).write.parquet(landing)
-    with pytest.raises(ValueError, match="unknown statistic"):
-        stat_monitor_sink(
-            spark.readStream.schema("g boolean, o boolean").parquet(landing),
-            "g", "o", str(tmp_path / "l"), str(tmp_path / "c"),
-            statistic="chi2",
-        )
-
-def test_stat_monitor_enforces_one_statistic_per_log(spark, tmp_path):
-    """A second monitor pointing a DIFFERENT statistic at an existing
-    log must fail fast (the `_statistic` sidecar contract) instead of
-    silently mixing parquet schemas in one log (VERDICT r7 #6)."""
-    from vptstools_spark.streaming.incremental import stat_monitor_sink
-
-    landing = str(tmp_path / "landing")
-    log, ck1, ck2 = (str(tmp_path / p) for p in ("log", "ck1", "ck2"))
-    schema = "g boolean, o boolean"
-    spark.createDataFrame(
-        [(True, True), (True, False), (False, True), (False, False)] * 5,
-        schema,
-    ).write.mode("append").parquet(landing)
-    stat_monitor_sink(
-        spark.readStream.schema(schema).parquet(landing),
-        "g", "o", log, ck1, statistic="conversion_z",
-    ).awaitTermination()
-    q = stat_monitor_sink(
-        spark.readStream.schema(schema).parquet(landing),
-        "g", "o", log, ck2, statistic="odds_ratio",
-    )
-    with pytest.raises(Exception, match="bound to statistic"):
-        q.awaitTermination()
-
-
-def test_stat_monitor_null_rows_excluded_and_hint_heals(spark, tmp_path):
-    """Rows with NULL group/outcome are excluded by declaration
-    (a+b+c+d == non-NULL count, ADVICE r7), and the cumulative read
-    survives a STALE `_latest` hint (crash between the parquet append
-    and the hint write) by probing forward one partition."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.io import read_text_sidecar, write_text_overwrite
-    from vptstools_spark.streaming.incremental import stat_monitor_sink
-
-    landing = str(tmp_path / "landing")
-    log, ckpt = str(tmp_path / "log"), str(tmp_path / "ck")
-    schema = "g boolean, o boolean"
-    rows = [(True, True)] * 3 + [(True, False)] * 2 + [(False, True)] * 4
-    nulls = [(None, True), (True, None), (None, None)]
-    spark.createDataFrame(rows + nulls, schema).write.mode("append").parquet(
-        landing
-    )
-
-    def run():
-        stat_monitor_sink(
-            spark.readStream.schema(schema).parquet(landing),
-            "g", "o", log, ckpt, statistic="conversion_z",
-        ).awaitTermination()
-
-    run()
-    latest = (
-        spark.read.parquet(log).orderBy(F.col("b_id").desc()).limit(1)
-    ).collect()[0]
-    assert (latest.c_a, latest.c_b, latest.c_c, latest.c_d) == (3, 2, 4, 0)
-
-    # hint exists and matches the parquet row
-    hint = json.loads(read_text_sidecar(spark, f"{log}/_latest"))
-    assert (hint["c_a"], hint["b_id"]) == (3, latest.b_id)
-
-    # STALE the hint (pretend the writer crashed before updating it),
-    # then run a second batch: the forward probe must find the real
-    # latest partition, so the new cumulative includes batch 1's rows
-    write_text_overwrite(
-        spark, f"{log}/_latest",
-        json.dumps({**hint, "c_a": 0, "c_b": 0, "c_c": 0, "c_d": 0,
-                    "b_id": hint["b_id"] - 1}),
-    )
-    if hint["b_id"] == 0:
-        # b_id-1 partition won't exist -> hint rejected -> parquet
-        # fallback; ALSO exercise the probe-forward path by keeping a
-        # valid-but-old b_id when possible
-        pass
-    spark.createDataFrame([(False, False)] * 5, schema).write.mode(
-        "append"
-    ).parquet(landing)
-    run()
-    latest2 = (
-        spark.read.parquet(log).orderBy(F.col("b_id").desc()).limit(1)
-    ).collect()[0]
-    assert (latest2.c_a, latest2.c_b, latest2.c_c, latest2.c_d) == (3, 2, 4, 5)
-
-
-def test_monitor_hint_survives_empty_batch_gap(spark, tmp_path):
-    """ADVICE r8: b_ids in a monitor log are NOT contiguous (empty
-    micro-batches write no partition), so `_read_latest_cum`'s one-step
-    forward probe cannot heal a hint that went stale across a gap.
-    Freshness is therefore a WRITE-side invariant: the replay guard's
-    `_refresh_hint_from_log` re-establishes hint >= newest partition.
-    This test manufactures the exact failure scenario — hint at b_id=0,
-    batch 1 empty (no partition), batch 2's partition landed but its
-    hint write crashed — and checks both the pre-fix wrongness and the
-    guard's heal."""
-    import json
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.io import read_text_sidecar, write_text_overwrite
-    from vptstools_spark.streaming.incremental import (
-        _read_latest_cum,
-        _refresh_hint_from_log,
-        stat_monitor_sink,
-    )
-
-    landing = str(tmp_path / "landing")
-    log, ckpt = str(tmp_path / "log"), str(tmp_path / "ck")
-    schema = "g boolean, o boolean"
-    spark.createDataFrame(
-        [(True, True)] * 2 + [(False, True)] * 3, schema
-    ).write.mode("append").parquet(landing)
-    stat_monitor_sink(
-        spark.readStream.schema(schema).parquet(landing),
-        "g", "o", log, ckpt, statistic="conversion_z",
-    ).awaitTermination()
-    hint0 = json.loads(read_text_sidecar(spark, f"{log}/_latest"))
-    b0 = hint0["b_id"]
-
-    # manufacture the crash: a partition two b_ids ahead (batch b0+1 was
-    # empty -> no partition) whose hint write never happened
-    import glob
-    import os
-
-    src = f"{log}/b_id={b0}"
-    dst = f"{log}/b_id={b0 + 2}"
-    shutil.copytree(src, dst)
-    # bump the copied partition's cumulative so staleness is observable
-    import pandas as pd
-
-    part = glob.glob(f"{dst}/*.parquet")[0]
-    pdf = pd.read_parquet(part)
-    pdf["c_a"] = pdf["c_a"] + 7
-    pdf.to_parquet(part, index=False)
-    for crc in glob.glob(f"{dst}/.*.crc"):
-        os.remove(crc)  # stale Hadoop checksums from the copytree
-
-    fields = ["c_a", "c_b", "c_c", "c_d"]
-    # the probe alone is fooled by the gap: it stops at the missing
-    # b0+1 partition and adopts the stale hint (this is the documented
-    # limitation the write-side invariant exists for)
-    stale = _read_latest_cum(spark, log, fields)
-    assert stale[0] == hint0["c_a"]  # stale: missing the +7
-
-    # the replay guard's refresh heals it from the known partition
-    _refresh_hint_from_log(spark, log, b0 + 2, fields)
-    hint2 = json.loads(read_text_sidecar(spark, f"{log}/_latest"))
-    assert hint2["b_id"] == b0 + 2 and hint2["c_a"] == hint0["c_a"] + 7
-    assert _read_latest_cum(spark, log, fields)[0] == hint0["c_a"] + 7
-
-    # refresh never REWINDS: asking it to refresh from an older
-    # partition leaves the newer hint in place
-    _refresh_hint_from_log(spark, log, b0, fields)
-    assert (
-        json.loads(read_text_sidecar(spark, f"{log}/_latest"))["b_id"]
-        == b0 + 2
-    )

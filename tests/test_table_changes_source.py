@@ -265,60 +265,6 @@ def test_rename_mid_stream_fails_then_restart_adopts(spark, tmp_path):
     ]
 
 
-def test_derived_table_pipeline_medallion_hop(spark, tmp_path):
-    """Packaged bronze→silver: a keyed derived table maintained from the
-    source's CDF stream — transform applied, source deletes propagate as
-    tombstones, a second run advances incrementally from the checkpoint,
-    and the final target equals transform(source latest)."""
-    from vptstools_spark.plans.timetravel import (
-        commit_upsert_mor,
-        delete_where,
-        read_version,
-    )
-    from vptstools_spark.streaming.incremental import derived_table_pipeline
-
-    src = str(tmp_path / "bronze")
-    tgt = str(tmp_path / "silver")
-    ckpt = str(tmp_path / "ckpt")
-    commit_initial(
-        _df(spark, [(1, 0, 1.0), (2, 1, 2.0), (3, 2, 3.0)]), src, ["day"]
-    )
-
-    def clean(df):
-        return df.select("k", "day", (F.col("v") * 10).alias("v10"))
-
-    q = derived_table_pipeline(
-        spark, src, tgt, ckpt, keys=["k"], transform=clean,
-        partition_cols=["day"],
-    )
-    q.awaitTermination()
-    got = sorted(tuple(r) for r in read_version(spark, tgt).collect())
-    assert got == [(1, 0, 10.0), (2, 1, 20.0), (3, 2, 30.0)]
-
-    # source churns: MOR upsert + delete; second run advances the target
-    commit_upsert_mor(spark, src, _df(spark, [(2, 1, 9.0), (4, 0, 4.0)]), keys=["k"])
-    delete_where(spark, src, "k = 3")
-    q2 = derived_table_pipeline(
-        spark, src, tgt, ckpt, keys=["k"], transform=clean,
-        partition_cols=["day"],
-    )
-    q2.awaitTermination()
-    got = sorted(tuple(r) for r in read_version(spark, tgt).collect())
-    assert got == [(1, 0, 10.0), (2, 1, 90.0), (4, 0, 40.0)]
-    # the target is a versioned table: the pre-churn state stays pinnable
-    assert read_version(spark, tgt, 0).count() == 3
-    # replay-idempotent: re-running with nothing new commits nothing
-    from vptstools_spark.plans.timetravel import _list_versions
-
-    n = len(_list_versions(spark, tgt))
-    q3 = derived_table_pipeline(
-        spark, src, tgt, ckpt, keys=["k"], transform=clean,
-        partition_cols=["day"],
-    )
-    q3.awaitTermination()
-    assert len(_list_versions(spark, tgt)) == n
-
-
 def test_max_versions_per_trigger_bounds_cold_start(spark, tmp_path):
     """Admission control (VERDICT r5 #2): a fresh stream against a
     commit backlog drains in multiple bounded runs instead of one

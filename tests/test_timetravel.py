@@ -279,49 +279,6 @@ def test_restore_version_metadata_only_rollback(spark, tmp_path):
         restore_version(spark, path, 99)
 
 
-def test_timetravel_stream_sink_versions_follow_batches(spark, tmp_path):
-    """Each availableNow run commits its batches as versions; final state
-    equals a batch upsert sequence, every intermediate state is pinnable,
-    and a second run with no new data commits nothing."""
-    from vptstools_spark.streaming.incremental import timetravel_stream_sink
-
-    src = str(tmp_path / "src")
-    tbl = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "k long, day int, v double"
-    _df(spark, [(1, 0, 1.0), (2, 1, 2.0)]).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src)
-    timetravel_stream_sink(
-        stream, tbl, ckpt, keys=["k"], partition_cols=["day"]
-    ).awaitTermination()
-    v_after_first = history(spark, tbl)[-1]["version"]
-    assert _rows(read_version(spark, tbl)) == [(1, 0, 1.0), (2, 1, 2.0)]
-
-    # second wave: an update and an insert
-    _df(spark, [(1, 0, 5.0), (3, 2, 3.0)]).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    timetravel_stream_sink(
-        stream, tbl, ckpt, keys=["k"], partition_cols=["day"]
-    ).awaitTermination()
-    assert _rows(read_version(spark, tbl)) == [
-        (1, 0, 5.0), (2, 1, 2.0), (3, 2, 3.0),
-    ]
-    # the pre-update state is still pinnable
-    assert _rows(read_version(spark, tbl, v_after_first)) == [
-        (1, 0, 1.0), (2, 1, 2.0),
-    ]
-    # quiet re-run: no new batches, no new versions
-    n = len(history(spark, tbl))
-    stream = spark.readStream.schema(schema).parquet(src)
-    timetravel_stream_sink(
-        stream, tbl, ckpt, keys=["k"], partition_cols=["day"]
-    ).awaitTermination()
-    assert len(history(spark, tbl)) == n
-
-
 def test_vacuum_respects_restore_references(spark, tmp_path):
     """After RESTORE, the restored commit references the ORIGINAL
     version's files; expiring that original version must not let vacuum
@@ -722,36 +679,6 @@ def test_mor_then_purge_then_mor_roundtrip(spark, tmp_path):
     assert _read_commit(spark, path, v)["delete_files"] == []
     commit_upsert_mor(spark, path, _df(spark, [(2, 1, 6.0)]), keys=["k"])
     assert _rows(read_version(spark, path)) == [(1, 0, 5.0), (2, 1, 6.0)]
-
-
-def test_timetravel_stream_sink_mor_mode(spark, tmp_path):
-    """The MOR sink produces the same table state as the COW sink while
-    never rewriting a committed data file."""
-    from vptstools_spark.plans.timetravel import _read_commit
-    from vptstools_spark.streaming.incremental import timetravel_stream_sink
-
-    src = str(tmp_path / "src")
-    tbl = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "k long, day int, v double"
-    _df(spark, [(1, 0, 1.0), (2, 1, 2.0)]).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    timetravel_stream_sink(
-        stream, tbl, ckpt, keys=["k"], partition_cols=["day"], mor=True
-    ).awaitTermination()
-
-    _df(spark, [(1, 0, 5.0), (3, 2, 3.0)]).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    timetravel_stream_sink(
-        stream, tbl, ckpt, keys=["k"], partition_cols=["day"], mor=True
-    ).awaitTermination()
-    assert _rows(read_version(spark, tbl)) == [
-        (1, 0, 5.0), (2, 1, 2.0), (3, 2, 3.0),
-    ]
-    h = history(spark, tbl)
-    files_prev = set(_read_commit(spark, tbl, h[-2]["version"])["files"])
-    files_last = set(_read_commit(spark, tbl, h[-1]["version"])["files"])
-    assert files_prev <= files_last  # nothing rewritten, only appended
 
 
 # ---- change data feed (table_changes) --------------------------------------

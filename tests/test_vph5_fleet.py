@@ -63,6 +63,22 @@ def _expect(dest: str, oracle: dict, day_dirs: list[str]) -> None:
                 assert fh.read() == "\n".join([header, *lines]) + "\n", path
 
 
+def _snapshot(*patterns: str) -> dict[str, tuple[int, bytes]]:
+    """-> {path: (mtime_ns, bytes)} of every file the glob patterns match."""
+    out = {}
+    for path in (p for pattern in patterns for p in glob.glob(pattern)):
+        with open(path, "rb") as fh:
+            out[path] = (os.stat(path).st_mtime_ns, fh.read())
+    return out
+
+
+def _assert_unchanged(snapshot: dict[str, tuple[int, bytes]]) -> None:
+    for path, (mtime, data) in snapshot.items():
+        assert os.stat(path).st_mtime_ns == mtime, path
+        with open(path, "rb") as fh:
+            assert fh.read() == data, path
+
+
 def test_path_folder_run_matches_oracle_in_four_jobs(spark, fleet, tmp_path):
     h5_root, oracle = fleet
     dest = str(tmp_path / "dest")
@@ -85,12 +101,10 @@ def test_manifest_run_recomputes_window_days_and_coverage(spark, fleet, tmp_path
     h5_root, oracle = fleet
     dest = str(tmp_path / "dest")
     run(path_folder="baltrad", h5_root=h5_root, destination=dest, spark=spark)
-    march = {}
-    published = os.path.join(dest, "baltrad", "monthly", "*", "2023", "*_202303.csv.gz")
-    stored = os.path.join(dest, "_monthly_store", "*", "p_month=202303", "*")
-    for path in glob.glob(published) + glob.glob(stored):
-        with open(path, "rb") as fh:
-            march[path] = (os.stat(path).st_mtime_ns, fh.read())
+    march = _snapshot(
+        os.path.join(dest, "baltrad", "monthly", "*", "2023", "*_202303.csv.gz"),
+        os.path.join(dest, "_monthly_store", "*", "p_month=202303", "*"),
+    )
     assert len(march) == 4  # per radar: the published file and the store's part
 
     inv = tmp_path / "inventory"
@@ -127,10 +141,7 @@ def test_manifest_run_recomputes_window_days_and_coverage(spark, fleet, tmp_path
     # coverage write and the day collect from it (2), daily 2, monthly none
     assert jobs <= 6, f"{jobs} Spark jobs"
     # the untouched month is neither re-joined nor republished
-    for path, (mtime, data) in march.items():
-        assert os.stat(path).st_mtime_ns == mtime, path
-        with open(path, "rb") as fh:
-            assert fh.read() == data, path
+    _assert_unchanged(march)
 
 
 def test_rerun_of_a_months_earlier_day_keeps_date_order(spark, fleet, tmp_path):
@@ -150,6 +161,30 @@ def test_rerun_of_a_months_earlier_day_keeps_date_order(spark, fleet, tmp_path):
         for day in ("20230330", "20230331")
     }
     assert written["20230330"] > written["20230331"]
+    _expect(dest, oracle, [first])
+
+
+def test_rerun_of_one_radars_day_leaves_other_radars_month(spark, fleet, tmp_path):
+    """Recomputing one radar's day re-joins that radar's month only: the
+    other radar's part file for the same month in the monthly store and its
+    published monthly file keep their mtime and bytes."""
+    h5_root, oracle = fleet
+    dest = str(tmp_path / "dest")
+    run(path_folder="baltrad", h5_root=h5_root, destination=dest, spark=spark)
+    first = sorted(d for d in oracle["days"] if d.endswith("2023/03/31"))[0]
+    radar = first.split("/")[2]
+    others = sorted({d.split("/")[2] for d in oracle["days"]} - {radar})
+    assert len(others) == 1
+    other = others[0]
+    kept = _snapshot(
+        os.path.join(dest, "baltrad", "monthly", other, "2023", f"{other}_vpts_202303.csv.gz"),
+        os.path.join(dest, "_monthly_store", f"p_radar={other}", "p_month=202303", "*"),
+    )
+    assert len(kept) == 2
+
+    result = run(path_folder=first, h5_root=h5_root, destination=dest, spark=spark)
+    assert result["days"] == [first] and (result["daily"], result["monthly"]) == (1, 1)
+    _assert_unchanged(kept)
     _expect(dest, oracle, [first])
 
 

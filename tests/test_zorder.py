@@ -15,7 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from vptstools_spark.plans.zorder import zorder_write, zvalue
+from vptstools_spark.plans.zorder import zvalue
 
 N_FILES = 16
 
@@ -61,7 +61,14 @@ def test_zorder_prunes_both_dims(spark, tmp_path):
     )
     zpath = str(tmp_path / "z")
     lexpath = str(tmp_path / "lex")
-    zorder_write(df, zpath, ["user_id", "value"], bits=6, num_files=N_FILES)
+    # z-curve layout: one range exchange on the z-value, sorted within files
+    (
+        df.withColumn("__z", zvalue(df, ["user_id", "value"], bits=6))
+        .repartitionByRange(N_FILES, "__z")
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write.parquet(zpath)
+    )
     (
         df.repartitionByRange(N_FILES, "user_id", "value")
         .sortWithinPartitions("user_id", "value")

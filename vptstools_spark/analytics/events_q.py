@@ -1,7 +1,7 @@
 """Event-stream analytics: calendar windows, sessionization, semi-structured
-extraction — the batch forms of the engine's streaming surface (SURVEY §2.8).
-The same expressions run under Structured Streaming (readStream + watermark);
-see streaming/incremental.py.
+extraction over the events table (SURVEY §2.8). The expressions are plain
+DataFrame functions, so they also run under Structured Streaming
+(readStream + watermark).
 """
 
 from __future__ import annotations

@@ -10,8 +10,8 @@ subtree instead. Where the reference loops radar-days on the driver
 for the daily phase: binaryFile scan of the affected day directories → daily
 partition-overwrite write, restricted to the driver's radar-day list by a
 literal predicate. The monthly phase starts no Spark job: it joins each
-affected month's daily files in date order under one header into a gzip
-CSV. The run then publishes the partition files under the reference's
+affected radar-month's daily files in date order under one header into a
+gzip CSV. The run then publishes the partition files under the reference's
 S3-style names (``{source}/daily/{radar}/{yyyy}/{radar}_vpts_{yyyymmdd}.csv``
 and ``{source}/monthly/{radar}/{yyyy}/{radar}_vpts_{yyyymm}.csv.gz``,
 reference: src/vptstools/s3.py:133-153).
@@ -171,7 +171,7 @@ def run(
 
     months = sorted({(s, r, y, m) for s, r, y, m, _d, _ymd in keys})
     click.echo(f"Create {len(months)} monthly VPTS files.")
-    monthly_vpts_job(daily_store, monthly_store, [f"{y}{m}" for _s, _r, y, m in months])
+    monthly_vpts_job(daily_store, monthly_store, [(r, f"{y}{m}") for _s, r, y, m in months])
     n_monthly = 0
     for source, radar, yyyy, mm in months:
         target = os.path.join(

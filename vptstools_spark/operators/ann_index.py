@@ -25,7 +25,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vptstools_spark.operators.merge import merge_upsert
 from vptstools_spark.operators.similarity import (
     _adc_distance,
     ivf_cells,
@@ -91,57 +90,6 @@ def load_ivfpq_model(
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     model = _read_model(spark, path)
     return model["anchors"], model["codebooks"]
-
-
-def append_ivfpq_index(
-    vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Incremental index maintenance: encode a delta batch with the
-    EXISTING model and merge-upsert it into its cell partitions — cost
-    scales with the touched cells, not the index (VERDICT r3 #5).
-
-    Delta rows reuse the sidecar's coarse anchors + PQ codebooks, so the
-    (cell, codes) they produce are exactly what a full rebuild with the
-    same model would produce; `merge_upsert` on keys=[n_id] then replaces
-    same-id rows and inserts new ones, touching only the delta's cell
-    partitions. Search equality against a rebuilt index is tested.
-
-    Contract limits (documented, not silent):
-    - an UPDATED vector whose new cell differs from its old one leaves the
-      old row behind (the old cell's partition is out of the delta's
-      scope); callers replacing vectors across cells must tombstone the
-      old id first or rebuild;
-    - the MODEL is frozen: appends are quantized with codebooks fit on the
-      base corpus. The sidecar counts appends, and the returned dict's
-      `stale_fraction` = n_appended / (n_base + n_appended) tells callers
-      when to re-fit (the usual refresh policy rebuilds past ~0.2–0.5).
-    """
-    spark = vectors.sparkSession
-    model = _read_model(spark, path)
-    anchors, codebooks = model["anchors"], model["codebooks"]
-    cells = ivf_cells(vectors, anchors, nprobe=1, id_col=id_col, vec_col=vec_col)
-    enc = pq_encode(vectors, codebooks, id_col=id_col, vec_col=vec_col)
-    delta = cells.select(
-        F.col("id").alias("n_id"), F.col("cells")[0].alias("cell")
-    ).join(enc.select(F.col("id").alias("n_id"), "codes"), "n_id")
-    merge_upsert(
-        spark,
-        os.path.join(path, _INDEX_DIR),
-        delta,
-        keys=["n_id"],
-        partition_cols=["cell"],
-    )
-    model["n_appended"] = int(model.get("n_appended", 0)) + vectors.count()
-    _write_model(spark, path, model)
-    n_base = max(int(model.get("n_base", 0)), 1)
-    return {
-        "n_base": n_base,
-        "n_appended": model["n_appended"],
-        "stale_fraction": model["n_appended"] / (n_base + model["n_appended"]),
-    }
 
 
 def index_stale_fraction(spark: SparkSession, path: str) -> float:

@@ -67,54 +67,6 @@ def asof_join_backward(
     )
 
 
-def asof_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    ts_col: str = "ts",
-    payload_cols: list[str] | None = None,
-    suffix: str = "_right",
-) -> DataFrame:
-    """Forward as-of join: for each left row, the EARLIEST right row with
-    the same key and right.ts >= left.ts (ties: same-timestamp right rows
-    match, matching pandas merge_asof(direction='forward')). Same
-    union-tag-window plan as the backward join — one shuffle on the key —
-    with the frame flipped to [currentRow, unboundedFollowing] and the
-    side priority inverted so an equal-ts right row sorts AFTER the left
-    row and stays inside its forward frame."""
-    payload_cols = payload_cols or [
-        c for c in right.columns if c not in (on, ts_col)
-    ]
-    lcols = left.columns
-    l_tagged = left.select(
-        F.col(on), F.col(ts_col), F.lit(0).alias("__side"),
-        *[F.col(c) for c in lcols if c not in (on, ts_col)],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__p_{c}") for c in payload_cols],
-    )
-    r_tagged = right.select(
-        F.col(on), F.col(ts_col), F.lit(1).alias("__side"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols if c not in (on, ts_col)],
-        *[F.col(c).alias(f"__p_{c}") for c in payload_cols],
-    )
-    unioned = l_tagged.unionByName(r_tagged)
-    w = (
-        Window.partitionBy(on)
-        .orderBy(F.col(ts_col), F.col("__side"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    carried = unioned.select(
-        "*",
-        *[
-            F.first(F.col(f"__p_{c}"), ignorenulls=True).over(w).alias(f"{c}{suffix}")
-            for c in payload_cols
-        ],
-    )
-    return carried.filter(F.col("__side") == 0).select(
-        *[F.col(c) for c in lcols],
-        *[F.col(f"{c}{suffix}") for c in payload_cols],
-    )
-
-
 def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,

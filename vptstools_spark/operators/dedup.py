@@ -804,8 +804,7 @@ def incremental_dedup(
     id_col: str = "doc_id",
 ) -> tuple[DataFrame, dict]:
     """Cross-RUN exact dedup against a persistent fingerprint registry —
-    the pipeline-lifetime complement to `dedup_stream` (whose state is
-    watermark-bounded within one streaming query): every batch a corpus
+    state that outlives any one streaming query's watermark: every batch a corpus
     ingest has ever admitted leaves its md5 fingerprint in a VERSIONED
     registry table (`plans/timetravel.py`), and the next run's batch
     drops both its in-batch duplicates (deterministic min-id winner) and

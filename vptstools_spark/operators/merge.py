@@ -16,12 +16,10 @@ upserts, so the engine provides the classic partition-rewrite pattern:
 
 At 100 TB the cost scales with the TOUCHED partitions, not the table: the
 untouched bulk is never read or written. The delta's distinct partition
-list is metadata-sized (collected to the driver, like the streaming
-rollup's day list in streaming/incremental.py:incremental_rollup_sink);
-the delta side of the anti-join broadcasts when small. The same
-object-store committer caveat applies as for incremental_rollup_sink:
-read-modify-overwrite of one path in one job is safe with rename-based
-committers; on direct-commit stores, stage to a temp prefix and swap.
+list is metadata-sized (collected to the driver); the delta side of the
+anti-join broadcasts when small. Object-store caveat: read-modify-overwrite
+of one path in one job is safe with rename-based committers; on
+direct-commit stores, stage to a temp prefix and swap.
 """
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary payloads + typed features.
 
-Images/audio/video ride through the engine as `binary` columns with metadata
-structs; decode / feature-extraction run as Arrow-batched pandas functions
-over ``mapInPandas``.
+Images/audio ride through the engine as `binary` columns; decode /
+feature-extraction run as Arrow-batched pandas functions over
+``mapInPandas``.
 
 What is REAL here (no media libraries needed):
 - `pcm_frame_energy` — raw int16 PCM framing + RMS/peak (numpy);
@@ -29,38 +29,7 @@ from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-#: metadata schema attached to every blob
-BLOB_META_SCHEMA = T.StructType(
-    [
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),
-        T.StructField("magic", T.StringType(), True),
-    ]
-)
-
-
-def with_blob_meta(df: DataFrame, blob_col: str = "blob") -> DataFrame:
-    """Attach typed metadata to a binary column — pure expressions, narrow."""
-    blob = F.col(blob_col)
-    magic = F.hex(F.substring(blob, 1, 4))
-    modality = (
-        F.when(magic.startswith("FFD8"), "image/jpeg")
-        .when(magic.startswith("89504E47"), "image/png")
-        .when(magic.startswith("52494646"), "audio/wav")
-        .otherwise("application/octet-stream")
-    )
-    return df.withColumn(
-        "blob_meta",
-        F.struct(
-            F.octet_length(blob).cast("long").alias("n_bytes"),
-            modality.alias("modality"),
-            magic.alias("magic"),
-        ),
-    )
-
 
 #: output schema of the (stubbed) feature extractor
 FEATURE_SCHEMA = T.StructType(
@@ -113,46 +82,6 @@ def _fake_decode(blob: bytes | None, dim: int) -> list[float] | None:
         chunk = blob[d * step : (d + 1) * step] or blob[-step:]
         out.append(sum(chunk) / len(chunk))
     return out
-
-
-#: output schema of frame sampling: one row per sampled frame
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame", T.BinaryType(), True),
-    ]
-)
-
-
-def sample_frames(
-    df: DataFrame, n_frames: int = 4, id_col: str = "id", blob_col: str = "blob"
-) -> DataFrame:
-    """Evenly-spaced frame sampling over video-style payloads: 1 blob row →
-    `n_frames` frame rows (the explode shape of real frame extraction).
-
-    Arrow-batched ``mapInPandas`` so a real implementation can hand the whole
-    batch to a vectorized demuxer (pyav/ffmpeg); the stub slices the blob
-    into byte windows at evenly-spaced offsets — deterministic, so the
-    downstream contract (schema, row multiplicity, ordering) is testable.
-    Frames inherit the input's partitioning; no shuffle is introduced.
-    """
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for i, blob in zip(pdf[id_col], pdf[blob_col]):
-                if blob is None:
-                    continue
-                span = max(len(blob) // n_frames, 1)
-                for f in range(n_frames):
-                    off = min(f * span, max(len(blob) - span, 0))
-                    ids.append(int(i))
-                    idxs.append(f)
-                    frames.append(bytes(blob[off : off + span]))
-            yield pd.DataFrame({"id": ids, "frame_idx": idxs, "frame": frames})
-
-    return df.select(id_col, blob_col).mapInPandas(run, schema=FRAME_SCHEMA)
 
 
 #: output schema of the real PCM analyzer

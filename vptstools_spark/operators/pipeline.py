@@ -4,8 +4,8 @@ reference's `vph5_to_vpts` CLI (src/vptstools/bin/vph5_to_vpts.py:59-251).
 Reference shape: inventory → modified radar-days → per-day download+convert →
 daily CSV → per-month concat → monthly gzip CSV. Spark shape: the inventory
 and daily phases are declarative Spark jobs; the monthly phase is the
-reference's ordered concat, a local-file join of each month's daily files
-in date order (no Spark job). Both write with *partition-granularity
+reference's ordered concat, a local-file join of each radar-month's daily
+files in date order (no Spark job). Both write with *partition-granularity
 idempotence* (SURVEY §2.8): a radar-day or radar-month is always recomputed
 whole and replaced (`partitionOverwriteMode=dynamic` for the daily store, an
 `os.replace` for the monthly one), which makes re-runs and late-arriving
@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vptstools_spark.functions.scalars import sql_in_strings
-from vptstools_spark.operators.inventory import days_to_create_vpts, parse_inventory
 from vptstools_spark.operators.vpts import to_vpts_table
 from vptstools_spark.schemas import get_vpts_version
 
@@ -120,12 +119,15 @@ def read_daily_csv_string_preserving(spark: SparkSession, path: str | list[str])
     return df.select(*[F.coalesce(F.col(c), F.lit("")).alias(c) for c in spec.columns])
 
 
-def monthly_vpts_job(daily_path: str, output_path: str, months: list[str] | None = None) -> None:
+def monthly_vpts_job(
+    daily_path: str, output_path: str, months: list[tuple[str, str]] | None = None
+) -> None:
     """Monthly phase (reference bin/vph5_to_vpts.py:204-250): for each
-    ``(p_radar, month)`` of the daily store whose ``yyyymm`` is in ``months``
-    (every month when None), join the month's daily part files in date order
+    ``(radar, yyyymm)`` pair in ``months`` (every radar-month of the daily
+    store when None), join the radar-month's daily part files in date order
     under the first file's header into ``p_radar=…/p_month=yyyymm/`` as gzip
-    CSV, replacing that partition whole. Starts no Spark job.
+    CSV, replacing that partition whole. Other radars' partitions of the
+    same month are neither read nor rewritten. Starts no Spark job.
 
     A daily partition is one radar-day written sorted by (radar, datetime,
     height::int, source_file), and days are disjoint in ``datetime``, so date
@@ -134,11 +136,18 @@ def monthly_vpts_job(daily_path: str, output_path: str, months: list[str] | None
     one part file with the same header as the month's first."""
     headers: dict[tuple[str, str], bytes] = {}
     by_month: dict[tuple[str, str], list[str]] = {}
-    for day_dir in sorted(glob.glob(os.path.join(daily_path, "p_radar=*", "p_date=*"))):
+    # list only the selected radar-months' day partitions
+    patterns = (
+        [("*", "")] if months is None
+        else [(glob.escape(radar), glob.escape(month)) for radar, month in set(months)]
+    )
+    day_dirs = [
+        d for radar, month in patterns
+        for d in glob.glob(os.path.join(daily_path, f"p_radar={radar}", f"p_date={month}*"))
+    ]
+    for day_dir in sorted(day_dirs):
         radar_dir, date_dir = day_dir.split(os.sep)[-2:]
         month = date_dir.removeprefix("p_date=")[:6]
-        if months is not None and month not in months:
-            continue
         parts = glob.glob(os.path.join(day_dir, "*.csv"))
         if len(parts) != 1:
             raise ValueError(f"daily partition {day_dir} holds {len(parts)} part files, not 1")
@@ -187,31 +196,3 @@ def write_descriptor(path: str, vpts_csv_version: str = "v1.0") -> str:
     with open(out, "w", encoding="utf-8") as fh:
         json.dump(descriptor, fh, indent=2)
     return out
-
-
-def incremental_run(
-    spark: SparkSession,
-    inventory_df: DataFrame,
-    profiles: DataFrame,
-    output_root: str,
-    modified_days_ago: int = 2,
-    now=None,
-) -> DataFrame:
-    """End-to-end incremental pipeline (reference §3.3): inventory → affected
-    radar-days → daily partition overwrite → monthly partition overwrite.
-    Returns the days_to_create_vpts frame (what was recomputed)."""
-    parsed = parse_inventory(inventory_df)
-    days = days_to_create_vpts(parsed, modified_days_ago, now)
-    # directory = source/file_type/radar/yyyy/mm/dd; the day list is
-    # driver-sized, collected once for both phases
-    keys = [r["directory"].split("/")[2:] for r in days.select("directory").collect()]
-    daily_vpts_job(
-        spark, profiles, [(radar, y + m + d) for radar, y, m, d in keys],
-        os.path.join(output_root, "daily"),
-    )
-    months = sorted({y + m for _radar, y, m, _d in keys})
-    monthly_vpts_job(
-        os.path.join(output_root, "daily"), os.path.join(output_root, "monthly"), months
-    )
-    write_descriptor(output_root)
-    return days

@@ -1,7 +1,5 @@
 """Binned interval (range) join — point-in-interval matching as an
-equi-join, the batch complement of `operators/asof.py` (most-recent match)
-and `streaming/incremental.py:interval_join_streams` (watermarked stream
-form).
+equi-join, the batch complement of `operators/asof.py` (most-recent match).
 
 Core Spark plans `points.join(intervals, start <= p AND p <= end)` as a
 BroadcastNestedLoopJoin — O(n·m) row comparisons, a scale killer unless one

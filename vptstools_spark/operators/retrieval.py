@@ -70,42 +70,6 @@ def token_buckets(text_col, buckets: int = 64):
     )
 
 
-def dsir_bucket_logratios(
-    docs: DataFrame,
-    target_pred,
-    text_col: str = "text",
-    buckets: int = 64,
-) -> DataFrame:
-    """Per-bucket smoothed log importance ratio
-    ln( (tgt_b+1)/(tgt_tot+B) ÷ (raw_b+1)/(raw_tot+B) ), rounded to 8 dp
-    and carried as DECIMAL(20,8) so downstream per-document sums are
-    aggregation-order-exact. Output: (bucket, lr) — B rows, broadcastable.
-    """
-    tok = docs.select(
-        F.explode(token_buckets(F.col(text_col), buckets)).alias("bucket"),
-        target_pred.cast("int").alias("is_tgt"),
-    )
-    counts = tok.groupBy("bucket").agg(
-        F.count("*").alias("raw_b"), F.sum("is_tgt").alias("tgt_b")
-    )
-    # totals are exact rollups of the per-bucket counts (r10, guide §1):
-    # no second tokenize+hash pass over the corpus
-    totals = counts.agg(
-        F.sum("raw_b").alias("raw_tot"), F.sum("tgt_b").alias("tgt_tot")
-    )
-    bd = F.lit(float(buckets))
-    lr = F.log(
-        ((F.col("tgt_b") + 1).cast("double") * (F.col("raw_tot").cast("double") + bd))
-        / (
-            (F.col("raw_b") + 1).cast("double")
-            * (F.col("tgt_tot").cast("double") + bd)
-        )
-    )
-    return counts.crossJoin(F.broadcast(totals)).select(
-        "bucket", F.round(lr, 8).cast("decimal(20,8)").alias("lr")
-    )
-
-
 def dsir_weights(
     docs: DataFrame,
     target_pred,

@@ -10,8 +10,7 @@ reviewable choice at the call sites where it matters:
   memory — avoids sort-merge's two sorts; the win on high-cardinality
   equi-joins where neither side is pre-sorted.
 - ``merge``: both sides huge; sort-merge spills gracefully and is the only
-  safe default for fact⋈fact without bucketing (see plans/bucketing.py for
-  removing its exchanges entirely).
+  safe default for fact⋈fact.
 """
 
 from __future__ import annotations

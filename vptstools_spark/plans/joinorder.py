@@ -29,7 +29,6 @@ against a DuckDB oracle that plans the same SQL its own way.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 
 from pyspark.sql import DataFrame
 
@@ -217,26 +216,3 @@ def ordered_join(
 
     df, _ = build(plan["tree"])
     return df, {**plan, "joins": decisions}
-
-
-def ordered_join_versioned(
-    spark: "SparkSession",
-    paths: dict[str, str],
-    edges: list[JoinEdge],
-    auto_refresh: bool = True,
-    **thresholds,
-) -> "tuple[DataFrame, dict]":
-    """`ordered_join` over VERSIONED tables with auto-ANALYZE: every
-    input's statistics route through `plans/stats.py:fresh_stats`, so a
-    commit that landed since the last ANALYZE refreshes incrementally
-    BEFORE the Selinger enumeration — join order and physical strategy
-    both re-derive from current sizes instead of silently rotting."""
-    from vptstools_spark.plans.stats import fresh_stats
-    from vptstools_spark.plans.timetravel import read_version
-
-    dfs = {n: read_version(spark, p) for n, p in paths.items()}
-    stats = {
-        n: fresh_stats(spark, p, auto_refresh=auto_refresh)
-        for n, p in paths.items()
-    }
-    return ordered_join(dfs, stats, edges, **thresholds)

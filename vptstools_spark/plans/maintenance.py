@@ -120,90 +120,6 @@ def optimize_table(
     }
 
 
-def optimize_versioned_table(
-    spark: SparkSession,
-    path: str,
-    max_dv_rows: int = 1_000_000,
-    max_eq_entries: int = 8,
-    expire_keep_last: int | None = None,
-    vacuum: bool = False,
-    compact_min_files: int | None = None,
-    expire_min_age_seconds: float | None = None,
-    vacuum_min_age_seconds: float = 3600.0,
-) -> dict:
-    """Maintenance pass for a VERSIONED table (`plans/timetravel.py`):
-    automates the merge-on-read lifecycle the way the ANN path automates
-    append→degrade→rebuild. Policy: reads apply delete vectors as a
-    BROADCAST anti-join, so the health bound is a vector ROW COUNT —
-    when the live commit's vectors exceed `max_dv_rows` (default 1M ≈
-    comfortably broadcastable), `purge_deletes` folds them into the
-    dirty files; below it the pass is a metadata peek and no-op.
-    EQUALITY deletes cost one extra read-side anti-join per ENTRY, so
-    their health bound is the entry COUNT (`max_eq_entries`, default 8)
-    — exceeding it also triggers the purge, which is where equality
-    deletes pay their deferred scan.
-    `compact_min_files` additionally runs `compact_versioned_table`
-    (small-file bin-packing) at that threshold — purge-then-compact
-    order, so compaction reads vector-free snapshots. Optionally expire
-    history (`expire_keep_last`, age-gated by `expire_min_age_seconds`)
-    and, as the separate explicitly-destructive step, vacuum
-    unreferenced files (age-gated by `vacuum_min_age_seconds` — default
-    1 h — so a concurrent writer's not-yet-committed files survive an
-    automated pass; see `vacuum_table`). Returns {"dv_rows", "purged",
-    "compacted", "expired", "vacuumed"}."""
-    import os
-
-    from vptstools_spark.plans.timetravel import (
-        _DATA_DIR,
-        _read_commit,
-        _resolve_version,
-        expire_versions,
-        purge_deletes,
-        vacuum_table,
-    )
-
-    v = _resolve_version(spark, path, None)
-    delete_files = _read_commit(spark, path, v).get("delete_files") or []
-    dv_rows = (
-        spark.read.parquet(
-            *[os.path.join(path, _DATA_DIR, f) for f in delete_files]
-        ).count()
-        if delete_files
-        else 0
-    )
-    eq_entries = len(_read_commit(spark, path, v).get("eq_deletes") or [])
-    purged = False
-    if dv_rows > max_dv_rows or eq_entries > max_eq_entries:
-        purge_deletes(spark, path)
-        purged = True
-    compacted = None
-    if compact_min_files is not None:
-        compacted = compact_versioned_table(
-            spark, path, min_files=compact_min_files
-        )
-    expired: list[int] = []
-    if expire_keep_last is not None:
-        expired = expire_versions(
-            spark,
-            path,
-            keep_last=expire_keep_last,
-            min_age_seconds=expire_min_age_seconds,
-        )
-    vacuumed: list[str] = []
-    if vacuum:
-        vacuumed = vacuum_table(
-            spark, path, min_age_seconds=vacuum_min_age_seconds
-        )
-    return {
-        "dv_rows": dv_rows,
-        "eq_entries": eq_entries,
-        "purged": purged,
-        "compacted": compacted,
-        "expired": expired,
-        "vacuumed": vacuumed,
-    }
-
-
 def compact_versioned_table(
     spark: SparkSession,
     path: str,
@@ -213,8 +129,8 @@ def compact_versioned_table(
 ) -> dict:
     """Small-file compaction as a COMMIT (the Iceberg rewrite-data-files /
     Delta OPTIMIZE shape for `plans/timetravel.py` tables) — the remedy
-    for the file-per-micro-batch accretion every streaming commit sink
-    produces. Policy, all decided from `files_metadata` (one filesystem
+    for the small-file accretion that frequent small commits produce.
+    Policy, all decided from `files_metadata` (one filesystem
     stat per file, no data scan):
 
     - a partition is a VICTIM when it holds >= `min_files` files and

@@ -380,32 +380,3 @@ def refresh_matview(
             fs = p.getFileSystem(hconf)
             if fs.exists(p):
                 fs.delete(p, True)
-
-
-def answer_rollup_from_mv(
-    mv_df: DataFrame,
-    mv: MatViewDef,
-    dims: list[str],
-    wanted: dict,
-    assume_non_null: bool = False,
-) -> DataFrame:
-    """Serve the whole ROLLUP lattice over `dims` from ONE MV scan: the
-    re-aggregation algebra commutes with grouping sets, so
-    `mv.rollup(dims)` with derived measures equals rolling up the base
-    table — at the MV's row count, not the lake's. Adds the standard
-    `grouping_id` disambiguator (NULL dim values vs subtotal rows)."""
-    if not can_answer(mv, dims, wanted, assume_non_null):
-        raise ValueError(f"MV {mv.name} cannot answer rollup({dims})")
-    by_pair = {(m.fn, m.col): name for name, m in mv.measures.items()}
-    exprs = []
-    for out, (fn, col) in wanted.items():
-        if fn == "avg":
-            e = F.sum(by_pair[("sum", col)]).cast("double") / F.sum(
-                _count_col_for(mv, col)
-            )
-        else:
-            e = _REAGG[fn](F.col(by_pair[(fn, col)]))
-        exprs.append(e.alias(out))
-    return mv_df.rollup(*dims).agg(
-        *exprs, F.grouping_id(*dims).alias("grouping_id")
-    )

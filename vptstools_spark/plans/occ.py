@@ -351,98 +351,6 @@ def delete_where_atomic(
         intents.clear_all()
 
 
-def delete_where_eq_atomic(
-    spark: SparkSession,
-    path: str,
-    keys_df: DataFrame,
-    keys: list[str],
-    max_retries: int = 5,
-) -> int:
-    """EQUALITY delete with rebase: the key file is written once and —
-    because an equality entry references NO data files, and the strict
-    sequence rule scopes it to whatever files exist below its final
-    commit version — it republishes over every winner that kept the key
-    columns meaningful: additive commits, row-preserving rewrites
-    (compaction outputs inherit the keys), even COW upserts. Only
-    schema-bearing winners (rename/overwrite/restore) block, with the
-    contract error."""
-    bad = [k for k in keys if k not in keys_df.columns]
-    if bad:
-        raise ValueError(f"keys_df lacks key columns {bad}")
-    base_v = _resolve_version(spark, path, None)
-    intents = _Intents(spark, path)
-    try:
-        return _delete_where_eq_atomic_body(
-            spark, path, keys_df, keys, max_retries, base_v, intents
-        )
-    finally:
-        intents.clear_all()
-
-
-def _delete_where_eq_atomic_body(
-    spark, path, keys_df, keys, max_retries, base_v, intents
-) -> int:
-    label = intents.register(f"eq{base_v + 1}-t{uuid.uuid4().hex[:8]}")
-    eq_dir = os.path.join(path, _DATA_DIR, label)
-    keys_df.select(*keys).distinct().write.mode("error").parquet(eq_dir)
-    marker = f"{_DATA_DIR}/{label}/"
-    rels = sorted(
-        f[f.index(marker) + len(_DATA_DIR) + 1 :]
-        for f in list_data_files(spark, eq_dir)
-    )
-    _SCHEMA_BEARING = {"rename_columns", "widen_types", "overwrite", "restore"}
-    for _ in range(max_retries + 1):
-        head_v = _resolve_version(spark, path, None)
-        head = _read_commit(spark, path, head_v)
-        if head_v != base_v:
-            winners = _interleaved(spark, path, base_v, head_v)
-            blocked = [
-                w["op"] for w in winners if w["op"] in _SCHEMA_BEARING
-                or w["op"].startswith("merge(")
-            ]
-            if blocked:
-                raise ConcurrentTransactionError(
-                    f"equality delete prepared at version {base_v} of "
-                    f"{path} cannot rebase over {blocked} (key columns "
-                    "may have changed meaning); re-prepare against head"
-                )
-        new_v = head_v + 1
-        try:
-            _commit(
-                spark,
-                path,
-                new_v,
-                head["files"],
-                head["partition_cols"],
-                "delete_eq",
-                head.get("partition_types"),
-                {
-                    **_carry(head),
-                    "eq_deletes": (head.get("eq_deletes") or [])
-                    + [
-                        {
-                            "files": rels,
-                            "keys": list(keys),
-                            "stored_keys": list(keys),
-                            "version": new_v,
-                        }
-                    ],
-                    "file_seqs": {
-                        **{f: head_v for f in head["files"]},
-                        **(head.get("file_seqs") or {}),
-                    },
-                    **_txn_extra(base_v, head_v),
-                },
-            )
-            return new_v
-        except CommitConflictError:
-            continue
-    raise CommitConflictError(
-        f"equality delete on {path} lost the commit race "
-        f"{max_retries + 1} times"
-    )
-
-
 def upsert_mor_atomic(
     spark: SparkSession,
     path: str,

@@ -62,31 +62,6 @@ def salted_agg(
     return phase2
 
 
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-    salt_col: str | None = None,
-) -> DataFrame:
-    """Skew-join for the regime AQE can't fix: one hot key dominates the
-    SKEWED side and `other` is too big to broadcast whole but small enough
-    to replicate `salt_buckets`× (dim-scale, not fact-scale).
-
-    The skewed side gets a random salt in [0, B); `other` is exploded B× so
-    every (key, salt) pair exists. The join key becomes (key, salt) — the
-    hot key's rows spread over B reducers instead of one straggler task.
-    Semantics identical to `skewed.join(other, on, how)` for inner/left
-    joins (each skewed row matches exactly its original matches once).
-    """
-    s = skewed.withColumn("__salt", _row_salt(skewed, salt_buckets, salt_col))
-    o = other.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    return s.join(o, [on, "__salt"], how).drop("__salt")
-
-
 def key_skew_report(df: DataFrame, keys: list[str]) -> DataFrame:
     """One-row skew diagnostic for a prospective join/agg key: row count,
     distinct keys, max and mean per-key cardinality, their ratio (the

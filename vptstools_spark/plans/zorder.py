@@ -8,8 +8,8 @@ interleaving the bits of both keys places rows that are close in the
 tight in ALL dimensions and a selective filter on any of them skips most
 row groups at the scan. This is what Delta Lake's OPTIMIZE ZORDER BY does;
 core Spark has no equivalent, so the engine provides one for the curated
-(silver) layer, complementing hash bucketing (plans/bucketing.py — exact
-equi-join co-location) with range clustering for selective scans.
+(silver) layer: range clustering for selective scans. `compact_partitions`
+applies it per partition when small files are rewritten.
 
 At 100 TB:
 - the per-dimension equi-depth boundaries come from `approxQuantile`
@@ -68,31 +68,6 @@ def zvalue(df: DataFrame, cols: list[str], bits: int = 8) -> Column:
             bit = F.shiftright(bucket, i).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, i * ndims + d))
     return z
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    num_files: int | None = None,
-    fmt: str = "parquet",
-) -> None:
-    """Rewrite `df` at `path` clustered on the z-curve over `cols`.
-
-    One range exchange on the z-value (file boundaries = curve segments),
-    sorted within partitions so row groups inside each file stay tight too.
-    """
-    z = zvalue(df, cols, bits)
-    out = df.withColumn("__z", z)
-    out = (
-        out.repartitionByRange(num_files, "__z")
-        if num_files
-        else out.repartitionByRange("__z")
-    )
-    out.sortWithinPartitions("__z").drop("__z").write.mode("overwrite").format(
-        fmt
-    ).save(path)
 
 
 def compact_partitions(
