@@ -104,10 +104,10 @@ def test_vacuum_on_source_cannot_break_clone(spark, tmp_path):
     df = _base(spark, src)
     shallow_clone(spark, src, dst)
     n = read_version(spark, dst).count()
-    # rewrite the source's world so v0's files become unreferenced there
-    from vptstools_spark.plans.timetravel import commit_overwrite, expire_versions
+    # rewrite every source partition so v0's files become unreferenced there
+    from vptstools_spark.plans.timetravel import commit_upsert, expire_versions
 
-    commit_overwrite(spark, src, df.filter("k < 10"))
+    commit_upsert(spark, src, df.filter("k < 10"), keys=["k"])
     expire_versions(spark, src, keep_last=1)
     vacuum_table(spark, src, min_age_seconds=0)
     # hard links keep the bytes alive for the clone
@@ -118,9 +118,9 @@ def test_vacuum_on_clone_cannot_break_source(spark, tmp_path):
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     df = _base(spark, src)
     shallow_clone(spark, src, dst)
-    from vptstools_spark.plans.timetravel import commit_overwrite, expire_versions
+    from vptstools_spark.plans.timetravel import commit_upsert, expire_versions
 
-    commit_overwrite(spark, dst, df.filter("k < 10"))
+    commit_upsert(spark, dst, df.filter("k < 10"), keys=["k"])
     expire_versions(spark, dst, keep_last=1)
     vacuum_table(spark, dst, min_age_seconds=0)
     assert read_version(spark, src).count() == 200

@@ -172,33 +172,6 @@ def test_expire_pins_checkpoint_for_survivors(spark, tmp_path):
         read_version(spark, path, 1)
 
 
-def test_v2_streaming_source_reads_delta_log(spark, tmp_path):
-    """The Python DataSource change-feed reader resolves format-2 logs
-    with its pyarrow-only resolver (no JVM in the worker)."""
-    from vptstools_spark.sources.table_changes_source import (
-        TableChangesDataSource,
-    )
-
-    path = str(tmp_path / "st")
-    commit_initial(_base(spark, 60, 4), path, ["part"])
-    commit_append(spark, path, _delta(spark, 4000, 4020, 4))
-    spark.dataSource.register(TableChangesDataSource)
-    out = str(tmp_path / "out")
-    q = (
-        spark.readStream.format("table_changes")
-        .option("path", path)
-        .load()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out)
-    assert got.filter(F.col("_change_type") == "insert").count() == 80
-
-
 def test_clone_inherits_format_version(spark, tmp_path):
     """A clone of a format-2 table writes format-2 commits itself (and a
     format-1 clone stays format-1)."""
@@ -235,13 +208,13 @@ def test_adversarial_interleaving_both_formats(spark, tmp_path):
     """Seeded adversarial interleaving (VERDICT r8 #7): the format-2
     default changed every reader's metadata path, so the same randomized
     sequence of commits / DML / expiry / vacuum / clone / branch-cycle /
-    OCC-append / restore is applied to a format-1 AND a format-2 table,
+    OCC-append is applied to a format-1 AND a format-2 table,
     and the two must never diverge. After EVERY step the head snapshot
     and the surviving-version lists are compared; every 10th step (and at
     the end) every surviving version is read on both formats and value-
     compared — per-step full history re-reads would be O(steps×versions)
     Spark jobs re-verifying immutable bytes, and the ops that DO touch
-    history (expire/vacuum/restore) always fall inside a 10-step window
+    history (expire/vacuum) always fall inside a 10-step window
     of a full sweep."""
     import random
 
@@ -253,11 +226,7 @@ def test_adversarial_interleaving_both_formats(spark, tmp_path):
     )
     from vptstools_spark.plans.clone import shallow_clone
     from vptstools_spark.plans.occ import append_atomic
-    from vptstools_spark.plans.timetravel import (
-        restore_version,
-        update_where,
-        vacuum_table,
-    )
+    from vptstools_spark.plans.timetravel import update_where, vacuum_table
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -315,8 +284,8 @@ def test_adversarial_interleaving_both_formats(spark, tmp_path):
     for step in range(STEPS):
         op = rng.choices(
             ["append", "upsert", "mor", "delete", "update", "expire",
-             "vacuum", "clone", "branch", "occ", "restore"],
-            weights=[22, 12, 12, 10, 10, 8, 5, 4, 6, 8, 3],
+             "vacuum", "clone", "branch", "occ"],
+            weights=[22, 12, 12, 10, 10, 8, 5, 4, 6, 8],
         )[0]
         r = rng.randrange(3, 17)
         if op == "append":
@@ -369,12 +338,6 @@ def test_adversarial_interleaving_both_formats(spark, tmp_path):
             d = jdf(next_k, next_k + 2)
             next_k += 10
             both(lambda p: append_atomic(spark, p, d))
-        elif op == "restore":
-            vs = tt._list_versions(spark, paths[1])
-            if len(vs) > 1:
-                target = rng.choice(vs[:-1])
-                if target in tt._list_versions(spark, paths[2]):
-                    both(lambda p: restore_version(spark, p, target))
         # every step: heads + version lists agree
         s1, s2 = both(snap_sig)
         assert s1 == s2, f"step {step} ({op})"

@@ -106,41 +106,6 @@ def test_jaccard_verify_matches_exact_on_candidates(spark):
         assert exact[pair] == j
 
 
-def test_incremental_dedup_registry_across_runs(spark, tmp_path):
-    from vptstools_spark.operators.dedup import incremental_dedup
-
-    reg = str(tmp_path / "fp_registry")
-
-    def batch(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    # run 1: one in-batch dup
-    fresh, rep = incremental_dedup(
-        spark, reg, batch([(1, "aaa"), (2, "bbb"), (3, "aaa")])
-    )
-    assert rep == {
-        "n_batch": 3, "n_in_batch_dups": 1, "n_seen_dups": 0, "n_fresh": 2
-    }
-    assert sorted(r["doc_id"] for r in fresh.collect()) == [1, 2]
-
-    # run 2 (a NEW pipeline run): one cross-run dup, one fresh
-    fresh, rep = incremental_dedup(
-        spark, reg, batch([(10, "bbb"), (11, "ccc")])
-    )
-    assert rep == {
-        "n_batch": 2, "n_in_batch_dups": 0, "n_seen_dups": 1, "n_fresh": 1
-    }
-    assert [r["doc_id"] for r in fresh.collect()] == [11]
-
-    # run 3: everything already seen -> no registry commit, empty fresh
-    from vptstools_spark.plans.timetravel import history
-
-    n_versions = len(history(spark, reg))
-    fresh, rep = incremental_dedup(spark, reg, batch([(20, "aaa")]))
-    assert rep["n_fresh"] == 0 and fresh.count() == 0
-    assert len(history(spark, reg)) == n_versions
-
-
 def test_dedup_keep_best_argmax_and_ties(spark):
     from vptstools_spark.operators.dedup import dedup_keep_best
 
@@ -260,11 +225,7 @@ def test_incremental_lsh_rejected_doc_leaves_no_state(spark, tmp_path):
 def test_containment_catches_subset_jaccard_misses(spark):
     from pyspark.sql import functions as F
 
-    from vptstools_spark.operators.dedup import (
-        containment_pairs,
-        jaccard_pairs,
-        shingles,
-    )
+    from vptstools_spark.operators.dedup import jaccard_pairs, shingles
 
     small = "alpha beta gamma delta epsilon"
     big = small + " " + " ".join(f"tok{i}" for i in range(40))
@@ -272,14 +233,14 @@ def test_containment_catches_subset_jaccard_misses(spark):
         [(1, small), (2, big)], "doc_id long, text string"
     )
     sh = shingles(df, k=3)
-    cont = containment_pairs(sh, threshold=0.9).collect()
+    cont = jaccard_pairs(sh, threshold=0.9, measure="containment").collect()
     assert len(cont) == 1 and cont[0].containment == 1.0
     # Jaccard at the same bar misses the embedding entirely
     assert jaccard_pairs(sh, threshold=0.9).count() == 0
 
 
 def test_containment_replica_collapse_expansion(spark):
-    from vptstools_spark.operators.dedup import containment_pairs, shingles
+    from vptstools_spark.operators.dedup import jaccard_pairs, shingles
 
     t = "one two three four five six"
     df = spark.createDataFrame(
@@ -288,7 +249,9 @@ def test_containment_replica_collapse_expansion(spark):
     )
     got = {
         (r.doc_a, r.doc_b): r.containment
-        for r in containment_pairs(shingles(df, k=3), threshold=0.9).collect()
+        for r in jaccard_pairs(
+            shingles(df, k=3), threshold=0.9, measure="containment"
+        ).collect()
     }
     # identical pair exactly 1.0; both replicas pair with the superset
     assert got[(1, 2)] == 1.0

@@ -5,7 +5,6 @@ broadcast anti-join machinery with Iceberg-style sequence scoping."""
 import os
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
 from vptstools_spark.plans.timetravel import (
@@ -102,41 +101,6 @@ def test_eq_delete_in_change_feed(spark, tmp_path):
     delete_where_eq(spark, path, _keys(spark, [1, 8]), ["k"])
     ch2 = table_changes(spark, path, 1).collect()
     assert [(r["k"], r["_change_type"]) for r in ch2] == [(8, "delete")]
-
-
-def test_eq_delete_streaming_source_contract(spark, tmp_path):
-    """The streaming CDF source fails on an equality-delete commit
-    (snapshot semi-join is not plannable as source tasks) unless
-    skipChangeCommits opts out — the COW contract."""
-    from vptstools_spark.sources.table_changes_source import (
-        TableChangesDataSource,
-    )
-
-    spark.dataSource.register(TableChangesDataSource)
-    path = _init(spark, tmp_path)
-    delete_where_eq(spark, path, _keys(spark, [1]), ["k"])
-    commit_append(spark, path, _df(spark, [(70, 0, 7.0)]))
-
-    def run(out, ckpt, **opts):
-        r = spark.readStream.format("table_changes")
-        for k, v in opts.items():
-            r = r.option(k, v)
-        q = (
-            r.load(path)
-            .writeStream.format("parquet")
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .option("path", str(tmp_path / out))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(str(tmp_path / out))
-
-    with pytest.raises(Exception, match="[Ee]quality"):
-        run("out1", "ck1")
-    got = run("out2", "ck2", skipChangeCommits="true")
-    ks = sorted(r["k"] for r in got.filter("_change_type = 'insert'").collect())
-    assert ks == list(range(10)) + [70]  # v0 + v2; v1 skipped
 
 
 def test_eq_delete_follows_rename(spark, tmp_path):

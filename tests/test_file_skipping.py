@@ -2,7 +2,6 @@
 Iceberg-manifest-style per-file [min, max] from parquet footers,
 maintained by every commit and applied by read_version_pruned."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from vptstools_spark.plans.timetravel import (
@@ -12,7 +11,6 @@ from vptstools_spark.plans.timetravel import (
     delete_where,
     read_version,
     read_version_pruned,
-    set_stats_cols,
     skipped_files,
 )
 
@@ -58,18 +56,6 @@ def test_footer_stats_recorded_and_pruned(spark, tmp_path):
     # provably-empty read set: correct empty result, right schema
     out = read_version_pruned(spark, path, "k", ">", 10_000)
     assert out.columns == ["k", "v", "s"] and out.count() == 0
-
-
-def test_set_stats_cols_on_existing_table(spark, tmp_path):
-    path = str(tmp_path / "t")
-    commit_initial(_df(spark, 0, 50), path)
-    commit_append(spark, path, _df(spark, 50, 100))
-    assert _read_commit(spark, path, 1).get("file_stats") is None
-    set_stats_cols(spark, path, ["k"])
-    kept, skipped = skipped_files(spark, path, "k", ">=", 60)
-    assert len(kept) == 1 and len(skipped) == 1
-    with pytest.raises(ValueError, match="non-partition data column"):
-        set_stats_cols(spark, path, ["nope"])
 
 
 def test_skipping_survives_compaction_and_rename(spark, tmp_path):

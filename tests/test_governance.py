@@ -4,7 +4,7 @@ row-filter pushdown, drops, and the secure-view SQL face."""
 import pytest
 from pyspark.sql import functions as F
 
-from vptstools_spark.plans.governance import apply_policies, register_secure_view
+from vptstools_spark.plans.governance import apply_policies
 
 
 def _people(spark):
@@ -96,23 +96,6 @@ def test_unknown_column_errors(spark):
         apply_policies(
             _people(spark), {"masks": [{"column": "name", "kind": "rot13"}]}
         )
-
-
-def test_register_secure_view_sql_face(spark):
-    register_secure_view(
-        spark,
-        _people(spark),
-        "people_masked",
-        {
-            "row_filter": "balance > 0",
-            "masks": [{"column": "phone", "kind": "partial", "keep": 4}],
-            "drop": ["balance"],
-        },
-    )
-    got = spark.sql(
-        "SELECT phone FROM people_masked WHERE id = 3"
-    ).collect()[0][0]
-    assert got == "****1906"
 
 
 # ---------------------------------------------------------------------------

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from vptstools_spark.operators.graph import cluster_sizes, connected_components
+from vptstools_spark.operators.graph import connected_components
 
 
 def _components(spark, edges):
@@ -32,13 +32,6 @@ def test_edge_direction_irrelevant(spark):
 def test_self_loop_and_duplicate_edges(spark):
     got = _components(spark, [(4, 4), (4, 7), (7, 4), (4, 7)])
     assert got == {4: 4, 7: 4}
-
-
-def test_cluster_sizes(spark):
-    df = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
-    cc = connected_components(df)
-    sizes = {r["component"]: r["n_nodes"] for r in cluster_sizes(cc).collect()}
-    assert sizes == {1: 3, 10: 2}
 
 
 def test_max_iter_bounds_work(spark):
@@ -96,45 +89,6 @@ def test_converged_run_emits_no_warning(spark):
         warnings.simplefilter("error", RuntimeWarning)
         out = connected_components(df, max_iter=10)
         assert out.filter(F.col("component") != 1).count() == 0
-
-
-def test_star_matches_propagation_on_random_graph(spark):
-    """large-star/small-star and min-label propagation agree exactly on a
-    pseudo-random graph with multiple components of mixed shape."""
-    import random
-
-    from vptstools_spark.operators.graph import connected_components_star
-
-    rng = random.Random(7)
-    edges = []
-    # three islands: a chain, a clique, and sparse random pairs
-    edges += [(i, i + 1) for i in range(0, 40)]                    # chain 0-40
-    edges += [(a, b) for a in range(100, 108) for b in range(a + 1, 108)]
-    pool = list(range(200, 260))
-    edges += [(rng.choice(pool), rng.choice(pool)) for _ in range(80)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-
-    prop = {
-        (r.node, r.component) for r in connected_components(df, max_iter=100).collect()
-    }
-    star = {
-        (r.node, r.component) for r in connected_components_star(df).collect()
-    }
-    assert star == prop
-
-
-def test_star_converges_fast_on_long_chain(spark):
-    """A 200-node chain needs ~200 propagation rounds but O(log n) star
-    rounds — max_iter=12 must be enough."""
-    from vptstools_spark.operators.graph import connected_components_star
-
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(200)], "src long, dst long"
-    )
-    out = connected_components_star(df, max_iter=12, strict=True)
-    comps = {r.component for r in out.collect()}
-    assert comps == {0}
-    assert out.count() == 201
 
 
 def test_pagerank_ring_is_uniform(spark):

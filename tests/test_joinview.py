@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from vptstools_spark.plans.joinview import (
     JoinViewDef,
     build_joinview,
-    joinview_status,
     read_joinview,
     refresh_joinview,
 )
@@ -92,7 +91,6 @@ def test_build_then_noop_refresh(spark, tmp_path, lake):
     defn = _defn(left, right)
     build_joinview(spark, defn, vp)
     _assert_view_exact(spark, vp, defn)
-    assert joinview_status(spark, vp)["stale"] is False
     r = refresh_joinview(spark, vp)
     assert r["refreshed"] is False
 
@@ -104,7 +102,6 @@ def test_left_append_and_delete(spark, tmp_path, lake):
     build_joinview(spark, defn, vp)
     commit_append(spark, left, _orders(spark, [(6, 11, 1.5, 2), (7, 12, 3.5, 0)]))
     delete_where(spark, left, "okey = 2")
-    assert joinview_status(spark, vp)["stale"] is True
     r = refresh_joinview(spark, vp)
     assert r["refreshed"] is True and r["delta_rows"] > 0
     _assert_view_exact(spark, vp, defn)
@@ -205,7 +202,8 @@ def test_nonmatching_append_advances_pins_only(spark, tmp_path, lake):
     commit_append(spark, left, _orders(spark, [(9, 99, 1.0, 0)]))
     r = refresh_joinview(spark, vp)
     assert r["refreshed"] is True and r["delta_rows"] == 0
-    assert joinview_status(spark, vp)["stale"] is False
+    # the pins advanced: a second refresh has nothing left to apply
+    assert refresh_joinview(spark, vp)["refreshed"] is False
     _assert_view_exact(spark, vp, defn)
 
 

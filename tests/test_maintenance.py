@@ -1,90 +1,9 @@
-"""OPTIMIZE-style maintenance (plans/maintenance.py): compaction shrinks
-the file count, data survives byte-for-byte, and the refreshed stats and
-bloom indexes serve correct pruned reads afterwards."""
+"""Versioned-table maintenance (plans/maintenance.py): compaction and
+clustering commits shrink the file count, keep the data, and keep history
+readable."""
 
 import pytest
 from pyspark.sql import functions as F
-
-from vptstools_spark.plans.maintenance import optimize_table
-from vptstools_spark.plans.skipping import read_pruned, read_pruned_equality
-
-
-def _fragmented_table(spark, path):
-    # 3 day-partitions x 4 small files each
-    for chunk in range(4):
-        df = spark.range(chunk * 100, (chunk + 1) * 100).select(
-            F.col("id"),
-            (F.col("id") % 3).cast("int").alias("day"),
-            (F.col("id") * 7 % 1000).alias("v"),
-        )
-        df.repartition(1).write.mode("append").partitionBy("day").parquet(path)
-
-
-def test_optimize_compacts_and_preserves_data(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    _fragmented_table(spark, path)
-    before = spark.read.parquet(path)
-    rows_before = sorted(map(tuple, before.select("id", "day", "v").collect()))
-
-    report = optimize_table(
-        spark, path,
-        partition_cols=["day"], zorder_cols=["v"],
-        stats_cols=["v"], bloom_col="id",
-    )
-    assert report["n_files_before"] == 12
-    assert report["n_files_after"] == 3  # one file per day partition
-    after = spark.read.parquet(path)
-    assert sorted(map(tuple, after.select("id", "day", "v").collect())) == rows_before
-
-
-def test_optimize_refreshed_indexes_serve_pruned_reads(spark, tmp_path):
-    path = str(tmp_path / "tbl2")
-    _fragmented_table(spark, path)
-    report = optimize_table(
-        spark, path,
-        partition_cols=["day"], zorder_cols=["v"],
-        stats_cols=["v"], bloom_col="id",
-    )
-    stats, blooms = report["stats"], report["blooms"]
-    # range probe through min/max stats
-    got = sorted(
-        r["id"] for r in read_pruned(spark, stats, "v", 0, 50).collect()
-    )
-    want = sorted(
-        r["id"]
-        for r in spark.read.parquet(path)
-        .filter((F.col("v") >= 0) & (F.col("v") <= 50))
-        .collect()
-    )
-    assert got == want and got
-    # equality probe through the bloom index
-    out = read_pruned_equality(spark, blooms, "id", 133).collect()
-    assert [r["id"] for r in out] == [133]
-
-
-def test_optimize_incremental_second_run_is_cheap_noop(spark, tmp_path):
-    path = str(tmp_path / "tbl3")
-    _fragmented_table(spark, path)
-    r1 = optimize_table(
-        spark, path, partition_cols=["day"], zorder_cols=["v"],
-        stats_cols=["v"], bloom_col="id",
-    )
-    # append one new chunk, then refresh incrementally from r1's indexes
-    spark.range(400, 450).select(
-        F.col("id"), (F.col("id") % 3).cast("int").alias("day"),
-        (F.col("id") * 7 % 1000).alias("v"),
-    ).repartition(1).write.mode("append").partitionBy("day").parquet(path)
-    r2 = optimize_table(
-        spark, path, partition_cols=["day"], zorder_cols=["v"],
-        stats_cols=["v"], bloom_col="id",
-        stats=r1["stats"], blooms=r1["blooms"],
-    )
-    assert r2["n_files_after"] == 3
-    # indexes cover exactly the current files and serve the new rows
-    out = read_pruned_equality(spark, r2["blooms"], "id", 444).collect()
-    assert [r["id"] for r in out] == [444]
-    files_on_disk = {r["file"] for r in r2["blooms"].select("file").collect()}
-    assert len(files_on_disk) == 3
 
 
 # ----------------------------------------------- versioned-table compaction
@@ -162,20 +81,16 @@ def test_compact_materializes_deletes_and_skips_big_partitions(
     assert rep3["version"] == rep["version"]
 
 
-def test_compact_emits_nothing_in_cdf_and_stream(spark, tmp_path):
-    """compact is row-preserving: the batch feed and the streaming source
-    both skip it (no spurious insert/delete storm after maintenance)."""
+def test_compact_emits_nothing_in_cdf(spark, tmp_path):
+    """compact is row-preserving: the batch feed skips it (no spurious
+    insert/delete storm after maintenance)."""
     from vptstools_spark.plans.maintenance import compact_versioned_table
     from vptstools_spark.plans.timetravel import (
         commit_append,
         commit_initial,
         table_changes,
     )
-    from vptstools_spark.sources.table_changes_source import (
-        TableChangesDataSource,
-    )
 
-    spark.dataSource.register(TableChangesDataSource)
     path = str(tmp_path / "ct3")
     df = lambda rows: spark.createDataFrame(rows, "k long, day int, v double")
     commit_initial(df([(0, 0, 0.0)]), path, ["day"])
@@ -185,21 +100,6 @@ def test_compact_emits_nothing_in_cdf_and_stream(spark, tmp_path):
     ch = table_changes(spark, path, -1)
     assert ch.filter(f"_commit_version = {rep['version']}").count() == 0
     assert ch.count() == 4  # the four genuine inserts
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = (
-        spark.readStream.format("table_changes")
-        .load(path)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out)
-    assert got.count() == 4
-    assert got.filter(f"_commit_version = {rep['version']}").count() == 0
 
 
 def test_timestamp_as_of_and_age_retention(spark, tmp_path):
@@ -211,7 +111,6 @@ def test_timestamp_as_of_and_age_retention(spark, tmp_path):
         commit_append,
         commit_initial,
         expire_versions,
-        history_metadata,
         read_version,
         version_at_timestamp,
     )
@@ -230,8 +129,6 @@ def test_timestamp_as_of_and_age_retention(spark, tmp_path):
         version_at_timestamp(spark, path, 1.0)  # 1970: before any commit
     with pytest.raises(ValueError, match="not both"):
         read_version(spark, path, version=0, timestamp=t_after_v0)
-    hm = {r["version"]: r["commit_ts"] for r in history_metadata(spark, path).collect()}
-    assert hm[0] > 0 and hm[1] >= hm[0]
     # both commits are seconds old: a 1-hour grace expires nothing
     assert expire_versions(spark, path, keep_last=1, min_age_seconds=3600) == []
     assert expire_versions(spark, path, keep_last=1) == [0]

@@ -1,6 +1,6 @@
 """Materialized-view layer (plans/matview.py): answer equality vs the
-base table, the avg-of-averages trap, spec matching, router fallback,
-and partition-scoped incremental refresh vs full rebuild."""
+base table, the avg-of-averages trap, spec matching and router
+fallback."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +12,6 @@ from vptstools_spark.plans.matview import (
     can_answer,
     create_matview,
     read_matview,
-    refresh_matview,
     route,
 )
 
@@ -115,33 +114,6 @@ def test_route_falls_back_to_base_on_miss(spark, tmp_path):
     assert [(r["day"], r["n_rows"]) for r in out] == [("d1", 2)]
 
 
-def test_incremental_refresh_matches_full_rebuild(spark, tmp_path):
-    rows = [("HIGH", "m1", 10.0), ("HIGH", "m2", 40.0), ("LOW", "m2", 3.0)]
-    base = _base(spark, rows)
-    inc_path, full_path = str(tmp_path / "inc"), str(tmp_path / "full")
-    create_matview(base, inc_path, MV)
-    # base changes in m2 only (new row + implicit reaggregation)
-    rows2 = rows + [("LOW", "m2", 7.0), ("HIGH", "m2", 1.0)]
-    base2 = _base(spark, rows2)
-    refresh_matview(base2, inc_path, changed=["m2"])
-    create_matview(base2, full_path, MV)
-    inc_df, mv = read_matview(spark, inc_path)
-    full_df, _ = read_matview(spark, full_path)
-    cols = ["prio", "month", "rev_sum", "n", "p_min", "p_max"]
-    assert sorted(map(tuple, inc_df.select(cols).collect())) == sorted(
-        map(tuple, full_df.select(cols).collect())
-    )
-
-
-def test_refresh_requires_partitioned_mv(spark, tmp_path):
-    mv = MatViewDef("u", ("prio",), {"n": Measure("count", "*")}, None)
-    base = _base(spark, [("A", "m1", 1.0)])
-    path = str(tmp_path / "mv")
-    create_matview(base, path, mv)
-    with pytest.raises(ValueError, match="unpartitioned"):
-        refresh_matview(base, path, changed=["m1"])
-
-
 def test_mv_answer_scans_only_the_mv(spark, tmp_path):
     """Plan evidence for the whole point of MVs: the served rollup's scan
     reads the summary parquet, not the base table's files."""
@@ -184,26 +156,6 @@ def test_avg_on_nullable_column_uses_count_of_column(spark, tmp_path):
     mv_df, mvd = read_matview(spark, path)
     out = answer_from_mv(mv_df, mvd, ["g"], {"a": ("avg", "v")}).collect()
     assert out[0]["a"] == 3.0  # (2+4)/2, NOT (2+4)/3
-
-
-def test_refresh_deletes_vanished_partition(spark, tmp_path):
-    """A changed partition whose base rows were ALL deleted must disappear
-    from the MV — dynamic overwrite alone leaves it serving stale
-    aggregates (ADVICE r4)."""
-    base = _base(
-        spark, [("A", "m1", 1.0), ("A", "m2", 2.0), ("B", "m2", 4.0)]
-    )
-    path = str(tmp_path / "mv")
-    create_matview(base, path, MV)
-    # all m1 rows deleted; m2 changed
-    new_base = _base(spark, [("A", "m2", 3.0), ("B", "m2", 4.0)])
-    refresh_matview(new_base, path, ["m1", "m2"])
-    mv_df, mv = read_matview(spark, path)
-    full = str(tmp_path / "mv_full")
-    create_matview(new_base, full, MV)
-    want_df, _ = read_matview(spark, full)
-    assert _rows(mv_df, ["prio", "month"]) == _rows(want_df, ["prio", "month"])
-    assert mv_df.filter(F.col("month") == "m1").count() == 0
 
 
 def test_filtered_route_hits_mv_and_prunes_partitions(spark, tmp_path):

@@ -1,83 +1,8 @@
-"""Keyed MERGE into partitioned parquet: upsert, delete, partition-scoped
-rewrite (untouched partitions' files are not rewritten)."""
+"""Partition-scoped rewrite helpers (operators/merge.py): the scope
+filter stays plan-bounded past the literal threshold, and scope +
+anti-scope split any frame exactly."""
 
 from __future__ import annotations
-
-import glob
-import os
-
-from vptstools_spark.operators.merge import merge_upsert
-
-
-def _rows(spark, path):
-    return {
-        (r.k, r.p): r.v
-        for r in spark.read.parquet(path).collect()
-    }
-
-
-def _df(spark, rows):
-    return spark.createDataFrame(rows, "k long, p string, v double")
-
-
-def test_merge_first_write_then_upsert_insert_delete(spark, tmp_path):
-    path = str(tmp_path / "t")
-    merge_upsert(spark, path, _df(spark, [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0)]),
-                 keys=["k"], partition_cols=["p"])
-    assert _rows(spark, path) == {(1, "a"): 1.0, (2, "a"): 2.0, (3, "b"): 3.0}
-
-    # update k=1, insert k=4, both in partition a; delete k=3 in partition b
-    delta = spark.createDataFrame(
-        [(1, "a", 10.0, False), (4, "a", 4.0, False), (3, "b", 0.0, True)],
-        "k long, p string, v double, is_delete boolean",
-    )
-    merge_upsert(spark, path, delta, keys=["k"], partition_cols=["p"],
-                 delete_col="is_delete")
-    assert _rows(spark, path) == {(1, "a"): 10.0, (2, "a"): 2.0, (4, "a"): 4.0}
-
-
-def test_merge_leaves_untouched_partitions_alone(spark, tmp_path):
-    path = str(tmp_path / "t")
-    merge_upsert(spark, path, _df(spark, [(1, "a", 1.0), (2, "b", 2.0)]),
-                 keys=["k"], partition_cols=["p"])
-    before = {f: os.stat(f).st_mtime_ns for f in glob.glob(f"{path}/p=b/*.parquet")}
-    assert before
-
-    merge_upsert(spark, path, _df(spark, [(1, "a", 9.0)]),
-                 keys=["k"], partition_cols=["p"])
-    after = {f: os.stat(f).st_mtime_ns for f in glob.glob(f"{path}/p=b/*.parquet")}
-    assert after == before  # dynamic overwrite rewrote only partition a
-    assert _rows(spark, path) == {(1, "a"): 9.0, (2, "b"): 2.0}
-
-
-def test_merge_empty_delta_is_noop(spark, tmp_path):
-    path = str(tmp_path / "t")
-    merge_upsert(spark, path, _df(spark, [(1, "a", 1.0)]),
-                 keys=["k"], partition_cols=["p"])
-    merge_upsert(spark, path, _df(spark, []), keys=["k"], partition_cols=["p"])
-    assert _rows(spark, path) == {(1, "a"): 1.0}
-
-
-def test_merge_hive_escaped_partition_cleanup(spark, tmp_path):
-    """A delete that empties a partition whose value Spark hive-escapes in
-    the directory name (here ':' -> %3A) must still remove the old files —
-    raw f"p={v}" path construction would target a nonexistent dir and the
-    tombstoned rows would resurrect on the next read."""
-    path = str(tmp_path / "t")
-    merge_upsert(
-        spark, path,
-        _df(spark, [(1, "a:b", 1.0), (2, "ok", 2.0)]),
-        keys=["k"], partition_cols=["p"],
-    )
-    assert glob.glob(f"{path}/p=a%3Ab/*.parquet"), "escaped dir expected"
-
-    delta = spark.createDataFrame(
-        [(1, "a:b", 0.0, True)], "k long, p string, v double, is_delete boolean"
-    )
-    merge_upsert(spark, path, delta, keys=["k"], partition_cols=["p"],
-                 delete_col="is_delete")
-    assert not os.path.exists(f"{path}/p=a%3Ab"), "emptied partition dir must be deleted"
-    assert _rows(spark, path) == {(2, "ok"): 2.0}
 
 
 def test_scope_to_partitions_plan_bounded(spark, tmp_path):
@@ -101,30 +26,6 @@ def test_scope_to_partitions_plan_bounded(spark, tmp_path):
     lo = plan_len(MAX_LITERAL_PARTITION_FILTER + 1)
     hi = plan_len(2000)
     assert hi <= lo * 2, f"plan grew with worklist: {lo} -> {hi}"
-
-
-def test_merge_large_worklist_end_to_end(spark, tmp_path):
-    """MERGE with a delta touching >MAX_LITERAL_PARTITION_FILTER partitions
-    exercises the semi-join pruning path end-to-end."""
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "t")
-    base = spark.range(600).select(
-        F.col("id").alias("k"), (F.col("id") % 300).cast("string").alias("p"),
-        F.lit(1.0).alias("v"),
-    )
-    merge_upsert(spark, path, base, keys=["k"], partition_cols=["p"])
-
-    # touch all 300 partitions: update the first 300 keys
-    delta = spark.range(300).select(
-        F.col("id").alias("k"), (F.col("id") % 300).cast("string").alias("p"),
-        F.lit(9.0).alias("v"),
-    )
-    merge_upsert(spark, path, delta, keys=["k"], partition_cols=["p"])
-    # partition values come back type-inferred (int) — compare as strings
-    got = {(r.k, str(r.p)): r.v for r in spark.read.parquet(path).collect()}
-    assert len(got) == 600
-    assert got[(5, "5")] == 9.0 and got[(305, "5")] == 1.0
 
 
 def test_anti_scope_is_exact_complement(spark):

@@ -12,8 +12,6 @@ from vptstools_spark.plans.occ import (
     ConcurrentTransactionError,
     append_atomic,
     compact_atomic,
-    delete_where_atomic,
-    upsert_mor_atomic,
 )
 from vptstools_spark.plans.timetravel import (
     _read_commit,
@@ -88,66 +86,6 @@ def test_append_blocked_by_schema_change(spark, tmp_path, monkeypatch):
     _lose_first_race(monkeypatch, winner)
     with pytest.raises(ConcurrentTransactionError, match="rename"):
         append_atomic(spark, path, _df(spark, [(200, 1, 2.0)]))
-
-
-def test_delete_rebases_over_append_write_serializable(
-    spark, tmp_path, monkeypatch
-):
-    """The delete's vectors were computed at base; a winner-appended row
-    matching the predicate STAYS (delete serialized before append) —
-    Delta WriteSerializable semantics."""
-    path = _init(spark, tmp_path)
-    # winner appends k=101 (odd, matches the delete predicate below)
-    winner = lambda: commit_append(spark, path, _df(spark, [(101, 1, 9.0)]))
-    _lose_first_race(monkeypatch, winner)
-    v = delete_where_atomic(spark, path, "k % 2 = 1")
-    assert v == 2
-    assert _read_commit(spark, path, 2)["txn"]["rebased_over"] == [1]
-    ks = {r[0] for r in _rows(spark, path)}
-    assert ks == {0, 2, 4, 6, 101}  # base odds gone; winner's 101 stays
-
-
-def test_delete_rederives_over_compaction(spark, tmp_path, monkeypatch):
-    """A compaction winner rewrote the files the vectors reference —
-    republishing them would orphan the deletes, so the op re-derives:
-    the deletes still land."""
-    from vptstools_spark.plans.maintenance import compact_versioned_table
-
-    path = _init(spark, tmp_path)
-    for i in range(4):  # small files to give compaction victims
-        commit_append(spark, path, _df(spark, [(10 + i, 0, 0.5)]))
-    winner = lambda: compact_versioned_table(spark, path, min_files=2)
-    _lose_first_race(monkeypatch, winner)
-    v = delete_where_atomic(spark, path, "k >= 10")
-    assert v == 6  # 0 init, 1-4 appends, 5 compact (winner), 6 delete
-    ks = {r[0] for r in _rows(spark, path)}
-    assert ks == set(range(8))  # every k>=10 deleted despite the rewrite
-
-
-def test_upsert_mor_rebases_on_disjoint_keys(spark, tmp_path, monkeypatch):
-    path = _init(spark, tmp_path)
-    winner = lambda: commit_append(spark, path, _df(spark, [(100, 0, 1.0)]))
-    _lose_first_race(monkeypatch, winner)
-    v = upsert_mor_atomic(
-        spark, path, _df(spark, [(3, 1, 33.0)]), keys=["k"]
-    )
-    assert v == 2
-    assert _read_commit(spark, path, 2)["txn"]["rebased_over"] == [1]
-    rows = dict((r[0], r[2]) for r in _rows(spark, path))
-    assert rows[3] == 33.0 and rows[100] == 1.0
-
-
-def test_upsert_mor_rederives_on_key_overlap(spark, tmp_path, monkeypatch):
-    """Winner appended a row with the SAME key the merge replaces: the
-    prepared vectors miss it — the merge must re-derive so the final
-    table has exactly one row for the key (the merge's row: the merge
-    serializes AFTER the conflicting append)."""
-    path = _init(spark, tmp_path)
-    winner = lambda: commit_append(spark, path, _df(spark, [(3, 1, 99.0)]))
-    _lose_first_race(monkeypatch, winner)
-    upsert_mor_atomic(spark, path, _df(spark, [(3, 1, 33.0)]), keys=["k"])
-    rows = [r for r in _rows(spark, path) if r[0] == 3]
-    assert rows == [(3, 1, 33.0)]  # one row, the merge's value
 
 
 def test_compact_rebases_over_append(spark, tmp_path, monkeypatch):
@@ -305,30 +243,12 @@ def test_vacuum_reaps_after_intent_cleared(spark, tmp_path):
     assert removed and all(r.startswith(label + "/") for r in removed)
 
 
-def test_clean_stale_intents_age_gate(spark, tmp_path):
-    from vptstools_spark.plans.timetravel import (
-        clean_stale_intents,
-        register_write_intent,
-    )
-
-    path = _init(spark, tmp_path)
-    register_write_intent(spark, path, "v5-tcafe0001")
-    # fresh intent survives a 1-hour sweep, dies at min_age 0
-    assert clean_stale_intents(spark, path, min_age_seconds=3600) == []
-    assert clean_stale_intents(spark, path, min_age_seconds=0) == [
-        "v5-tcafe0001"
-    ]
-
-
-def test_upsert_and_compact_clear_intents(spark, tmp_path):
+def test_append_and_compact_clear_intents(spark, tmp_path):
     """Every atomic op must leave the intent dir empty on success — a
     leaked intent permanently shields garbage from vacuum."""
     from vptstools_spark.plans.timetravel import _active_intent_labels
 
     path = _init(spark, tmp_path)
-    upsert_mor_atomic(
-        spark, path, _df(spark, [(0, 0, 99.0), (200, 0, 2.0)]), ["k"]
-    )
+    append_atomic(spark, path, _df(spark, [(200, 0, 2.0)]))
     compact_atomic(spark, path, min_files=1)
-    delete_where_atomic(spark, path, "k = 200")
     assert _active_intent_labels(spark, path) == set()

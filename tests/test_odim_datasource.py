@@ -33,10 +33,12 @@ def test_load_recursive_directory(spark, vp_case):
 
 
 def test_matches_binaryfile_scan(spark, vp_case):
+    from vptstools_spark.schemas import profile_long_schema
     from vptstools_spark.sources.odim import read_vp_files
 
     ds = spark.read.format("odim").load(vp_case.path)
     bf = read_vp_files(spark, vp_case.scan)
+    assert ds.schema == profile_long_schema()  # nullability included
     a = sorted(ds.collect(), key=_key)
     b = sorted(bf.collect(), key=_key)
     assert len(a) == len(b)

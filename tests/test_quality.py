@@ -45,7 +45,7 @@ def test_suite_order_and_all_green(spark):
     suite = [
         quality.uniqueness("u", "id"),
         quality.completeness("c", "s"),
-        quality.matches("m", "s", "^[a-z]$"),
+        quality.satisfies("m", F.col("s").rlike("^[a-z]$")),
     ]
     rows = quality.run_suite(clean, suite).collect()
     assert [r["check"] for r in rows] == ["u", "c", "m"]

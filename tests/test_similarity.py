@@ -2,7 +2,7 @@
 
 from vptstools_spark.operators.similarity import (
     anchor_buckets,
-    cosine_pairs,
+    cosine_pairs_blocked,
     knn_bruteforce,
 )
 
@@ -29,7 +29,8 @@ def test_knn_ranks_by_cosine(spark):
 
 
 def test_cosine_pairs_threshold(spark):
-    pairs = {(r["vec_a"], r["vec_b"]) for r in cosine_pairs(_emb(spark), threshold=0.9).collect()}
+    out = cosine_pairs_blocked(_emb(spark), threshold=0.9, n_blocks=2)
+    pairs = {(r["vec_a"], r["vec_b"]) for r in out.collect()}
     assert pairs == {(0, 1)}
 
 
@@ -91,22 +92,6 @@ def test_kmeans_fit_separates_clusters(spark):
     assert cells[0] == cells[2] == cells[4]
     assert cells[1] == cells[3] == cells[5]
     assert cells[0] != cells[1]
-
-
-def test_scalar_quantize_known_codes(spark):
-    from vptstools_spark.operators.similarity import dim_minmax, scalar_quantize
-
-    emb = spark.createDataFrame(
-        [(0, [0.0, -1.0]), (1, [0.5, 0.0]), (2, [1.0, 1.0])],
-        "vec_id long, embedding array<float>",
-    )
-    mins, maxs = dim_minmax(emb)
-    assert mins == [0.0, -1.0] and maxs == [1.0, 1.0]
-    codes = {r["id"]: r["codes"] for r in scalar_quantize(emb, mins, maxs).collect()}
-    # x=min -> 0; x=max -> 255; midpoint -> floor(0.5*255)=127
-    assert codes[0] == [0, 0]
-    assert codes[1] == [127, 127]
-    assert codes[2] == [255, 255]
 
 
 def test_knn_ivf_rerank_recovers_ivf_topk(spark):

@@ -1,97 +1,8 @@
-"""File-level data skipping (plans/skipping.py): stats correctness, pruning
-soundness (never drops a matching row), and actual file-count reduction."""
+"""File-level data skipping (plans/skipping.py): the Bloom equality index
+never drops a matching row and actually reduces the file count."""
 
 import pytest
 from pyspark.sql import functions as F
-
-from vptstools_spark.plans.skipping import (
-    collect_file_stats,
-    files_for_predicate,
-    read_pruned,
-)
-
-
-@pytest.fixture(scope="module")
-def laid_out(spark, tmp_path_factory):
-    # 8 files, each covering a disjoint id range (range-partitioned write):
-    # the best case data skipping is designed for
-    path = str(tmp_path_factory.mktemp("skip") / "t")
-    df = spark.range(8000).withColumn("v", (F.col("id") % 97).cast("int"))
-    df.repartitionByRange(8, "id").write.parquet(path)
-    return path
-
-
-def test_stats_cover_all_rows_and_files(spark, laid_out):
-    stats = collect_file_stats(spark, laid_out, ["id", "v"])
-    rows = stats.collect()
-    assert len(rows) == 8
-    assert sum(r["n_rows"] for r in rows) == 8000
-    # global min/max reassemble from per-file stats
-    assert min(r["id__min"] for r in rows) == 0
-    assert max(r["id__max"] for r in rows) == 7999
-    assert all(r["id__nulls"] == 0 for r in rows)
-
-
-def test_pruning_is_sound_and_effective(spark, laid_out):
-    stats = collect_file_stats(spark, laid_out, ["id"])
-    kept = files_for_predicate(stats, "id", 1000, 1999)
-    # effectiveness: a 1/8-range predicate over range-laid-out files must
-    # read a small fraction, not the whole directory
-    assert 1 <= len(kept) <= 3
-    # soundness: pruned read == full-scan filter, exactly
-    got = read_pruned(spark, stats, "id", 1000, 1999)
-    want = spark.read.parquet(laid_out).filter("id between 1000 and 1999")
-    assert got.count() == want.count() == 1000
-    assert got.exceptAll(want).count() == 0
-
-
-def test_open_bounds(spark, laid_out):
-    stats = collect_file_stats(spark, laid_out, ["id"])
-    assert read_pruned(spark, stats, "id", 7000, None).count() == 1000
-    assert read_pruned(spark, stats, "id", None, 499).count() == 500
-
-
-def test_unclustered_column_keeps_everything(spark, laid_out):
-    # v is uncorrelated with the file layout → every file's [min,max]
-    # spans the predicate → no file can be skipped (and none may be)
-    stats = collect_file_stats(spark, laid_out, ["v"])
-    kept = files_for_predicate(stats, "v", 10, 20)
-    assert len(kept) == 8
-    got = read_pruned(spark, stats, "v", 10, 20)
-    want = spark.read.parquet(laid_out).filter("v between 10 and 20")
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-
-def test_empty_match_preserves_schema(spark, laid_out):
-    stats = collect_file_stats(spark, laid_out, ["id"])
-    out = read_pruned(spark, stats, "id", 100000, 200000)
-    assert out.count() == 0
-    assert set(out.columns) == {"id", "v"}
-
-
-def test_incremental_stats_update(spark, laid_out, tmp_path):
-    import shutil
-
-    from vptstools_spark.plans.skipping import update_file_stats
-
-    # copy the table so we can append to it
-    path = str(tmp_path / "t2")
-    shutil.copytree(laid_out, path)
-    stats = collect_file_stats(spark, path, ["id"])
-    n_before = stats.count()
-    # append new files with a disjoint id range
-    spark.range(100000, 101000).withColumn(
-        "v", (F.col("id") % 97).cast("int")
-    ).coalesce(2).write.mode("append").parquet(path)
-
-    updated = update_file_stats(spark, path, stats, ["id"])
-    assert updated.count() == n_before + 2
-    # the refreshed table must equal a from-scratch collection
-    scratch = collect_file_stats(spark, path, ["id"])
-    assert updated.exceptAll(scratch).count() == 0
-    assert scratch.exceptAll(updated).count() == 0
-    # and pruning over it sees the new range
-    assert files_for_predicate(updated, "id", 100000, 100500)
 
 
 def test_bloom_index_prunes_equality_probe(spark, tmp_path):
@@ -178,48 +89,3 @@ def test_bloom_probe_date_rendering(spark, tmp_path):
         spark, blooms, "d", datetime.date(2024, 1, 7)
     )
     assert got.count() == 1
-
-
-def test_dictionary_index_prunes_exactly(spark, tmp_path):
-    """Low-cardinality dictionary index: equality probes prune with ZERO
-    false positives (unlike bloom), overflow files are kept
-    conservatively, and results equal the full-scan filter."""
-    from vptstools_spark.plans.skipping import (
-        collect_file_dictionaries,
-        files_for_equality_dict,
-        read_pruned_equality_dict,
-    )
-
-    path = str(tmp_path / "dt")
-    # 4 files, each holding exactly 2 of 8 status codes
-    df = spark.range(800).select(
-        F.col("id"), F.concat(F.lit("S"), (F.col("id") % 8)).alias("status")
-    )
-    df.repartitionByRange(4, F.col("id") % 8).write.parquet(path)
-    dicts = collect_file_dictionaries(spark, path, "status")
-    full = spark.read.parquet(path)
-    probe_files = files_for_equality_dict(dicts, "S3")
-    n_files = dicts.count()
-    assert 0 < len(probe_files) < n_files  # real pruning happened
-    got = read_pruned_equality_dict(spark, dicts, "status", "S3")
-    assert got.count() == full.filter(F.col("status") == "S3").count() == 100
-    # absent value -> zero files, schema preserved
-    assert files_for_equality_dict(dicts, "S9") == []
-    assert read_pruned_equality_dict(spark, dicts, "status", "S9").count() == 0
-
-
-def test_dictionary_index_overflow_is_conservative(spark, tmp_path):
-    from vptstools_spark.plans.skipping import (
-        collect_file_dictionaries,
-        read_pruned_equality_dict,
-    )
-
-    path = str(tmp_path / "dov")
-    # one file with 200 distinct values -> overflow (NULL entry)
-    spark.range(200).select(
-        F.col("id"), F.col("id").cast("string").alias("v")
-    ).coalesce(1).write.parquet(path)
-    dicts = collect_file_dictionaries(spark, path, "v", max_distinct=64)
-    assert dicts.filter(F.col("values").isNull()).count() == 1
-    # overflow file kept -> probe still finds the row via residual filter
-    assert read_pruned_equality_dict(spark, dicts, "v", "123").count() == 1

@@ -15,7 +15,6 @@ from vptstools_spark.plans.stats import (
     estimate_equi_join,
     estimate_filter_selectivity,
     read_stats,
-    scaled,
     stats_join,
     stats_stale,
     write_stats,
@@ -98,8 +97,6 @@ def test_filter_selectivity():
     # non-numeric bounds → Selinger default
     s2 = TableStats(n_rows=100, columns={"x": _cs("x", 100, 20, "a", "z")})
     assert estimate_filter_selectivity(s2, "x", "<", "m") == pytest.approx(1 / 3)
-    sc = scaled(s, 0.05)
-    assert sc.n_rows == 5 and sc.columns["x"].ndv == 5
 
 
 def test_choose_strategy_thresholds():

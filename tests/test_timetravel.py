@@ -19,6 +19,13 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k long, day int, v double")
 
 
+def _constraints(spark, path):
+    """The latest commit's constraint list."""
+    from vptstools_spark.plans.timetravel import _read_commit, _resolve_version
+
+    return _read_commit(spark, path, _resolve_version(spark, path, None)).get("constraints") or []
+
+
 def _rows(df):
     return sorted((r["k"], r["day"], r["v"]) for r in df.collect())
 
@@ -133,28 +140,6 @@ def test_expiry_retention_guard(spark, tmp_path):
     assert _rows(read_version(spark, path)) == [(1, 0, 1.0)]
 
 
-def test_register_table_as_of_sql_face(spark, tmp_path):
-    from vptstools_spark.sql import register_table_as_of
-
-    path = str(tmp_path / "tt9")
-    commit_initial(_df(spark, [(1, 0, 1.0)]), path, ["day"])
-    commit_upsert(spark, path, _df(spark, [(1, 0, 2.0)]), keys=["k"])
-    register_table_as_of(spark, path, "tt9_v0", 0)
-    register_table_as_of(spark, path, "tt9_latest")
-    assert spark.sql("SELECT v FROM tt9_v0").collect()[0][0] == 1.0
-    assert spark.sql("SELECT v FROM tt9_latest").collect()[0][0] == 2.0
-    # TIMESTAMP AS OF through the SQL face: pin between the two commits
-    import time
-
-    from vptstools_spark.plans.timetravel import _read_commit
-
-    t_mid = (_read_commit(spark, path, 0)["ts"] + _read_commit(spark, path, 1)["ts"]) / 2
-    register_table_as_of(spark, path, "tt9_asof", timestamp=t_mid)
-    assert spark.sql("SELECT v FROM tt9_asof").collect()[0][0] == 1.0
-    with pytest.raises(ValueError, match="not both"):
-        register_table_as_of(spark, path, "x", version=0, timestamp=time.time())
-
-
 def test_vacuum_reclaims_unreferenced_files_only(spark, tmp_path):
     import glob
 
@@ -212,88 +197,6 @@ def test_commit_race_one_winner(spark, tmp_path):
     assert not create_text_exclusive(spark, log2, "{}")
     # table still readable, B's commit intact
     assert read_version(spark, path, 2).count() == 2
-
-
-def test_cdc_driven_mv_refresh(spark, tmp_path):
-    """Subsystem composition: a time-travel upsert's diff tells the MV
-    layer exactly which partitions changed — diff_versions → changed
-    partition list → refresh_matview — so the summary follows the
-    versioned table at delta cost, and equals a full rebuild."""
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.plans.matview import (
-        MatViewDef,
-        Measure,
-        create_matview,
-        read_matview,
-        refresh_matview,
-    )
-
-    MVD = MatViewDef(
-        "by_day", ("day",),
-        {"s": Measure("sum", "v"), "n": Measure("count", "*")},
-        partition_dim="day",
-    )
-    tt = str(tmp_path / "tt")
-    mv = str(tmp_path / "mv")
-    base = _df(spark, [(1, 0, 1.0), (2, 0, 2.0), (3, 1, 3.0), (4, 2, 4.0)])
-    commit_initial(base, tt, ["day"])
-    create_matview(read_version(spark, tt, 0), mv, MVD)
-
-    delta = _df(spark, [(2, 0, 9.0), (5, 1, 5.0)])
-    v1 = commit_upsert(spark, tt, delta, keys=["k"])
-    diff = diff_versions(spark, tt, 0, v1, keys=["k"])
-    both = read_version(spark, tt, v1).unionByName(read_version(spark, tt, 0))
-    changed_days = [
-        r["day"]
-        for r in both.join(diff.select("k"), "k", "left_semi")
-        .select("day").distinct().collect()
-    ]
-    refresh_matview(read_version(spark, tt, v1), mv, changed_days)
-
-    mv_df, _ = read_matview(spark, mv)
-    full = str(tmp_path / "mv_full")
-    create_matview(read_version(spark, tt, v1), full, MVD)
-    want_df, _ = read_matview(spark, full)
-    got = sorted((r["day"], r["s"], r["n"]) for r in mv_df.collect())
-    want = sorted((r["day"], r["s"], r["n"]) for r in want_df.collect())
-    assert got == want
-    assert sorted(changed_days) == [0, 1]  # day 2 untouched -> not refreshed
-
-
-def test_restore_version_metadata_only_rollback(spark, tmp_path):
-    from vptstools_spark.plans.timetravel import _read_commit, restore_version
-
-    path = str(tmp_path / "tt12")
-    commit_initial(_df(spark, [(1, 0, 1.0), (2, 1, 2.0)]), path, ["day"])
-    commit_upsert(spark, path, _df(spark, [(1, 0, 9.0)]), keys=["k"])  # bad write
-    v2 = restore_version(spark, path, 0)
-    assert v2 == 2
-    # latest == v0's data; the bad v1 stays readable for forensics
-    assert _rows(read_version(spark, path)) == [(1, 0, 1.0), (2, 1, 2.0)]
-    assert _rows(read_version(spark, path, 1)) == [(1, 0, 9.0), (2, 1, 2.0)]
-    # metadata-only: the restore commit references v0's files verbatim
-    assert _read_commit(spark, path, 2)["files"] == _read_commit(spark, path, 0)["files"]
-    assert _read_commit(spark, path, 2)["op"] == "restore(0)"
-    with pytest.raises(ValueError, match="cannot restore"):
-        restore_version(spark, path, 99)
-
-
-def test_vacuum_respects_restore_references(spark, tmp_path):
-    """After RESTORE, the restored commit references the ORIGINAL
-    version's files; expiring that original version must not let vacuum
-    delete files the restore commit still needs."""
-    from vptstools_spark.plans.timetravel import restore_version, vacuum_table
-
-    path = str(tmp_path / "tt13")
-    commit_initial(_df(spark, [(1, 0, 1.0), (2, 1, 2.0)]), path, ["day"])
-    commit_upsert(spark, path, _df(spark, [(1, 0, 9.0)]), keys=["k"])  # v1
-    restore_version(spark, path, 0)  # v2 -> references v0's files
-    expire_versions(spark, path, keep_last=1)  # only v2 survives
-    removed = vacuum_table(spark, path, min_age_seconds=0)
-    # v1's day=0 rewrite is the only unreferenced data
-    assert removed and all(r.startswith("v1/") for r in removed)
-    assert _rows(read_version(spark, path)) == [(1, 0, 1.0), (2, 1, 2.0)]
 
 
 def test_additive_schema_evolution(spark, tmp_path):
@@ -424,17 +327,6 @@ def test_upsert_carries_pending_vectors_for_untouched_partitions(spark, tmp_path
     assert _rows(read_version(spark, path)) == [(1, 0, 9.0), (3, 1, 3.0)]
 
 
-def test_restore_preserves_delete_vectors(spark, tmp_path):
-    from vptstools_spark.plans.timetravel import delete_where, restore_version
-
-    path = str(tmp_path / "dv6")
-    commit_initial(_df(spark, [(1, 0, 1.0), (2, 0, 2.0)]), path, ["day"])
-    delete_where(spark, path, "k = 2")          # v1
-    commit_upsert(spark, path, _df(spark, [(5, 0, 5.0)]), keys=["k"])  # v2
-    restore_version(spark, path, 1)              # v3 == v1's snapshot
-    assert _rows(read_version(spark, path)) == [(1, 0, 1.0)]
-
-
 def test_vacuum_never_deletes_referenced_vectors(spark, tmp_path):
     from vptstools_spark.plans.timetravel import (
         delete_where,
@@ -479,7 +371,6 @@ def test_vacuum_reclaims_orphaned_vectors_after_purge_and_expiry(spark, tmp_path
 def test_set_constraints_validates_existing_data(spark, tmp_path):
     from vptstools_spark.plans.timetravel import (
         ConstraintViolationError,
-        constraints_of,
         set_constraints,
     )
 
@@ -492,7 +383,7 @@ def test_set_constraints_validates_existing_data(spark, tmp_path):
     set_constraints(
         spark, path, [{"name": "v_big", "kind": "check", "expr": "v > -10"}]
     )
-    assert [c["name"] for c in constraints_of(spark, path)] == ["v_big"]
+    assert [c["name"] for c in _constraints(spark, path)] == ["v_big"]
 
 
 def test_append_rejects_check_and_null_violations(spark, tmp_path):
@@ -586,7 +477,6 @@ def test_unique_on_non_key_column_under_upsert(spark, tmp_path):
 def test_drop_constraints_and_carry_through_commits(spark, tmp_path):
     from vptstools_spark.plans.timetravel import (
         commit_append,
-        constraints_of,
         delete_where,
         drop_constraints,
         set_constraints,
@@ -601,9 +491,9 @@ def test_drop_constraints_and_carry_through_commits(spark, tmp_path):
     delete_where(spark, path, "k = 2")
     commit_upsert(spark, path, _df(spark, [(3, 0, 3.0)]), keys=["k"])
     # every commit path carried the constraint
-    assert [c["name"] for c in constraints_of(spark, path)] == ["v_pos"]
+    assert [c["name"] for c in _constraints(spark, path)] == ["v_pos"]
     drop_constraints(spark, path, ["v_pos"])
-    assert constraints_of(spark, path) == []
+    assert _constraints(spark, path) == []
     commit_append(spark, path, _df(spark, [(4, 0, -4.0)]))  # now allowed
 
 
@@ -831,49 +721,6 @@ def test_update_where_constraint_and_unknown_column(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown columns"):
         update_where(spark, path, "k = 1", {"nope": "1"})
     assert _rows(read_version(spark, path)) == [(1, 0, 1.0)]
-
-
-def test_cdf_driven_mv_refresh_at_delta_cost(spark, tmp_path):
-    """Same composition as test_cdc_driven_mv_refresh but the changed-
-    partition worklist comes from the CDF (`changed_partitions`) over a
-    merge-on-read history — O(changed data), no snapshot key join."""
-    from vptstools_spark.plans.matview import (
-        MatViewDef,
-        Measure,
-        create_matview,
-        read_matview,
-        refresh_matview,
-    )
-    from vptstools_spark.plans.timetravel import (
-        changed_partitions,
-        commit_upsert_mor,
-    )
-
-    MVD = MatViewDef(
-        "by_day", ("day",),
-        {"s": Measure("sum", "v"), "n": Measure("count", "*")},
-        partition_dim="day",
-    )
-    tt = str(tmp_path / "tt")
-    mv = str(tmp_path / "mv")
-    base = _df(spark, [(1, 0, 1.0), (2, 0, 2.0), (3, 1, 3.0), (4, 2, 4.0)])
-    commit_initial(base, tt, ["day"])
-    create_matview(read_version(spark, tt, 0), mv, MVD)
-
-    v1 = commit_upsert_mor(
-        spark, tt, _df(spark, [(2, 0, 9.0), (5, 1, 5.0)]), keys=["k"]
-    )
-    days = [d for (d,) in changed_partitions(spark, tt, 0, v1)]
-    assert sorted(days) == [0, 1]  # day 2 untouched
-    refresh_matview(read_version(spark, tt, v1), mv, days)
-
-    full = str(tmp_path / "mv_full")
-    create_matview(read_version(spark, tt, v1), full, MVD)
-    got_df, _ = read_matview(spark, mv)
-    want_df, _ = read_matview(spark, full)
-    got = sorted((r["day"], r["s"], r["n"]) for r in got_df.collect())
-    want = sorted((r["day"], r["s"], r["n"]) for r in want_df.collect())
-    assert got == want
 
 
 # ------------------------------------------------------ partition evolution
@@ -1490,3 +1337,47 @@ def test_vdir_schema_cache_survives_table_recreation(spark, tmp_path):
 
     # bounded: the LRU cap holds
     assert len(tt._VDIR_SCHEMA_CACHE) <= tt._VDIR_SCHEMA_CACHE_MAX
+
+
+def test_vacuum_age_gate_protects_young_files(spark, tmp_path):
+    """vacuum_table skips unreferenced files younger than
+    min_age_seconds — an in-flight writer's not-yet-committed data
+    survives an automated vacuum (ADVICE r5 medium)."""
+    import os
+
+    from vptstools_spark.plans.timetravel import _DATA_DIR, vacuum_table
+
+    path = str(tmp_path / "t")
+    commit_initial(_df(spark, [(0, 0, 0.0)]), path)
+    # simulate an in-flight writer: data written, commit JSON not yet
+    # published (every commit protocol here is write-files-then-publish)
+    staged = os.path.join(path, _DATA_DIR, "v1", "part-inflight.parquet")
+    os.makedirs(os.path.dirname(staged), exist_ok=True)
+    _df(spark, [(1, 1, 1.0)]).toPandas().to_parquet(staged)
+
+    # default gate: the young unreferenced file is untouched
+    assert vacuum_table(spark, path) == []
+    assert vacuum_table(spark, path, dry_run=True) == []
+    assert os.path.exists(staged)
+    # age the file below the cutoff -> reclaimable
+    os.utime(staged, (1, 1))
+    assert vacuum_table(spark, path, dry_run=True) == ["v1/part-inflight.parquet"]
+    assert vacuum_table(spark, path) == ["v1/part-inflight.parquet"]
+    assert not os.path.exists(staged)
+    assert read_version(spark, path).count() == 1
+
+
+def test_table_changes_expired_gap_raises_contract_error(spark, tmp_path):
+    """History expired under a tag gap: the batch feed raises the clear
+    contract error, not a raw sidecar miss."""
+    from vptstools_spark.plans.branches import create_tag
+    from vptstools_spark.plans.timetravel import commit_append, table_changes
+
+    path = str(tmp_path / "t")
+    commit_initial(_df(spark, [(0, 0, 0.0)]), path)
+    for i in range(1, 5):
+        commit_append(spark, path, _df(spark, [(i, i, float(i))]))
+    create_tag(spark, path, "keep", version=1)
+    expire_versions(spark, path, keep_last=2)  # survivors: 1(tag), 3, 4
+    with pytest.raises(ValueError, match="expired"):
+        table_changes(spark, path, 0)

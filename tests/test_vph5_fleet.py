@@ -188,6 +188,24 @@ def test_rerun_of_one_radars_day_leaves_other_radars_month(spark, fleet, tmp_pat
     _expect(dest, oracle, [first])
 
 
+def test_path_folder_run_rejects_misnamed_file(spark, fleet, tmp_path):
+    """A backfill applies the manifest path's filename policy: an .h5 file
+    whose name does not parse fails the run, naming the file, instead of
+    becoming a radar-day with empty keys that publishes ``_vpts_`` files."""
+    import shutil
+
+    h5_root, oracle = fleet
+    day = sorted(oracle["days"])[0]
+    root = str(tmp_path / "h5")
+    shutil.copytree(os.path.join(h5_root, day), os.path.join(root, day))
+    valid = sorted(glob.glob(os.path.join(root, day, "*.h5")))[0]
+    shutil.copyfile(valid, os.path.join(root, day, "misnamed.h5"))
+    dest = str(tmp_path / "dest")
+    with pytest.raises(Exception, match="misnamed.h5"):
+        run(path_folder="baltrad", h5_root=root, destination=dest, spark=spark)
+    assert not glob.glob(os.path.join(dest, "**", "*_vpts_*"), recursive=True)
+
+
 def _daily_part(store: str, day: str, name: str, text: str) -> None:
     os.makedirs(os.path.join(store, "p_radar=abcde", f"p_date={day}"), exist_ok=True)
     with open(os.path.join(store, "p_radar=abcde", f"p_date={day}", name), "w") as fh:

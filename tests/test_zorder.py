@@ -122,38 +122,3 @@ def test_zvalue_is_jvm_only_and_deterministic(spark, events):
 def test_zvalue_dims_bits_guard(spark, events):
     with pytest.raises(ValueError):
         zvalue(events, ["user_id"] * 8, bits=8)
-
-
-def test_compact_partitions_scoped(spark, tmp_path):
-    """Compaction coalesces the listed partition's small files into one
-    z-ordered file, preserves all rows, and does not rewrite (or truncate!)
-    other partitions — including under a per-write dynamic-overwrite
-    override."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from vptstools_spark.plans.zorder import compact_partitions
-
-    path = str(tmp_path / "t")
-    df = spark.range(400).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 2).cast("string").alias("p"),
-        (F.col("id") % 37).cast("double").alias("v"),
-    )
-    # many small files per partition
-    df.repartition(8).write.partitionBy("p").parquet(path)
-    before_p0 = sorted(glob.glob(f"{path}/p=0/*.parquet"))
-    before_p1 = {f: os.stat(f).st_mtime_ns for f in glob.glob(f"{path}/p=1/*.parquet")}
-    assert len(before_p0) > 1
-
-    compact_partitions(
-        spark, path, ["p"], ["k", "v"], partitions=[("0",)], num_files=1
-    )
-    after_p0 = glob.glob(f"{path}/p=0/*.parquet")
-    after_p1 = {f: os.stat(f).st_mtime_ns for f in glob.glob(f"{path}/p=1/*.parquet")}
-    assert len(after_p0) == 1  # coalesced
-    assert after_p1 == before_p1  # untouched partition not rewritten
-    got = spark.read.parquet(path).groupBy("p").count().collect()
-    # partition values come back type-inferred (int), so compare as strings
-    assert {(str(r.p), r["count"]) for r in got} == {("0", 200), ("1", 200)}

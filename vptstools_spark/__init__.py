@@ -16,7 +16,7 @@ Engine extensions (training-data pipeline surface) are exported lazily:
 ``curate_corpus`` (end-to-end corpus curation), ``run_suite`` (declarative
 data-quality checks), ``bpe_train``, ``resolve_entities``,
 ``write_training_shards``, and the ``sketch`` module (HLL / Count-Min /
-Bloom). ``sql.register_all`` exposes the whole registry to ``spark.sql``.
+Bloom).
 """
 
 from vptstools_spark.operators.vpts import (  # noqa: F401

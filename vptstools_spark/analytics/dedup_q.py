@@ -315,7 +315,7 @@ def q_dedup_keep_best(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
     """Asymmetric near-SUBSET dedup
-    (`operators/dedup.py:containment_pairs`): containment
+    (`operators/dedup.py:near_dup_pairs`): containment
     |A∩B|/min(|A|,|B|) ≥ 0.7 over 3-shingle sets — the web-corpus
     signal Jaccard misses when one document embeds another. Shares the
     exact-pair plan (replica collapse, df>1 pruning); the oracle

@@ -38,33 +38,14 @@ import shutil
 
 import click
 
-from vptstools_spark.functions.paths import with_parsed_inventory
-from vptstools_spark.operators.inventory import coverage, handle_manifest
+from vptstools_spark.operators.inventory import coverage, handle_manifest, parse_inventory
 from vptstools_spark.operators.pipeline import (
     daily_vpts_job,
     monthly_vpts_job,
     write_descriptor,
 )
+from vptstools_spark.operators.vpts import vpts_to_csv
 from vptstools_spark.session import get_spark
-
-
-def _write_single_csv(df, path: str, sort_by: str) -> None:
-    """Small driver-published CSV (coverage is radar-days-sized, not data-
-    sized): one part file sorted by ``sort_by``, renamed to the target path.
-    Sorting inside the one partition gives the bytes of a global ``orderBy``
-    without its range-sampling job."""
-    tmp = path + "._spark_tmp"
-    (
-        df.coalesce(1)
-        .sortWithinPartitions(sort_by)
-        .write.mode("overwrite")
-        .option("header", "true")
-        .csv(tmp)
-    )
-    part = glob.glob(os.path.join(tmp, "part-*"))[0]
-    os.makedirs(os.path.dirname(os.path.abspath(path)) or ".", exist_ok=True)
-    shutil.move(part, path)
-    shutil.rmtree(tmp)
 
 
 def _publish(partition_glob: str, target: str) -> bool:
@@ -115,7 +96,9 @@ def run(
             )
         rel = [os.path.relpath(p, h5_root) for p in sorted(set(names))]
         listing = spark.createDataFrame([(k,) for k in rel], "file string")
-        days = coverage(with_parsed_inventory(listing))
+        # the manifest path's filename policy: a name the ODIM grammar
+        # cannot parse fails the run instead of becoming an empty-key day
+        days = coverage(parse_inventory(listing))
     else:
         if not manifest:
             raise click.UsageError("VPTS_MANIFEST must be set (or use --path-folder)")
@@ -132,7 +115,12 @@ def run(
             spark, manifest, modified_days_ago=modified_days_ago, now=now
         )
         click.echo("Save coverage file to S3.")
-        _write_single_csv(df_cov, os.path.join(destination, "coverage.csv"), "directory")
+        # coverage is radar-days-sized: sorting inside the one partition
+        # gives the bytes of a global orderBy without its sampling job
+        vpts_to_csv(
+            df_cov.coalesce(1).sortWithinPartitions("directory"),
+            os.path.join(destination, "coverage.csv"),
+        )
 
     day_rows = days.collect()  # radar-days are driver-sized (the work list)
     click.echo(f"Create {len(day_rows)} daily VPTS files.")

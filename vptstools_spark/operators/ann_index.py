@@ -58,16 +58,8 @@ def build_ivfpq_index(
         .partitionBy("cell")
         .parquet(os.path.join(path, _INDEX_DIR))
     )
-    spark = vectors.sparkSession
     _write_model(
-        spark,
-        path,
-        {
-            "anchors": anchors,
-            "codebooks": codebooks,
-            "n_base": vectors.count(),
-            "n_appended": 0,
-        },
+        vectors.sparkSession, path, {"anchors": anchors, "codebooks": codebooks}
     )
 
 
@@ -90,54 +82,6 @@ def load_ivfpq_model(
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     model = _read_model(spark, path)
     return model["anchors"], model["codebooks"]
-
-
-def index_stale_fraction(spark: SparkSession, path: str) -> float:
-    """Fraction of the index encoded with a model it was not fitted on:
-    n_appended / (n_base + n_appended). 0.0 for a fresh build; the usual
-    refresh policy re-fits past ~0.2–0.5 (`optimize_table` automates
-    this via `ann_stale_threshold`)."""
-    model = _read_model(spark, path)
-    n_base = max(int(model.get("n_base", 0)), 1)
-    n_app = int(model.get("n_appended", 0))
-    return n_app / (n_base + n_app)
-
-
-def rebuild_ivfpq_index(
-    vectors: DataFrame,
-    path: str,
-    fit_fn=None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Full re-fit + rebuild over the CURRENT corpus — the third stage of
-    the append→degrade→rebuild lifecycle. `fit_fn(vectors) -> (anchors,
-    codebooks)` lets callers bring their own trainer; the default re-fits
-    with `kmeans_fit`/`pq_fit` at the SAME hyperparameters as the existing
-    sidecar model (cell count, subspace count, codebook size read from the
-    frozen model's shape), so maintenance jobs need no fit configuration.
-    Resets n_appended/stale_fraction to 0 (build_ivfpq_index overwrites
-    the sidecar)."""
-    spark = vectors.sparkSession
-    if fit_fn is not None:
-        anchors, codebooks = fit_fn(vectors)
-    else:
-        from vptstools_spark.operators.similarity import kmeans_fit, pq_fit
-
-        model = _read_model(spark, path)
-        anchors = kmeans_fit(
-            vectors, k=len(model["anchors"]), id_col=id_col, vec_col=vec_col
-        )
-        codebooks = pq_fit(
-            vectors,
-            m=len(model["codebooks"]),
-            k=len(model["codebooks"][0]),
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-    build_ivfpq_index(
-        vectors, path, anchors, codebooks, id_col=id_col, vec_col=vec_col
-    )
 
 
 def search_ivfpq_index(

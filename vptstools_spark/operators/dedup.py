@@ -413,16 +413,6 @@ def jaccard_pairs(
     return cross.unionByName(intra)
 
 
-def containment_pairs(sh: DataFrame, threshold: float = 0.8) -> DataFrame:
-    """Near-SUBSET duplicate pairs: containment = |A∩B| / min(|A|,|B|)
-    over shingle sets — catches the web-corpus shape Jaccard misses (a
-    document embedded inside a larger one: intersection ≈ the smaller
-    set, union ≈ the larger, so Jaccard ≈ size ratio while containment
-    ≈ 1). Same plan as `jaccard_pairs` (replica collapse + df>1 prune +
-    one equi-join), just the asymmetric score."""
-    return jaccard_pairs(sh, threshold, measure="containment")
-
-
 def near_dup_pairs(
     docs: DataFrame,
     k: int = 3,
@@ -796,64 +786,6 @@ def simhash16(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     return agg.select("id", bits.alias("simhash16"))
 
 
-def incremental_dedup(
-    spark,
-    registry_path: str,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> tuple[DataFrame, dict]:
-    """Cross-RUN exact dedup against a persistent fingerprint registry —
-    state that outlives any one streaming query's watermark: every batch a corpus
-    ingest has ever admitted leaves its md5 fingerprint in a VERSIONED
-    registry table (`plans/timetravel.py`), and the next run's batch
-    drops both its in-batch duplicates (deterministic min-id winner) and
-    every text already admitted by ANY earlier run.
-
-    Returns (fresh_rows, report) where report counts
-    {"n_batch", "n_in_batch_dups", "n_seen_dups", "n_fresh"}; the fresh
-    rows are localCheckpointed (batch-scale, not corpus-scale) because
-    the registry append below must not re-execute the batch plan, and
-    the registry commit is the md5 strings only — ~32 bytes/doc, the
-    whole corpus's history at fingerprint cost. The registry probe is a
-    key anti-join on the hash (broadcast by AQE while the registry is
-    small, shuffle join at corpus scale — never a scan of admitted
-    TEXT)."""
-    from vptstools_spark.plans.timetravel import (
-        _list_versions,
-        commit_append,
-        commit_initial,
-        read_version,
-    )
-
-    fp = batch.withColumn("_fp", F.md5(F.col(text_col)))
-    n_batch = fp.count()
-    winners = fp.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-    in_batch = fp.join(winners, ["_fp", id_col], "left_semi")
-    n_in_batch = in_batch.count()
-    if _list_versions(spark, registry_path):
-        seen = read_version(spark, registry_path)
-        # lazy checkpoint: the count materializes the cache and answers
-        # n_fresh in one job (r10, guide §1)
-        fresh = in_batch.join(seen, "_fp", "left_anti").localCheckpoint(
-            eager=False
-        )
-        n_fresh = fresh.count()
-        new_fps = fresh.select("_fp")
-        if n_fresh:
-            commit_append(spark, registry_path, new_fps)
-    else:
-        fresh = in_batch.localCheckpoint(eager=False)
-        n_fresh = n_in_batch
-        commit_initial(fresh.select("_fp"), registry_path)
-    return fresh.drop("_fp"), {
-        "n_batch": n_batch,
-        "n_in_batch_dups": n_batch - n_in_batch,
-        "n_seen_dups": n_in_batch - n_fresh,
-        "n_fresh": n_fresh,
-    }
-
-
 def incremental_lsh_dedup(
     spark,
     registry_path: str,
@@ -865,17 +797,16 @@ def incremental_lsh_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> tuple[DataFrame, dict]:
-    """Cross-run NEAR-dup admission against a persistent LSH registry —
-    `incremental_dedup`'s sibling for the corpus-ingest case where new
-    shards must not duplicate *approximately* what any earlier run
-    admitted. The registry is two versioned tables
-    (`plans/timetravel.py`) holding only DERIVED state for admitted
-    docs: LSH band rows (id, band_id, bh — docs × bands rows) and
-    64-bit shingle hashes (id, sh) for the exact-verify stage. Raw text
-    is never stored and never rescanned: a new batch probes admitted
-    history via an equi-join on (band_id, bh), verifies exact Jaccard
-    only on colliding pairs, and appends its own admitted state — cost
-    per run is O(batch + collisions), independent of corpus age.
+    """Cross-run NEAR-dup admission against a persistent LSH registry — for
+    the corpus-ingest case where new shards must not duplicate
+    *approximately* what any earlier run admitted. The registry is two
+    versioned tables (`plans/timetravel.py`) holding only DERIVED state for
+    admitted docs: LSH band rows (id, band_id, bh — docs × bands rows) and
+    64-bit shingle hashes (id, sh) for the exact-verify stage. Raw text is
+    never stored and never rescanned: a new batch probes admitted history
+    via an equi-join on (band_id, bh), verifies exact Jaccard only on
+    colliding pairs, and appends its own admitted state — cost per run is
+    O(batch + collisions), independent of corpus age.
 
     Admission rule (deterministic, order-free): a batch doc is REJECTED
     iff some verified-similar doc with a SMALLER id exists in the batch

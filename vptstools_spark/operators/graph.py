@@ -277,125 +277,6 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component"))
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-    strict: bool = True,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — O(log n) rounds on ANY graph shape, vs O(diameter) for
-    `connected_components`' min-label propagation.
-
-    Use this variant when the candidate graph can contain long chains
-    (e.g. near-dup chains A≈B≈C≈… where consecutive pairs match but distant
-    ones don't); keep the simpler propagation for near-clique duplicate
-    clusters, where diameter ≤ 3 makes it cheaper per round.
-
-    Each round:
-      large-star: every node points its LARGER neighbors at the minimum of
-        its closed neighborhood — long tails collapse onto local minima;
-      small-star: every node and its SMALLER-or-equal neighbors all attach
-        to that minimum — stars flatten into one level.
-    The edge list contracts toward a star forest rooted at each component's
-    minimum id; fixpoint = labels stable across a round. Same interface and
-    output contract as `connected_components` (isolated nodes not emitted).
-    """
-    import warnings
-
-    e = edges.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    sym = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    all_nodes = sym.select(F.col("u").alias("node")).distinct().localCheckpoint(
-        eager=True
-    )
-
-    def _labels(E: DataFrame) -> DataFrame:
-        lab = (
-            E.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select(F.col("u").alias("node"), F.least("u", "mn").alias("label"))
-        )
-        # nodes that dropped out of the shrinking edge list keep themselves
-        return all_nodes.join(lab, "node", "left").select(
-            "node", F.coalesce("label", "node").alias("label")
-        )
-
-    E = sym
-    prev = _labels(E).localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        # large-star: (v, m(u)) for every neighbor v > u
-        m = (
-            E.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("u", "mn").alias("m"))
-        )
-        large = (
-            E.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        lsym = large.unionByName(
-            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        # small-star: u and its smaller neighbors all attach to the minimum
-        m2 = (
-            lsym.filter(F.col("v") <= F.col("u"))
-            .groupBy("u")
-            .agg(F.min("v").alias("m"))
-        )
-        small = (
-            lsym.filter(F.col("v") <= F.col("u"))
-            .join(m2, "u")
-            .select(
-                F.explode(F.array(F.col("u"), F.col("v"))).alias("n"),
-                F.col("m"),
-            )
-            .filter(F.col("n") != F.col("m"))
-            .select(F.col("n").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-        E = (
-            small.unionByName(
-                small.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cur = _labels(E).localCheckpoint(eager=True)
-        changed = (
-            cur.join(prev.withColumnRenamed("label", "prev_label"), "node")
-            .filter(F.col("label") != F.col("prev_label"))
-            .count()
-        )
-        prev = cur
-        if changed == 0:
-            break
-    else:
-        msg = (
-            f"connected_components_star did not converge within "
-            f"max_iter={max_iter} — pathological input? (expected O(log n) rounds)"
-        )
-        if strict:
-            raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return prev.select("node", F.col("label").alias("component"))
-
-
-def cluster_sizes(components: DataFrame) -> DataFrame:
-    """(component, n_nodes) census of the resolved clusters."""
-    return components.groupBy("component").agg(F.count("*").alias("n_nodes"))
-
-
 def pagerank(
     edges: DataFrame,
     iters: int = 3,

@@ -1,30 +1,20 @@
-"""Keyed MERGE (upsert/delete) into partitioned parquet — the write-path
-form of the CDC keep-latest compaction (`analytics/relational.py:
-q_latest_order` is the read-path form).
+"""Partition-scoped rewrite helpers for partitioned parquet: restrict a
+scan to (or away from) a worklist of partition tuples, and render
+partition values the way Spark names their directories.
 
 Core Spark has no MERGE INTO against plain parquet (that's a table-format
-feature — Delta/Iceberg); pipelines on raw object storage still need keyed
-upserts, so the engine provides the classic partition-rewrite pattern:
-
-1. restrict the target scan to the partitions the delta touches (partition
-   pruning — an IN-list of partition values, pushed to the file listing);
-2. anti-join those target rows against the delta keys (drop rows being
-   replaced or deleted);
-3. union the surviving rows with the delta's upserts;
-4. dynamic-partition-overwrite ONLY the touched partitions
-   (`partitionOverwriteMode=dynamic`, set in session.get_spark).
-
-At 100 TB the cost scales with the TOUCHED partitions, not the table: the
-untouched bulk is never read or written. The delta's distinct partition
-list is metadata-sized (collected to the driver); the delta side of the
-anti-join broadcasts when small. Object-store caveat: read-modify-overwrite
-of one path in one job is safe with rename-based committers; on
-direct-commit stores, stage to a temp prefix and swap.
+feature — Delta/Iceberg), so keyed rewrites use the classic
+partition-rewrite pattern: read only the partitions a delta touches,
+rewrite them, and dynamic-partition-overwrite ONLY those
+(`partitionOverwriteMode=dynamic`). At 100 TB the cost scales with the
+TOUCHED partitions, not the table: the untouched bulk is never read or
+written. `plans/timetravel.py` scopes its partition-local commits with
+these helpers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: above this many touched partitions the literal OR-of-ANDs pruning filter
@@ -143,82 +133,3 @@ def escape_partition_value(v) -> str:
     if isinstance(v, bool):
         return escape_partition_segment("true" if v else "false")
     return escape_partition_segment(None if v is None else str(v))
-
-
-def merge_upsert(
-    spark: SparkSession,
-    target_path: str,
-    delta: DataFrame,
-    keys: list[str],
-    partition_cols: list[str],
-    delete_col: str | None = None,
-) -> None:
-    """Merge `delta` into the partitioned parquet table at `target_path`.
-
-    Delta rows replace target rows with the same `keys`; rows where
-    `delete_col` is true are tombstones (key removed, nothing inserted).
-    First write (no target yet) degenerates to a plain partitioned write.
-    """
-    upserts = delta.filter(~F.col(delete_col)) if delete_col else delta
-    upserts = upserts.drop(*([delete_col] if delete_col else []))
-
-    from vptstools_spark.streaming.incremental import _hadoop_path_exists
-
-    if not _hadoop_path_exists(spark, target_path):
-        upserts.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-            target_path
-        )
-        return
-
-    touched = [
-        tuple(r)
-        for r in delta.select(*partition_cols).distinct().collect()
-    ]
-    if not touched:
-        return
-    target = spark.read.parquet(target_path)
-    # partition pruning bounded by worklist size: literal filter for small
-    # deltas, broadcast semi-join (constant plan size + DPP) for large ones
-    kept = scope_to_partitions(
-        target, partition_cols, touched,
-        touched_df=delta.select(*partition_cols).distinct(),
-    ).join(F.broadcast(delta.select(*keys).distinct()), keys, "left_anti")
-    merged = kept.unionByName(upserts.select(*target.columns))
-    # self-referencing read→overwrite: materialize before the write so the
-    # scan completes before any file is replaced (rename-committer safe)
-    merged = merged.localCheckpoint(eager=True)
-    # dynamic overwrite forced per-write: without it a default-config session
-    # would truncate untouched partitions
-    merged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(*partition_cols).parquet(target_path)
-    # dynamic overwrite only rewrites partitions that PRODUCE rows — a
-    # delete that empties a partition leaves its old files behind. Remove
-    # touched partitions that ended up empty (metadata-sized driver work).
-    # Compare in the RENDERED (directory-name) space: partition-column type
-    # inference means read-back values (e.g. int 5) need not equal the
-    # delta's values (str "5"), and a raw tuple comparison would flag every
-    # touched partition as emptied.
-    def _canon(t: tuple) -> tuple:
-        return tuple(escape_partition_value(v) for v in t)
-
-    remaining = {
-        _canon(tuple(r))
-        for r in merged.select(*partition_cols).distinct().collect()
-    }
-    emptied = [t for t in touched if _canon(t) not in remaining]
-    if emptied:
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        for t in emptied:
-            # build the directory name exactly as Spark wrote it: values are
-            # hive-escaped (percent-encoded specials, NULL sentinel dir) —
-            # raw f"{c}={v}" would miss the escaped path and silently leave
-            # the tombstoned partition's old files to resurrect on re-read
-            subdir = "/".join(
-                f"{c}={escape_partition_value(v)}"
-                for c, v in zip(partition_cols, t)
-            )
-            jpath = jvm.org.apache.hadoop.fs.Path(f"{target_path}/{subdir}")
-            fs = jpath.getFileSystem(jsc.hadoopConfiguration())
-            fs.delete(jpath, True)

@@ -11,16 +11,9 @@ What is REAL here (no media libraries needed):
 - `bmp_features` (round 4) — BMP/DIB header parsing (bottom-up rows,
   4-byte row padding) + pixel stats.
 
-CODEC decode (jpeg/png entropy coding, flac/ogg) genuinely needs a codec
-library: `image_features` (Pillow) and `audio_features` (soundfile) are
-REAL decoders behind import gates (the h5py/moto/paramiko pattern, r9) —
-they raise a clear ImportError at action time where the library is absent,
-and gated tests decode this module's own deterministic synth bytes and
-cross-check against the lib-free parsers wherever the libs exist. Only
-`_fake_decode` (a deterministic byte-histogram stand-in used by
-`extract_features`) remains a declared stub for hosts with no codec
-library at all. The Spark-side contract — schema, Arrow batch shape,
-partition behavior — is real and tested for every path.
+Codec decode (jpeg/png entropy coding, flac/ogg) needs a codec library
+and is not provided. The Spark-side contract — schema, Arrow batch shape,
+partition behavior — is tested for every operator here.
 """
 
 from __future__ import annotations
@@ -30,59 +23,6 @@ from collections.abc import Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-#: output schema of the (stubbed) feature extractor
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("feature", T.ArrayType(T.DoubleType()), True),
-    ]
-)
-
-
-def extract_features(
-    df: DataFrame, id_col: str = "id", blob_col: str = "blob", dim: int = 8
-) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    Real pipeline shape: ``mapInPandas`` so each task decodes a batch of blobs
-    with a vectorized library. Here the decoder is a deterministic fake
-    (byte-histogram moments); swap `_fake_decode` for a real decoder
-    (PIL/librosa/ffmpeg) in production.
-    """
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_fake_decode(b, dim) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "n_bytes": [len(b) if b is not None else 0 for b in pdf[blob_col]],
-                    "feature": feats,
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def _fake_decode(blob: bytes | None, dim: int) -> list[float] | None:
-    """Deterministic stand-in for image/audio decode: bucketed byte means.
-
-    A real decoder raises NotImplementedError paths here; the fake keeps the
-    pipeline end-to-end testable without media libraries.
-    """
-    if blob is None:
-        return None
-    if len(blob) == 0:
-        return [0.0] * dim
-    step = max(len(blob) // dim, 1)
-    out = []
-    for d in range(dim):
-        chunk = blob[d * step : (d + 1) * step] or blob[-step:]
-        out.append(sum(chunk) / len(chunk))
-    return out
-
 
 #: output schema of the real PCM analyzer
 PCM_FRAME_SCHEMA = T.StructType(
@@ -106,8 +46,7 @@ def pcm_frame_energy(
     is interpreted as raw little-endian int16 PCM (numpy ``frombuffer``),
     framed into `frame_samples` windows, and reduced to per-frame RMS and
     peak. This is the one multimodal path that runs genuine signal math in
-    this container; codec decode (mp3/jpeg/mp4) stays behind the
-    `_fake_decode` stub.
+    this container; codec decode (mp3/jpeg/mp4) is not provided.
 
     Arrow-batched ``mapInPandas``: each executor batch decodes its blobs
     with vectorized numpy — per-row Python never touches samples. The 1→N
@@ -434,151 +373,3 @@ def bmp_patches(
             yield pd.DataFrame(out)
 
     return df.select(id_col, blob_col).mapInPandas(gen, BMP_PATCH_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Import-gated REAL codec decoders (VERDICT r8 #6) — the h5py/moto/paramiko
-# pattern applied to the last honest stub: entropy-coded formats (jpeg/png,
-# compressed audio) genuinely need a codec library, so these operators probe
-# for one at call time and raise a clear ImportError where it is absent.
-# The container-format operators above (WAV/BMP) stay lib-free; downstream
-# schema/partitioning contracts are identical either way.
-# ---------------------------------------------------------------------------
-
-#: output schema of PIL-backed image decode
-IMAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("mode", T.StringType(), False),
-        T.StructField("format", T.StringType(), True),
-        T.StructField("mean_px", T.DoubleType(), True),
-    ]
-)
-
-
-def _pil():
-    try:
-        from PIL import Image  # noqa: PLC0415
-
-        return Image
-    except ImportError as exc:  # pragma: no cover - exercised where PIL absent
-        raise ImportError(
-            "image_features needs Pillow (PIL) for codec decode "
-            "(jpeg/png entropy coding has no lib-free parse); install "
-            "Pillow or use bmp_features/wav_features for container "
-            "formats"
-        ) from exc
-
-
-def image_features(
-    df: DataFrame, id_col: str = "id", blob_col: str = "blob"
-) -> DataFrame:
-    """REAL image decode via Pillow, Arrow-batched in ``mapInPandas``
-    (jpeg/png/gif/webp — whatever the installed PIL build decodes).
-    Undecodable blobs are dropped (the per-file isolation policy of
-    every scan in this engine). The PIL import happens INSIDE the task
-    body so the gate fails at action time with a clear message, and the
-    driver-side plan (schema, batching, partitioning) is identical on
-    hosts with and without the library."""
-    import io
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Image = _pil()
-        import numpy as np
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in ("id", "width", "height", "mode", "format", "mean_px")
-            }
-            for rid, blob in zip(pdf[id_col], pdf[blob_col]):
-                if blob is None:
-                    continue
-                try:
-                    img = Image.open(io.BytesIO(bytes(blob)))
-                    arr = np.asarray(img, dtype=np.float64)
-                except Exception:
-                    continue  # per-blob isolation
-                out["id"].append(int(rid))
-                out["width"].append(int(img.width))
-                out["height"].append(int(img.height))
-                out["mode"].append(str(img.mode))
-                out["format"].append(img.format)
-                out["mean_px"].append(float(arr.mean()) if arr.size else None)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, blob_col).mapInPandas(gen, IMAGE_SCHEMA)
-
-
-#: output schema of soundfile-backed audio decode
-AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("sample_rate", T.IntegerType(), False),
-        T.StructField("n_frames", T.LongType(), False),
-        T.StructField("channels", T.IntegerType(), False),
-        T.StructField("rms", T.DoubleType(), True),
-        T.StructField("peak", T.DoubleType(), True),
-    ]
-)
-
-
-def _soundfile():
-    try:
-        import soundfile  # noqa: PLC0415
-
-        return soundfile
-    except ImportError as exc:  # pragma: no cover - exercised where sf absent
-        raise ImportError(
-            "audio_features needs the soundfile library for codec decode "
-            "(flac/ogg and beyond-PCM WAV); install soundfile or use "
-            "wav_features/pcm_frame_energy for raw PCM"
-        ) from exc
-
-
-def audio_features(
-    df: DataFrame, id_col: str = "id", blob_col: str = "blob"
-) -> DataFrame:
-    """REAL audio decode via libsndfile (soundfile), Arrow-batched in
-    ``mapInPandas`` — handles flac/ogg and non-PCM WAV encodings the
-    lib-free `wav_features` declines. Same gating contract as
-    `image_features`: the import happens in the task body, undecodable
-    blobs are dropped, schema/batch shape are library-independent."""
-    import io
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sf_mod = _soundfile()
-        import numpy as np
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in (
-                    "id", "sample_rate", "n_frames", "channels", "rms", "peak"
-                )
-            }
-            for rid, blob in zip(pdf[id_col], pdf[blob_col]):
-                if blob is None:
-                    continue
-                try:
-                    data, rate = sf_mod.read(
-                        io.BytesIO(bytes(blob)), dtype="float64",
-                        always_2d=True,
-                    )
-                except Exception:
-                    continue  # per-blob isolation
-                out["id"].append(int(rid))
-                out["sample_rate"].append(int(rate))
-                out["n_frames"].append(int(data.shape[0]))
-                out["channels"].append(int(data.shape[1]))
-                if data.size:
-                    out["rms"].append(float(np.sqrt((data**2).mean())))
-                    out["peak"].append(float(np.abs(data).max()))
-                else:
-                    out["rms"].append(None)
-                    out["peak"].append(None)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, blob_col).mapInPandas(gen, AUDIO_SCHEMA)

@@ -82,8 +82,15 @@ def daily_vpts_job(
     convert → upload per day), this is ONE plan over all affected days; Spark
     schedules per-partition tasks, and only the recomputed partitions are
     replaced."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     table = to_vpts_table(profiles.filter(radar_day_filter(days)), vpts_csv_version)
+    write_daily_store(spark, table, output_path)
+
+
+def write_daily_store(spark: SparkSession, table: DataFrame, output_path: str) -> None:
+    """Write a VPTS table into the daily store: hive-partitioned by
+    (radar, yyyymmdd), one sorted CSV per radar-day, with dynamic partition
+    overwrite so only the radar-days present in ``table`` are replaced."""
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # re-derive partition cols from the rendered table (radar + yyyymmdd)
     out = table.withColumn(
         "p_radar", F.col("radar")

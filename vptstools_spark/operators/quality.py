@@ -73,10 +73,6 @@ def membership(name: str, col: str, allowed: list) -> Check:
     return satisfies(name, F.col(col).isin(allowed))
 
 
-def matches(name: str, col: str, pattern: str, min_fraction: float = 1.0) -> Check:
-    return satisfies(name, F.col(col).rlike(pattern), min_fraction)
-
-
 def row_count(name: str, lo: int | None = None, hi: int | None = None) -> Check:
     return Check(name, F.count(F.lit(1)).cast("double"), lo=lo, hi=hi)
 

@@ -69,8 +69,7 @@ def snapshot_diff(
     """Keyed diff between two table snapshots: one row per differing key
     with `change` ∈ {'added', 'removed', 'changed'} — the audit primitive
     behind CDC validation, backfill verification, and "what did this
-    pipeline run alter" reports (the read-side complement of
-    `operators/merge.py:merge_upsert`).
+    pipeline run alter" reports.
 
     Each side is reduced to (keys, row fingerprint) BEFORE the join —
     md5 over the compared columns, each rendered as a tagged string

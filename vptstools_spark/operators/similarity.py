@@ -74,32 +74,6 @@ def knn_bruteforce(
     )
 
 
-def cosine_pairs(
-    vectors: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All-pairs cosine ≥ threshold (embedding near-dup detection).
-
-    Exact O(n²) baseline — correct at any scale but quadratic; compose with
-    `anchor_buckets` to restrict pairs to same-bucket candidates at corpus
-    scale.
-    """
-    v = with_norm(vectors, vec_col).select(
-        F.col(id_col).alias("id"), F.col("_vec").alias("vec"), F.col("_norm").alias("nrm")
-    )
-    a, b = v.alias("a"), v.alias("b")
-    pairs = a.join(b, F.col("a.id") < F.col("b.id")).select(
-        F.col("a.id").alias("vec_a"),
-        F.col("b.id").alias("vec_b"),
-        (dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.nrm") * F.col("b.nrm"))).alias("cos"),
-    )
-    return pairs.filter(F.round(F.col("cos"), 4) >= threshold).select(
-        "vec_a", "vec_b", F.round("cos", 4).alias("cosine")
-    )
-
-
 def cosine_pairs_blocked(
     vectors: DataFrame,
     threshold: float,
@@ -117,8 +91,8 @@ def cosine_pairs_blocked(
     raise `n_blocks` so blocks stay ~executor-memory sized — the plan shape
     is unchanged.
 
-    ~100× faster than the expression-fold variant (`cosine_pairs`) at 5k
-    vectors; same results to FP round-off (values rounded to 4 decimals).
+    ~100× faster than a per-pair expression fold at 5k vectors; same
+    results to FP round-off (values rounded to 4 decimals).
     """
     import numpy as np
 
@@ -339,49 +313,6 @@ def kmeans_fit(
     return centroids
 
 
-def dim_minmax(
-    vectors: DataFrame, vec_col: str = "embedding"
-) -> tuple[list[float], list[float]]:
-    """Per-dimension [min, max] of a vector column — the quantizer's model.
-    One posexplode + aggregate; only dim-many scalars reach the driver."""
-    rows = (
-        vectors.select(F.posexplode(as_double(F.col(vec_col))).alias("pos", "x"))
-        .groupBy("pos")
-        .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-        .orderBy("pos")
-        .collect()
-    )
-    return [r["mn"] for r in rows], [r["mx"] for r in rows]
-
-
-def scalar_quantize(
-    vectors: DataFrame,
-    mins: list[float],
-    maxs: list[float],
-    bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-dimension scalar quantization to `bits`-bit integer codes — the
-    memory-compression component of an IVF-PQ-style index (float32 → uint8
-    is a 4x shrink; candidate scoring runs on codes, exact re-ranking on the
-    float tail). The [min,max] model rides in the plan as array literals, so
-    encoding is a narrow JVM map (transform with index) — no shuffle, no
-    Python."""
-    levels = (1 << bits) - 1
-    mn_arr = lit_double_array(mins)
-    span_arr = lit_double_array(
-        [(mx - mn) if mx > mn else 1.0 for mn, mx in zip(mins, maxs)]
-    )
-    codes = F.transform(
-        as_double(F.col(vec_col)),
-        lambda x, i: F.floor(
-            (x - F.get(mn_arr, i)) / F.get(span_arr, i) * levels
-        ).cast("int"),
-    )
-    return vectors.select(F.col(id_col).alias("id"), codes.alias("codes"))
-
-
 def knn_ivf_rerank(
     vectors: DataFrame,
     queries: DataFrame,
@@ -395,7 +326,7 @@ def knn_ivf_rerank(
 ) -> DataFrame:
     """IVF + coarse-score shortlist + exact re-rank — the full approximate
     search composition (IVF-PQ shape: at production scale the shortlist
-    scoring runs on `scalar_quantize` codes; here it runs on the same float
+    scoring runs on quantized codes; here it runs on the same float
     vectors, which keeps the plan identical while the container has no BLAS
     batching for uint8).
 

@@ -142,38 +142,29 @@ def vpts(
     return to_vpts_table(profiles, vpts_csv_version)
 
 
-def vpts_to_csv(df: DataFrame, path: str, single_file: bool = True, gzip: bool = False) -> None:
+def vpts_to_csv(df: DataFrame, path: str) -> None:
     """CSV sink K1/K2 (reference: src/vptstools/vpts.py:278-294,
-    bin/vph5_to_vpts.py:241-245).
-
-    ``single_file=True`` reproduces the reference's one-file-per-target
-    contract via coalesce(1) + rename; for cluster-scale multi-file output
-    pass False and partition upstream.
+    bin/vph5_to_vpts.py:241-245): the reference's one-file-per-target
+    contract via coalesce(1) + rename of the single part file. Rows keep
+    the order they have inside ``df``'s partitions.
     """
     import glob
     import os
     import shutil
 
-    writer = df
-    if single_file:
-        writer = df.coalesce(1)
     tmp = path + "._spark_tmp"
-    opts = {"header": "true", "emptyValue": "", "nullValue": ""}
-    w = writer.write.mode("overwrite")
-    for k, v in opts.items():
-        w = w.option(k, v)
-    if gzip:
-        w = w.option("compression", "gzip")
-    w.csv(tmp)
-    if single_file:
-        part = glob.glob(os.path.join(tmp, "part-*"))[0]
-        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-        shutil.move(part, path)
-        shutil.rmtree(tmp)
-    else:
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        shutil.move(tmp, path)
+    (
+        df.coalesce(1)
+        .write.mode("overwrite")
+        .option("header", "true")
+        .option("emptyValue", "")
+        .option("nullValue", "")
+        .csv(tmp)
+    )
+    part = glob.glob(os.path.join(tmp, "part-*"))[0]
+    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+    shutil.move(part, path)
+    shutil.rmtree(tmp)
 
 
 def load_vendored_descriptor(vpts_csv_version: str = "v1.0") -> dict:

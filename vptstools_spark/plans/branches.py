@@ -135,19 +135,6 @@ def create_branch(
     return 0
 
 
-def list_branches(spark: SparkSession, path: str) -> list[str]:
-    return _list_branch_names(spark, path)
-
-
-def branch_history(spark: SparkSession, path: str, name: str) -> list[dict]:
-    blog = _branch_log(name)
-    out = []
-    for v in _list_versions(spark, path, blog):
-        c = _read_commit(spark, path, v, blog)
-        out.append({"version": v, "op": c["op"], "n_files": len(c["files"])})
-    return out
-
-
 def _branch_head(spark: SparkSession, path: str, name: str) -> tuple[int, dict]:
     blog = _branch_log(name)
     versions = _list_versions(spark, path, blog)
@@ -226,7 +213,7 @@ def branch_overwrite(
     _enforce(df, head, f"overwrite@{name}", table=None)
     new_v = head_v + 1
     # hidden-partitioning transforms survive while their source column
-    # does, same rule as commit_overwrite
+    # does
     transforms = {
         k: v
         for k, v in (head.get("partition_transforms") or {}).items()
@@ -460,7 +447,7 @@ def create_tag(
     if not ok:
         raise ValueError(
             f"tag {name!r} already exists on {path}; tags are immutable "
-            "(delete_tag first to move it)"
+            "(create a new tag instead)"
         )
     return v
 
@@ -484,18 +471,6 @@ def read_tag(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name not in tags:
         raise ValueError(f"no tag {name!r} on {path}; tags: {sorted(tags)}")
     return _read_snapshot(spark, path, tags[name])
-
-
-def delete_tag(spark: SparkSession, path: str, name: str) -> int:
-    tags = list_tags(spark, path)
-    if name not in tags:
-        raise ValueError(f"no tag {name!r} on {path}; tags: {sorted(tags)}")
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(_ref_path(path, name))
-    p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(
-        p, False
-    )
-    return tags[name]
 
 
 # --------------------------------------------------------------------- WAP

@@ -5,8 +5,8 @@ row filters, Snowflake masking policies, Ranger/Lake Formation style),
 re-expressed as pure plan rewrites: a policy set deterministically
 transforms a DataFrame — row filters become Catalyst predicates (they
 push down into the scan like any filter), column masks become projection
-expressions — and `register_secure_view` publishes the result as the
-only name an audience is given. Enforcement is by exposure: consumers
+expressions — and a temp view over the result is the only name an
+audience is given. Enforcement is by exposure: consumers
 query the view; nothing here relies on UDFs or driver-side secrets, so
 a masked plan is as distributable as the unmasked one.
 
@@ -21,7 +21,7 @@ arbitrary SQL expression over the row. No reference counterpart
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 _MASK_KINDS = {"hash", "null", "partial", "redact", "custom"}
 
@@ -77,15 +77,6 @@ def apply_policies(df: DataFrame, policies: dict) -> DataFrame:
             raise ValueError(f"drop references unknown columns {sorted(missing)}")
         out = out.drop(*policies["drop"])
     return out
-
-
-def register_secure_view(
-    spark: SparkSession, df: DataFrame, name: str, policies: dict
-) -> str:
-    """Publish the policy-rewritten plan as a temp view — the audience's
-    only handle on the data. Returns the view name."""
-    apply_policies(df, policies).createOrReplaceTempView(name)
-    return name
 
 
 # ---------------------------------------------------------------------------

@@ -32,7 +32,7 @@ cancellation handles and "apply deletes then inserts by key" does not.
 Application is partition-scoped: the view is partitioned on a declared
 view column, ΔV names the affected partitions, and only those are
 recomputed and rewritten via dynamic partition overwrite — the same
-bounded-worklist contract as `refresh_matview` / `operators/merge.py`.
+bounded-worklist contract as `operators/merge.py:scope_to_partitions`.
 
 Cost at scale: ΔA⋈B_new and A_old⋈ΔB are delta-sized probes into keyed
 joins (the delta side broadcasts when small); the rewrite touches
@@ -177,22 +177,6 @@ def read_joinview(
         spark.read.parquet(_data_path(view_path)).select(*defn.select),
         defn,
     )
-
-
-def joinview_status(spark: SparkSession, view_path: str) -> dict:
-    """Freshness check without touching data: pinned vs current source
-    versions (a scheduler polls this to decide whether refresh is due)."""
-    meta = json.loads(read_text_sidecar(spark, _meta_path(view_path)))
-    defn = _load_def(meta)
-    lv = _resolve_version(spark, defn.left_path, None)
-    rv = _resolve_version(spark, defn.right_path, None)
-    return {
-        "left_version": meta["left_version"],
-        "right_version": meta["right_version"],
-        "left_current": lv,
-        "right_current": rv,
-        "stale": lv > meta["left_version"] or rv > meta["right_version"],
-    }
 
 
 def _signed_changes(

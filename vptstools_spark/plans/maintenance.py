@@ -1,123 +1,16 @@
-"""`OPTIMIZE`-style table maintenance: one entrypoint composing the
-layout and index passes this engine already has — partition-scoped
-compaction + z-order (`plans/zorder.py`), min/max stats refresh, and
-bloom-index refresh (`plans/skipping.py`) — into the nightly maintenance
-job a lakehouse table actually runs.
+"""Versioned-table maintenance: small-file compaction and z-order
+clustering as commits on `plans/timetravel.py` tables.
 
-Cost contract at 100 TB: every stage is worklist-scoped. Compaction
-rewrites only the listed partitions; the stats/bloom refreshers list the
-filesystem once (metadata, no data scan) and read ONLY files the rewrite
-created — so a maintenance run on a quiet table is a listing + no-op, and
-on a busy table costs one range exchange over the touched partitions plus
-one pass over the new bytes.
+Cost contract at 100 TB: every stage is worklist-scoped. The victim set
+is decided from `files_metadata` (one filesystem stat per file, no data
+scan) and only the listed partitions are rewritten — so a maintenance run
+on a quiet table is a listing + no-op, and on a busy table costs one
+exchange over the touched partitions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from vptstools_spark.plans.skipping import (
-    collect_file_blooms,
-    collect_file_stats,
-    list_data_files,
-    update_file_blooms,
-    update_file_stats,
-)
-from vptstools_spark.plans.zorder import compact_partitions
-
-
-def optimize_table(
-    spark: SparkSession,
-    path: str,
-    partition_cols: list[str],
-    zorder_cols: list[str],
-    stats_cols: list[str] | None = None,
-    bloom_col: str | None = None,
-    partitions: list[tuple] | None = None,
-    stats: DataFrame | None = None,
-    blooms: DataFrame | None = None,
-    num_files: int = 1,
-    ann_index_path: str | None = None,
-    ann_vectors: DataFrame | None = None,
-    ann_fit_fn=None,
-    ann_stale_threshold: float = 0.2,
-    ann_id_col: str = "vec_id",
-    ann_vec_col: str = "embedding",
-) -> dict:
-    """Run the full maintenance pass and return a report dict:
-    {"n_files_before", "n_files_after", "stats", "blooms", "ann"}.
-
-    Pass the previous `stats`/`blooms` tables to refresh them
-    incrementally (new files only); omit them to (re)build from scratch.
-    `partitions=None` compacts the whole table — same semantics as
-    `compact_partitions`.
-
-    ANN lifecycle (VERDICT r4 #6): pass `ann_index_path` (a persisted
-    IVF+PQ index, `operators/ann_index.py`) and `ann_vectors` (the CURRENT
-    full vector corpus) and the pass automates append→degrade→rebuild:
-    when the sidecar's stale fraction exceeds `ann_stale_threshold` the
-    index is re-fitted (`ann_fit_fn`, or same-hyperparameter kmeans/PQ
-    refit by default) and rebuilt over `ann_vectors`; below threshold the
-    index is untouched — a quiet table's maintenance stays a listing +
-    no-op. The report's "ann" entry records the decision either way."""
-    n_before = len(list_data_files(spark, path))
-    compact_partitions(
-        spark,
-        path,
-        partition_cols=partition_cols,
-        zorder_cols=zorder_cols,
-        partitions=partitions,
-        num_files=num_files,
-    )
-    n_after = len(list_data_files(spark, path))
-    out_stats = out_blooms = None
-    if stats_cols:
-        out_stats = (
-            update_file_stats(spark, path, stats, stats_cols)
-            if stats is not None
-            else collect_file_stats(spark, path, stats_cols)
-        )
-        # materialize: the stats plan reads files the NEXT optimize may
-        # rewrite; a driver-stable snapshot decouples it from the table
-        out_stats = out_stats.localCheckpoint(eager=True)
-    if bloom_col:
-        out_blooms = (
-            update_file_blooms(spark, path, blooms, bloom_col)
-            if blooms is not None
-            else collect_file_blooms(spark, path, bloom_col)
-        )
-        out_blooms = out_blooms.localCheckpoint(eager=True)
-    ann_report = None
-    if ann_index_path is not None:
-        from vptstools_spark.operators.ann_index import (
-            index_stale_fraction,
-            rebuild_ivfpq_index,
-        )
-
-        frac = index_stale_fraction(spark, ann_index_path)
-        rebuilt = frac > ann_stale_threshold
-        if rebuilt:
-            if ann_vectors is None:
-                raise ValueError(
-                    f"ANN index at {ann_index_path} is {frac:.1%} stale "
-                    f"(> {ann_stale_threshold:.1%}) but no ann_vectors "
-                    "corpus was provided to rebuild from"
-                )
-            rebuild_ivfpq_index(
-                ann_vectors,
-                ann_index_path,
-                fit_fn=ann_fit_fn,
-                id_col=ann_id_col,
-                vec_col=ann_vec_col,
-            )
-        ann_report = {"stale_fraction": frac, "rebuilt": rebuilt}
-    return {
-        "n_files_before": n_before,
-        "n_files_after": n_after,
-        "stats": out_stats,
-        "blooms": out_blooms,
-        "ann": ann_report,
-    }
+from pyspark.sql import SparkSession
 
 
 def compact_versioned_table(

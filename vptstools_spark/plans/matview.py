@@ -1,5 +1,4 @@
-"""Aggregate materialized views (summary tables) with rollup answering
-and partition-scoped incremental refresh.
+"""Aggregate materialized views (summary tables) with rollup answering.
 
 Engine feature in the OLAP summary-table family (Druid/Pinot rollups,
 BigQuery materialized views, Calcite's aggregate-match rewrite; the
@@ -22,10 +21,6 @@ the standard re-aggregation algebra:
 
 (avg is why MVs must store sum+count, not averages: averages of averages
 are wrong under uneven group sizes.)
-
-Incremental refresh recomputes ONLY the MV partitions whose base data
-changed (dynamic partition overwrite on the MV's partition dim) — the
-same bounded-worklist contract as `operators/merge.py`.
 """
 
 from __future__ import annotations
@@ -296,87 +291,3 @@ def route(
             e = getattr(F, fn)(F.col(col))
         exprs.append(e.alias(out))
     return base.groupBy(*dims).agg(*exprs)
-
-
-def refresh_matview(
-    base: DataFrame, path: str, changed: list
-) -> None:
-    """Partition-scoped incremental refresh: recompute the MV rows for the
-    partitions in `changed` (values of the MV's partition_dim) and replace
-    ONLY those partitions via dynamic partition overwrite. The recompute
-    filters the BASE side on the partition dim first, so the work is
-    proportional to the changed slice, not the table — and the filter
-    reaches the base scan as a pushed predicate (partition pruning when
-    the base is partitioned the same way).
-
-    Requires a partitioned MV; raises otherwise (an unpartitioned MV has
-    no replace unit smaller than itself — rebuild instead)."""
-    spark = base.sparkSession
-    _, mv = read_matview(spark, path)
-    if not mv.partition_dim:
-        raise ValueError(f"MV {mv.name} is unpartitioned; use create_matview")
-    if not changed:
-        return
-    from vptstools_spark.operators.merge import scope_to_partitions
-
-    # worklist discipline shared with operators/merge.py: ≤128 changed
-    # partitions fold into planning-time pruning literals; above that the
-    # filter becomes a broadcast semi-join so plan size stays constant
-    scoped = scope_to_partitions(
-        base, [mv.partition_dim], [(c,) for c in changed]
-    )
-    delta = _aggregate(scoped, mv)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            delta.write.mode("overwrite")
-            .partitionBy(mv.partition_dim)
-            .parquet(os.path.join(path, _DATA_DIR))
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    # VANISHED partitions: a changed partition whose base rows were ALL
-    # deleted produces no delta rows, and dynamic overwrite only replaces
-    # partitions the delta writes — so without this step the MV silently
-    # keeps serving aggregates for data that no longer exists (ADVICE r4).
-    # Diff `changed` against the delta's surviving partition values (one
-    # extra aggregate over the already-scoped slice) and delete the MV
-    # directories for the ones that disappeared — rendered with Spark's
-    # own cast-to-string so bool/NULL/double partition values land on the
-    # directory partitionBy actually wrote.
-    survived = {
-        r["s"]
-        for r in delta.select(
-            F.col(mv.partition_dim).cast("string").alias("s")
-        )
-        .distinct()
-        .collect()
-    }
-    dim_type = next(
-        f.dataType.simpleString()
-        for f in base.schema.fields
-        if f.name == mv.partition_dim
-    )
-    changed_rows = (
-        spark.createDataFrame([(c,) for c in changed], f"`v` {dim_type}")
-        .select(F.col("v").cast("string").alias("s"))
-        .collect()
-    )
-    vanished = [r["s"] for r in changed_rows if r["s"] not in survived]
-    if vanished:
-        from vptstools_spark.operators.merge import escape_partition_segment
-
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        for s in vanished:
-            pdir = os.path.join(
-                path,
-                _DATA_DIR,
-                f"{mv.partition_dim}={escape_partition_segment(s)}",
-            )
-            p = jvm.org.apache.hadoop.fs.Path(pdir)
-            fs = p.getFileSystem(hconf)
-            if fs.exists(p):
-                fs.delete(p, True)

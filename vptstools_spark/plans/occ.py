@@ -26,18 +26,6 @@ Read/write sets per op, and what each rebase checks:
   constraint probe; winners that added rows/rules under table
   constraints re-run enforcement against the head before publishing.
   Appends commute: any serial order yields the same table.
-- `delete_where_atomic` — write-set: position vectors referencing
-  base-version files. Rebases over ADDITIVE winners (append / MOR
-  delete / update / MOR upsert add artifacts, remove nothing) because
-  every referenced file provably survives; Delta WriteSerializable
-  semantics — rows a winner appended that match the predicate STAY (the
-  delete serializes before the append). Winners that removed/rewrote
-  files (compact, purge, COW) would orphan the vectors → re-derive.
-- `upsert_mor_atomic` — write-set: new files + vectors for `keys`.
-  Rebases over additive winners ONLY when the winners' new data files
-  contain none of the loser's keys (checked by scanning just those
-  files — O(interleaved delta), never the table); an overlap means the
-  prepared vectors miss rows that must be replaced → re-derive.
 - `compact_atomic` — write-set: the victim files it rewrites. Rebases
   over additive winners whose new vectors hit no victim (such a vector's
   target would vanish in the rewrite and its deletes resurrect) → else
@@ -58,19 +46,15 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from vptstools_spark.plans.skipping import list_data_files
 from vptstools_spark.plans.timetravel import (
     _DATA_DIR,
-    _DV_FILE,
-    _DV_POS,
     _carry,
     _commit,
     _enforce,
     _list_versions,
     _read_commit,
-    _read_snapshot,
     _resolve_version,
     _write_snapshot_files,
     CommitConflictError,
@@ -182,21 +166,6 @@ def _txn_extra(base_v: int, head_v: int) -> dict:
     }
 
 
-def _write_dv(
-    spark: SparkSession, path: str, hits: DataFrame, label: str
-) -> list[str]:
-    """Write (file, pos) vector rows under a unique dv dir; return the
-    rels. Unique labels are what let concurrent deleters prepare without
-    colliding on a shared `dv{n}` directory."""
-    dv_dir = os.path.join(path, _DATA_DIR, label)
-    hits.write.mode("error").parquet(dv_dir)
-    marker = f"{_DATA_DIR}/{label}/"
-    return sorted(
-        f[f.index(marker) + len(_DATA_DIR) + 1 :]
-        for f in list_data_files(spark, dv_dir)
-    )
-
-
 def append_atomic(
     spark: SparkSession, path: str, df: DataFrame, max_retries: int = 5
 ) -> int:
@@ -279,202 +248,6 @@ def append_atomic(
         )
     finally:
         intents.clear_all()
-
-
-def delete_where_atomic(
-    spark: SparkSession, path: str, predicate, max_retries: int = 5
-) -> int:
-    """Merge-on-read DELETE with rebase: the position vectors are
-    computed ONCE against the base snapshot; over additive winners they
-    republish as-is (every referenced file survives — WriteSerializable:
-    rows a winner appended that match the predicate are NOT deleted, the
-    delete serializes first). Winners that rewrote files re-derive the
-    vectors against the new head. Returns the committed version."""
-    cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-
-    def prepare(v: int) -> tuple[list[str], int]:
-        snap = _read_snapshot(spark, path, v, with_position=True)
-        hits = snap.filter(cond).select(
-            F.col(_DV_FILE).alias("file"), F.col(_DV_POS).alias("pos")
-        )
-        label = intents.register(f"dv{v + 1}-t{uuid.uuid4().hex[:8]}")
-        rels = _write_dv(spark, path, hits, label)
-        n = (
-            spark.read.parquet(
-                *[os.path.join(path, _DATA_DIR, f) for f in rels]
-            ).count()
-            if rels
-            else 0
-        )
-        return rels, n
-
-    intents = _Intents(spark, path)
-    try:
-        base_v = _resolve_version(spark, path, None)
-        dv_rels, n_deleted = prepare(base_v)
-        for _ in range(max_retries + 1):
-            head_v = _resolve_version(spark, path, None)
-            head = _read_commit(spark, path, head_v)
-            if head_v != base_v:
-                winners = _interleaved(spark, path, base_v, head_v)
-                if not all(_is_additive(w) for w in winners):
-                    # a winner rewrote files: the prepared vectors may
-                    # reference dropped files (their deletes would silently
-                    # vanish) — re-derive against the head
-                    base_v = head_v
-                    dv_rels, n_deleted = prepare(base_v)
-                    head = _read_commit(spark, path, head_v)
-            try:
-                _commit(
-                    spark,
-                    path,
-                    head_v + 1,
-                    head["files"],
-                    head["partition_cols"],
-                    "delete",
-                    head.get("partition_types"),
-                    {
-                        **_carry(head),
-                        "delete_files": (head.get("delete_files") or [])
-                        + dv_rels,
-                        "n_deleted": n_deleted,
-                        **_txn_extra(base_v, head_v),
-                    },
-                )
-                return head_v + 1
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"delete on {path} lost the commit race {max_retries + 1} times"
-        )
-    finally:
-        intents.clear_all()
-
-
-def upsert_mor_atomic(
-    spark: SparkSession,
-    path: str,
-    delta: DataFrame,
-    keys: list[str],
-    delete_col: str | None = None,
-    max_retries: int = 5,
-) -> int:
-    """MERGE-ON-READ upsert with logical conflict detection: on losing
-    the race, the loser checks whether the winners' NEW data files
-    contain any of its keys (a scan of just the interleaved delta —
-    O(changed data), never the table). No overlap → the prepared files
-    and vectors are still a correct merge → republish against the head;
-    overlap or a non-additive winner → re-prepare against the new head
-    so winner rows are properly replaced. Returns the committed
-    version."""
-    upserts = delta.filter(~F.col(delete_col)) if delete_col else delta
-    upserts = upserts.drop(*([delete_col] if delete_col else []))
-    key_df = delta.select(*keys).distinct()
-
-    def check_schema(v: int) -> dict:
-        commit = _read_commit(spark, path, v)
-        cur = {
-            f.name: f.dataType.simpleString()
-            for f in read_version(spark, path, v).schema.fields
-        }
-        new = {
-            f.name: f.dataType.simpleString() for f in upserts.schema.fields
-        }
-        if cur != new:
-            raise ValueError(
-                f"merge-on-read upsert schema {sorted(new.items())} does "
-                f"not match table schema {sorted(cur.items())}"
-            )
-        return commit
-
-    def prepare(v: int) -> tuple[list[str], list[str]]:
-        commit = check_schema(v)
-        _enforce(
-            upserts, commit, "upsert_mor",
-            table=read_version(spark, path, v), replace_keys=keys,
-        )
-        snap = _read_snapshot(spark, path, v, with_position=True)
-        hits = snap.join(F.broadcast(key_df), keys, "left_semi").select(
-            F.col(_DV_FILE).alias("file"), F.col(_DV_POS).alias("pos")
-        )
-        token = uuid.uuid4().hex[:8]
-        dv_rels = _write_dv(
-            spark, path, hits, intents.register(f"dv{v + 1}-t{token}")
-        )
-        rels = _write_snapshot_files(
-            upserts, path, v + 1, commit["partition_cols"],
-            vlabel=intents.register(f"v{v + 1}-t{token}"),
-            transforms=commit.get("partition_transforms"),
-        )
-        return rels, dv_rels
-
-    intents = _Intents(spark, path)
-    try:
-        return _upsert_mor_atomic_loop(
-            spark, path, keys, key_df, prepare, max_retries
-        )
-    finally:
-        intents.clear_all()
-
-
-def _upsert_mor_atomic_loop(
-    spark, path, keys, key_df, prepare, max_retries
-) -> int:
-    base_v = _resolve_version(spark, path, None)
-    rels, dv_rels = prepare(base_v)
-    for _ in range(max_retries + 1):
-        head_v = _resolve_version(spark, path, None)
-        head = _read_commit(spark, path, head_v)
-        if head_v != base_v:
-            winners = _interleaved(spark, path, base_v, head_v)
-            rebase_ok = all(_is_additive(w) for w in winners)
-            if rebase_ok:
-                base = _read_commit(spark, path, base_v)
-                new_files = sorted(set(head["files"]) - set(base["files"]))
-                if new_files:
-                    added = spark.read.parquet(
-                        *[
-                            os.path.join(path, _DATA_DIR, f)
-                            for f in new_files
-                        ]
-                    )
-                    if set(keys) <= set(added.columns):
-                        rebase_ok = (
-                            added.join(
-                                F.broadcast(key_df), keys, "left_semi"
-                            )
-                            .limit(1)
-                            .count()
-                            == 0
-                        )
-                    else:
-                        rebase_ok = False
-            if not rebase_ok:
-                base_v = head_v
-                rels, dv_rels = prepare(base_v)
-                head = _read_commit(spark, path, head_v)
-        try:
-            _commit(
-                spark,
-                path,
-                head_v + 1,
-                head["files"] + rels,
-                head["partition_cols"],
-                "upsert_mor",
-                head.get("partition_types"),
-                {
-                    **_carry(head),
-                    "delete_files": (head.get("delete_files") or [])
-                    + dv_rels,
-                    **_txn_extra(base_v, head_v),
-                },
-            )
-            return head_v + 1
-        except CommitConflictError:
-            continue
-    raise CommitConflictError(
-        f"upsert on {path} lost the commit race {max_retries + 1} times"
-    )
 
 
 def compact_atomic(

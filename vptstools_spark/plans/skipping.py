@@ -1,119 +1,17 @@
-"""File-level data skipping: collect per-file column statistics and plan
-scans that read only the files a predicate can touch (the Delta/Iceberg
+"""File-level data skipping for equality probes: a per-file Bloom index
+that lets a scan read only the files a key can be in (the Delta/Iceberg
 "data skipping" idea on plain parquet directories).
 
 Spark already prunes row groups inside a file via parquet footers, but the
-*driver still lists and opens every file*. At 100 TB / millions of files,
-an external stats table (one row per file — KB-scale) lets the planner cut
-the file list BEFORE any footer I/O: `files_for_predicate` intersects the
-predicate's [lo, hi] with each file's [min, max] and returns the read set.
-Combined with `plans/zorder.py` layout (which makes per-file ranges tight
-on multiple dimensions) this is the full OPTIMIZE+skipping loop.
-
-The stats collection is one distributed pass (`input_file_name()` +
-groupBy-file aggregate) and is itself restartable — re-collect only files
-newer than the stats table's snapshot if you maintain it incrementally.
+*driver still lists and opens every file*, and min/max ranges are useless
+for high-cardinality keys. An external index table (one row per file —
+KB-scale) lets the planner cut the file list BEFORE any footer I/O:
+`files_for_equality` probes each file's mask and returns the read set.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def collect_file_stats(
-    spark: SparkSession, path: str, cols: list[str]
-) -> DataFrame:
-    """One row per data file: row count plus min/max/null-count per tracked
-    column. Shuffle carries |files| rows — footer-scale, not data-scale."""
-    df = spark.read.parquet(path)
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs += [
-            F.min(c).alias(f"{c}__min"),
-            F.max(c).alias(f"{c}__max"),
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}__nulls"),
-        ]
-    return (
-        df.withColumn("__file", F.input_file_name())
-        .groupBy("__file")
-        .agg(*aggs)
-        .withColumnRenamed("__file", "file")
-    )
-
-
-def files_for_predicate(stats: DataFrame, col: str, lo, hi) -> list[str]:
-    """Files whose [min, max] range for `col` intersects [lo, hi] (either
-    bound may be None = unbounded). Files that are all-NULL in `col` never
-    match a range predicate and are skipped; files with a NULL min/max but
-    rows (shouldn't happen for parquet) are kept conservatively.
-
-    Returns the file list for `read_pruned` — driver-sized by contract
-    (one entry per *kept* file)."""
-    cond = F.lit(True)
-    if lo is not None:
-        cond = cond & (F.col(f"{col}__max") >= F.lit(lo))
-    if hi is not None:
-        cond = cond & (F.col(f"{col}__min") <= F.lit(hi))
-    # all-NULL files: min/max are NULL → comparisons are NULL → dropped,
-    # unless the file also has non-null rows (then min/max are non-null)
-    kept = stats.filter(cond).select("file")
-    return [r["file"] for r in kept.collect()]
-
-
-def read_pruned(
-    spark: SparkSession, stats: DataFrame, col: str, lo, hi
-) -> DataFrame:
-    """Scan only the files the predicate can touch. The residual filter is
-    still applied (file ranges overlap the predicate, rows inside may not),
-    so the result equals the full-scan filter — skipping is purely I/O."""
-    files = files_for_predicate(stats, col, lo, hi)
-    if not files:
-        # preserve schema on an empty read set
-        any_file = [r["file"] for r in stats.select("file").limit(1).collect()]
-        empty = spark.read.parquet(*any_file) if any_file else None
-        if empty is None:
-            raise ValueError("stats table is empty — collect_file_stats first")
-        return empty.filter(F.lit(False))
-    df = spark.read.parquet(*files)
-    if lo is not None:
-        df = df.filter(F.col(col) >= F.lit(lo))
-    if hi is not None:
-        df = df.filter(F.col(col) <= F.lit(hi))
-    return df
-
-
-def update_file_stats(
-    spark: SparkSession, path: str, stats: DataFrame, cols: list[str]
-) -> DataFrame:
-    """Incrementally maintain the stats table: collect stats ONLY for data
-    files not yet covered (new files from appends/compaction), union with
-    the existing rows that still exist on disk (dropping tombstones for
-    files a rewrite removed). One listing + one pass over the NEW bytes —
-    at 100 TB this is the difference between stats maintenance being a
-    nightly no-op and a full-table rescan."""
-    # filesystem listing, NOT a data scan — input_file_name() would read
-    # every row of every file just to learn the file names
-    current = list_data_files(spark, path)
-    known = {r["file"] for r in stats.select("file").collect()}
-    fresh = sorted(current - known)
-    kept = stats.filter(F.col("file").isin(list(current)))
-    if not fresh:
-        return kept
-    df = spark.read.parquet(*fresh)
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs += [
-            F.min(c).alias(f"{c}__min"),
-            F.max(c).alias(f"{c}__max"),
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}__nulls"),
-        ]
-    new_stats = (
-        df.withColumn("__file", F.input_file_name())
-        .groupBy("__file")
-        .agg(*aggs)
-        .withColumnRenamed("__file", "file")
-    )
-    return kept.unionByName(new_stats)
 
 
 # ---------------------------------------------------------------------------
@@ -284,127 +182,3 @@ def list_data_files(spark: SparkSession, path: str) -> set[str]:
             current.add(f)
     return current
 
-
-def update_file_blooms(
-    spark: SparkSession,
-    path: str,
-    blooms: DataFrame,
-    col: str,
-    n_hashes: int = BLOOM_HASHES,
-    m_bits: int = BLOOM_BITS,
-) -> DataFrame:
-    """Incrementally maintain the bloom index: build masks ONLY for data
-    files not yet covered, drop tombstoned rows for files a rewrite
-    removed — the bloom twin of `update_file_stats`, with the same
-    one-listing + new-bytes-only cost contract."""
-    from vptstools_spark.operators.sketch import bloom_positions
-
-    current = list_data_files(spark, path)
-    known = {r["file"] for r in blooms.select("file").collect()}
-    fresh = sorted(current - known)
-    kept = blooms.filter(F.col("file").isin(list(current)))
-    if not fresh:
-        return kept
-    df = spark.read.parquet(*fresh)
-    pos = F.explode(
-        F.array(*bloom_positions(F.col(col), n_hashes, m_bits))
-    ).alias("p")
-    pairs = (
-        df.withColumn("__file", F.input_file_name())
-        .select("__file", pos)
-        .distinct()
-    )
-    words = (
-        pairs.select(
-            "__file",
-            (F.col("p") / 64).cast("int").alias("w"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))").alias("b"),
-        )
-        .groupBy("__file", "w")
-        .agg(F.bit_or("b").alias("word"))
-    )
-    n_words = m_bits // 64
-    fresh_blooms = (
-        words.groupBy("__file")
-        .agg(
-            F.map_from_arrays(
-                F.collect_list("w"), F.collect_list("word")
-            ).alias("__wm")
-        )
-        .select(
-            F.col("__file").alias("file"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_words - 1)),
-                lambda i: F.coalesce(
-                    F.col("__wm").getItem(i.cast("int")), F.lit(0).cast("long")
-                ),
-            ).alias("mask"),
-        )
-    )
-    return kept.unionByName(fresh_blooms)
-
-
-#: dictionary index capacity: above this many distinct values per file the
-#: entry records an overflow (NULL) and the file is never pruned by the
-#: dictionary — the bloom index is the right tool past this cardinality
-DICT_MAX_DISTINCT = 64
-
-
-def collect_file_dictionaries(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    max_distinct: int = DICT_MAX_DISTINCT,
-) -> DataFrame:
-    """One row per data file: the EXACT sorted distinct-value list of
-    `col` (as Spark-cast strings), or NULL when the file exceeds
-    `max_distinct` values. For low-cardinality columns (status codes,
-    country/category/flag columns) this index prunes equality probes with
-    ZERO false positives — strictly stronger than the bloom mask, at a
-    cost that is bounded by |files|·max_distinct strings. Build is one
-    distributed pass: per-file distinct (map-side combining) → bounded
-    collect_list; nothing data-scale reaches the driver."""
-    df = spark.read.parquet(path)
-    per = (
-        df.withColumn("__file", F.input_file_name())
-        .select("__file", F.col(col).cast("string").alias("v"))
-        .distinct()
-        .groupBy("__file")
-        .agg(
-            # collect_list skips NULL v (a stored NULL can never satisfy an
-            # equality probe, so it carries no pruning information)
-            F.sort_array(F.collect_list("v")).alias("values"),
-            F.count("*").alias("__n"),
-        )
-    )
-    return per.select(
-        F.col("__file").alias("file"),
-        F.when(F.col("__n") <= max_distinct, F.col("values")).alias("values"),
-    )
-
-
-def files_for_equality_dict(dicts: DataFrame, value) -> list[str]:
-    """Files whose dictionary admits `col = value`: exact membership for
-    indexed files, conservatively kept for overflow (NULL) entries. The
-    probe renders the value with Spark's own cast semantics
-    (`_spark_string_of`) so index and probe agree byte-for-byte."""
-    s = _spark_string_of(value)
-    keep = dicts.filter(
-        F.col("values").isNull() | F.array_contains("values", F.lit(s))
-    )
-    return [r["file"] for r in keep.select("file").collect()]
-
-
-def read_pruned_equality_dict(
-    spark: SparkSession, dicts: DataFrame, col: str, value
-) -> DataFrame:
-    """Scan only dictionary-admitted files for `col = value`; the residual
-    filter is still applied (overflow files may not contain the value),
-    so the result equals the full-scan filter — skipping is purely I/O."""
-    files = files_for_equality_dict(dicts, value)
-    if not files:
-        any_file = [r["file"] for r in dicts.select("file").limit(1).collect()]
-        if not any_file:
-            raise ValueError("dictionary table is empty — collect_file_dictionaries first")
-        return spark.read.parquet(*any_file).filter(F.lit(False))
-    return spark.read.parquet(*files).filter(F.col(col) == F.lit(value))

@@ -302,7 +302,6 @@ def _sketch_col(c: str, dt: T.DataType) -> Column:
     return F.col(c).cast("string")
 
 
-
 #: quantile-histogram precision: 2^-4 relative bucket width
 _HIST_SUB_BITS = 4
 
@@ -868,28 +867,6 @@ def estimate_filter_selectivity(
     if op in (">", ">="):
         return 1.0 - frac
     raise ValueError(f"unsupported op {op!r}")
-
-
-def scaled(stats: TableStats, selectivity: float) -> TableStats:
-    """Stats after an estimated-selectivity filter: row count scales;
-    NDVs scale but never above the new row count (distinct-value
-    containment assumption)."""
-    n = max(int(stats.n_rows * selectivity), 0)
-    return TableStats(
-        n_rows=n,
-        version=stats.version,
-        columns={
-            name: ColumnStats(
-                name=name,
-                n_nonnull=min(c.n_nonnull, n),
-                ndv=max(min(c.ndv, n), 1 if n else 0),
-                min=c.min,
-                max=c.max,
-                avg_len=c.avg_len,
-            )
-            for name, c in stats.columns.items()
-        },
-    )
 
 
 # ----------------------------------------------------------------- planning

@@ -1274,43 +1274,6 @@ def read_version(
     return _read_snapshot(spark, path, v)
 
 
-def set_stats_cols(
-    spark: SparkSession, path: str, cols: list[str]
-) -> int:
-    """Declare (or change) the file-skipping statistics columns on an
-    EXISTING table as a metadata commit: every current data file gets
-    footer-derived [min, max] for the new column set (driver-side
-    metadata reads — one footer per file, no data scan), and every later
-    commit maintains the map for its new files automatically. Returns
-    the new version."""
-    prev_v = _resolve_version(spark, path, None)
-    prev = _read_commit(spark, path, prev_v)
-    pcols = prev["partition_cols"]
-    logical = prev.get("columns") or []
-    for c in cols:
-        if (logical and c not in logical) or c in pcols:
-            raise ValueError(
-                f"stats column {c!r} must be a non-partition data column"
-            )
-    new_v = prev_v + 1
-    _commit(
-        spark,
-        path,
-        new_v,
-        prev["files"],
-        pcols,
-        "set_stats_cols",
-        prev.get("partition_types"),
-        {
-            **_carry(prev),
-            "stats_cols": list(cols),
-            # re-stat everything under the NEW column set
-            "file_stats": {},
-        },
-    )
-    return new_v
-
-
 def skipped_files(
     spark: SparkSession,
     path: str,
@@ -1711,67 +1674,6 @@ def commit_upsert_eq(
                 **{f: prev_v for f in prev["files"]},
                 **(prev.get("file_seqs") or {}),
             },
-            **(extra or {}),
-        },
-    )
-    return new_v
-
-
-def commit_overwrite(
-    spark: SparkSession,
-    path: str,
-    df: DataFrame,
-    partition_cols: list[str] | None = None,
-    extra: dict | None = None,
-) -> int:
-    """INSERT OVERWRITE as a commit: the new version's snapshot is
-    exactly `df` — no prior file carried, prior delete vectors dropped
-    (no prior file survives for them to hit). The recompute-and-swap
-    path for DERIVED tables (rollups, summaries) whose content is a
-    function of some upstream state rather than a delta; constraints
-    carry and are enforced on the new rows. Schema and partitioning MAY
-    change — the overwrite defines both. History stays: the previous
-    snapshot remains pinnable/diffable exactly like any version."""
-    prev_v = _resolve_version(spark, path, None)
-    prev = _read_commit(spark, path, prev_v)
-    _enforce(df, prev, "overwrite", table=None)
-    new_v = prev_v + 1
-    pcols = (
-        prev["partition_cols"] if partition_cols is None else partition_cols
-    )
-    # transforms survive an overwrite only while their source column does
-    transforms = {
-        k: v
-        for k, v in (prev.get("partition_transforms") or {}).items()
-        if v[1] in df.columns
-    }
-    pcols = [c for c in pcols if c in df.columns or c in transforms]
-    rels = _write_snapshot_files(df, path, new_v, pcols, transforms=transforms)
-    ptypes = {
-        f.name: f.dataType.simpleString()
-        for f in _derive(df, transforms).schema.fields
-        if f.name in pcols
-    }
-    _commit(
-        spark,
-        path,
-        new_v,
-        rels,
-        pcols,
-        "overwrite",
-        ptypes,
-        {
-            "columns": df.columns,
-            "delete_files": [],
-            "constraints": prev.get("constraints") or [],
-            "partition_transforms": transforms,
-            # skipping columns survive an overwrite while they exist in
-            # the new schema (the new files get fresh footer stats)
-            "stats_cols": [
-                c
-                for c in (prev.get("stats_cols") or [])
-                if c in df.columns and c not in pcols
-            ],
             **(extra or {}),
         },
     )
@@ -2458,8 +2360,7 @@ def set_constraints(
     The EXISTING snapshot must already satisfy them (validated here, one
     scan) — a constraint the data doesn't meet is a lie that would make
     every later commit's rejection message misleading. Metadata-only
-    commit; replaces the whole constraint list (compose with
-    `constraints_of` to add incrementally). Returns the new version."""
+    commit; replaces the whole constraint list. Returns the new version."""
     for c in constraints:
         if not c.get("name") or c.get("kind") not in _CONSTRAINT_KINDS:
             raise ValueError(
@@ -2511,12 +2412,6 @@ def drop_constraints(
         {**_carry(prev), "constraints": keep},
     )
     return prev_v + 1
-
-
-def constraints_of(spark: SparkSession, path: str) -> list[dict]:
-    """The current constraint list (empty for an unconstrained table)."""
-    v = _resolve_version(spark, path, None)
-    return _read_commit(spark, path, v).get("constraints") or []
 
 
 def history(spark: SparkSession, path: str) -> list[dict]:
@@ -2869,30 +2764,6 @@ def table_changes(
     return out
 
 
-def changed_partitions(
-    spark: SparkSession,
-    path: str,
-    from_version: int,
-    to_version: int | None = None,
-    partition_cols: list[str] | None = None,
-) -> list[tuple]:
-    """Distinct partition tuples touched by any change in
-    (`from_version`, `to_version`] — the worklist an incremental
-    consumer (e.g. `plans/matview.py:refresh_matview`) needs. Derived
-    from the change data feed, so for MOR commit histories the cost is
-    O(changed data), where the `diff_versions`-based derivation pays a
-    full-snapshot key join. Returns driver-side tuples (|partitions|
-    scale, same as the MV worklist contract)."""
-    pcols = partition_cols or _read_commit(
-        spark, path, _resolve_version(spark, path, to_version)
-    )["partition_cols"]
-    if not pcols:
-        raise ValueError(f"table {path} is unpartitioned")
-    ch = table_changes(spark, path, from_version, to_version)
-    rows = ch.select(*pcols).distinct().collect()
-    return [tuple(r[c] for c in pcols) for r in rows]
-
-
 def _list_fs_children(spark: SparkSession, dir_path: str) -> list[str]:
     """Child names of a directory via the Hadoop FS API ([] if absent) —
     works on any configured filesystem, not just local."""
@@ -2918,41 +2789,6 @@ def _tagged_versions(spark: SparkSession, path: str) -> set[int]:
             )
             out.add(int(ref["version"]))
     return out
-
-
-def restore_version(spark: SparkSession, path: str, version: int) -> int:
-    """Delta-style RESTORE: make `version`'s snapshot the new LATEST by
-    writing a new commit that references the OLD version's files — a
-    metadata-only rollback (no data rewrite, KB-scale commit) that keeps
-    the bad intermediate versions readable for forensics instead of
-    deleting history. Returns the new version number.
-
-    Publishes through the same atomic create-exclusive as every commit,
-    so a restore racing an upsert has exactly one winner."""
-    versions = _list_versions(spark, path)
-    if not versions:
-        raise ValueError(f"no table at {path}")
-    if version not in versions:
-        raise ValueError(
-            f"cannot restore to version {version}; available: "
-            f"{versions[0]}..{versions[-1]}"
-        )
-    src = _read_commit(spark, path, version)
-    new_v = versions[-1] + 1
-    _commit(
-        spark,
-        path,
-        new_v,
-        src["files"],
-        src["partition_cols"],
-        f"restore({version})",
-        src.get("partition_types"),
-        # the restored snapshot's column order, delete vectors, and
-        # constraints are part of its identity — dropping them here would
-        # re-order evolved schemas and resurrect deleted rows
-        _carry(src),
-    )
-    return new_v
 
 
 def expire_versions(
@@ -3063,10 +2899,9 @@ def expire_versions(
 #: age, closing the race the age gate only narrows. Intents are cleared
 #: in a finally block by the writer (success OR failure — an aborted
 #: transaction's files become reclaimable the moment the intent drops).
-#: A crashed writer leaves a stale intent: `clean_stale_intents` removes
-#: those after an operator-chosen age, as an explicit maintenance step —
-#: vacuum itself NEVER expires an intent (guessing a writer is dead is
-#: exactly the bug this mechanism exists to prevent).
+#: A crashed writer leaves a stale intent, which vacuum NEVER expires
+#: (guessing a writer is dead is exactly the bug this mechanism exists to
+#: prevent): removing it is an explicit operator step.
 _INTENT_DIR = "_intents"
 
 
@@ -3105,32 +2940,6 @@ def _active_intent_labels(spark: SparkSession, path: str) -> set[str]:
         if name.endswith(".json"):
             out.add(name[:-5])
     return out
-
-
-def clean_stale_intents(
-    spark: SparkSession, path: str, min_age_seconds: float = 86400.0
-) -> list[str]:
-    """Drop intent sidecars older than `min_age_seconds` (default 24 h) —
-    the EXPLICIT operator decision that a registered writer is dead.
-    Returns the removed labels. Run this before vacuum on tables where
-    crashed transactions are suspected; never automatic."""
-    import time
-
-    cutoff = time.time() - min_age_seconds
-    removed = []
-    for label in sorted(_active_intent_labels(spark, path)):
-        try:
-            doc = json.loads(
-                read_text_sidecar(
-                    spark, os.path.join(path, _INTENT_DIR, f"{label}.json")
-                )
-            )
-        except Exception:
-            continue
-        if float(doc.get("ts") or 0.0) <= cutoff:
-            clear_write_intent(spark, path, label)
-            removed.append(label)
-    return removed
 
 
 def vacuum_table(
@@ -3172,7 +2981,7 @@ def vacuum_table(
     intent-registered dir label is skipped regardless of age, and the
     intent drops (writer's finally) the moment the transaction publishes
     or aborts. Stale intents from crashed writers are an explicit
-    operator cleanup (`clean_stale_intents`), never vacuum's guess."""
+    operator cleanup, never vacuum's guess."""
     intent_labels = _active_intent_labels(spark, path)
     referenced: set[str] = set()
     logs = [_LOG_DIR] + [
@@ -3242,9 +3051,7 @@ def files_metadata(
         size = int(p.getFileSystem(hconf).getFileStatus(p).getLen())
         # surface LOGICAL partition values, not raw hive dir renderings:
         # unescape percent-escapes and map the null sentinel to None —
-        # the same inverse of merge.escape_partition_segment the
-        # streaming source's _partition_values applies, so the two
-        # metadata faces agree
+        # the inverse of merge.escape_partition_segment
         vals = tuple(
             None
             if x is None or x == "__HIVE_DEFAULT_PARTITION__"
@@ -3306,44 +3113,3 @@ def snapshot_rowcount(
             if file_ in live:
                 seen.add((file_, int(pos)))
     return total - len(seen)
-
-
-def partitions_metadata(
-    spark: SparkSession, path: str, version: int | None = None
-) -> DataFrame:
-    """Iceberg-`partitions`-style rollup of `files_metadata`: per
-    partition tuple, file count and total bytes — the table an operator
-    reads before deciding what to compact, and a small-files report for
-    free (files-per-partition vs bytes-per-partition)."""
-    f = files_metadata(spark, path, version)
-    pcols = [
-        c for c in f.columns
-        if c not in ("file", "introduced_in", "size_bytes")
-    ]
-    return f.groupBy(*pcols).agg(
-        F.count("*").alias("n_files"),
-        F.sum("size_bytes").alias("total_bytes"),
-    )
-
-
-def history_metadata(spark: SparkSession, path: str) -> DataFrame:
-    """`history` as a DataFrame (version, op, n_files, n_delete_files,
-    n_constraints) — the SQL-joinable face of the commit log."""
-    rows = []
-    for v in _list_versions(spark, path):
-        c = _read_commit(spark, path, v)
-        rows.append(
-            (
-                v,
-                c["op"],
-                float(c.get("ts") or 0.0),
-                len(c["files"]),
-                len(c.get("delete_files") or []),
-                len(c.get("constraints") or []),
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "version int, op string, commit_ts double, n_files int, "
-        "n_delete_files int, n_constraints int",
-    )

@@ -8,8 +8,9 @@ interleaving the bits of both keys places rows that are close in the
 tight in ALL dimensions and a selective filter on any of them skips most
 row groups at the scan. This is what Delta Lake's OPTIMIZE ZORDER BY does;
 core Spark has no equivalent, so the engine provides one for the curated
-(silver) layer: range clustering for selective scans. `compact_partitions`
-applies it per partition when small files are rewritten.
+(silver) layer: range clustering for selective scans.
+`plans/maintenance.py` applies it per partition when small files are
+rewritten.
 
 At 100 TB:
 - the per-dimension equi-depth boundaries come from `approxQuantile`
@@ -68,58 +69,3 @@ def zvalue(df: DataFrame, cols: list[str], bits: int = 8) -> Column:
             bit = F.shiftright(bucket, i).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, i * ndims + d))
     return z
-
-
-def compact_partitions(
-    spark,
-    path: str,
-    partition_cols: list[str],
-    zorder_cols: list[str],
-    partitions: list[tuple] | None = None,
-    num_files: int = 1,
-    bits: int = 8,
-) -> None:
-    """Maintenance rewrite of a partitioned parquet table: coalesce the
-    listed partitions' small files into ~`num_files` z-ordered files PER
-    PARTITION (the OPTIMIZE ... ZORDER BY maintenance op, scoped to
-    partitions so cost tracks the worklist, not the table — same
-    touched-partition discipline as operators/merge.py).
-
-    The range exchange runs over `(partition_cols, __z)` with
-    `num_files × len(partitions)` output partitions, so each listed
-    partition lands in ~num_files files (exact when the equi-depth
-    boundaries align with partition-value changes — always the case for
-    num_files=1, the common compaction target; larger values are a target,
-    not a guarantee, because range boundaries are equi-depth over rows).
-    With `partitions=None` the whole table is compacted and `num_files` is
-    the GLOBAL output task count.
-
-    Ingest (streaming availableNow, per-day overwrite) produces many small
-    files per partition over time; at 100 TB the rewrite is the one range
-    exchange per partition that any re-layout must pay, and untouched
-    partitions' files are not rewritten.
-    """
-    from vptstools_spark.operators.merge import scope_to_partitions
-
-    target = spark.read.parquet(path)
-    if partitions is not None:
-        if not partitions:
-            return
-        # bounded-worklist pruning: literal filter for small lists, broadcast
-        # semi-join above MAX_LITERAL_PARTITION_FILTER (shared with MERGE)
-        target = scope_to_partitions(target, partition_cols, partitions)
-    z = zvalue(target, zorder_cols, bits)
-    n_out = num_files * len(partitions) if partitions is not None else num_files
-    out = (
-        target.withColumn("__z", z)
-        .repartitionByRange(n_out, *partition_cols, "__z")
-        .sortWithinPartitions(*partition_cols, "__z")
-        .drop("__z")
-        .localCheckpoint(eager=True)  # finish reading before overwriting
-    )
-    # force dynamic overwrite per-write: on a session without the global
-    # partitionOverwriteMode=dynamic conf, plain overwrite would TRUNCATE
-    # every partition not in the worklist
-    out.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(*partition_cols).parquet(path)
