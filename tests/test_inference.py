@@ -566,3 +566,10 @@ def test_repeat_purchase_interval_quartiles(spark):
     r = q_repeat_purchase_interval(spark, SF).collect()[0]
     assert r.n_intervals > 0
     assert 0 <= r.p25_h <= r.p50_h <= r.p75_h
+
+
+def test_roc_auc_null_when_one_class_empty(spark):
+    # no sf0.001 part is priced above the cut: AUC is undefined, so NULL
+    # (as in SQL) instead of a division-by-zero error under ANSI mode
+    row = inference_q.q_roc_auc_size(spark, SF).collect()[0]
+    assert (row.n_pos, row.n_neg, row.auc) == (0, 200, None)

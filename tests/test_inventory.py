@@ -2,8 +2,10 @@
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
+from vptstools_spark.functions.paths import radar_day_directory
 from vptstools_spark.operators.inventory import (
     coverage,
     days_to_create_vpts,
@@ -41,6 +43,29 @@ def test_coverage_counts(spark):
         "baltrad/hdf5/nosta/2023/03/12": 1,
         "ecog-04003/hdf5/plpoz/2016/09/23": 1,
     }
+
+
+def test_driver_radar_days_match_coverage(spark):
+    """The CLI's driver-side grouping of a folder listing gives the same
+    radar-day directories as the Spark inventory aggregate."""
+    keys = [
+        # misfiled: groups under its filename date, 2023/03/12
+        "baltrad/hdf5/nosta/2023/03/11/nosta_vp_20230312T000000Z_0xb.h5",
+        "baltrad/hdf5/nosta/2023/03/11/nosta_vp_20230311T232500Z_0xb.h5",
+        # upper-case radar code, _0x9 suffix
+        "baltrad/hdf5/bejab/2022/11/11/BEJAB_vp_20221111T233000Z_0x9.h5",
+        # no T between date and time, another source/file_type prefix
+        "ecog-04003/hdf5/plpoz/2016/09/23/plpoz_vp_201609230000Z.h5",
+        "uva/h5/plpoz/2016/09/23/plpoz_vp_20160923T0015Z.h5",
+        # the greedy prefix keeps the last five letters before _vp_
+        "baltrad/hdf5/dehnr/2023/01/02/xxdehnr_vp_20230102T0100Z.h5",
+    ]
+    listing = spark.createDataFrame([(k,) for k in keys], "file string")
+    spark_days = sorted(r["directory"] for r in coverage(parse_inventory(listing)).collect())
+    assert sorted({radar_day_directory(k) for k in keys}) == spark_days
+    assert "baltrad/hdf5/nosta/2023/03/12" in spark_days
+    with pytest.raises(ValueError, match="cannot parse ODIM filename: misnamed.h5"):
+        radar_day_directory("baltrad/hdf5/nosta/2023/03/11/misnamed.h5")
 
 
 def test_modified_window(spark):

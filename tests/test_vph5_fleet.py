@@ -79,7 +79,7 @@ def _assert_unchanged(snapshot: dict[str, tuple[int, bytes]]) -> None:
             assert fh.read() == data, path
 
 
-def test_path_folder_run_matches_oracle_in_four_jobs(spark, fleet, tmp_path):
+def test_path_folder_run_matches_oracle_in_two_jobs(spark, fleet, tmp_path):
     h5_root, oracle = fleet
     dest = str(tmp_path / "dest")
     result, jobs = _jobs_in_group(
@@ -89,9 +89,10 @@ def test_path_folder_run_matches_oracle_in_four_jobs(spark, fleet, tmp_path):
     assert sorted(result["days"]) == sorted(oracle["days"])
     assert (result["daily"], result["monthly"]) == (6, 4)
     _expect(dest, oracle, list(oracle["days"]))
-    # coverage 2, daily 2 (decode/render stage + write), monthly none: no
+    # daily 2 (decode/render stage + write); the day list is grouped on the
+    # driver and the monthly join is local, so neither starts a job; no
     # file-listing job and no distinct/broadcast of the day list
-    assert jobs <= 4, f"{jobs} Spark jobs"
+    assert jobs <= 2, f"{jobs} Spark jobs"
 
 
 def test_manifest_run_recomputes_window_days_and_coverage(spark, fleet, tmp_path):

@@ -791,7 +791,8 @@ def q_roc_auc_size(spark: SparkSession, sf: str) -> DataFrame:
     return agg.select(
         F.col("np").cast("long").alias("n_pos"),
         F.col("nn").cast("long").alias("n_neg"),
-        F.round(F.col("u") / (F.col("np") * F.col("nn")), 6).alias("auc"),
+        # NULL, as in SQL, when one class is empty (no part above the cut)
+        F.round(F.try_divide(F.col("u"), F.col("np") * F.col("nn")), 6).alias("auc"),
     )
 
 

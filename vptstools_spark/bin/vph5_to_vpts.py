@@ -5,7 +5,10 @@ Option-for-option mirror of the reference CLI
 (reference: src/vptstools/bin/vph5_to_vpts.py:30-251): ``--modified-days-ago``
 drives inventory-based incremental selection, ``--path-folder`` (the
 reference's ``--path-s3-folder``) recreates every radar-day under one
-subtree instead. Where the reference loops radar-days on the driver
+subtree instead. The radar-day list comes from the inventory's Spark
+aggregate in the first mode; in the second, the driver groups its own glob
+listing with the filename grammar (``functions/paths.radar_day_directory``)
+and starts no job for it. Where the reference loops radar-days on the driver
 (download → pandas convert → upload per day), this CLI runs ONE Spark plan
 for the daily phase: binaryFile scan of the affected day directories → daily
 partition-overwrite write, restricted to the driver's radar-day list by a
@@ -38,7 +41,9 @@ import shutil
 
 import click
 
-from vptstools_spark.operators.inventory import coverage, handle_manifest, parse_inventory
+from vptstools_spark.functions.paths import radar_day_directory
+# coverage is not called here: perfbench's traced run patches cli.coverage
+from vptstools_spark.operators.inventory import coverage, handle_manifest  # noqa: F401
 from vptstools_spark.operators.pipeline import (
     daily_vpts_job,
     monthly_vpts_job,
@@ -94,11 +99,12 @@ def run(
                 f"No h5 files could be found in the current path "
                 f"'{os.path.join(h5_root, path_folder)}'."
             )
-        rel = [os.path.relpath(p, h5_root) for p in sorted(set(names))]
-        listing = spark.createDataFrame([(k,) for k in rel], "file string")
-        # the manifest path's filename policy: a name the ODIM grammar
-        # cannot parse fails the run instead of becoming an empty-key day
-        days = coverage(parse_inventory(listing))
+        # the driver holds the listing, so it groups it with the path grammar
+        # and starts no job; a name the grammar cannot parse fails the run
+        # (the manifest path's policy) before any Spark work
+        day_dirs = sorted(
+            {radar_day_directory(os.path.relpath(p, h5_root)) for p in names}
+        )
     else:
         if not manifest:
             raise click.UsageError("VPTS_MANIFEST must be set (or use --path-folder)")
@@ -121,16 +127,16 @@ def run(
             df_cov.coalesce(1).sortWithinPartitions("directory"),
             os.path.join(destination, "coverage.csv"),
         )
+        # radar-days are driver-sized (the work list)
+        day_dirs = [r["directory"] for r in days.collect()]
 
-    day_rows = days.collect()  # radar-days are driver-sized (the work list)
-    click.echo(f"Create {len(day_rows)} daily VPTS files.")
-    if not day_rows:
+    click.echo(f"Create {len(day_dirs)} daily VPTS files.")
+    if not day_dirs:
         click.echo("Finished VPTS update procedure.")
         return {"days": [], "daily": 0, "monthly": 0}
 
     from vptstools_spark.sources.odim import read_vp_files
 
-    day_dirs = [r["directory"] for r in day_rows]
     # the radar-day directories, not `{dir}/*.h5` globs: Spark expands a
     # glob to one path per file and lists more than 32 paths with a parallel
     # job of one task each; read_vp_files' pathGlobFilter keeps the .h5 files

@@ -4,10 +4,14 @@ The reference models S3 keys as parseable records
 (`{source}/{file_type}/{radar_code}/{yyyy}/{mm}/{dd}/{name}.h5`, filename
 grammar at src/vptstools/s3.py:100-109, path properties at s3.py:11-153).
 Here each derived attribute is a column expression, so parsing fuses into the
-scan and Catalyst prunes whatever downstream doesn't use.
+scan and Catalyst prunes whatever downstream doesn't use. A listing the
+driver already holds (the CLI's ``--path-folder`` glob) is grouped into
+radar-days with the same grammar in plain Python, ``radar_day_directory``.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -17,6 +21,8 @@ from pyspark.sql import functions as F
 ODIM_FILENAME_REGEX = (
     r".*([a-zA-Z]{5})_([a-z]*)_(\d{4})(\d\d)(\d\d)T?(\d\d)(\d\d).*\.h5"
 )
+#: the grammar as Spark's Java regex applies it: ASCII classes, unanchored
+_ODIM_FILENAME = re.compile(ODIM_FILENAME_REGEX, re.ASCII)
 
 
 def parse_odim_filename(name: Column) -> dict[str, Column]:
@@ -85,6 +91,21 @@ def daily_group_cols(file: Column) -> list[Column]:
         parsed["month"].alias("month"),
         parsed["day"].alias("day"),
     ]
+
+
+def radar_day_directory(key: str) -> str:
+    """Driver-side ``daily_group_cols`` joined by ``directory_col``: the
+    radar-day directory ``source/file_type/radar/yyyy/mm/dd`` that
+    ``operators.inventory.coverage`` groups ``key`` under. Source and
+    file_type are the key's first two segments; radar (lower-cased) and date
+    come from the filename, so a misfiled object groups under its filename
+    date. A name the grammar rejects raises, as ``parse_inventory`` does."""
+    parts = key.split("/")
+    match = _ODIM_FILENAME.search(parts[-1])
+    if match is None:
+        raise ValueError(f"cannot parse ODIM filename: {parts[-1]}")
+    radar, _data_type, year, month, day = match.groups()[:5]
+    return "/".join([*parts[:2], radar.lower(), year, month, day])
 
 
 def directory_col(*cols: Column) -> Column:

@@ -37,7 +37,6 @@ the output size, which no skyline algorithm beats. Value gate:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def _dominance_mask(vals, cand=None):

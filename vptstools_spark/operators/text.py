@@ -7,7 +7,7 @@ input partitions (narrow, shuffle-free until the final aggregate).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: default "stopword" markers for the synthetic corpus

@@ -48,13 +48,17 @@ def _py_double_repr() -> Column:
     return _repr
 
 
-def _render_measurement(col: str, spec: VptsCsvSpec, dtype: str) -> Column:
+def _render_measurement(
+    col: str, spec: VptsCsvSpec, dtype: str, double_repr=None
+) -> Column:
     """Tri-state cell → serialized string (reference: src/vptstools/vpts.py:125-127,
     sentinel renderings at vpts_csv.py:243-251): nodata → "" and undetect →
-    "NaN" for v1.0; real doubles via CPython-repr parity, integers via cast."""
+    "NaN" for v1.0; real doubles via CPython-repr parity, integers via cast.
+    ``double_repr`` is a ``_py_double_repr()`` UDF to share across columns;
+    one is built when it is not given."""
     state = F.col(f"{col}__state")
     if dtype == "double":
-        rendered = _py_double_repr()(F.col(col))
+        rendered = (double_repr or _py_double_repr())(F.col(col))
     else:
         rendered = F.col(col).cast("string")
     return (
@@ -86,9 +90,11 @@ def to_vpts_table(profile_df: DataFrame, vpts_csv_version: str = "v1.0") -> Data
         "radar_wavelength": round6(F.col("radar_wavelength")).cast("string"),
         "source_file": check_source_file(F.col("source_file"), spec.source_file_regex),
     }
+    schema = profile_df.schema
+    double_repr = _py_double_repr()
     for m in spec.measurement_columns:
-        dtype = profile_df.schema[m].dataType.simpleString()
-        cols[m] = _render_measurement(m, spec, dtype)
+        dtype = schema[m].dataType.simpleString()
+        cols[m] = _render_measurement(m, spec, dtype, double_repr)
     projected = profile_df.select(
         *[cols[name].alias(name) for name in spec.columns]
     )

@@ -49,7 +49,6 @@ from vptstools_spark.plans.timetravel import (
     _DATA_DIR,
     _LOG_DIR,
     _REFS_DIR,
-    CommitConflictError,
     _carry,
     _commit,
     _enforce,

@@ -16,7 +16,6 @@ reviewable choice at the call sites where it matters:
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 _HINTS = {"broadcast": "broadcast", "shuffle_hash": "shuffle_hash", "merge": "merge"}
 

@@ -17,7 +17,7 @@ reference: src/vptstools/vpts.py:43-46) with Spark-native nullable types.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import types as T
 

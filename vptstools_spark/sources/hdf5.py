@@ -30,7 +30,6 @@ loop that both ODIM faces (``read_vp_files`` and ``format("odim")``) share.
 
 from __future__ import annotations
 
-import struct
 import zlib
 from typing import Any
 
