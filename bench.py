@@ -502,110 +502,6 @@ def _sf1_lakehouse(spark) -> dict:
     return out
 
 
-ODIM_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "fixtures", "odim_ingest"
-)
-
-
-def _odim_ingest(spark) -> dict:
-    """ODIM-ingest tier (VERDICT r7 #1): the reference's actual headline
-    pipeline — many small HDF5 VP files → decode → daily VPTS CSV →
-    monthly gzip CSV — measured end-to-end on a synthesized fleet
-    (tools/gen_odim.py: byte-patched real ODIM files, 4 radars × 3 days
-    × 96 timestamps ≈ 1150 × ~25 KB). Records the task-PACKING evidence
-    for the S1 100 TB design claim (binaryFile + files.maxPartitionBytes
-    packs many small files per task, SURVEY §7.4.4): `n_files`,
-    `scan_tasks`, and `files_per_task` come straight from the scan plan,
-    and tests/test_pipeline.py asserts files_per_task > 1 mechanically."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from tools.gen_odim import main as gen_odim
-    from vptstools_spark.operators.pipeline import (
-        daily_vpts_job,
-        monthly_vpts_job,
-    )
-    from vptstools_spark.sources.odim import read_vp_files
-
-    out: dict = {}
-    tmp = tempfile.mkdtemp(prefix="bench_odim_")
-    try:
-        n_files = gen_odim(ODIM_DIR)
-        out["n_files"] = n_files
-        # reference layout nests {radar}/{yyyy}/{mm}/{dd}/ — glob to files
-        glob = os.path.join(ODIM_DIR, "*", "*", "*", "*")
-        profiles = read_vp_files(spark, glob)
-        # task packing: partitions of the binaryFile scan == Spark tasks;
-        # >1 file/task is the small-file packing the design claims
-        scan_tasks = profiles.rdd.getNumPartitions()
-        out["scan_tasks"] = scan_tasks
-        out["files_per_task"] = round(n_files / max(scan_tasks, 1), 1)
-
-        t0 = time.perf_counter()
-        n_rows = profiles.count()
-        decode_sec = time.perf_counter() - t0
-        out["profile_rows"] = n_rows
-        out["read_decode_sec"] = round(decode_sec, 3)
-        out["decode_rows_per_sec"] = round(n_rows / decode_sec)
-        out["decode_files_per_sec"] = round(n_files / decode_sec)
-
-        # daily job over ALL radar-days (full backfill shape)
-        days = [
-            (r["radar"], r["date"])
-            for r in read_vp_files(spark, glob)
-            .select("radar", F.date_format("ts", "yyyyMMdd").alias("date"))
-            .distinct()
-            .collect()
-        ]
-        daily_dir = os.path.join(tmp, "daily")
-        t0 = time.perf_counter()
-        daily_vpts_job(
-            spark, read_vp_files(spark, glob), days, daily_dir
-        )
-        out["daily_job_sec"] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        monthly_vpts_job(daily_dir, os.path.join(tmp, "monthly"))
-        out["monthly_job_sec"] = round(time.perf_counter() - t0, 3)
-        out["e2e_files_per_sec"] = round(
-            n_files
-            / (decode_sec + out["daily_job_sec"] + out["monthly_job_sec"])
-        )
-
-        # streaming face of S1: the same fleet through the Spark-4
-        # Python DataSource (readStream.format('odim'), availableNow) —
-        # measures the incremental-ingest path the cron pipeline uses,
-        # checkpointed file-watermark offsets included
-        from vptstools_spark.sources.odim_datasource import OdimDataSource
-
-        try:
-            spark.dataSource.register(OdimDataSource)
-        except Exception:
-            pass  # already registered in this session
-        s_out = os.path.join(tmp, "s_out")
-        t0 = time.perf_counter()
-        qs = (
-            spark.readStream.format("odim")
-            .load(ODIM_DIR)
-            .writeStream.format("parquet")
-            .option("path", s_out)
-            .option("checkpointLocation", os.path.join(tmp, "s_ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        qs.awaitTermination()
-        s_sec = time.perf_counter() - t0
-        out["stream_ingest_sec"] = round(s_sec, 3)
-        out["stream_files_per_sec"] = round(n_files / s_sec)
-        out["stream_rows"] = spark.read.parquet(s_out).count()
-    except Exception as e:  # visible failure, never silent
-        out["error"] = str(e)[:200]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
 def _cold_builds(spark, sf_dir: str) -> dict:
     """Cold one-time-build tier (VERDICT r8 #5, no-silent-caps): the
     memoized fixtures (_BPE_CACHE, _TIX_CACHE, _ILSH_CACHE, _TT_CACHE)
@@ -762,7 +658,7 @@ def main() -> None:
     tiers = set(
         os.environ.get(
             "SPARK_GRAFT_BENCH_TIERS",
-            "headline,zipf,sf1,sf1lake,sf1scale,sweep,sweep01,calibration,odim,cold,correctness",
+            "headline,zipf,sf1,sf1lake,sf1scale,sweep,sweep01,calibration,cold,correctness",
         ).split(",")
     )
     spark = get_spark("vptstools_spark_bench")
@@ -910,12 +806,6 @@ def main() -> None:
                 if base and base > 0 and t > 0:
                     sf1_scale_ratio[name] = round(t / base, 2)
 
-    # tier 1e: ODIM-ingest — the reference's actual headline pipeline
-    # (many small HDF5 files → daily/monthly VPTS CSV), VERDICT r7 #1
-    odim_ingest: dict = {}
-    if "odim" in tiers:
-        odim_ingest = _odim_ingest(spark)
-
     # tier 1f: cold one-time builds (VERDICT r8 #5 — measure what the
     # memo caches hide; throwaway dirs, caches untouched)
     cold_builds: dict = {}
@@ -1045,7 +935,6 @@ def main() -> None:
         "sf1_lakehouse": sf1_lake,
         "sf1_scale_lowcore": sf1_scale,
         "sf1_scale_low_cpus": SF1_SCALE_LOW_CPUS,
-        "odim_ingest": odim_ingest,
         "cold_builds": cold_builds,
         "calibration": calibration,
         "correctness_full": correctness_full,
@@ -1074,7 +963,7 @@ def main() -> None:
     print(json.dumps(sweep_line))
     sweep01_line = {"metric": "sweep_sf01_nonheadline", "sf": 0.1, "queries": sweep01}
     print(json.dumps(sweep01_line))
-    if tiers >= {"headline", "zipf", "sf1", "sf1lake", "sf1scale", "sweep", "sweep01", "calibration", "odim", "cold", "correctness"}:
+    if tiers >= {"headline", "zipf", "sf1", "sf1lake", "sf1scale", "sweep", "sweep01", "calibration", "cold", "correctness"}:
         # archive only COMPLETE runs — a tier-filtered local iteration must
         # not clobber the round's committed record
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json"), "w") as fh:

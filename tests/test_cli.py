@@ -169,10 +169,11 @@ def test_streaming_available_now_matches_batch_cli_daily(
     byte-identical daily artifacts (reference behavior: repeated scheduled
     runs of bin/vph5_to_vpts.py:121-144 are equivalent to one catch-up run).
 
-    Batch side: `run()` in inventory mode writes the hive-partitioned daily
-    store. Streaming side: `spark.readStream.format("odim")` over the same
-    radar-day directory → `incremental_vpts_sink` (availableNow). Both
-    partition part files are filecmp-equal and equal the reference golden."""
+    Batch side: `run()` in inventory mode publishes the daily file.
+    Streaming side: `spark.readStream.format("odim")` over the same
+    radar-day directory → `incremental_vpts_sink` (availableNow) writes a
+    hive-partitioned store. The published file and the store's part file
+    are filecmp-equal and equal the reference golden."""
     import filecmp
     import glob as _glob
 
@@ -189,14 +190,8 @@ def test_streaming_available_now_matches_batch_cli_daily(
         spark=spark,
     )
     assert res["daily"] == 1
-    [batch_part] = _glob.glob(
-        os.path.join(
-            inventory_env["dest"],
-            "_daily_store",
-            "p_radar=nosta",
-            "p_date=20230311",
-            "*.csv",
-        )
+    batch_part = os.path.join(
+        inventory_env["dest"], "baltrad", "daily", "nosta", "2023", "nosta_vpts_20230311.csv"
     )
 
     spark.dataSource.register(OdimDataSource)

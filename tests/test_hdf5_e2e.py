@@ -72,14 +72,12 @@ def test_daily_csv_byte_equals_reference_golden(spark, tmp_path):
 
 def test_monthly_gz_content_equals_reference_golden(spark, tmp_path):
     profiles = read_vp_files(spark, f"{VP_DIR}/*.h5")
-    days = [("nosta", "20230311")]
-    daily, monthly = str(tmp_path / "daily"), str(tmp_path / "monthly")
-    daily_vpts_job(spark, profiles, days, daily)
-    monthly_vpts_job(daily, monthly)
-    parts = glob.glob(f"{monthly}/p_radar=nosta/p_month=202303/*.csv.gz")
-    assert len(parts) == 1
+    day_dirs = ["baltrad/hdf5/nosta/2023/03/11"]
+    assert daily_vpts_job(spark, profiles, day_dirs, str(tmp_path)) == 1
+    assert monthly_vpts_job(str(tmp_path), day_dirs) == 1
+    monthly = tmp_path / "baltrad" / "monthly" / "nosta" / "2023" / "nosta_vpts_202303.csv.gz"
     # gzip container bytes differ (mtime/os); the decompressed CSV must not
-    assert gzip.open(parts[0], "rb").read() == gzip.open(GOLDEN_MONTHLY, "rb").read()
+    assert gzip.open(monthly, "rb").read() == gzip.open(GOLDEN_MONTHLY, "rb").read()
 
 
 @pytest.mark.skipif(
@@ -116,12 +114,13 @@ def test_h5py_path_row_identical_to_pure_reader(monkeypatch):
 
 
 def test_streaming_sink_matches_batch_daily_artifacts(spark, tmp_path):
-    """Cron-batch (daily_vpts_job) and Structured Streaming AvailableNow
-    (stream_profiles → incremental_vpts_sink) must produce BYTE-IDENTICAL
-    daily artifacts from the same profiles — the reference's repeated CLI
-    runs (bin/vph5_to_vpts.py:121-144) expressed both ways. Also proves the
-    golden file itself and that a second AvailableNow run with the same
-    checkpoint is a no-op (exactly-once by idempotence + no new files)."""
+    """Cron-batch (daily_vpts_job's published file) and Structured Streaming
+    AvailableNow (stream_profiles → incremental_vpts_sink's hive store) must
+    produce BYTE-IDENTICAL daily artifacts from the same profiles — the
+    reference's repeated CLI runs (bin/vph5_to_vpts.py:121-144) expressed
+    both ways. Also proves the golden file itself and that a second
+    AvailableNow run with the same checkpoint is a no-op (exactly-once by
+    idempotence + no new files)."""
     import filecmp
 
     from vptstools_spark.operators.pipeline import daily_vpts_job
@@ -132,9 +131,8 @@ def test_streaming_sink_matches_batch_daily_artifacts(spark, tmp_path):
 
     profiles = read_vp_files(spark, f"{VP_DIR}/*.h5")
 
-    batch_store = str(tmp_path / "batch")
-    days = [("nosta", "20230311")]
-    daily_vpts_job(spark, profiles, days, batch_store)
+    batch_dest = str(tmp_path / "batch")
+    daily_vpts_job(spark, profiles, ["baltrad/hdf5/nosta/2023/03/11"], batch_dest)
 
     landing = str(tmp_path / "landing")
     profiles.write.parquet(landing)
@@ -143,11 +141,10 @@ def test_streaming_sink_matches_batch_daily_artifacts(spark, tmp_path):
     q = incremental_vpts_sink(stream_profiles(spark, landing), stream_store, ckpt)
     q.awaitTermination()
 
-    rel = "p_radar=nosta/p_date=20230311"
-    b = sorted(glob.glob(f"{batch_store}/{rel}/*.csv"))
-    s = sorted(glob.glob(f"{stream_store}/{rel}/*.csv"))
-    assert len(b) == 1 and len(s) == 1
-    assert filecmp.cmp(b[0], s[0], shallow=False), "batch vs streaming bytes differ"
+    batch = f"{batch_dest}/baltrad/daily/nosta/2023/nosta_vpts_20230311.csv"
+    s = sorted(glob.glob(f"{stream_store}/p_radar=nosta/p_date=20230311/*.csv"))
+    assert len(s) == 1
+    assert filecmp.cmp(batch, s[0], shallow=False), "batch vs streaming bytes differ"
     assert filecmp.cmp(s[0], GOLDEN_DAILY, shallow=False), "streaming vs golden"
 
     before = {

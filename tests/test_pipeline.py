@@ -9,7 +9,7 @@ import time
 
 import pytest
 
-from tests.conftest import make_profile_record
+from tests.conftest import make_profile_record, odim_fleet
 from vptstools_spark.operators.inventory import days_to_create_vpts, parse_inventory
 from vptstools_spark.operators.pipeline import (
     daily_vpts_job,
@@ -109,20 +109,13 @@ def pipeline_output(spark, tmp_path_factory):
     inventory = spark.createDataFrame(
         inv_rows, "repo string, file string, size long, modified timestamp"
     )
-    # inventory → affected radar-days → daily overwrite → monthly join
+    # inventory → affected radar-days → daily files → monthly join
     days = days_to_create_vpts(
         parse_inventory(inventory), 2, now=datetime.datetime(2023, 3, 13, 0, 0)
     )
-    # directory = source/file_type/radar/yyyy/mm/dd
-    keys = [r["directory"].split("/")[2:] for r in days.select("directory").collect()]
-    daily_vpts_job(
-        spark, profiles, [(radar, y + m + d) for radar, y, m, d in keys],
-        os.path.join(root, "daily"),
-    )
-    monthly_vpts_job(
-        os.path.join(root, "daily"), os.path.join(root, "monthly"),
-        sorted({(radar, y + m) for radar, y, m, _d in keys}),
-    )
+    day_dirs = [r["directory"] for r in days.select("directory").collect()]
+    assert daily_vpts_job(spark, profiles, day_dirs, root) == 2
+    assert monthly_vpts_job(root, day_dirs) == 1
     write_descriptor(root)
     return root, days
 
@@ -138,17 +131,19 @@ def test_incremental_selects_recent_days(pipeline_output):
 
 def test_daily_partitions_written(pipeline_output):
     root, _ = pipeline_output
-    parts = sorted(
-        os.path.relpath(p, os.path.join(root, "daily"))
-        for p in glob.glob(os.path.join(root, "daily", "p_radar=*", "p_date=*"))
+    files = sorted(
+        os.path.relpath(p, root) for p in glob.glob(os.path.join(root, "*", "daily", "*", "*", "*"))
     )
-    assert parts == ["p_radar=nosta/p_date=20230311", "p_radar=nosta/p_date=20230312"]
+    assert files == [
+        "baltrad/daily/nosta/2023/nosta_vpts_20230311.csv",
+        "baltrad/daily/nosta/2023/nosta_vpts_20230312.csv",
+    ]
 
 
 def test_daily_csv_content_sorted(pipeline_output, spark):
     root, _ = pipeline_output
-    files = glob.glob(os.path.join(root, "daily", "p_radar=nosta", "p_date=20230311", "*.csv"))
-    lines = [ln for f in files for ln in open(f).read().splitlines()[1:]]
+    daily = os.path.join(root, "baltrad", "daily", "nosta", "2023", "nosta_vpts_20230311.csv")
+    lines = open(daily).read().splitlines()[1:]
     assert len(lines) == 2
     assert lines[0].split(",")[1] < lines[1].split(",")[1]  # datetime ascending
     assert lines[0].split(",")[3] == "1.25"  # u value rendered
@@ -156,8 +151,8 @@ def test_daily_csv_content_sorted(pipeline_output, spark):
 
 def test_monthly_gzip_written(pipeline_output):
     root, _ = pipeline_output
-    gz = glob.glob(os.path.join(root, "monthly", "p_radar=nosta", "p_month=202303", "*.csv.gz"))
-    assert gz
+    gz = glob.glob(os.path.join(root, "*", "monthly", "*", "*", "*"))
+    assert [os.path.relpath(p, root) for p in gz] == ["baltrad/monthly/nosta/2023/nosta_vpts_202303.csv.gz"]
     text = gzip.open(gz[0], "rt").read()
     assert text.count("\n") == 4  # header + 3 rows (both days of the month)
 
@@ -165,7 +160,7 @@ def test_monthly_gzip_written(pipeline_output):
 def test_string_preserving_reread(pipeline_output, spark):
     # tri-state text must survive write→read (SURVEY §7.4.2)
     root, _ = pipeline_output
-    df = read_daily_csv_string_preserving(spark, os.path.join(root, "daily"))
+    df = read_daily_csv_string_preserving(spark, glob.glob(os.path.join(root, "baltrad", "daily", "*", "*", "*.csv")))
     rows = df.collect()
     assert all(r["v"] == "" for r in rows)  # nodata stays empty string, not NULL
     assert {r["u"] for r in rows} == {"1.25"}
@@ -179,39 +174,31 @@ def test_descriptor_written(pipeline_output):
 def test_odim_fleet_small_file_packing_and_e2e(spark, tmp_path):
     """The S1 100 TB design claim, measured mechanically (VERDICT r7 #1):
     binaryFile + files.maxPartitionBytes packs MANY small .h5 files per
-    task (tasks << files), and the synthesized fleet flows end-to-end
-    through read_vp_files → daily_vpts_job with the expected row and
-    partition counts."""
-    import glob as _glob
-
-    from pyspark.sql import functions as F
-
-    from tools.gen_odim import main as gen_odim
+    task (tasks << files), and a seeded fleet (2 radars x 1 day x 24 files)
+    flows end-to-end through read_vp_files → daily_vpts_job with the
+    expected row and file counts."""
     from vptstools_spark.sources.odim import read_vp_files
 
     fleet = str(tmp_path / "fleet")
-    n_files = gen_odim(fleet, n_radars=2, n_days=1, per_day=24)
+    oracle = odim_fleet.write_fleet(
+        fleet, seed=3, n_radars=2, days=[datetime.date(2023, 3, 11)], per_day=24
+    )
+    n_files = oracle["files"]
     assert n_files == 48
-    pat = os.path.join(fleet, "*", "*", "*", "*")
+    day_dirs = sorted(oracle["days"])
+    pat = [os.path.join(fleet, d) for d in day_dirs]
     profiles = read_vp_files(spark, pat)
     tasks = profiles.rdd.getNumPartitions()
     assert 0 < tasks < n_files, f"no packing: {tasks} tasks for {n_files} files"
     assert profiles.count() == 48 * 25  # 25 altitude levels per VP file
 
-    # distinct patched identities survived the byte patch
+    # every radar of the fleet survived the decode
     radars = {r["radar"] for r in profiles.select("radar").distinct().collect()}
-    assert radars == {"syaaa", "sybbb"}
+    assert radars == {d.split("/")[2] for d in day_dirs} and len(radars) == 2
 
-    days = [
-        (r["radar"], r["date"])
-        for r in profiles.select(
-            "radar", F.date_format("ts", "yyyyMMdd").alias("date")
-        ).distinct().collect()
-    ]
-    out = str(tmp_path / "daily")
-    daily_vpts_job(spark, read_vp_files(spark, pat), days, out)
-    parts = _glob.glob(os.path.join(out, "p_radar=*", "p_date=*"))
-    assert len(parts) == 2  # 2 radars × 1 day
-    csvs = _glob.glob(os.path.join(out, "p_radar=syaaa", "p_date=*", "*.csv"))
+    out = str(tmp_path / "out")
+    assert daily_vpts_job(spark, read_vp_files(spark, pat), day_dirs, out) == 2  # 2 radars × 1 day
+    csvs = glob.glob(os.path.join(out, "baltrad", "daily", "*", "2023", "*.csv"))
+    assert len(csvs) == 2
     n_lines = sum(open(c).read().count("\n") for c in csvs)
-    assert n_lines == 24 * 25 + len(csvs)  # rows + one header per file
+    assert n_lines == 48 * 25 + len(csvs)  # rows + one header per file

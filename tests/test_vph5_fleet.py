@@ -9,6 +9,7 @@ import glob
 import gzip
 import json
 import os
+import shutil
 
 import pytest
 
@@ -89,6 +90,7 @@ def test_path_folder_run_matches_oracle_in_two_jobs(spark, fleet, tmp_path):
     assert sorted(result["days"]) == sorted(oracle["days"])
     assert (result["daily"], result["monthly"]) == (6, 4)
     _expect(dest, oracle, list(oracle["days"]))
+    assert sorted(os.listdir(dest)) == ["baltrad", "vpts.resource.json"]
     # daily 2 (decode/render stage + write); the day list is grouped on the
     # driver and the monthly join is local, so neither starts a job; no
     # file-listing job and no distinct/broadcast of the day list
@@ -102,11 +104,8 @@ def test_manifest_run_recomputes_window_days_and_coverage(spark, fleet, tmp_path
     h5_root, oracle = fleet
     dest = str(tmp_path / "dest")
     run(path_folder="baltrad", h5_root=h5_root, destination=dest, spark=spark)
-    march = _snapshot(
-        os.path.join(dest, "baltrad", "monthly", "*", "2023", "*_202303.csv.gz"),
-        os.path.join(dest, "_monthly_store", "*", "p_month=202303", "*"),
-    )
-    assert len(march) == 4  # per radar: the published file and the store's part
+    march = _snapshot(os.path.join(dest, "baltrad", "monthly", "*", "2023", "*_202303.csv.gz"))
+    assert len(march) == 2  # one per radar
 
     inv = tmp_path / "inventory"
     inv.mkdir()
@@ -143,12 +142,14 @@ def test_manifest_run_recomputes_window_days_and_coverage(spark, fleet, tmp_path
     assert jobs <= 6, f"{jobs} Spark jobs"
     # the untouched month is neither re-joined nor republished
     _assert_unchanged(march)
+    # the reference's layout and nothing else: no store, no staging directory
+    assert sorted(os.listdir(dest)) == ["baltrad", "coverage.csv", "vpts.resource.json"]
 
 
 def test_rerun_of_a_months_earlier_day_keeps_date_order(spark, fleet, tmp_path):
     """Recomputing only the first day of a two-day month rewrites that
-    day's daily partition last; the monthly file still lists the days in
-    date order, as the oracle does."""
+    day's daily file last; the monthly file still lists the days in date
+    order, as the oracle does."""
     h5_root, oracle = fleet
     dest = str(tmp_path / "dest")
     run(path_folder="baltrad", h5_root=h5_root, destination=dest, spark=spark)
@@ -156,9 +157,9 @@ def test_rerun_of_a_months_earlier_day_keeps_date_order(spark, fleet, tmp_path):
     result = run(path_folder=first, h5_root=h5_root, destination=dest, spark=spark)
     assert result["days"] == [first] and (result["daily"], result["monthly"]) == (1, 1)
     radar = first.split("/")[2]
-    store = os.path.join(dest, "_daily_store", f"p_radar={radar}")
+    daily = os.path.join(dest, "baltrad", "daily", radar, "2023")
     written = {
-        day: os.stat(glob.glob(os.path.join(store, f"p_date={day}", "*.csv"))[0]).st_mtime_ns
+        day: os.stat(os.path.join(daily, f"{radar}_vpts_{day}.csv")).st_mtime_ns
         for day in ("20230330", "20230331")
     }
     assert written["20230330"] > written["20230331"]
@@ -167,8 +168,8 @@ def test_rerun_of_a_months_earlier_day_keeps_date_order(spark, fleet, tmp_path):
 
 def test_rerun_of_one_radars_day_leaves_other_radars_month(spark, fleet, tmp_path):
     """Recomputing one radar's day re-joins that radar's month only: the
-    other radar's part file for the same month in the monthly store and its
-    published monthly file keep their mtime and bytes."""
+    other radar's published monthly file for the same month keeps its mtime
+    and bytes."""
     h5_root, oracle = fleet
     dest = str(tmp_path / "dest")
     run(path_folder="baltrad", h5_root=h5_root, destination=dest, spark=spark)
@@ -178,10 +179,9 @@ def test_rerun_of_one_radars_day_leaves_other_radars_month(spark, fleet, tmp_pat
     assert len(others) == 1
     other = others[0]
     kept = _snapshot(
-        os.path.join(dest, "baltrad", "monthly", other, "2023", f"{other}_vpts_202303.csv.gz"),
-        os.path.join(dest, "_monthly_store", f"p_radar={other}", "p_month=202303", "*"),
+        os.path.join(dest, "baltrad", "monthly", other, "2023", f"{other}_vpts_202303.csv.gz")
     )
-    assert len(kept) == 2
+    assert len(kept) == 1
 
     result = run(path_folder=first, h5_root=h5_root, destination=dest, spark=spark)
     assert result["days"] == [first] and (result["daily"], result["monthly"]) == (1, 1)
@@ -193,8 +193,6 @@ def test_path_folder_run_rejects_misnamed_file(spark, fleet, tmp_path):
     """A backfill applies the manifest path's filename policy: an .h5 file
     whose name does not parse fails the run, naming the file, instead of
     becoming a radar-day with empty keys that publishes ``_vpts_`` files."""
-    import shutil
-
     h5_root, oracle = fleet
     day = sorted(oracle["days"])[0]
     root = str(tmp_path / "h5")
@@ -207,23 +205,77 @@ def test_path_folder_run_rejects_misnamed_file(spark, fleet, tmp_path):
     assert not glob.glob(os.path.join(dest, "**", "*_vpts_*"), recursive=True)
 
 
-def _daily_part(store: str, day: str, name: str, text: str) -> None:
-    os.makedirs(os.path.join(store, "p_radar=abcde", f"p_date={day}"), exist_ok=True)
-    with open(os.path.join(store, "p_radar=abcde", f"p_date={day}", name), "w") as fh:
-        fh.write(text)
+def test_sources_sharing_a_radar_day_keep_their_own_months(spark, fleet, tmp_path):
+    """One radar's 2023-03-30 exists under both ``baltrad/`` and ``uva/``.
+    After backfills of baltrad, then uva, then baltrad's 03-31 alone, each
+    source's monthly file joins that source's daily files only, as the
+    reference's per-source layout does."""
+    h5_root, oracle = fleet
+    root = str(tmp_path / "h5")
+    shutil.copytree(os.path.join(h5_root, "baltrad"), os.path.join(root, "baltrad"))
+    uva = odim_fleet.write_fleet(
+        root, seed=7, n_radars=1, days=DAYS[:1], per_day=PER_DAY - 1, source="uva"
+    )
+    [uva_day] = uva["days"]
+    radar = uva_day.split("/")[2]
+    assert f"baltrad/hdf5/{radar}/2023/03/30" in oracle["days"]
+    dest = str(tmp_path / "dest")
+    later = f"baltrad/hdf5/{radar}/2023/03/31"
+    for folder in ("baltrad", "uva", later):
+        run(path_folder=folder, h5_root=root, destination=dest, spark=spark)
+    _expect(dest, oracle, [later])
+    _expect(dest, uva, [uva_day])
 
 
-def test_monthly_join_rejects_split_partitions_and_header_mismatch(tmp_path):
-    header = odim_fleet.CSV_HEADER + "\n"
-    split = str(tmp_path / "split")
-    _daily_part(split, "20230301", "part-00000-a.c000.csv", header)
-    _daily_part(split, "20230301", "part-00001-b.c000.csv", header)
+def test_backfill_ignores_session_file_limits(spark, fleet, tmp_path):
+    """The daily write pins its own overwrite mode and file-size limit:
+    under a session that caps output files at 10 records, a backfill still
+    publishes whole radar-days, and the session settings stay as set."""
+    h5_root, oracle = fleet
+    dest = str(tmp_path / "dest")
+    settings = {
+        "spark.sql.files.maxRecordsPerFile": "10",
+        "spark.sql.sources.partitionOverwriteMode": "static",
+    }
+    saved = {key: spark.conf.get(key) for key in settings}
+    for key, value in settings.items():
+        spark.conf.set(key, value)
+    try:
+        run(path_folder="baltrad", h5_root=h5_root, destination=dest, spark=spark)
+        assert {key: spark.conf.get(key) for key in settings} == settings
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
+    _expect(dest, oracle, list(oracle["days"]))
+
+
+def test_publish_rejects_split_partitions_and_header_mismatch(spark, fleet, tmp_path, monkeypatch):
+    """A radar-day written as two part files fails the daily phase before
+    any file is published, and daily files with differing headers fail the
+    monthly join before any monthly file is written."""
+    from vptstools_spark.operators import pipeline
+
+    h5_root, oracle = fleet
+    write = pipeline.write_daily_store
+
+    def split_write(table, path):
+        write(table, path)
+        for part in glob.glob(os.path.join(path, "*", "*", "*.csv")):
+            shutil.copyfile(part, part.removesuffix(".csv") + "-b.csv")
+
+    monkeypatch.setattr(pipeline, "write_daily_store", split_write)
+    dest = str(tmp_path / "split")
     with pytest.raises(ValueError, match="2 part files"):
-        monthly_vpts_job(split, str(tmp_path / "out"))
+        run(path_folder=sorted(oracle["days"])[0], h5_root=h5_root, destination=dest, spark=spark)
+    assert os.listdir(dest) == []  # nothing published, staging removed
 
+    header = odim_fleet.CSV_HEADER + "\n"
     mixed = str(tmp_path / "mixed")
-    _daily_part(mixed, "20230301", "part-00000.csv", header)
-    _daily_part(mixed, "20230302", "part-00000.csv", "radar,datetime\n")
+    daily = os.path.join(mixed, "baltrad", "daily", "abcde", "2023")
+    os.makedirs(daily)
+    for day, text in (("20230301", header), ("20230302", "radar,datetime\n")):
+        with open(os.path.join(daily, f"abcde_vpts_{day}.csv"), "w") as fh:
+            fh.write(text)
     with pytest.raises(ValueError, match="header differs"):
-        monthly_vpts_job(mixed, str(tmp_path / "out"))
-    assert not os.path.exists(tmp_path / "out")  # checked before any write
+        monthly_vpts_job(mixed, ["baltrad/hdf5/abcde/2023/03/02"])
+    assert sorted(os.listdir(os.path.join(mixed, "baltrad"))) == ["daily"]  # checked before any write

@@ -10,19 +10,21 @@ aggregate in the first mode; in the second, the driver groups its own glob
 listing with the filename grammar (``functions/paths.radar_day_directory``)
 and starts no job for it. Where the reference loops radar-days on the driver
 (download → pandas convert → upload per day), this CLI runs ONE Spark plan
-for the daily phase: binaryFile scan of the affected day directories → daily
-partition-overwrite write, restricted to the driver's radar-day list by a
-literal predicate. The monthly phase starts no Spark job: it joins each
-affected radar-month's daily files in date order under one header into a
-gzip CSV. The run then publishes the partition files under the reference's
-S3-style names (``{source}/daily/{radar}/{yyyy}/{radar}_vpts_{yyyymmdd}.csv``
-and ``{source}/monthly/{radar}/{yyyy}/{radar}_vpts_{yyyymm}.csv.gz``,
-reference: src/vptstools/s3.py:133-153).
+for the daily phase: binaryFile scan of the affected day directories →
+daily VPTS write, restricted to the driver's radar-day list by a literal
+predicate. The monthly phase starts no Spark job: it joins each affected
+radar-month's published daily files in date order under one header into a
+gzip CSV. Both phases (``operators/pipeline.py``, which owns the layout)
+publish straight into the reference's S3-style names
+(``{source}/daily/{radar}/{yyyy}/{radar}_vpts_{yyyymmdd}.csv`` and
+``{source}/monthly/{radar}/{yyyy}/{radar}_vpts_{yyyymm}.csv.gz``,
+reference: src/vptstools/s3.py:133-153) with an atomic ``os.replace``; the
+destination holds nothing else but ``coverage.csv`` and the descriptor.
 
 Storage roots come from environment variables (the reference reads bucket
 names the same way). Spark reads the inventory and the HDF5 files, so any
 Hadoop-supported URI works for those. The destination must be a local
-directory, since the monthly join and the publish step use local file I/O
+directory, since both phases publish with local file I/O
 (``--path-folder`` also lists the HDF5 tree locally):
 
 - ``VPTS_MANIFEST``: inventory manifest JSON (reference ``INVENTORY_BUCKET``)
@@ -37,7 +39,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 import click
 
@@ -51,16 +52,6 @@ from vptstools_spark.operators.pipeline import (
 )
 from vptstools_spark.operators.vpts import vpts_to_csv
 from vptstools_spark.session import get_spark
-
-
-def _publish(partition_glob: str, target: str) -> bool:
-    """Copy the single partition part-file to its reference-named location."""
-    parts = sorted(glob.glob(partition_glob))
-    if not parts:
-        return False
-    os.makedirs(os.path.dirname(target), exist_ok=True)
-    shutil.copyfile(parts[0], target)
-    return True
 
 
 def run(
@@ -141,51 +132,11 @@ def run(
     # glob to one path per file and lists more than 32 paths with a parallel
     # job of one task each; read_vp_files' pathGlobFilter keeps the .h5 files
     profiles = read_vp_files(spark, [os.path.join(h5_root, d) for d in day_dirs])
-    # directory = source/file_type/radar/yyyy/mm/dd
-    keys = []
-    for d in day_dirs:
-        source, _ftype, radar, yyyy, mm, dd = d.split("/")
-        keys.append((source, radar, yyyy, mm, dd, f"{yyyy}{mm}{dd}"))
-    daily_store = os.path.join(destination, "_daily_store")
-    monthly_store = os.path.join(destination, "_monthly_store")
-    daily_vpts_job(spark, profiles, [(k[1], k[5]) for k in keys], daily_store)
-
-    n_daily = 0
-    for source, radar, yyyy, mm, dd, ymd in keys:
-        target = os.path.join(
-            destination, source, "daily", radar, yyyy, f"{radar}_vpts_{ymd}.csv"
-        )
-        click.echo(f"Create daily VPTS file {os.path.relpath(target, destination)}.")
-        if _publish(
-            os.path.join(daily_store, f"p_radar={radar}", f"p_date={ymd}", "*.csv"),
-            target,
-        ):
-            n_daily += 1
+    n_daily = daily_vpts_job(spark, profiles, day_dirs, destination)
     click.echo("Finished creating daily VPTS files.")
 
-    months = sorted({(s, r, y, m) for s, r, y, m, _d, _ymd in keys})
-    click.echo(f"Create {len(months)} monthly VPTS files.")
-    monthly_vpts_job(daily_store, monthly_store, [(r, f"{y}{m}") for _s, r, y, m in months])
-    n_monthly = 0
-    for source, radar, yyyy, mm in months:
-        target = os.path.join(
-            destination,
-            source,
-            "monthly",
-            radar,
-            yyyy,
-            f"{radar}_vpts_{yyyy}{mm}.csv.gz",
-        )
-        click.echo(
-            f"Create monthly VPTS file {os.path.relpath(target, destination)}."
-        )
-        if _publish(
-            os.path.join(
-                monthly_store, f"p_radar={radar}", f"p_month={yyyy}{mm}", "*.csv.gz"
-            ),
-            target,
-        ):
-            n_monthly += 1
+    n_monthly = monthly_vpts_job(destination, day_dirs)
+    click.echo(f"Create {n_monthly} monthly VPTS files.")
     click.echo("Finished creating monthly VPTS files.")
 
     write_descriptor(destination)

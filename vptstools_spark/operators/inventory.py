@@ -102,8 +102,8 @@ def days_to_create_vpts(df_parsed: DataFrame, days: int, now=None) -> DataFrame:
     """Radar-days needing (re)derivation A3 (reference: src/vptstools/s3.py:368-382):
     group-count of the window-filtered subset. This is the incremental
     partition-selection input: it is radar-days-sized, so callers collect
-    it and hand the day list to ``pipeline.daily_vpts_job`` as a literal
-    predicate."""
+    its ``directory`` values and hand them to ``pipeline.daily_vpts_job``
+    and ``pipeline.monthly_vpts_job``."""
     return coverage(modified_window(df_parsed, days, now))
 
 

@@ -1,15 +1,19 @@
 """Incremental daily/monthly VPTS pipeline — the engine form of the
-reference's `vph5_to_vpts` CLI (src/vptstools/bin/vph5_to_vpts.py:59-251).
+reference's `vph5_to_vpts` CLI (src/vptstools/bin/vph5_to_vpts.py:59-251),
+and the one module that knows the published layout
+(``{source}/daily/{radar}/{yyyy}/{radar}_vpts_{yyyymmdd}.csv`` and
+``{source}/monthly/{radar}/{yyyy}/{radar}_vpts_{yyyymm}.csv.gz``, reference
+s3.py:133-153).
 
 Reference shape: inventory → modified radar-days → per-day download+convert →
 daily CSV → per-month concat → monthly gzip CSV. Spark shape: the inventory
 and daily phases are declarative Spark jobs; the monthly phase is the
-reference's ordered concat, a local-file join of each radar-month's daily
-files in date order (no Spark job). Both write with *partition-granularity
-idempotence* (SURVEY §2.8): a radar-day or radar-month is always recomputed
-whole and replaced (`partitionOverwriteMode=dynamic` for the daily store, an
-`os.replace` for the monthly one), which makes re-runs and late-arriving
-files exactly-once-by-idempotence — no row-level upsert state.
+reference's ordered concat, a local-file join of each source's radar-month
+daily files in date order (no Spark job). The published tree is the only
+store, and both phases write with *partition-granularity idempotence*
+(SURVEY §2.8): a radar-day or radar-month is always recomputed whole and
+``os.replace``d onto its published name, which makes re-runs and
+late-arriving files exactly-once-by-idempotence — no row-level upsert state.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ import gzip
 import json
 import os
 import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -65,32 +70,73 @@ def radar_day_filter(days: list[tuple[str, str]]) -> Column:
 def daily_vpts_job(
     spark: SparkSession,
     profiles: DataFrame,
-    days: list[tuple[str, str]],
-    output_path: str,
+    day_dirs: list[str],
+    destination: str,
     vpts_csv_version: str = "v1.0",
-) -> None:
-    """Daily phase (reference bin/vph5_to_vpts.py:153-202): restrict profiles
-    to the affected radar-days, project to VPTS, write hive-partitioned by
-    (radar, date) with dynamic partition overwrite.
+) -> int:
+    """Daily phase (reference bin/vph5_to_vpts.py:153-202): render the
+    profiles of the radar-days in ``day_dirs``
+    (``source/file_type/radar/yyyy/mm/dd``) to VPTS in ONE plan and publish
+    one CSV per radar-day at
+    ``{source}/daily/{radar}/{yyyy}/{radar}_vpts_{yyyymmdd}.csv`` under
+    ``destination``. Returns how many files it published; a radar-day
+    without rows publishes none.
 
-    ``days`` is the driver's ``(radar, yyyymmdd)`` work list. Rows whose
-    content radar or date falls outside it are dropped by one literal
-    predicate (``radar_day_filter``, which starts no Spark job), so dynamic
-    overwrite can never replace another day's partition.
+    Rows outside the work list are dropped by one literal predicate
+    (``radar_day_filter``, no Spark job). The plan writes into a staging
+    directory under ``destination``; each radar-day's part file is then
+    ``os.replace``d onto its published name, so a reader never sees a
+    partial file. Raises ValueError, before anything is published, when a
+    radar-day was written as more than one part file."""
+    targets: dict[tuple[str, str], list[str]] = {}
+    for day_dir in day_dirs:
+        source, _ftype, radar, yyyy, mm, dd = day_dir.split("/")
+        targets.setdefault((radar, f"{yyyy}{mm}{dd}"), []).append(
+            os.path.join(destination, source, "daily", radar, yyyy, f"{radar}_vpts_{yyyy}{mm}{dd}.csv")
+        )
+    table = to_vpts_table(profiles.filter(radar_day_filter(list(targets))), vpts_csv_version)
+    os.makedirs(destination, exist_ok=True)
+    staging = tempfile.mkdtemp(prefix="_staging-", dir=destination)
+    try:
+        write_daily_store(table, staging)
+        parts: dict[tuple[str, str], str] = {}
+        for radar, date in targets:
+            partition = os.path.join(staging, f"p_radar={radar}", f"p_date={date}")
+            found = glob.glob(os.path.join(glob.escape(partition), "*.csv"))
+            if len(found) > 1:
+                raise ValueError(f"daily partition {radar}/{date} holds {len(found)} part files, not 1")
+            if found:
+                parts[radar, date] = found[0]
+        # every radar-day is whole before the first file is published
+        for key, part in parts.items():
+            first, *others = targets[key]
+            # one radar-day under two sources in one run: profile rows carry
+            # no source, so each source's file gets the rows of both
+            for target in others:
+                tmp = _beside(target)
+                shutil.copyfile(part, tmp)
+                os.replace(tmp, target)
+            os.makedirs(os.path.dirname(first), exist_ok=True)
+            os.replace(part, first)
+        return sum(len(targets[key]) for key in parts)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
-    Where the reference loops radar-days on the driver (download → fork →
-    convert → upload per day), this is ONE plan over all affected days; Spark
-    schedules per-partition tasks, and only the recomputed partitions are
-    replaced."""
-    table = to_vpts_table(profiles.filter(radar_day_filter(days)), vpts_csv_version)
-    write_daily_store(spark, table, output_path)
+
+def _beside(target: str) -> str:
+    """A hidden temporary name in ``target``'s directory, which it creates:
+    a file written there is ``os.replace``d onto ``target`` atomically."""
+    folder, name = os.path.split(target)
+    os.makedirs(folder, exist_ok=True)
+    return os.path.join(folder, f".{name}.tmp")
 
 
-def write_daily_store(spark: SparkSession, table: DataFrame, output_path: str) -> None:
-    """Write a VPTS table into the daily store: hive-partitioned by
+def write_daily_store(table: DataFrame, output_path: str) -> None:
+    """Write a VPTS table into a daily store: hive-partitioned by
     (radar, yyyymmdd), one sorted CSV per radar-day, with dynamic partition
-    overwrite so only the radar-days present in ``table`` are replaced."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    overwrite so only the radar-days present in ``table`` are replaced. The
+    overwrite mode and the one-file-per-partition limit are options of this
+    write, so session settings cannot change them."""
     # re-derive partition cols from the rendered table (radar + yyyymmdd)
     out = table.withColumn(
         "p_radar", F.col("radar")
@@ -105,6 +151,8 @@ def write_daily_store(spark: SparkSession, table: DataFrame, output_path: str) -
         )
         .write.mode("overwrite")
         .partitionBy("p_radar", "p_date")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("maxRecordsPerFile", 0)
         .option("header", "true")
         .option("emptyValue", "")
         .option("nullValue", "")
@@ -126,60 +174,48 @@ def read_daily_csv_string_preserving(spark: SparkSession, path: str | list[str])
     return df.select(*[F.coalesce(F.col(c), F.lit("")).alias(c) for c in spec.columns])
 
 
-def monthly_vpts_job(
-    daily_path: str, output_path: str, months: list[tuple[str, str]] | None = None
-) -> None:
+def monthly_vpts_job(destination: str, day_dirs: list[str]) -> int:
     """Monthly phase (reference bin/vph5_to_vpts.py:204-250): for each
-    ``(radar, yyyymm)`` pair in ``months`` (every radar-month of the daily
-    store when None), join the radar-month's daily part files in date order
-    under the first file's header into ``p_radar=…/p_month=yyyymm/`` as gzip
-    CSV, replacing that partition whole. Other radars' partitions of the
-    same month are neither read nor rewritten. Starts no Spark job.
+    (source, radar, month) that ``day_dirs`` touch, join that source's
+    published daily files of the radar-month in name order under the first
+    file's header into ``{source}/monthly/{radar}/{yyyy}/{radar}_vpts_{yyyymm}.csv.gz``.
+    Other radars and sources are neither read nor rewritten. Starts no Spark
+    job; returns how many monthly files it published.
 
-    A daily partition is one radar-day written sorted by (radar, datetime,
-    height::int, source_file), and days are disjoint in ``datetime``, so date
-    order of the files is the VPTS sort order; data lines are copied
-    unchanged. Raises ValueError unless each daily partition holds exactly
-    one part file with the same header as the month's first."""
-    headers: dict[tuple[str, str], bytes] = {}
-    by_month: dict[tuple[str, str], list[str]] = {}
-    # list only the selected radar-months' day partitions
-    patterns = (
-        [("*", "")] if months is None
-        else [(glob.escape(radar), glob.escape(month)) for radar, month in set(months)]
-    )
-    day_dirs = [
-        d for radar, month in patterns
-        for d in glob.glob(os.path.join(daily_path, f"p_radar={radar}", f"p_date={month}*"))
-    ]
-    for day_dir in sorted(day_dirs):
-        radar_dir, date_dir = day_dir.split(os.sep)[-2:]
-        month = date_dir.removeprefix("p_date=")[:6]
-        parts = glob.glob(os.path.join(day_dir, "*.csv"))
-        if len(parts) != 1:
-            raise ValueError(f"daily partition {day_dir} holds {len(parts)} part files, not 1")
-        with open(parts[0], "rb") as fh:
-            header = fh.readline()
-        key = (radar_dir, month)
-        if headers.setdefault(key, header) != header:
-            raise ValueError(f"{parts[0]}: header differs from {by_month[key][0]}")
-        by_month.setdefault(key, []).append(parts[0])
-    # every precondition holds before the first partition is replaced
-    for (radar_dir, month), days in by_month.items():
-        out_dir = os.path.join(output_path, radar_dir, f"p_month={month}")
-        os.makedirs(out_dir, exist_ok=True)
-        tmp = os.path.join(out_dir, ".part-00000.csv.gz.tmp")
+    A daily file is one radar-day sorted by (radar, datetime, height::int,
+    source_file), days are disjoint in ``datetime``, and the names end in
+    ``yyyymmdd``, so name order is the VPTS sort order; data lines are
+    copied unchanged. Raises ValueError, before any monthly file is
+    replaced, unless every daily file of a month has the month's first
+    header."""
+    joins: dict[str, list[str]] = {}
+    for day_dir in day_dirs:
+        source, _ftype, radar, yyyy, mm, _dd = day_dir.split("/")
+        target = os.path.join(
+            destination, source, "monthly", radar, yyyy, f"{radar}_vpts_{yyyy}{mm}.csv.gz"
+        )
+        if target not in joins:
+            daily = os.path.join(destination, source, "daily", radar, yyyy, f"{radar}_vpts_{yyyy}{mm}")
+            joins[target] = sorted(glob.glob(glob.escape(daily) + "[0-9][0-9].csv"))
+    headers: dict[str, bytes] = {}
+    for target, days in joins.items():
+        for day in days:
+            with open(day, "rb") as fh:
+                header = fh.readline()
+            if headers.setdefault(target, header) != header:
+                raise ValueError(f"{day}: header differs from {days[0]}")
+    # every precondition holds before the first monthly file is replaced
+    for target, header in headers.items():
+        tmp = _beside(target)
         # mtime=0 and no file name: the same daily files give the same bytes
         with open(tmp, "wb") as raw, gzip.GzipFile("", "wb", 6, raw, mtime=0) as out:
-            out.write(headers[radar_dir, month])
-            for day in days:
+            out.write(header)
+            for day in joins[target]:
                 with open(day, "rb") as src:
                     src.readline()
                     shutil.copyfileobj(src, out)
-        os.replace(tmp, os.path.join(out_dir, "part-00000.csv.gz"))
-        for name in os.listdir(out_dir):
-            if name != "part-00000.csv.gz":
-                os.remove(os.path.join(out_dir, name))
+        os.replace(tmp, target)
+    return len(headers)
 
 
 def write_descriptor(path: str, vpts_csv_version: str = "v1.0") -> str:

@@ -53,7 +53,7 @@ def incremental_vpts_sink(
         # the batch daily job's writer: the two paths produce byte-identical
         # artifacts
         table = to_vpts_table(batch_df, vpts_csv_version)
-        write_daily_store(batch_df.sparkSession, table, output_path)
+        write_daily_store(table, output_path)
 
     return (
         profiles_stream.writeStream.foreachBatch(process)
