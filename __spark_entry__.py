@@ -8,12 +8,13 @@ oracle_sql()   — DuckDB-equivalent SQL per query for the correctness gate.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from vptstools_spark.analytics import all_oracles, all_queries  # noqa: E402
 

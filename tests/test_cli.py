@@ -1,7 +1,8 @@
-"""CLI end-to-end tests (reference: tests/test_vph5_to_vpts.py:20-68 and
-tests/test_transfer_baltrad.py) against local-filesystem renditions of the
+"""``vph5_to_vpts`` CLI end-to-end tests (reference:
+tests/test_vph5_to_vpts.py:20-68) against local-filesystem renditions of the
 reference's mocked S3 buckets, byte-comparing every published artifact with
-the reference goldens."""
+the reference goldens. The CLI tests that need no reference fixture are in
+``test_vph5_fleet.py`` and ``test_transfer.py``."""
 
 import gzip
 import os
@@ -38,17 +39,6 @@ def inventory_env(tmp_path):
         "h5_root": str(h5_root),
         "dest": str(dest),
     }
-
-
-def test_vph5_to_vpts_help():
-    from vptstools_spark.bin.vph5_to_vpts import cli
-
-    result = CliRunner().invoke(cli, ["--help"])
-    assert result.exit_code == 0
-    assert (
-        "Convert and aggregate HDF5 VP files to daily and monthly VPTS CSV files"
-        in result.output
-    )
 
 
 def test_vph5_to_vpts_e2e(spark, inventory_env, monkeypatch):
@@ -119,98 +109,3 @@ def test_vph5_to_vpts_path_folder_mode(spark, inventory_env, monkeypatch):
     assert daily == open(
         os.path.join(GOLDEN_DIR, "nosta_vpts_20230311.csv"), "rb"
     ).read()
-
-
-def test_vph5_to_vpts_path_folder_empty_errors(spark, inventory_env, monkeypatch):
-    from vptstools_spark.bin.vph5_to_vpts import cli
-
-    monkeypatch.setenv("VPTS_H5_ROOT", inventory_env["h5_root"])
-    monkeypatch.setenv("VPTS_DESTINATION", inventory_env["dest"])
-    result = CliRunner().invoke(cli, ["--path-folder", "nothing/here"])
-    assert result.exit_code != 0
-    assert "No h5 files could be found" in result.output
-
-
-def test_transfer_baltrad_local_e2e(tmp_path):
-    """Filename filter + parse + existence anti-join + upload, local
-    connectors (reference: tests/test_transfer_baltrad.py semantics)."""
-    from vptstools_spark.bin.transfer_baltrad import cli
-
-    src = tmp_path / "ftp"
-    dst = tmp_path / "bucket"
-    src.mkdir()
-    dst.mkdir()
-    (src / "fropo_vp_20220809T051000Z_0xb.h5").write_bytes(b"vp-bytes")
-    (src / "fropo_pvol_20220809T051000Z_0xb.h5").write_bytes(b"pvol-bytes")
-    (src / "notes.txt").write_bytes(b"junk")
-    # pre-existing key → skipped by the anti-join
-    existing = dst / "bewid" / "2022" / "08" / "09"
-    existing.mkdir(parents=True)
-    (existing / "bewid_vp_20220809T000000Z_0xb.h5").write_bytes(b"old")
-    (src / "bewid_vp_20220809T000000Z_0xb.h5").write_bytes(b"new")
-
-    result = CliRunner().invoke(cli, ["--source-dir", str(src), "--dest-dir", str(dst)])
-    assert result.exception is None, result.output
-    assert "Transferred 1 files (0 failures)." in result.output
-    assert (
-        dst / "fropo" / "2022" / "08" / "09" / "fropo_vp_20220809T051000Z_0xb.h5"
-    ).read_bytes() == b"vp-bytes"
-    # the existing key kept its original content (skip, not overwrite)
-    assert (existing / "bewid_vp_20220809T000000Z_0xb.h5").read_bytes() == b"old"
-    # idempotent rerun: nothing left to transfer
-    rerun = CliRunner().invoke(cli, ["--source-dir", str(src), "--dest-dir", str(dst)])
-    assert "Transferred 0 files" in rerun.output
-
-
-def test_streaming_available_now_matches_batch_cli_daily(
-    spark, inventory_env, tmp_path
-):
-    """Cron-batch CLI and Trigger.AvailableNow streaming must produce
-    byte-identical daily artifacts (reference behavior: repeated scheduled
-    runs of bin/vph5_to_vpts.py:121-144 are equivalent to one catch-up run).
-
-    Batch side: `run()` in inventory mode publishes the daily file.
-    Streaming side: `spark.readStream.format("odim")` over the same
-    radar-day directory → `incremental_vpts_sink` (availableNow) writes a
-    hive-partitioned store. The published file and the store's part file
-    are filecmp-equal and equal the reference golden."""
-    import filecmp
-    import glob as _glob
-
-    from vptstools_spark.bin.vph5_to_vpts import run
-    from vptstools_spark.sources.odim_datasource import OdimDataSource
-    from vptstools_spark.streaming.incremental import incremental_vpts_sink
-
-    res = run(
-        modified_days_ago=3,
-        manifest=inventory_env["manifest"],
-        h5_root=inventory_env["h5_root"],
-        destination=inventory_env["dest"],
-        now="2023-02-02T00:00:00+00:00",
-        spark=spark,
-    )
-    assert res["daily"] == 1
-    batch_part = os.path.join(
-        inventory_env["dest"], "baltrad", "daily", "nosta", "2023", "nosta_vpts_20230311.csv"
-    )
-
-    spark.dataSource.register(OdimDataSource)
-    day_dir = os.path.join(
-        inventory_env["h5_root"], "baltrad", "hdf5", "nosta", "2023", "03", "11"
-    )
-    out = str(tmp_path / "stream_daily")
-    q = incremental_vpts_sink(
-        spark.readStream.format("odim").load(day_dir),
-        out,
-        checkpoint=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-    [stream_part] = _glob.glob(
-        os.path.join(out, "p_radar=nosta", "p_date=20230311", "*.csv")
-    )
-
-    assert filecmp.cmp(batch_part, stream_part, shallow=False)
-    golden = open(
-        os.path.join(GOLDEN_DIR, "nosta_vpts_20230311.csv"), "rb"
-    ).read()
-    assert open(stream_part, "rb").read() == golden

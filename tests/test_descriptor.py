@@ -54,9 +54,7 @@ def test_parity_catches_type_required_and_missingvalues_drift():
 
 
 def test_validate_vpts_refuses_drifted_descriptor(spark):
-    import sys
-    sys.path.insert(0, "/root/repo/tests")
-    from conftest import make_profile_record
+    from tests.conftest import make_profile_record
     from vptstools_spark.operators.vpts import to_vpts_table
     from vptstools_spark.sources.odim import profiles_from_records
 

@@ -1,8 +1,9 @@
 """Driver contract smoke tests (mirrors the harness's t1 check)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 

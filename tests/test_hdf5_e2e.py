@@ -111,50 +111,3 @@ def test_h5py_path_row_identical_to_pure_reader(monkeypatch):
                 pure_rows, pure_err = None, type(exc).__name__
         assert h5py_err == pure_err, p
         assert h5py_rows == pure_rows, f"row mismatch for {p}"
-
-
-def test_streaming_sink_matches_batch_daily_artifacts(spark, tmp_path):
-    """Cron-batch (daily_vpts_job's published file) and Structured Streaming
-    AvailableNow (stream_profiles → incremental_vpts_sink's hive store) must
-    produce BYTE-IDENTICAL daily artifacts from the same profiles — the
-    reference's repeated CLI runs (bin/vph5_to_vpts.py:121-144) expressed
-    both ways. Also proves the golden file itself and that a second
-    AvailableNow run with the same checkpoint is a no-op (exactly-once by
-    idempotence + no new files)."""
-    import filecmp
-
-    from vptstools_spark.operators.pipeline import daily_vpts_job
-    from vptstools_spark.streaming.incremental import (
-        incremental_vpts_sink,
-        stream_profiles,
-    )
-
-    profiles = read_vp_files(spark, f"{VP_DIR}/*.h5")
-
-    batch_dest = str(tmp_path / "batch")
-    daily_vpts_job(spark, profiles, ["baltrad/hdf5/nosta/2023/03/11"], batch_dest)
-
-    landing = str(tmp_path / "landing")
-    profiles.write.parquet(landing)
-    stream_store = str(tmp_path / "stream")
-    ckpt = str(tmp_path / "ckpt")
-    q = incremental_vpts_sink(stream_profiles(spark, landing), stream_store, ckpt)
-    q.awaitTermination()
-
-    batch = f"{batch_dest}/baltrad/daily/nosta/2023/nosta_vpts_20230311.csv"
-    s = sorted(glob.glob(f"{stream_store}/p_radar=nosta/p_date=20230311/*.csv"))
-    assert len(s) == 1
-    assert filecmp.cmp(batch, s[0], shallow=False), "batch vs streaming bytes differ"
-    assert filecmp.cmp(s[0], GOLDEN_DAILY, shallow=False), "streaming vs golden"
-
-    before = {
-        f: os.stat(f).st_mtime_ns
-        for f in glob.glob(f"{stream_store}/**/*.csv", recursive=True)
-    }
-    q2 = incremental_vpts_sink(stream_profiles(spark, landing), stream_store, ckpt)
-    q2.awaitTermination()
-    after = {
-        f: os.stat(f).st_mtime_ns
-        for f in glob.glob(f"{stream_store}/**/*.csv", recursive=True)
-    }
-    assert after == before, "second AvailableNow run must not rewrite artifacts"

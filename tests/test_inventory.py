@@ -3,7 +3,6 @@
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from vptstools_spark.functions.paths import radar_day_directory
 from vptstools_spark.operators.inventory import (
@@ -12,7 +11,6 @@ from vptstools_spark.operators.inventory import (
     modified_window,
     monthly_rollup,
     parse_inventory,
-    select_affected_files,
 )
 
 ROWS = [
@@ -93,17 +91,3 @@ def test_monthly_rollup(spark):
         "baltrad/hdf5/nosta/2023/03": 3,
         "ecog-04003/hdf5/plpoz/2016/09": 1,
     }
-
-
-def test_select_affected_files_semi_join(spark):
-    parsed = parse_inventory(_inv(spark))
-    days = days_to_create_vpts(parsed, days=2, now=datetime.datetime(2023, 3, 13, 0, 0))
-    # days_df shape for the join: split directory back into group cols
-    parts = F.split(F.col("directory"), "/")
-    days_keys = days.select(
-        *[F.element_at(parts, i + 1).alias(c) for i, c in enumerate(
-            ["source", "file_type", "radar_code", "year", "month", "day"])]
-    )
-    affected = select_affected_files(parsed, days_keys)
-    assert affected.count() == 3
-    assert all("nosta" in r["file"] for r in affected.collect())

@@ -25,18 +25,10 @@ REPO = Path(__file__).resolve().parents[1]
 
 #: kept although only tests reach them, keyed ``module path:name``
 ALLOWED = {
-    # the paper's own path (streaming ingest, CSV re-read, transfer adapters)
-    "streaming/incremental.py:stream_profiles": "streaming face of the VP ingest",
-    "streaming/incremental.py:incremental_vpts_sink": "streaming daily-VPTS sink",
-    "sources/odim.py:profiles_from_records": "builds profile rows without HDF5 bytes",
-    "operators/pipeline.py:read_daily_csv_string_preserving": "daily CSV re-read that keeps tri-state strings",
-    "operators/pipeline.py:resolve_source_file": "reference's source_file transform",
-    "operators/inventory.py:select_affected_files": "inventory files of the selected radar-days",
-    "operators/vpts.py:validate_vpts_order": "VPTS CSV sort-order rule",
-    "operators/transfer.py:s3_adapters": "boto3 adapters of the BALTRAD transfer",
-    "operators/transfer.py:sftp_adapters": "paramiko adapters of the BALTRAD transfer",
-    "operators/transfer.py:sns_publisher": "SNS notifier of the reference CLI",
     # test probes and references for kept code
+    "sources/odim.py:profiles_from_records": "builds profile-row inputs for the VPTS tests without HDF5 bytes",
+    "operators/pipeline.py:read_daily_csv_string_preserving": "re-reads published daily CSVs as strings to compare them",
+    "operators/vpts.py:validate_vpts_order": "counts sort-order inversions in VPTS frames that tests sort or re-read",
     "plans/hints.py:plan_string": "plan text probe for hint tests",
     "plans/asserts.py:python_eval_nodes": "plan gate: Python-eval node count",
     "plans/asserts.py:unbounded_global_windows": "plan gate: global windows without a bound",

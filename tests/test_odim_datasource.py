@@ -77,30 +77,9 @@ def test_on_error_fail_raises(spark, tmp_path):
     assert spark.read.format("odim").load(str(tmp_path)).count() == 0
 
 
-def test_filter_pushdown_prunes_files(spark, vp_case):
-    """radar = <the radar with fewest files> prunes every other radar's
-    files at planning time (reference: 5 of 6 files never opened) and
-    still returns correct rows."""
-    from pyspark.sql import functions as F
-
-    radar = min(vp_case.radar_files, key=vp_case.radar_files.get)
-    df = (
-        spark.read.format("odim")
-        .option("files_per_task", 1)
-        .option("pushdown", "true")
-        .load(vp_case.path)
-        .filter(F.col("radar") == radar)
-    )
-    rows = df.collect()
-    assert len(rows) == vp_case.radar_rows[radar] and {r.radar for r in rows} == {radar}
-    # the executed plan fans out over the pruned files only, one task each
-    n_tasks = df.rdd.getNumPartitions()
-    assert n_tasks == vp_case.radar_files[radar]
-
-
-def test_filter_pushdown_is_partial_not_contractual(spark, vp_case):
-    """The pushed filter is also re-evaluated by Spark (partial pushdown):
-    a filter on a non-filename column still works unpruned."""
+def test_row_filter_is_evaluated_by_spark(spark, vp_case):
+    """The reader prunes nothing: a filter on a profile column is applied
+    by Spark to the rows of every file."""
     from pyspark.sql import functions as F
 
     df = spark.read.format("odim").load(vp_case.path).filter(F.col("height") == 0)

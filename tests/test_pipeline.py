@@ -16,28 +16,10 @@ from vptstools_spark.operators.pipeline import (
     monthly_vpts_job,
     radar_day_filter,
     read_daily_csv_string_preserving,
-    resolve_source_file,
     write_descriptor,
 )
 from vptstools_spark.schemas import STATE_UNDETECT, STATE_VALUE
 from vptstools_spark.sources.odim import profiles_from_records
-
-
-def _named_transform(path):
-    return "renamed_" + os.path.basename(path)
-
-
-def test_resolve_source_file_default_and_callable():
-    # reference: src/vptstools/vpts.py:189-220 (P16)
-    assert resolve_source_file("/a/b/file.h5", None) == "file.h5"
-    assert resolve_source_file("/a/b/file.h5", "fixed.h5") == "fixed.h5"
-    assert resolve_source_file("/a/b/file.h5", _named_transform) == "renamed_file.h5"
-
-
-def test_resolve_source_file_rejects_lambda():
-    # reference: src/vptstools/vpts.py:237-239 (pickling constraint)
-    with pytest.raises(ValueError, match="lambda"):
-        resolve_source_file("x.h5", lambda p: p)
 
 
 def test_radar_day_filter_matches_pairs_and_builds_20k_days_fast(spark):

@@ -2,7 +2,8 @@
 monthly VPTS CSV through ``bin/vph5_to_vpts.run``, on a fleet written by
 the benchmark's pure-Python ODIM writer (``perfbench/odim_fleet.py``: no
 h5py, no reference fixtures). Its plain-Python VPTS CSV rendering is the
-byte-level oracle."""
+byte-level oracle. The CLI's help and its empty-folder error are checked
+here too."""
 
 import datetime as dt
 import glob
@@ -12,6 +13,7 @@ import os
 import shutil
 
 import pytest
+from click.testing import CliRunner
 
 from tests.conftest import odim_fleet
 from vptstools_spark.bin.vph5_to_vpts import run
@@ -279,3 +281,24 @@ def test_publish_rejects_split_partitions_and_header_mismatch(spark, fleet, tmp_
     with pytest.raises(ValueError, match="header differs"):
         monthly_vpts_job(mixed, ["baltrad/hdf5/abcde/2023/03/02"])
     assert sorted(os.listdir(os.path.join(mixed, "baltrad"))) == ["daily"]  # checked before any write
+
+
+def test_vph5_to_vpts_help():
+    from vptstools_spark.bin.vph5_to_vpts import cli
+
+    result = CliRunner().invoke(cli, ["--help"])
+    assert result.exit_code == 0
+    assert (
+        "Convert and aggregate HDF5 VP files to daily and monthly VPTS CSV files"
+        in result.output
+    )
+
+
+def test_vph5_to_vpts_path_folder_empty_errors(spark, tmp_path, monkeypatch):
+    from vptstools_spark.bin.vph5_to_vpts import cli
+
+    monkeypatch.setenv("VPTS_H5_ROOT", str(tmp_path / "bucket"))
+    monkeypatch.setenv("VPTS_DESTINATION", str(tmp_path / "dest"))
+    result = CliRunner().invoke(cli, ["--path-folder", "nothing/here"])
+    assert result.exit_code != 0
+    assert "No h5 files could be found" in result.output

@@ -1,11 +1,20 @@
 """Core VPTS pipeline invariants (reference: tests/test_vpts.py layers 2-3)."""
 
 import datetime
+import glob
+import os
 
 import pytest
 
 from tests.conftest import make_profile_record
-from vptstools_spark.operators.vpts import sort_vpts, to_vpts_table, validate_vpts, vpts_to_csv
+from vptstools_spark.operators.vpts import (
+    resolve_source_file,
+    sort_vpts,
+    to_vpts_table,
+    validate_vpts,
+    vp,
+    vpts_to_csv,
+)
 from vptstools_spark.schemas import (
     STATE_NODATA,
     STATE_UNDETECT,
@@ -151,3 +160,30 @@ def test_validate_order_guard_and_per_file(spark, tmp_path):
     back = spark.read.option("header", True).csv(p + "/f*")
     n_bad = validate_vpts_order(back, per_file=True)
     assert n_bad == 9  # every adjacent pair in the reversed file inverts
+
+
+def _named_transform(path):
+    return "renamed_" + os.path.basename(path)
+
+
+def test_resolve_source_file_default_and_callable():
+    # reference: src/vptstools/vpts.py:189-220 (P16)
+    assert resolve_source_file("/a/b/file.h5", None) == "file.h5"
+    assert resolve_source_file("/a/b/file.h5", "fixed.h5") == "fixed.h5"
+    assert resolve_source_file("/a/b/file.h5", _named_transform) == "renamed_file.h5"
+
+
+def test_resolve_source_file_rejects_lambda():
+    # reference: src/vptstools/vpts.py:237-239 (pickling constraint)
+    with pytest.raises(ValueError, match="lambda"):
+        resolve_source_file("x.h5", lambda p: p)
+
+
+def test_vp_source_file_callable_renames_column(spark, vp_fleet):
+    """vp() applies a named source_file callable to the file's path; the
+    default is the file's basename."""
+    path = sorted(glob.glob(os.path.join(vp_fleet.path, "**", "*.h5"), recursive=True))[0]
+    name = os.path.basename(path)
+    renamed = vp(spark, path, source_file=_named_transform).select("source_file").collect()
+    assert renamed and {r.source_file for r in renamed} == {f"renamed_{name}"}
+    assert {r.source_file for r in vp(spark, path).select("source_file").collect()} == {name}

@@ -4,8 +4,8 @@ Mirror of the reference CLI (reference: src/vptstools/bin/transfer_baltrad.py:
 80-165): list the source directory, keep ``_vp_`` files, parse radar/date
 metadata from the filename, and upload every file whose destination key does
 not exist yet (dedup-on-ingest anti-join). Per-file failures warn and
-continue; a summary goes to the pluggable notifier (the reference posts to
-SNS on failure).
+continue and are listed in the run's summary (the reference posts them to
+SNS); an error of the destination's existence check aborts the run.
 
 Connectors are resolved at runtime (reference env contract preserved):
 
@@ -18,7 +18,7 @@ Connectors are resolved at runtime (reference env contract preserved):
   path used in tests and for any mounted storage.
 
 The work-list logic itself (filter → parse → anti-join → copy with error
-isolation) lives in ``operators.transfer`` and is connector-agnostic.
+isolation) and the SFTP and S3 adapters live in ``operators.transfer``.
 """
 
 from __future__ import annotations
@@ -27,7 +27,12 @@ import os
 
 import click
 
-from vptstools_spark.operators.transfer import ErrorNotifier, run_transfer
+from vptstools_spark.operators.transfer import (
+    ErrorNotifier,
+    run_transfer,
+    s3_adapters,
+    sftp_adapters,
+)
 
 
 def _local_connectors(source_dir: str, dest_dir: str):
@@ -78,17 +83,7 @@ def _sftp_source(host: str):
     )
     sftp = ssh.open_sftp()
     sftp.chdir(datadir)
-
-    def listing() -> list[str]:
-        return [e.filename for e in sftp.listdir_attr()]
-
-    def download(name: str) -> bytes:
-        import io
-
-        buf = io.BytesIO()
-        sftp.getfo(name, buf)
-        return buf.getvalue()
-
+    listing, download = sftp_adapters(sftp)
     return listing, download, ssh
 
 
@@ -104,20 +99,7 @@ def _s3_destination(bucket: str, prefix: str):
     client = boto3.Session(
         profile_name=os.environ.get("AWS_PROFILE") or None
     ).client("s3")
-
-    def key_exists(key: str) -> bool:
-        from botocore.exceptions import ClientError  # noqa: PLC0415
-
-        try:
-            client.head_object(Bucket=bucket, Key=f"{prefix}{key}")
-            return True
-        except ClientError:
-            return False
-
-    def upload(key: str, content: bytes) -> None:
-        client.put_object(Bucket=bucket, Key=f"{prefix}{key}", Body=content)
-
-    return key_exists, upload
+    return s3_adapters(bucket, client, prefix)
 
 
 @click.command()

@@ -120,15 +120,6 @@ def monthly_rollup(days_df: DataFrame) -> DataFrame:
     )
 
 
-def select_affected_files(files_df: DataFrame, days_df: DataFrame, on: list[str] | None = None) -> DataFrame:
-    """Semi-join files ⋉ modified radar-days (SURVEY §2.4): the reference
-    iterates days and re-lists each folder (bin/vph5_to_vpts.py:160-165);
-    Spark-first this is a broadcast left-semi join — days_df is tiny (days ×
-    radars), so no shuffle of the big side."""
-    on = on or GROUP_COLS
-    return files_df.join(F.broadcast(days_df.select(*on).distinct()), on=on, how="left_semi")
-
-
 def list_manifest_file_keys(manifest_path: str) -> list[str]:
     """S4: S3-inventory manifest JSON → inventory subfile keys
     (reference: src/vptstools/s3.py:318-335). The manifest is a tiny

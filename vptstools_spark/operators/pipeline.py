@@ -24,7 +24,6 @@ import json
 import os
 import shutil
 import tempfile
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,24 +35,6 @@ from vptstools_spark.schemas import get_vpts_version
 
 #: descriptor filename (reference: src/vptstools/vpts.py:20)
 DESCRIPTOR_FILENAME = "vpts.resource.json"
-
-
-def resolve_source_file(path: str, transform: str | Callable[[str], str] | None) -> str:
-    """The reference's one user-extensible scalar hook P16
-    (src/vptstools/vpts.py:189-220): `source_file` may be a fixed string or a
-    named callable path→str; default is the basename. Lambdas are rejected —
-    the same pickling constraint the reference documents (vpts.py:237-239)
-    applies to PySpark closures shipped to executors."""
-    if transform is None or transform == "":
-        return os.path.basename(path)
-    if callable(transform):
-        if getattr(transform, "__name__", "") == "<lambda>":
-            raise ValueError(
-                "source_file callable may not be a lambda (must be picklable "
-                "by name for executor shipping)"
-            )
-        return str(transform(path))
-    return str(transform)
 
 
 def radar_day_filter(days: list[tuple[str, str]]) -> Column:
@@ -132,11 +113,11 @@ def _beside(target: str) -> str:
 
 
 def write_daily_store(table: DataFrame, output_path: str) -> None:
-    """Write a VPTS table into a daily store: hive-partitioned by
-    (radar, yyyymmdd), one sorted CSV per radar-day, with dynamic partition
-    overwrite so only the radar-days present in ``table`` are replaced. The
-    overwrite mode and the one-file-per-partition limit are options of this
-    write, so session settings cannot change them."""
+    """``daily_vpts_job``'s staging write: one sorted CSV part file per
+    radar-day of ``table`` under ``p_radar=…/p_date=…`` (yyyymmdd) in
+    ``output_path``, which the job then publishes. The overwrite mode and the
+    one-file-per-partition limit are options of this write, so session
+    settings cannot change them."""
     # re-derive partition cols from the rendered table (radar + yyyymmdd)
     out = table.withColumn(
         "p_radar", F.col("radar")

@@ -85,17 +85,13 @@ def run_transfer(
 
 
 def s3_adapters(
-    bucket: str, s3_client=None, prefix: str = ""
+    bucket: str, s3_client, prefix: str = ""
 ) -> tuple[Callable[[str], bool], Callable[[str, bytes], None]]:
-    """(key_exists, upload) over a real boto3 S3 client — the wire form
-    of K6 (reference: src/vptstools/bin/transfer_baltrad.py:30-47,
-    s3_key_exists + upload). Import-gated: boto3 is only imported when
-    no client is injected, so this module stays loadable (and the logic
-    above stays testable) in containers without it."""
-    if s3_client is None:
-        import boto3  # noqa: PLC0415 — optional wire dependency
-
-        s3_client = boto3.client("s3")
+    """(key_exists, upload) over a boto3 S3 client — the wire form of K6
+    (reference: src/vptstools/bin/transfer_baltrad.py:30-47, s3_key_exists +
+    upload). Only a 404-class error means "absent"; any other error, such
+    as a 403 from a role that may put but not head objects, propagates and
+    aborts the transfer instead of re-uploading every file."""
 
     def key_exists(key: str) -> bool:
         try:
@@ -116,52 +112,31 @@ def s3_adapters(
 
 
 def sftp_adapters(
-    sftp_client, remote_dir: str = "."
+    sftp_client,
 ) -> tuple[Callable[[], list[str]], Callable[[str], bytes]]:
-    """(listing, download) over a paramiko SFTPClient — the wire form of
-    S8 (reference: transfer_baltrad.py:94-139). Duck-typed: anything
-    exposing `listdir(dir)` and `open(path, mode)` binds, so the fakes
-    used in the unit tests and a real paramiko client share this path."""
+    """(listing, download) of the working directory of a paramiko
+    SFTPClient — the wire form of S8 (reference: transfer_baltrad.py:94-139).
+    Duck-typed: anything exposing `listdir()` and `open(path, mode)` binds,
+    so the fakes used in the unit tests and a real paramiko client share
+    this path."""
 
     def listing() -> list[str]:
-        return list(sftp_client.listdir(remote_dir))
+        return list(sftp_client.listdir())
 
     def download(name: str) -> bytes:
-        with sftp_client.open(f"{remote_dir}/{name}", "rb") as fh:
+        with sftp_client.open(name, "rb") as fh:
             return fh.read()
 
     return listing, download
 
 
-def sns_publisher(topic_arn: str, sns_client=None) -> Callable[[str, str], None]:
-    """ErrorNotifier publisher over a real boto3 SNS client — the wire
-    form of K7 (reference: bin/click_exception.py:61-97). SNS caps
-    subjects at 100 chars; the reference truncates the same way."""
-    if sns_client is None:
-        import boto3  # noqa: PLC0415 — optional wire dependency
-
-        sns_client = boto3.client("sns")
-
-    def publish(subject: str, message: str) -> None:
-        sns_client.publish(
-            TopicArn=topic_arn, Subject=subject[:100], Message=message
-        )
-
-    return publish
-
-
 class ErrorNotifier:
-    """Error sink K7 (reference: src/vptstools/bin/click_exception.py:7-97):
-    collect job failures and forward them to a pluggable publisher (SNS in
-    the reference; any callable(subject, message) here)."""
+    """Error sink of the transfer (reference: src/vptstools/bin/click_exception.py:7-97,
+    which posts to SNS): collects the per-file failures as (subject, message)
+    pairs for the CLI's summary."""
 
-    def __init__(self, publish: Callable[[str, str], None] | None = None) -> None:
-        self.publish = publish
+    def __init__(self) -> None:
         self.errors: list[tuple[str, str]] = []
 
     def __call__(self, context: str, exc: Exception) -> None:
-        subject = f"[vptstools_spark] failure in {context}"
-        message = f"{type(exc).__name__}: {exc}"
-        self.errors.append((subject, message))
-        if self.publish is not None:
-            self.publish(subject, message)
+        self.errors.append((f"[vptstools_spark] failure in {context}", f"{type(exc).__name__}: {exc}"))

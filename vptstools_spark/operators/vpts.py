@@ -17,6 +17,9 @@ notation thresholds (`5.0E-4` vs `0.0005`) and exponent form (`E-5` vs
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,16 +119,34 @@ def sort_vpts(df: DataFrame, spec: VptsCsvSpec) -> DataFrame:
     return df.orderBy(*keys)
 
 
+def resolve_source_file(path: str, transform: str | Callable[[str], str] | None) -> str:
+    """The reference's one user-extensible scalar hook P16
+    (src/vptstools/vpts.py:189-220): `source_file` may be a fixed string or a
+    named callable path→str; default is the basename. Lambdas are rejected,
+    the constraint the reference documents (vpts.py:237-239) for callables
+    that must pickle by name."""
+    if transform is None or transform == "":
+        return os.path.basename(path)
+    if callable(transform):
+        if getattr(transform, "__name__", "") == "<lambda>":
+            raise ValueError("source_file callable may not be a lambda (it must be picklable by name)")
+        return str(transform(path))
+    return str(transform)
+
+
 def vp(
     spark: SparkSession,
     file_path: str,
     vpts_csv_version: str = "v1.0",
-    source_file: str | None = None,
+    source_file: str | Callable[[str], str] | None = None,
 ) -> DataFrame:
-    """Convert one ODIM HDF5 VP file (reference: src/vptstools/vpts.py:180-215)."""
+    """Convert one ODIM HDF5 VP file (reference: src/vptstools/vpts.py:180-215).
+    ``source_file`` is resolved on the driver by ``resolve_source_file``."""
     from vptstools_spark.sources.odim import read_vp_files
 
-    profiles = read_vp_files(spark, file_path, source_file=source_file, on_error="fail")
+    profiles = read_vp_files(
+        spark, file_path, source_file=resolve_source_file(file_path, source_file), on_error="fail"
+    )
     return to_vpts_table(profiles, vpts_csv_version)
 
 
@@ -155,7 +176,6 @@ def vpts_to_csv(df: DataFrame, path: str) -> None:
     the order they have inside ``df``'s partitions.
     """
     import glob
-    import os
     import shutil
 
     tmp = path + "._spark_tmp"

@@ -275,7 +275,6 @@ def read_vp_files(
 
 
 def profiles_from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
-    """Build the long-format profile DataFrame from pre-decoded row dicts —
-    the h5py-free entry used by tests and by any upstream that already
-    landed decoded profiles (e.g. parquet)."""
+    """Build the long-format profile DataFrame from pre-decoded row dicts,
+    so VPTS rendering can be driven without HDF5 bytes."""
     return spark.createDataFrame(records, schema=profile_long_schema())

@@ -34,8 +34,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    EqualTo,
-    Filter,
     InputPartition,
 )
 
@@ -163,7 +161,6 @@ class OdimReader(DataSourceReader):
         fpt = options.get("files_per_task")
         self.files_per_task = int(fpt) if fpt is not None else None
         self.on_error = options.get("on_error", "warn")
-        self._radar_eq: str | None = None
 
     def partitions(self) -> list[OdimFilesPartition]:
         pattern = self.path
@@ -172,13 +169,6 @@ class OdimReader(DataSourceReader):
             # radar/year/month/day, reference bin/vph5_to_vpts.py listing)
             pattern = pattern.rstrip("/") + "/**/*.h5"
         files = sorted(_glob.glob(pattern, recursive=True))
-        if self._radar_eq is not None:
-            # ODIM names: <radar>_vp_<ts>...h5 — prune on the basename prefix
-            files = [
-                p
-                for p in files
-                if p.rsplit("/", 1)[-1].split("_", 1)[0] == self._radar_eq
-            ]
         n = self.files_per_task or auto_files_per_task(len(files))
         return [
             OdimFilesPartition(files[i : i + n]) for i in range(0, len(files), n)
@@ -186,27 +176,6 @@ class OdimReader(DataSourceReader):
 
     def read(self, partition: OdimFilesPartition) -> Iterator["pa.RecordBatch"]:
         return decode_files(((p, Path(p).read_bytes) for p in partition.paths), self.on_error)
-
-
-class OdimPushdownReader(OdimReader):
-    """OdimReader + planning-time file pruning via DataSource-API filter
-    pushdown. Split into a subclass because merely IMPLEMENTING
-    pushFilters() makes Spark error when
-    `spark.sql.python.filterPushdown.enabled` is false (default) — the base
-    reader must stay usable on any session; opt in with
-    `.option("pushdown", "true")` on a session that enables the conf
-    (session.get_spark does)."""
-
-    def pushFilters(self, filters: list[Filter]) -> list[Filter]:
-        """`radar = 'x'` prunes every non-matching file from the listing
-        before a single byte is read — the ODIM filename grammar starts
-        with the radar code (functions/paths.py:parse_odim_filename). All
-        filters are returned for Spark-side re-evaluation (partial-pushdown
-        semantics: pruning is an optimization, not the contract)."""
-        for f in filters:
-            if isinstance(f, EqualTo) and tuple(f.attribute) == ("radar",):
-                self._radar_eq = str(f.value)
-        return filters
 
 
 class OdimStreamReader(DataSourceStreamReader):
@@ -290,8 +259,6 @@ class OdimDataSource(DataSource):
         return profile_long_schema()
 
     def reader(self, schema) -> OdimReader:
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return OdimPushdownReader(self.options)
         return OdimReader(self.options)
 
     def streamReader(self, schema) -> OdimStreamReader:
