@@ -7,6 +7,7 @@ import datetime as dt
 import os
 import random
 
+import numpy as np
 import pytest
 
 from tests.conftest import odim_fleet
@@ -62,3 +63,21 @@ def test_unknown_on_error_is_rejected_at_plan_time(spark, bad_day, face):
     root, day, _good, _n = bad_day
     with pytest.raises(Exception, match="on_error must be one of"):
         _scan(spark, face, root, day, "skip")
+
+
+def test_malformed_date_fails_the_file_under_the_policy():
+    """A VP file whose what/date does not parse as %Y%m%d is one failed file:
+    skipped with a warning under warn, raised under fail."""
+    from vptstools_spark.sources.odim import decode_files
+
+    radar = odim_fleet.Radar("nosta", random.Random(5))
+    profile = odim_fleet._profile(np.random.default_rng(5))
+    good = odim_fleet.vp_file_bytes(radar, dt.datetime(2023, 6, 1, 12, 0), profile)
+    bad = good.replace(b"20230601", b"2023xx01")
+    assert bad != good
+    files = [("good.h5", lambda: good), ("bad.h5", lambda: bad)]
+    with pytest.warns(UserWarning, match="bad.h5"):
+        (batch,) = decode_files(files, "warn")
+    assert set(batch.column("source_file").to_pylist()) == {"good.h5"}
+    with pytest.raises(ValueError, match="2023xx01"):
+        list(decode_files(files, "fail"))

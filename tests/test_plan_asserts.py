@@ -56,13 +56,12 @@ def test_no_row_python_anywhere_vectorized_only_where_documented(spark):
     row-at-a-time BatchEvalPython; Arrow-vectorized Python appears only in
     the queries whose semantics genuinely exceed built-in expressions
     (blocked-BLAS cosine, Arrow shingle generation — higher-order array
-    functions are interpreted, excluded from codegen — and the CPython
-    repr-parity render UDF)."""
+    functions are interpreted, excluded from codegen — and binary container
+    decode)."""
     from vptstools_spark.analytics import all_queries
     from vptstools_spark.plans.asserts import ROW_PYTHON_NODES, python_eval_nodes
 
     ALLOWED_VECTORIZED = {
-        "vpts_tristate_render",   # CPython repr parity at the export boundary
         "dedup_embedding",        # blocked BLAS A@B.T in mapInPandas
         "dedup_semantic",         # same blocked-BLAS candidate stage
         "dedup_minhash_lsh",      # Arrow shingle generation

@@ -302,3 +302,19 @@ def test_vph5_to_vpts_path_folder_empty_errors(spark, tmp_path, monkeypatch):
     result = CliRunner().invoke(cli, ["--path-folder", "nothing/here"])
     assert result.exit_code != 0
     assert "No h5 files could be found" in result.output
+
+
+def test_cli_import_loads_no_pandas():
+    """The CLI and the ODIM decoder import without pandas."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, vptstools_spark.bin.vph5_to_vpts, vptstools_spark.sources.odim; "
+        "print('pandas' in sys.modules)"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "False"

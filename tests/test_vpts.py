@@ -187,3 +187,71 @@ def test_vp_source_file_callable_renames_column(spark, vp_fleet):
     renamed = vp(spark, path, source_file=_named_transform).select("source_file").collect()
     assert renamed and {r.source_file for r in renamed} == {f"renamed_{name}"}
     assert {r.source_file for r in vp(spark, path).select("source_file").collect()} == {name}
+
+
+def test_daily_plan_runs_no_python_past_the_decode(spark, vp_fleet):
+    """The VPTS projection over decoded ODIM files is Catalyst only: the
+    double cells arrive rendered, so no Arrow UDF re-enters Python."""
+    from vptstools_spark.plans.asserts import python_eval_nodes
+    from vptstools_spark.sources.odim import read_vp_files
+
+    assert python_eval_nodes(to_vpts_table(read_vp_files(spark, vp_fleet.scan))) == {}
+
+
+#: VALUE-state float32 cells and their VPTS CSV text: CPython repr of the
+#: float32 widened to double, "" for NaN (the reference's na_rep)
+EDGE_CELLS = [
+    (float("nan"), ""),
+    (float("inf"), "inf"),
+    (-0.0, "-0.0"),
+    (1e-5, "9.999999747378752e-06"),
+    (5e-4, "0.0005000000237487257"),
+    (1e16, "1.0000000272564224e+16"),
+]
+
+
+def test_edge_values_render_alike_through_both_producers(spark, tmp_path, monkeypatch):
+    """The same VALUE-state edge cells, given as record floats
+    (profiles_from_records) and as decoded ODIM bytes (parse_odim_bytes),
+    publish the same CSV text."""
+    import random
+
+    import numpy as np
+
+    from tests.conftest import odim_fleet
+    from vptstools_spark.schemas import profile_long_schema
+    from vptstools_spark.sources.odim import parse_odim_bytes
+
+    values = [float(np.float32(v)) for v, _ in EDGE_CELLS]
+    recs = [
+        make_profile_record(height=200 * i, u=v, u_state=STATE_VALUE, source_file="records.h5")
+        for i, v in enumerate(values)
+    ]
+    # an ODIM file whose u array holds the edge values as stored float32:
+    # gain 1 and offset -0.0 decode every raw value, -0.0 included, to
+    # itself, and no edge value is a sentinel
+    n = odim_fleet.N_LEVELS
+    profile = {q: np.zeros(n) for q, _ in odim_fleet.QUANTITIES}
+    profile["HGHT"] = np.arange(n, dtype=np.float64) * odim_fleet.INTERVAL
+    profile["u"][: len(values)] = values
+    raw = odim_fleet._raw
+    monkeypatch.setitem(odim_fleet.DECODE, "f", (1.0, -0.0, -1000.0, -1001.0))
+    monkeypatch.setattr(
+        odim_fleet,
+        "_raw",
+        lambda kind, d: d.astype(np.float32).reshape(n, 1) if kind == "f" else raw(kind, d),
+    )
+    radar = odim_fleet.Radar("nosta", random.Random(0))
+    content = odim_fleet.vp_file_bytes(radar, datetime.datetime(2023, 3, 11, 23, 15), profile)
+    decoded = parse_odim_bytes("decoded.h5", content)[: len(values)]
+    profiles = profiles_from_records(spark, recs).unionByName(
+        spark.createDataFrame(decoded, schema=profile_long_schema())
+    )
+    out = str(tmp_path / "edge.csv")
+    vpts_to_csv(to_vpts_table(profiles).select("source_file", "height", "u"), out)
+    cells: dict[str, list[str]] = {}
+    for line in open(out).read().splitlines()[1:]:
+        source, _height, u = line.split(",")
+        cells.setdefault(source, []).append(u)
+    want = [text for _, text in EDGE_CELLS]
+    assert cells == {"records.h5": want, "decoded.h5": want}

@@ -32,7 +32,9 @@ def q_vpts_tristate_render(spark: SparkSession, sf: str) -> DataFrame:
         F.col("l_returnflag").alias("radar"),
         F.col("l_shipdate").alias("ts"),
         (F.col("l_linenumber") * 200).alias("height"),
-        F.col("l_quantity").cast("double").alias("u"),
+        # a double cell arrives as its rendered text (sources.odim.render_double);
+        # Spark's cast gives the same text as DuckDB's for these quantities
+        F.col("l_quantity").cast("double").cast("string").alias("u"),
         ((F.col("l_orderkey") + F.col("l_linenumber")) % 3).cast("tinyint").alias("u__state"),
         (F.col("l_linenumber") % 2 == 1).alias("gap"),
         F.when(F.col("l_suppkey") % 3 == 0, "NULL")
@@ -44,7 +46,7 @@ def q_vpts_tristate_render(spark: SparkSession, sf: str) -> DataFrame:
         F.col("radar"),
         datetime_to_proper8601(F.col("ts")).alias("datetime"),
         F.col("height").cast("string").alias("height"),
-        _render_measurement("u", spec, "double").alias("u_cell"),
+        _render_measurement("u", spec).alias("u_cell"),
         bool_to_bool_str(F.col("gap")).alias("gap"),
         int_to_nodata(F.col("vcp"), list(spec.vcp_nodata_values), spec.nodata).alias("vcp"),
     )

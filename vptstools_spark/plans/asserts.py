@@ -80,7 +80,7 @@ def unbounded_global_windows(df: DataFrame) -> list[str]:
 ROW_PYTHON_NODES = {"BatchEvalPython"}
 
 #: Arrow-vectorized Python nodes — allowed only where a query's semantics
-#: genuinely exceed built-in expressions (blocked BLAS, CPython repr parity)
+#: genuinely exceed built-in expressions (blocked BLAS, binary decode)
 VECTOR_PYTHON_NODES = {
     "ArrowEvalPython",
     "MapInPandas",

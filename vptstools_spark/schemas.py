@@ -8,11 +8,14 @@ the spec at plan time (see operators/vpts.py) — no subclass hierarchy needed.
 
 Tri-state cell semantics (reference: src/vptstools/vpts.py:17-18,53-66):
 every measurement is exactly one of value | nodata | undetect. Internally we
-keep nullable typed columns plus a small flag column per quantity
+keep one nullable cell column plus a small flag column per quantity
 (``<q>__state`` ∈ {0=value, 1=nodata, 2=undetect}); the string sentinels
-("" / "NaN" for v1.0) exist only in the CSV serializer. This replaces the
-reference's all-string DataFrame model (forced by pandas' lack of int-NaN,
-reference: src/vptstools/vpts.py:43-46) with Spark-native nullable types.
+("" / "NaN" for v1.0) exist only in the CSV serializer. Counts are typed
+longs. Double measurements are carried as their CPython ``repr`` text,
+rendered once where the file is decoded (``sources.odim.render_double``):
+the reference's output renders them through ``repr`` (numpy ``.tolist()`` →
+pandas ``to_csv``, reference: src/vptstools/vpts.py:58-63), which no
+Catalyst cast reproduces.
 """
 
 from __future__ import annotations
@@ -26,20 +29,21 @@ from pyspark.sql import types as T
 # (reference: src/vptstools/vpts_csv.py:266-295)
 # ---------------------------------------------------------------------------
 
-#: measurement quantities, in output order, with logical Spark type.
+#: measurement quantities, in output order, with their profile column type.
 #: ODIM name → (output column, type). "HGHT" becomes the `height` axis.
+#: The doubles are string columns holding the rendered ``repr`` text.
 V1_QUANTITIES: dict[str, tuple[str, T.DataType]] = {
-    "u": ("u", T.DoubleType()),
-    "v": ("v", T.DoubleType()),
-    "w": ("w", T.DoubleType()),
-    "ff": ("ff", T.DoubleType()),
-    "dd": ("dd", T.DoubleType()),
-    "sd_vvp": ("sd_vvp", T.DoubleType()),
+    "u": ("u", T.StringType()),
+    "v": ("v", T.StringType()),
+    "w": ("w", T.StringType()),
+    "ff": ("ff", T.StringType()),
+    "dd": ("dd", T.StringType()),
+    "sd_vvp": ("sd_vvp", T.StringType()),
     "gap": ("gap", T.BooleanType()),
-    "eta": ("eta", T.DoubleType()),
-    "dens": ("dens", T.DoubleType()),
-    "dbz": ("dbz", T.DoubleType()),
-    "DBZH": ("dbz_all", T.DoubleType()),
+    "eta": ("eta", T.StringType()),
+    "dens": ("dens", T.StringType()),
+    "dbz": ("dbz", T.StringType()),
+    "DBZH": ("dbz_all", T.StringType()),
     "n": ("n", T.LongType()),
     "n_dbz": ("n_dbz", T.LongType()),
     "n_all": ("n_all", T.LongType()),
@@ -181,8 +185,9 @@ def get_vpts_version(version: str) -> VptsCsvSpec:
 def profile_long_schema() -> T.StructType:
     """Typed long-format schema of decoded VP profiles (one row per file×level).
 
-    This is the post-parse, pre-projection form (FIXTURES.md §1): nullable
-    typed measurement columns + a tinyint state flag per measurement.
+    This is the post-parse, pre-projection form (FIXTURES.md §1): one
+    nullable cell per measurement (rendered text for the doubles, long for
+    the counts) + a tinyint state flag per measurement.
     """
     fields = [
         T.StructField("source_file", T.StringType(), False),

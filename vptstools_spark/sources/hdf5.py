@@ -596,10 +596,11 @@ def _apply_filters(
 
 
 class H5Group:
-    def __init__(self, f: _File, addr: int, name: str):
+    def __init__(self, f: _File, addr: int, name: str, msgs: list[tuple[int, int]] | None = None):
         self._f = f
         self._name = name
-        msgs = _read_messages(f, addr)
+        if msgs is None:
+            msgs = _read_messages(f, addr)
         self.attrs: dict[str, Any] = {}
         self._links: dict[str, int] = {}
         self._is_dataset = False
@@ -646,7 +647,7 @@ class H5Group:
             if any(m == _MSG_LAYOUT for m, _ in msgs):
                 node = H5Dataset(node._f, msgs, child_name)
             else:
-                node = H5Group(node._f, addr, child_name)
+                node = H5Group(node._f, addr, child_name, msgs)
         return node
 
 

@@ -14,6 +14,14 @@ is the one per-file decode loop: the ``format("odim")`` DataSource
 (sources/odim_datasource.py) runs it too, so both faces share one failure
 policy (``on_error``: warn | fail).
 
+The decode loop also renders each double measurement cell to its CPython
+``repr`` text (``render_double``), the form the reference's CSV carries
+(numpy ``.tolist()`` → pandas ``to_csv``, reference vpts.py:58-63). Java's
+``Double.toString`` differs in scientific-notation thresholds (``5.0E-4`` vs
+``0.0005``) and exponent form (``E-5`` vs ``e-05``), so the text is made
+here, while the Python worker already holds each float, and the VPTS
+projection downstream stays in Catalyst.
+
 The HDF5 byte layer prefers h5py when installed and otherwise uses the
 bundled pure-Python reader (sources/hdf5.py — public HDF5 format spec, no
 native deps), so the real ``.h5`` → VPTS path runs in any container; the
@@ -26,10 +34,10 @@ from __future__ import annotations
 import io
 import warnings
 from collections.abc import Callable, Iterable, Iterator
+from datetime import datetime, timezone
 from typing import TYPE_CHECKING, Any
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from vptstools_spark.schemas import (
@@ -46,6 +54,16 @@ if TYPE_CHECKING:
 
 class InvalidSourceODIM(ValueError):
     """Non-ODIM or non-VP source file (reference: src/vptstools/odimh5.py:141-152)."""
+
+
+#: the measurement columns carried as rendered text (the doubles)
+TEXT_CELLS = tuple(col for col, t in V1_QUANTITIES.values() if t.typeName() == "string")
+
+
+def render_double(v: Any) -> str | None:
+    """A double measurement cell's text: CPython ``repr(float(v))``, or
+    ``None`` for a missing or NaN value (the reference's ``na_rep=""``)."""
+    return None if v is None or v != v else repr(float(v))
 
 
 def decode_quantity(
@@ -108,8 +126,9 @@ def parse_odim_bytes(name: str, content: bytes, source_file: str | None = None) 
     """Parse one ODIM HDF5 VP file (as bytes) into long-format row dicts.
 
     Mirrors reference BirdProfile.from_odim + to_vp explode
-    (src/vptstools/vpts.py:138-177) but emits typed cells + state flags
-    instead of an all-string frame. Uses h5py when installed; otherwise the
+    (src/vptstools/vpts.py:138-177) but emits cells + state flags instead of
+    an all-string frame: double measurements as ``render_double`` text,
+    counts as ints, ``gap`` as bool. Uses h5py when installed; otherwise the
     bundled pure-Python HDF5 reader (sources/hdf5.py) — same subset API, so
     the byte path runs everywhere.
     """
@@ -125,28 +144,33 @@ def parse_odim_bytes(name: str, content: bytes, source_file: str | None = None) 
         where = {k: _attr(v) for k, v in hdf5["where"].attrs.items()}
         how = {k: _attr(v) for k, v in hdf5["how"].attrs.items()}
 
-        ts = pd.Timestamp(
-            f"{what['date']} {what['time']}", tz="UTC"
-        ).to_pydatetime() if "date" in what else None
+        ts = (
+            datetime.strptime(f"{what['date']}{what['time']}", "%Y%m%d%H%M%S").replace(
+                tzinfo=timezone.utc
+            )
+            if "date" in what
+            else None
+        )
         identifiers = _parse_source_identifiers(str(what.get("source", "")))
 
         dataset1 = hdf5["dataset1"]
-        quantity_to_group = {
-            _attr(dataset1[key]["what"].attrs["quantity"]): key
-            for key in dataset1.keys()
-            if key != "what"
-        }
+        quantity_to_group = {}  # quantity → (its data group, the group's what attrs)
+        for key in dataset1.keys():
+            if key != "what":
+                grp = dataset1[key]
+                a = grp["what"].attrs
+                quantity_to_group[_attr(a["quantity"])] = (grp, a)
 
         def decode(q: str) -> tuple[list[Any], list[int]]:
-            grp = dataset1[quantity_to_group[q]]
-            a = grp["what"].attrs
+            grp, a = quantity_to_group[q]
+            data = grp["data"]
             return decode_quantity(
-                grp["data"][()],
+                data[()],
                 float(a["gain"]),
                 float(a["offset"]),
                 float(a["nodata"]),
                 float(a["undetect"]),
-                grp["data"].dtype,
+                data.dtype,
             )
 
         levels, _ = decode("HGHT")
@@ -165,28 +189,28 @@ def parse_odim_bytes(name: str, content: bytes, source_file: str | None = None) 
             "radar_wavelength": _as_float(how.get("wavelength")),
         }
 
-        columns: dict[str, tuple[list[Any], list[int]]] = {}
+        cells = []
         for odim_name, (col, _dtype) in V1_QUANTITIES.items():
-            if odim_name in quantity_to_group:
-                columns[col] = decode(odim_name)
+            if odim_name not in quantity_to_group:
+                vals, states = [None] * n_levels, [STATE_NODATA] * n_levels
             else:
-                columns[col] = ([None] * n_levels, [STATE_NODATA] * n_levels)
+                vals, states = decode(odim_name)
+                if col in TEXT_CELLS:
+                    vals = [render_double(v) for v in vals]
+                elif col == "gap":
+                    vals = [None if v is None else bool(v) for v in vals]
+                else:
+                    vals = [None if v is None else int(v) for v in vals]
+            cells.append((col, None if col == "gap" else f"{col}__state", vals, states))
 
         rows = []
         for i in range(n_levels):
             row = dict(base)
             row["height"] = int(levels[i])
-            for odim_name, (col, dtype) in V1_QUANTITIES.items():
-                vals, states = columns[col]
-                v = vals[i]
-                if col == "gap":
-                    row[col] = None if v is None else bool(v)
-                elif v is not None and dtype.typeName() in ("long", "integer"):
-                    row[col] = int(v)
-                else:
-                    row[col] = None if v is None else float(v)
-                if col != "gap":
-                    row[f"{col}__state"] = states[i]
+            for col, state_col, vals, states in cells:
+                row[col] = vals[i]
+                if state_col:
+                    row[state_col] = states[i]
             rows.append(row)
         return rows
 
@@ -276,5 +300,8 @@ def read_vp_files(
 
 def profiles_from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
     """Build the long-format profile DataFrame from pre-decoded row dicts,
-    so VPTS rendering can be driven without HDF5 bytes."""
-    return spark.createDataFrame(records, schema=profile_long_schema())
+    so VPTS rendering can be driven without HDF5 bytes. Double measurement
+    cells are given as floats and rendered by ``render_double``, as the
+    decoder renders them."""
+    rendered = [{**r, **{c: render_double(r[c]) for c in TEXT_CELLS if c in r}} for r in records]
+    return spark.createDataFrame(rendered, schema=profile_long_schema())
