@@ -131,11 +131,15 @@ def make_profile_record(
     **overrides,
 ):
     """One long-format profile row with sane metadata defaults
-    (values mirror the reference conftest fixture, FIXTURES.md §1)."""
+    (values mirror the reference conftest fixture, FIXTURES.md §1). Its
+    ``path`` puts ``source_file`` in the radar-day directory of ``radar``
+    and ``ts`` under ``baltrad/hdf5/``, the layout the daily phase keys by."""
+    ts = ts or datetime.datetime(2023, 3, 11, 23, 15)
     r = {
+        "path": f"file:/data/baltrad/hdf5/{radar}/{ts:%Y/%m/%d}/{source_file}",
         "source_file": source_file,
         "radar": radar,
-        "ts": ts or datetime.datetime(2023, 3, 11, 23, 15),
+        "ts": ts,
         "height": height,
         "gap": gap,
         "rcs": 11.0,

@@ -9,6 +9,7 @@ against the goldens the reference's own e2e produces
 import glob
 import gzip
 import os
+import shutil
 
 import pytest
 
@@ -71,11 +72,18 @@ def test_daily_csv_byte_equals_reference_golden(spark, tmp_path):
 
 
 def test_monthly_gz_content_equals_reference_golden(spark, tmp_path):
-    profiles = read_vp_files(spark, f"{VP_DIR}/*.h5")
+    # the daily phase keys rows by their file's radar-day directory, so the
+    # reference's flat fixture folder is laid out as that one radar-day
     day_dirs = ["baltrad/hdf5/nosta/2023/03/11"]
-    assert daily_vpts_job(spark, profiles, day_dirs, str(tmp_path)) == 1
-    assert monthly_vpts_job(str(tmp_path), day_dirs) == 1
-    monthly = tmp_path / "baltrad" / "monthly" / "nosta" / "2023" / "nosta_vpts_202303.csv.gz"
+    h5_day = tmp_path / "h5" / day_dirs[0]
+    h5_day.mkdir(parents=True)
+    for p in glob.glob(f"{VP_DIR}/*.h5"):
+        shutil.copy(p, h5_day)
+    profiles = read_vp_files(spark, str(h5_day))
+    dest = tmp_path / "dest"
+    assert daily_vpts_job(spark, profiles, day_dirs, str(dest)) == 1
+    assert monthly_vpts_job(str(dest), day_dirs) == 1
+    monthly = dest / "baltrad" / "monthly" / "nosta" / "2023" / "nosta_vpts_202303.csv.gz"
     # gzip container bytes differ (mtime/os); the decompressed CSV must not
     assert gzip.open(monthly, "rb").read() == gzip.open(GOLDEN_MONTHLY, "rb").read()
 

@@ -5,7 +5,6 @@ import glob
 import gzip
 import json
 import os
-import time
 
 import pytest
 
@@ -14,38 +13,11 @@ from vptstools_spark.operators.inventory import days_to_create_vpts, parse_inven
 from vptstools_spark.operators.pipeline import (
     daily_vpts_job,
     monthly_vpts_job,
-    radar_day_filter,
     read_daily_csv_string_preserving,
     write_descriptor,
 )
 from vptstools_spark.schemas import STATE_UNDETECT, STATE_VALUE
 from vptstools_spark.sources.odim import profiles_from_records
-
-
-def test_radar_day_filter_matches_pairs_and_builds_20k_days_fast(spark):
-    """The daily phase's day restriction is one parsed literal IN: the
-    predicate for a 20,000-radar-day work list builds on the driver in well
-    under a second, where Column.isin made one JVM call per key (8-14 s).
-    Matching is exact on (radar, yyyymmdd), quotes and backslashes included."""
-    rows = spark.range(0, 4, 1, 1).selectExpr(
-        # radar o'k\ : a quote and a backslash, which the literal must escape
-        "element_at(array('nosta', 'bejab', concat('o', char(39), 'k', char(92)), 'nosta'),"
-        " int(id) + 1) AS radar",
-        "element_at(array(TIMESTAMP'2023-03-11 23:15:00', TIMESTAMP'2023-03-11 00:00:00',"
-        " TIMESTAMP'2023-03-11 12:00:00', TIMESTAMP'2023-03-12 00:00:00'), int(id) + 1) AS ts",
-    )
-    days = [("nosta", "20230311"), ("o'k\\", "20230311"), ("bejab", "20230312")]
-    got = {(r["radar"], r["ts"].day) for r in rows.filter(radar_day_filter(days)).collect()}
-    assert got == {("nosta", 11), ("o'k\\", 11)}
-    assert rows.filter(radar_day_filter([])).count() == 0
-
-    many = [(f"r{i % 100:04d}", f"{20000101 + i}") for i in range(19_999)]
-    many.append(("nosta", "20230311"))
-    radar_day_filter(many[:10])  # parser warm-up
-    t = time.perf_counter()
-    pred = radar_day_filter(many)
-    assert time.perf_counter() - t < 1.0
-    assert rows.filter(pred).count() == 1
 
 
 def test_write_descriptor(tmp_path):
@@ -58,7 +30,8 @@ def test_write_descriptor(tmp_path):
 @pytest.fixture(scope="module")
 def pipeline_output(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("vpts_out"))
-    # two radar-days for 'nosta', one of which is recent; one old 'bejab' day
+    # two radar-days for 'nosta', one of which is recent; one old 'bejab'
+    # day, whose record's path lies in a radar-day outside the work list
     recs = []
     for day, minute in [(11, 15), (11, 25), (12, 0)]:
         recs.append(
@@ -184,3 +157,32 @@ def test_odim_fleet_small_file_packing_and_e2e(spark, tmp_path):
     assert len(csvs) == 2
     n_lines = sum(open(c).read().count("\n") for c in csvs)
     assert n_lines == 48 * 25 + len(csvs)  # rows + one header per file
+
+
+def test_sources_sharing_a_radar_day_publish_their_own_rows(spark, tmp_path):
+    """One radar-day exists under both ``baltrad/`` and ``uva/``, with the
+    same seeded files. One daily job over both publishes each source's own
+    oracle bytes: 75 rows per file, each row once, keyed by the directory
+    each file was read from."""
+    from vptstools_spark.sources.odim import read_vp_files
+
+    fleet = str(tmp_path / "fleet")
+    oracles = {
+        source: odim_fleet.write_fleet(
+            fleet, seed=5, n_radars=1, days=[datetime.date(2023, 3, 11)], per_day=3, source=source
+        )
+        for source in ("baltrad", "uva")
+    }
+    day_dirs = sorted(d for oracle in oracles.values() for d in oracle["days"])
+    # one radar-day, under two sources
+    assert len(day_dirs) == 2 and len({d.split("/", 1)[1] for d in day_dirs}) == 1
+    profiles = read_vp_files(spark, [os.path.join(fleet, d) for d in day_dirs])
+    out = str(tmp_path / "out")
+    assert daily_vpts_job(spark, profiles, day_dirs, out) == 2
+    for day_dir in day_dirs:
+        source, _t, radar, y, m, d = day_dir.split("/")
+        lines = oracles[source]["days"][day_dir]
+        assert len(lines) == 75
+        daily = os.path.join(out, source, "daily", radar, y, f"{radar}_vpts_{y}{m}{d}.csv")
+        with open(daily, newline="") as fh:
+            assert fh.read() == "\n".join([odim_fleet.CSV_HEADER, *lines]) + "\n"

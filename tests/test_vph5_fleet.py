@@ -207,6 +207,28 @@ def test_path_folder_run_rejects_misnamed_file(spark, fleet, tmp_path):
     assert not glob.glob(os.path.join(dest, "**", "*_vpts_*"), recursive=True)
 
 
+def test_manifest_run_rejects_misnamed_key(spark, fleet, tmp_path):
+    """The manifest path's filename policy: an inventory that holds a
+    ``.h5`` key whose name does not parse fails the run, naming the key,
+    before anything is published."""
+    h5_root, oracle = fleet
+    inv = tmp_path / "inventory"
+    inv.mkdir()
+    day = sorted(oracle["days"])[0]
+    names = [*sorted(os.listdir(os.path.join(h5_root, day))), "misnamed.h5"]
+    with gzip.open(inv / "part-0.csv.gz", "wt") as fh:
+        fh.writelines(f'"b","{day}/{name}","1","2023-04-01T12:00:00.000Z"\n' for name in names)
+    manifest = inv / "manifest.json"
+    manifest.write_text(json.dumps({"files": [{"key": "data/part-0.csv.gz"}]}))
+    dest = str(tmp_path / "dest")
+    with pytest.raises(Exception, match="cannot parse ODIM filename: misnamed.h5"):
+        run(
+            manifest=str(manifest), modified_days_ago=1, now="2023-04-02 03:00:00",
+            h5_root=h5_root, destination=dest, spark=spark,
+        )
+    assert not glob.glob(os.path.join(dest, "**", "*_vpts_*"), recursive=True)
+
+
 def test_sources_sharing_a_radar_day_keep_their_own_months(spark, fleet, tmp_path):
     """One radar's 2023-03-30 exists under both ``baltrad/`` and ``uva/``.
     After backfills of baltrad, then uva, then baltrad's 03-31 alone, each
@@ -262,7 +284,8 @@ def test_publish_rejects_split_partitions_and_header_mismatch(spark, fleet, tmp_
 
     def split_write(table, path):
         write(table, path)
-        for part in glob.glob(os.path.join(path, "*", "*", "*.csv")):
+        # staging is p_source=…/p_radar=…/p_date=…/part-….csv
+        for part in glob.glob(os.path.join(path, "*", "*", "*", "*.csv")):
             shutil.copyfile(part, part.removesuffix(".csv") + "-b.csv")
 
     monkeypatch.setattr(pipeline, "write_daily_store", split_write)

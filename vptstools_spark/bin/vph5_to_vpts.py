@@ -11,10 +11,10 @@ listing with the filename grammar (``functions/paths.radar_day_directory``)
 and starts no job for it. Where the reference loops radar-days on the driver
 (download → pandas convert → upload per day), this CLI runs ONE Spark plan
 for the daily phase: binaryFile scan of the affected day directories →
-daily VPTS write, restricted to the driver's radar-day list by a literal
-predicate. The monthly phase starts no Spark job: it joins each affected
-radar-month's published daily files in date order under one header into a
-gzip CSV. Both phases (``operators/pipeline.py``, which owns the layout)
+daily VPTS write, one CSV per scanned directory, keyed by the
+``(source, radar, yyyymmdd)`` of each row's file path. The monthly phase
+starts no Spark job: it joins each affected radar-month's published daily
+files in date order under one header into a gzip CSV. Both phases (``operators/pipeline.py``, which owns the layout)
 publish straight into the reference's S3-style names
 (``{source}/daily/{radar}/{yyyy}/{radar}_vpts_{yyyymmdd}.csv`` and
 ``{source}/monthly/{radar}/{yyyy}/{radar}_vpts_{yyyymm}.csv.gz``,

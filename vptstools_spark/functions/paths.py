@@ -28,8 +28,8 @@ _ODIM_FILENAME = re.compile(ODIM_FILENAME_REGEX, re.ASCII)
 def parse_odim_filename(name: Column) -> dict[str, Column]:
     """Extract (radar_code, data_type, year, month, day, hour, minute) from an
     ODIM h5 filename; empty string on mismatch (reference raises ValueError,
-    src/vptstools/s3.py:74-99 — at scale we keep the row and let callers
-    filter on ``radar_code != ''``).
+    src/vptstools/s3.py:74-99; ``operators.inventory.parse_inventory`` fails
+    the scan on an empty ``radar_code``).
 
     One `regexp_replace` packs all 7 capture groups into a tab-joined string
     (7× cheaper than seven `regexp_extract` calls, each of which re-runs the
@@ -77,9 +77,9 @@ def daily_group_cols(file: Column) -> list[Column]:
     does (proven by the golden coverage fixture, tests/test_golden.py).
 
     A filename that does not match the grammar parses to empty-string keys;
-    `operators.inventory.parse_inventory` routes those rows (error / drop /
-    keep) so malformed names never silently pool into one coverage group —
-    the reference raises ValueError on the same input (s3.py:74-99)."""
+    `operators.inventory.parse_inventory` fails on those rows so malformed
+    names never silently pool into one coverage group — the reference raises
+    ValueError on the same input (s3.py:74-99)."""
     parts = F.split(file, "/")
     name = F.element_at(parts, -1)
     parsed = parse_odim_filename(name)

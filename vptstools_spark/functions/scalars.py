@@ -113,21 +113,3 @@ def lit_double_array(values) -> Column:
     if all(v == v and v not in (float("inf"), float("-inf")) for v in vals):
         return F.expr("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
     return F.array(*[F.lit(v) for v in vals])
-
-
-def sql_in_strings(expr_sql: str, values) -> Column:
-    """``expr_sql IN ('v1', 'v2', …)`` in ONE py4j round-trip.
-
-    ``Column.isin(*values)`` costs one JVM call per value: 8-14 s of
-    driver time for 20,000 radar-day keys on 4 cores, against 25-50 ms for
-    one ``F.expr`` string that parses to the same predicate (the optimizer
-    turns a long literal ``IN`` into a hash-set ``InSet``). Values are escaped for
-    Spark's default backslash-escaping string-literal grammar. An empty
-    list is ``false``: SQL has no empty ``IN ()``.
-    """
-    quoted = [
-        "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
-    ]
-    if not quoted:
-        return F.lit(False)
-    return F.expr(f"{expr_sql} IN ({','.join(quoted)})")

@@ -29,40 +29,21 @@ def read_inventory(spark: SparkSession, path: str | list[str]) -> DataFrame:
     return df.withColumn("modified", F.to_timestamp("modified", MODIFIED_FORMAT))
 
 
-def parse_inventory(df: DataFrame, on_malformed: str = "error") -> DataFrame:
+def parse_inventory(df: DataFrame) -> DataFrame:
     """Path feature extraction P11-P13 + h5 filter F1
-    (reference: src/vptstools/s3.py:289-297).
-
-    ``on_malformed`` routes ``.h5`` keys whose FILENAME does not match the
-    ODIM grammar (parsed ``radar_code`` comes back empty — they would
-    otherwise collapse into one bogus all-empty coverage group):
-
-    - ``"error"`` (default): fail the scan, matching the reference's
-      ``parse_file_name`` ValueError (src/vptstools/s3.py:74-99);
-    - ``"drop"``: exclude them — the at-scale choice when one misnamed
-      object must not kill a whole inventory sweep;
-    - ``"keep"``: pass them through for callers that split them off
-      themselves (``F.col("radar_code") == ""``).
-    """
+    (reference: src/vptstools/s3.py:289-297). A ``.h5`` key whose FILENAME
+    does not match the ODIM grammar (its parsed ``radar_code`` comes back
+    empty) fails the scan with the file's name, as the reference's
+    ``parse_file_name`` raises ValueError (src/vptstools/s3.py:74-99),
+    instead of pooling into one bogus all-empty coverage group."""
     parsed = with_parsed_inventory(df).filter(F.col("suffix") == "h5")
-    bad = F.col("radar_code") == ""
-    if on_malformed == "error":
-        return parsed.withColumn(
-            "radar_code",
-            F.when(
-                bad,
-                F.raise_error(
-                    F.concat(
-                        F.lit("cannot parse ODIM filename: "), F.col("filename")
-                    )
-                ),
-            ).otherwise(F.col("radar_code")),
-        )
-    if on_malformed == "drop":
-        return parsed.filter(~bad)
-    if on_malformed == "keep":
-        return parsed
-    raise ValueError(f"on_malformed must be error|drop|keep, got {on_malformed!r}")
+    return parsed.withColumn(
+        "radar_code",
+        F.when(
+            F.col("radar_code") == "",
+            F.raise_error(F.concat(F.lit("cannot parse ODIM filename: "), F.col("filename"))),
+        ).otherwise(F.col("radar_code")),
+    )
 
 
 def coverage(df_parsed: DataFrame, recent: Column | None = None) -> DataFrame:

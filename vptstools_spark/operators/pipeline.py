@@ -7,9 +7,12 @@ s3.py:133-153).
 
 Reference shape: inventory → modified radar-days → per-day download+convert →
 daily CSV → per-month concat → monthly gzip CSV. Spark shape: the inventory
-and daily phases are declarative Spark jobs; the monthly phase is the
-reference's ordered concat, a local-file join of each source's radar-month
-daily files in date order (no Spark job). The published tree is the only
+and daily phases are declarative Spark jobs. The daily phase keys every
+profile row by the radar-day directory of the file it was decoded from
+(``{source}/{file_type}/{radar}/{yyyy}/{mm}/{dd}``), the key the work list
+and the published names use too. The monthly phase is the reference's
+ordered concat, a local-file join of each source's radar-month daily files
+in date order (no Spark job). The published tree is the only
 store, and both phases write with *partition-granularity idempotence*
 (SURVEY §2.8): a radar-day or radar-month is always recomputed whole and
 ``os.replace``d onto its published name, which makes re-runs and
@@ -25,27 +28,19 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vptstools_spark.functions.scalars import sql_in_strings
-from vptstools_spark.operators.vpts import to_vpts_table
+from vptstools_spark.operators.vpts import vpts_columns
 from vptstools_spark.schemas import get_vpts_version
 
 #: descriptor filename (reference: src/vptstools/vpts.py:20)
 DESCRIPTOR_FILENAME = "vpts.resource.json"
 
 
-def radar_day_filter(days: list[tuple[str, str]]) -> Column:
-    """True for profile rows whose content radar and ``yyyyMMdd`` date form
-    one of the ``(radar, yyyymmdd)`` pairs in ``days``: one literal ``IN``
-    over ``radar/yyyymmdd`` keys, built in one JVM call however long the
-    list is."""
-    return sql_in_strings(
-        "concat_ws('/', radar, date_format(ts, 'yyyyMMdd'))",
-        sorted({f"{radar}/{date}" for radar, date in days}),
-    )
+#: the staging partition columns: the radar-day key (source, radar, yyyymmdd)
+DAY_KEY = ("p_source", "p_radar", "p_date")
 
 
 def daily_vpts_job(
@@ -63,43 +58,47 @@ def daily_vpts_job(
     ``destination``. Returns how many files it published; a radar-day
     without rows publishes none.
 
-    Rows outside the work list are dropped by one literal predicate
-    (``radar_day_filter``, no Spark job). The plan writes into a staging
-    directory under ``destination``; each radar-day's part file is then
-    ``os.replace``d onto its published name, so a reader never sees a
-    partial file. Raises ValueError, before anything is published, when a
-    radar-day was written as more than one part file."""
-    targets: dict[tuple[str, str], list[str]] = {}
+    A profile row belongs to the radar-day directory of the file it was
+    decoded from (its ``path``), as in the reference, which converts each
+    radar-day folder's files into that folder's CSV. The plan writes into a
+    staging directory under ``destination``, partitioned by that key; each
+    work-list radar-day's part file is then ``os.replace``d onto its
+    published name, so a reader never sees a partial file, and rows of any
+    other directory are dropped with the staging directory. Raises
+    ValueError, before anything is published, when a radar-day was written
+    as more than one part file."""
+    targets: dict[tuple[str, str, str], str] = {}
     for day_dir in day_dirs:
         source, _ftype, radar, yyyy, mm, dd = day_dir.split("/")
-        targets.setdefault((radar, f"{yyyy}{mm}{dd}"), []).append(
-            os.path.join(destination, source, "daily", radar, yyyy, f"{radar}_vpts_{yyyy}{mm}{dd}.csv")
+        targets[source, radar, f"{yyyy}{mm}{dd}"] = os.path.join(
+            destination, source, "daily", radar, yyyy, f"{radar}_vpts_{yyyy}{mm}{dd}.csv"
         )
-    table = to_vpts_table(profiles.filter(radar_day_filter(list(targets))), vpts_csv_version)
+    # the radar-day key of each row's file path, derived before the
+    # exchange: the path itself never crosses the shuffle
+    segments = F.split("path", "/")
+    table = profiles.select(
+        *vpts_columns(get_vpts_version(vpts_csv_version)),
+        F.element_at(segments, -7).alias("p_source"),
+        F.element_at(segments, -5).alias("p_radar"),
+        F.concat(*[F.element_at(segments, i) for i in (-4, -3, -2)]).alias("p_date"),
+    )
     os.makedirs(destination, exist_ok=True)
     staging = tempfile.mkdtemp(prefix="_staging-", dir=destination)
     try:
         write_daily_store(table, staging)
-        parts: dict[tuple[str, str], str] = {}
-        for radar, date in targets:
-            partition = os.path.join(staging, f"p_radar={radar}", f"p_date={date}")
+        parts: dict[str, str] = {}
+        for day, target in targets.items():
+            partition = os.path.join(staging, *[f"{c}={v}" for c, v in zip(DAY_KEY, day)])
             found = glob.glob(os.path.join(glob.escape(partition), "*.csv"))
             if len(found) > 1:
-                raise ValueError(f"daily partition {radar}/{date} holds {len(found)} part files, not 1")
+                raise ValueError(f"daily partition {'/'.join(day)} holds {len(found)} part files, not 1")
             if found:
-                parts[radar, date] = found[0]
+                parts[target] = found[0]
         # every radar-day is whole before the first file is published
-        for key, part in parts.items():
-            first, *others = targets[key]
-            # one radar-day under two sources in one run: profile rows carry
-            # no source, so each source's file gets the rows of both
-            for target in others:
-                tmp = _beside(target)
-                shutil.copyfile(part, tmp)
-                os.replace(tmp, target)
-            os.makedirs(os.path.dirname(first), exist_ok=True)
-            os.replace(part, first)
-        return sum(len(targets[key]) for key in parts)
+        for target, part in parts.items():
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.replace(part, target)
+        return len(parts)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
@@ -114,24 +113,20 @@ def _beside(target: str) -> str:
 
 def write_daily_store(table: DataFrame, output_path: str) -> None:
     """``daily_vpts_job``'s staging write: one sorted CSV part file per
-    radar-day of ``table`` under ``p_radar=…/p_date=…`` (yyyymmdd) in
-    ``output_path``, which the job then publishes. The overwrite mode and the
-    one-file-per-partition limit are options of this write, so session
-    settings cannot change them."""
-    # re-derive partition cols from the rendered table (radar + yyyymmdd)
-    out = table.withColumn(
-        "p_radar", F.col("radar")
-    ).withColumn("p_date", F.regexp_replace(F.substring("datetime", 1, 10), "-", ""))
+    radar-day of ``table``, keyed by its ``DAY_KEY`` columns, under
+    ``p_source=…/p_radar=…/p_date=…`` (yyyymmdd) in ``output_path``, which
+    the job then publishes. The overwrite mode and the one-file-per-partition
+    limit are options of this write, so session settings cannot change them."""
     (
-        out.repartition("p_radar", "p_date")
+        table.repartition(*DAY_KEY)
         # partition cols lead the sort: the partitioned-file writer requires
         # rows clustered by partition values and would otherwise re-sort by
         # them alone, destroying the data order
         .sortWithinPartitions(
-            "p_radar", "p_date", "radar", "datetime", F.col("height").cast("int"), "source_file"
+            *DAY_KEY, "radar", "datetime", F.col("height").cast("int"), "source_file"
         )
         .write.mode("overwrite")
-        .partitionBy("p_radar", "p_date")
+        .partitionBy(*DAY_KEY)
         .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", 0)
         .option("header", "true")

@@ -51,14 +51,10 @@ def _render_measurement(col: str, spec: VptsCsvSpec) -> Column:
     )
 
 
-def to_vpts_table(profile_df: DataFrame, vpts_csv_version: str = "v1.0") -> DataFrame:
-    """Versioned mapping projection P1 (reference: src/vptstools/vpts_csv.py:258-295).
-
-    Input: long-format profile DataFrame (schemas.profile_long_schema).
-    Output: the 26 normative columns, all string-rendered, in normative order,
-    globally sorted by the version's sort rule.
-    """
-    spec = get_vpts_version(vpts_csv_version)
+def vpts_columns(spec: VptsCsvSpec) -> list[Column]:
+    """Versioned mapping projection P1 (reference: src/vptstools/vpts_csv.py:258-295)
+    over a long-format profile DataFrame (schemas.profile_long_schema): the
+    version's normative columns, all string-rendered, in normative order."""
     cols: dict[str, Column] = {
         "radar": F.col("radar"),
         "datetime": datetime_to_proper8601(F.col("ts")),
@@ -75,10 +71,14 @@ def to_vpts_table(profile_df: DataFrame, vpts_csv_version: str = "v1.0") -> Data
     }
     for m in spec.measurement_columns:
         cols[m] = _render_measurement(m, spec)
-    projected = profile_df.select(
-        *[cols[name].alias(name) for name in spec.columns]
-    )
-    return sort_vpts(projected, spec)
+    return [cols[name].alias(name) for name in spec.columns]
+
+
+def to_vpts_table(profile_df: DataFrame, vpts_csv_version: str = "v1.0") -> DataFrame:
+    """The profiles of ``profile_df`` as a VPTS table: ``vpts_columns``,
+    globally sorted by the version's sort rule."""
+    spec = get_vpts_version(vpts_csv_version)
+    return sort_vpts(profile_df.select(*vpts_columns(spec)), spec)
 
 
 def sort_vpts(df: DataFrame, spec: VptsCsvSpec) -> DataFrame:

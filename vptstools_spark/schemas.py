@@ -185,11 +185,13 @@ def get_vpts_version(version: str) -> VptsCsvSpec:
 def profile_long_schema() -> T.StructType:
     """Typed long-format schema of decoded VP profiles (one row per file×level).
 
-    This is the post-parse, pre-projection form (FIXTURES.md §1): one
-    nullable cell per measurement (rendered text for the doubles, long for
-    the counts) + a tinyint state flag per measurement.
+    This is the post-parse, pre-projection form (FIXTURES.md §1): the path
+    of the file the row was decoded from, one nullable cell per measurement
+    (rendered text for the doubles, long for the counts) + a tinyint state
+    flag per measurement.
     """
     fields = [
+        T.StructField("path", T.StringType(), False),
         T.StructField("source_file", T.StringType(), False),
         T.StructField("radar", T.StringType(), False),
         T.StructField("ts", T.TimestampType(), False),

@@ -627,12 +627,14 @@ class H5Group:
     def __iter__(self):
         return iter(self.keys())
 
-    def __contains__(self, name: str) -> bool:
+    def __contains__(self, path: str) -> bool:
+        # answered from the parent's link table: the child itself is not built
+        parent, _, name = path.strip("/").rpartition("/")
         try:
-            self[name]
-            return True
+            node = self[parent]
         except KeyError:
             return False
+        return isinstance(node, H5Group) and (not name or name in node._links)
 
     def __getitem__(self, path: str) -> "H5Group | H5Dataset":
         node: H5Group | H5Dataset = self

@@ -14,6 +14,11 @@ is the one per-file decode loop: the ``format("odim")`` DataSource
 (sources/odim_datasource.py) runs it too, so both faces share one failure
 policy (``on_error``: warn | fail).
 
+Each row carries the path of the file it was decoded from (the binaryFile
+``path``): the daily phase keys its radar-day files by that path's
+``{source}/{file_type}/{radar}/{yyyy}/{mm}/{dd}`` directory, as the
+reference does by listing each radar-day folder.
+
 The decode loop also renders each double measurement cell to its CPython
 ``repr`` text (``render_double``), the form the reference's CSV carries
 (numpy ``.tolist()`` → pandas ``to_csv``, reference vpts.py:58-63). Java's
@@ -128,9 +133,9 @@ def parse_odim_bytes(name: str, content: bytes, source_file: str | None = None) 
     Mirrors reference BirdProfile.from_odim + to_vp explode
     (src/vptstools/vpts.py:138-177) but emits cells + state flags instead of
     an all-string frame: double measurements as ``render_double`` text,
-    counts as ints, ``gap`` as bool. Uses h5py when installed; otherwise the
-    bundled pure-Python HDF5 reader (sources/hdf5.py) — same subset API, so
-    the byte path runs everywhere.
+    counts as ints, ``gap`` as bool; every row's ``path`` is ``name``. Uses
+    h5py when installed; otherwise the bundled pure-Python HDF5 reader
+    (sources/hdf5.py) — same subset API, so the byte path runs everywhere.
     """
     with _open_h5(content) as hdf5:
         for group in ("what", "where", "how"):
@@ -177,6 +182,7 @@ def parse_odim_bytes(name: str, content: bytes, source_file: str | None = None) 
         n_levels = len(levels)
 
         base = {
+            "path": name,
             "source_file": source_file or name.rsplit("/", 1)[-1],
             "radar": identifiers.get("NOD", ""),
             "ts": ts,
@@ -300,7 +306,8 @@ def read_vp_files(
 
 def profiles_from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
     """Build the long-format profile DataFrame from pre-decoded row dicts,
-    so VPTS rendering can be driven without HDF5 bytes. Double measurement
+    each with the ``path`` of the file it stands for, so VPTS rendering can
+    be driven without HDF5 bytes. Double measurement
     cells are given as floats and rendered by ``render_double``, as the
     decoder renders them."""
     rendered = [{**r, **{c: render_double(r[c]) for c in TEXT_CELLS if c in r}} for r in records]
