@@ -63,8 +63,7 @@ def test_source_str_to_map(spark):
 def test_parse_odim_filename(spark):
     # reference: src/vptstools/s3.py:74-109
     name = F.lit("baltrad/hdf5/bejab/2022/11/11/bejab_vp_20221111T233000Z_0x9.h5")
-    parts = parse_odim_filename(name)
-    row = spark.range(1).select(*[v.alias(k) for k, v in parts.items()]).collect()[0]
+    row = parse_odim_filename(spark.range(1), name).collect()[0]
     assert row.radar_code == "bejab"
     assert row.data_type == "vp"
     assert (row.year, row.month, row.day) == ("2022", "11", "11")
@@ -72,8 +71,7 @@ def test_parse_odim_filename(spark):
 
 
 def test_parse_odim_filename_mismatch_empty(spark):
-    parts = parse_odim_filename(F.lit("coverage.csv"))
-    row = spark.range(1).select(*[v.alias(k) for k, v in parts.items()]).collect()[0]
+    row = parse_odim_filename(spark.range(1), F.lit("coverage.csv")).collect()[0]
     assert row.radar_code == ""
 
 
@@ -111,12 +109,7 @@ def test_parse_odim_filename_reference_cases(spark):
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame([(p,) for p, _ in cases], "path string")
-    parsed = parse_odim_filename(F.col("path"))
-    got = df.select(
-        "path",
-        *[parsed[k].alias(k)
-          for k in ["radar_code", "data_type", "year", "month", "day", "hour", "minute"]],
-    ).collect()
+    got = parse_odim_filename(df, F.col("path")).collect()
     by_path = {r["path"]: (r["radar_code"], r["data_type"], r["year"],
                            r["month"], r["day"], r["hour"], r["minute"])
                for r in got}

@@ -1,6 +1,7 @@
 """Inventory analytics operators (reference: tests/test_s3.py)."""
 
 import datetime
+import gzip
 
 import pytest
 
@@ -11,6 +12,7 @@ from vptstools_spark.operators.inventory import (
     modified_window,
     monthly_rollup,
     parse_inventory,
+    read_inventory,
 )
 
 ROWS = [
@@ -32,6 +34,20 @@ def test_parse_filters_non_h5(spark):
     parsed = parse_inventory(_inv(spark))
     assert parsed.count() == 4
     assert {r["suffix"] for r in parsed.collect()} == {"h5"}
+
+
+def test_parse_runs_the_filename_regex_once(spark, tmp_path):
+    """The seven filename fields read ONE regexp_replace per key: the split
+    is bound in its own projection, which CollapseProject keeps because the
+    fields reference it more than once. Built as one Column tree, each
+    conditional field carried its own copy, eight in the optimized plan."""
+    part = tmp_path / "part-0.csv.gz"
+    with gzip.open(part, "wt") as fh:
+        fh.writelines(f'"{repo}","{key}","{size}","2023-03-12T01:00:00.000Z"\n' for repo, key, size, _ in ROWS)
+    parsed = parse_inventory(read_inventory(spark, str(part)))
+    plan = parsed._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_replace(") == 1, plan
+    assert parsed.count() == 4
 
 
 def test_coverage_counts(spark):

@@ -139,9 +139,9 @@ def test_manifest_run_recomputes_window_days_and_coverage(spark, fleet, tmp_path
         assert fh.read() == "directory,file_count\n" + "".join(
             f"{d},{PER_DAY}\n" for d in sorted(oracle["days"])
         )
-    # one inventory scan into a checkpointed per-day aggregate (2), the
-    # coverage write and the day collect from it (2), daily 2, monthly none
-    assert jobs <= 6, f"{jobs} Spark jobs"
+    # one inventory scan into a per-day aggregate collected to the driver
+    # (2), which writes coverage.csv from it; daily 2, monthly none
+    assert jobs <= 4, f"{jobs} Spark jobs"
     # the untouched month is neither re-joined nor republished
     _assert_unchanged(march)
     # the reference's layout and nothing else: no store, no staging directory
@@ -227,6 +227,88 @@ def test_manifest_run_rejects_misnamed_key(spark, fleet, tmp_path):
             h5_root=h5_root, destination=dest, spark=spark,
         )
     assert not glob.glob(os.path.join(dest, "**", "*_vpts_*"), recursive=True)
+
+
+def _manifest(folder, lines: list[str]) -> str:
+    """An inventory of one gzip part holding ``lines`` under ``folder``;
+    -> the path of its manifest."""
+    folder.mkdir()
+    with gzip.open(folder / "part-0.csv.gz", "wt") as fh:
+        fh.writelines(lines)
+    manifest = folder / "manifest.json"
+    manifest.write_text(json.dumps({"files": [{"key": "data/part-0.csv.gz"}]}))
+    return str(manifest)
+
+
+def test_misfiled_one_file_day_is_skipped_in_both_modes(spark, fleet, tmp_path, capsys):
+    """A folder whose only file is named for another day puts that day's
+    directory, which does not exist, into the work list. Like the
+    reference's per-day loop, the run skips it with a warning and publishes
+    every other day, in both modes; the misfiled file is converted nowhere."""
+    h5_root, oracle = fleet
+    root = str(tmp_path / "h5")
+    shutil.copytree(h5_root, root)
+    day = sorted(d for d in oracle["days"] if d.endswith("2023/03/30"))[0]
+    first, *rest = sorted(os.listdir(os.path.join(root, day)))
+    for name in rest:
+        os.remove(os.path.join(root, day, name))
+    misfiled = first.replace("_20230330T", "_20230329T")
+    os.rename(os.path.join(root, day, first), os.path.join(root, day, misfiled))
+    absent = day.replace("2023/03/30", "2023/03/29")
+    kept = {"days": {d: v for d, v in oracle["days"].items() if d != day}}
+
+    dest = str(tmp_path / "backfill")
+    warning = f"[WARNING] - No folder {os.path.join(root, absent)} holds"
+    capsys.readouterr()
+    result = run(path_folder="baltrad", h5_root=root, destination=dest, spark=spark)
+    assert warning in capsys.readouterr().out
+    assert result["days"] == sorted(kept["days"])
+    assert (result["daily"], result["monthly"]) == (5, 4)
+    _expect(dest, kept, list(kept["days"]))
+
+    keys = [
+        os.path.relpath(p, root)
+        for p in glob.glob(os.path.join(root, "**", "*.h5"), recursive=True)
+    ]
+    manifest = _manifest(
+        tmp_path / "inventory",
+        [f'"b","{k}","1","2023-04-02T00:00:00.000Z"\n' for k in sorted(keys)],
+    )
+    dest = str(tmp_path / "cron")
+    result = run(
+        manifest=manifest, modified_days_ago=1, now="2023-04-02 03:00:00",
+        h5_root=root, destination=dest, spark=spark,
+    )
+    assert warning in capsys.readouterr().out
+    assert result["days"] == sorted(kept["days"])
+    _expect(dest, kept, list(kept["days"]))
+    # coverage counts the misfiled key under its filename's day
+    with open(os.path.join(dest, "coverage.csv"), encoding="utf-8") as fh:
+        assert fh.read() == "directory,file_count\n" + "".join(
+            f"{d},{1 if d == absent else PER_DAY}\n" for d in sorted([absent, *kept["days"]])
+        )
+
+
+def test_manifest_without_h5_keys_publishes_header_only_coverage(spark, fleet, tmp_path):
+    """An inventory whose parts hold no ``.h5`` key: the run writes a
+    header-only coverage.csv, selects no radar-day, publishes no daily or
+    monthly file and raises nothing."""
+    h5_root, oracle = fleet
+    day = sorted(oracle["days"])[0]
+    manifest = _manifest(
+        tmp_path / "inventory",
+        [f'"b","{day}/{name}","1","2023-04-02T00:00:00.000Z"\n'
+         for name in ("coverage.log", "manifest.json", "notes.h5.txt")],
+    )
+    dest = str(tmp_path / "dest")
+    result = run(
+        manifest=manifest, modified_days_ago=1, now="2023-04-02 03:00:00",
+        h5_root=h5_root, destination=dest, spark=spark,
+    )
+    assert result == {"days": [], "daily": 0, "monthly": 0}
+    with open(os.path.join(dest, "coverage.csv"), encoding="utf-8") as fh:
+        assert fh.read() == "directory,file_count\n"
+    assert os.listdir(dest) == ["coverage.csv"]
 
 
 def test_sources_sharing_a_radar_day_keep_their_own_months(spark, fleet, tmp_path):

@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vptstools_spark.functions.paths import parse_odim_filename
 from vptstools_spark.io import fan_out, table
 from vptstools_spark.operators.inventory import (
     coverage,
@@ -93,18 +92,12 @@ def q_inv_monthly_rollup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_odim_filename_parse(spark: SparkSession, sf: str) -> DataFrame:
-    """ODIM filename grammar P11 (reference s3.py:74-109): regex-extract the
-    (radar, year, month, day) record from the key and re-aggregate; the
-    oracle recomputes from the raw timestamp, proving the parse."""
-    inv = parse_inventory(synth_inventory(spark, sf))
-    parts = parse_odim_filename(F.col("file"))
+    """ODIM filename grammar P11 (reference s3.py:74-109): the (radar, year,
+    month, day) record ``parse_inventory`` extracted from each key's
+    filename, re-aggregated; the oracle recomputes from the raw timestamp,
+    proving the parse."""
     return (
-        inv.select(
-            parts["radar_code"].alias("radar_code"),
-            parts["year"].alias("year"),
-            parts["month"].alias("month"),
-            parts["day"].alias("day"),
-        )
+        parse_inventory(synth_inventory(spark, sf))
         .groupBy("radar_code", "year", "month", "day")
         .agg(F.count("*").alias("n_files"))
     )

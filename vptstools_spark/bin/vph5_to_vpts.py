@@ -5,11 +5,15 @@ Option-for-option mirror of the reference CLI
 (reference: src/vptstools/bin/vph5_to_vpts.py:30-251): ``--modified-days-ago``
 drives inventory-based incremental selection, ``--path-folder`` (the
 reference's ``--path-s3-folder``) recreates every radar-day under one
-subtree instead. The radar-day list comes from the inventory's Spark
-aggregate in the first mode; in the second, the driver groups its own glob
-listing with the filename grammar (``functions/paths.radar_day_directory``)
-and starts no job for it. Where the reference loops radar-days on the driver
-(download → pandas convert → upload per day), this CLI runs ONE Spark plan
+subtree instead. In the first mode the radar-day list comes from the
+inventory's per-radar-day Spark aggregate, collected to the driver, which
+writes ``coverage.csv`` from the same rows; in the second, the driver groups
+its own glob listing with the filename grammar
+(``functions/paths.radar_day_directory``) and starts no job for it. A listed
+radar-day whose folder does not exist (its files are all misfiled under
+another date) is skipped with a warning. Where the reference loops
+radar-days on the driver (download → pandas convert → upload per day), this
+CLI runs ONE Spark plan
 for the daily phase: binaryFile scan of the affected day directories →
 daily VPTS write, one CSV per scanned directory, keyed by the
 ``(source, radar, yyyymmdd)`` of each row's file path. The monthly phase
@@ -48,9 +52,9 @@ from vptstools_spark.operators.inventory import coverage, handle_manifest  # noq
 from vptstools_spark.operators.pipeline import (
     daily_vpts_job,
     monthly_vpts_job,
+    write_coverage,
     write_descriptor,
 )
-from vptstools_spark.operators.vpts import vpts_to_csv
 from vptstools_spark.session import get_spark
 
 
@@ -93,9 +97,9 @@ def run(
         # the driver holds the listing, so it groups it with the path grammar
         # and starts no job; a name the grammar cannot parse fails the run
         # (the manifest path's policy) before any Spark work
-        day_dirs = sorted(
-            {radar_day_directory(os.path.relpath(p, h5_root)) for p in names}
-        )
+        keys = [os.path.relpath(p, h5_root) for p in names]
+        day_dirs = sorted({radar_day_directory(k) for k in keys})
+        exists = {os.path.dirname(k) for k in keys}.__contains__
     else:
         if not manifest:
             raise click.UsageError("VPTS_MANIFEST must be set (or use --path-folder)")
@@ -108,18 +112,31 @@ def run(
                 "Recreate the full set of files (files modified since "
                 f"{modified_days_ago} days). This will take a while!"
             )
-        df_cov, days = handle_manifest(
+        coverage_rows, days = handle_manifest(
             spark, manifest, modified_days_ago=modified_days_ago, now=now
         )
         click.echo("Save coverage file to S3.")
-        # coverage is radar-days-sized: sorting inside the one partition
-        # gives the bytes of a global orderBy without its sampling job
-        vpts_to_csv(
-            df_cov.coalesce(1).sortWithinPartitions("directory"),
-            os.path.join(destination, "coverage.csv"),
+        write_coverage(destination, coverage_rows)
+        day_dirs = [directory for directory, _count in days]
+        jvm = spark.sparkContext._jvm
+        fs = jvm.org.apache.hadoop.fs.Path(h5_root).getFileSystem(
+            spark.sparkContext._jsc.hadoopConfiguration()
         )
-        # radar-days are driver-sized (the work list)
-        day_dirs = [r["directory"] for r in days.collect()]
+
+        def exists(day_dir: str) -> bool:
+            return fs.exists(jvm.org.apache.hadoop.fs.Path(os.path.join(h5_root, day_dir)))
+
+    # the work list names a radar-day by its filenames' radar and date, so a
+    # folder whose files are all misfiled names a directory that does not
+    # exist; like the reference's per-day loop (bin/vph5_to_vpts.py:198-200),
+    # the run warns and converts the other days
+    missing = {d for d in day_dirs if not exists(d)}
+    for day_dir in sorted(missing):
+        click.echo(
+            f"[WARNING] - No folder {os.path.join(h5_root, day_dir)} holds the "
+            "files named for this radar-day; skipped."
+        )
+    day_dirs = [d for d in day_dirs if d not in missing]
 
     click.echo(f"Create {len(day_dirs)} daily VPTS files.")
     if not day_dirs:

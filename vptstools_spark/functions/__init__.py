@@ -9,6 +9,5 @@ from vptstools_spark.functions.scalars import (  # noqa: F401
 from vptstools_spark.functions.paths import (  # noqa: F401
     parse_odim_filename,
     inventory_path_features,
-    daily_group_cols,
     directory_col,
 )

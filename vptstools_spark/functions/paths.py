@@ -4,7 +4,9 @@ The reference models S3 keys as parseable records
 (`{source}/{file_type}/{radar_code}/{yyyy}/{mm}/{dd}/{name}.h5`, filename
 grammar at src/vptstools/s3.py:100-109, path properties at s3.py:11-153).
 Here each derived attribute is a column expression, so parsing fuses into the
-scan and Catalyst prunes whatever downstream doesn't use. A listing the
+scan and Catalyst prunes whatever downstream doesn't use; the filename
+fields read one regex result, bound as a column of its own projection
+(``parse_odim_filename``). A listing the
 driver already holds (the CLI's ``--path-folder`` glob) is grouped into
 radar-days with the same grammar in plain Python, ``radar_day_directory``.
 """
@@ -25,28 +27,35 @@ ODIM_FILENAME_REGEX = (
 _ODIM_FILENAME = re.compile(ODIM_FILENAME_REGEX, re.ASCII)
 
 
-def parse_odim_filename(name: Column) -> dict[str, Column]:
-    """Extract (radar_code, data_type, year, month, day, hour, minute) from an
-    ODIM h5 filename; empty string on mismatch (reference raises ValueError,
-    src/vptstools/s3.py:74-99; ``operators.inventory.parse_inventory`` fails
-    the scan on an empty ``radar_code``).
+#: the column ``parse_odim_filename`` binds the packed capture groups to
+_ODIM_PARTS = "_odim_parts"
+
+
+def parse_odim_filename(df: DataFrame, name: Column) -> DataFrame:
+    """``df`` with the ODIM filename fields (radar_code, data_type, year,
+    month, day, hour, minute) of ``name`` appended; empty strings on a
+    mismatch (the reference raises ValueError, src/vptstools/s3.py:74-99;
+    ``operators.inventory.parse_inventory`` fails the scan on an empty
+    ``radar_code``).
 
     One `regexp_replace` packs all 7 capture groups into a tab-joined string
     (7× cheaper than seven `regexp_extract` calls, each of which re-runs the
     full backtracking regex per row — this parse sits on every inventory
-    scan). A filename cannot contain a tab, so tab-presence doubles as the
-    match flag; the shared `split` is eliminated as a common subexpression
-    in codegen."""
-    packed = F.regexp_replace(
-        name, ODIM_FILENAME_REGEX, "$1\t$2\t$3\t$4\t$5\t$6\t$7"
-    )
-    parts = F.split(packed, "\t")
+    scan). A filename cannot contain a tab, so a 7-way split doubles as the
+    match flag. The split is a column of its own projection, which the
+    fields read by reference: Catalyst's CollapseProject does not inline a
+    non-cheap expression that the next projection references more than
+    once, so the regex runs once per row. Written as one Column tree, each
+    conditional field would carry its own copy, which codegen does not
+    share (the optimized plan then held eight)."""
+    packed = F.regexp_replace(name, ODIM_FILENAME_REGEX, "$1\t$2\t$3\t$4\t$5\t$6\t$7")
+    parts = F.col(_ODIM_PARTS)
     ok = F.size(parts) == 7
 
     def field(i: int) -> Column:
         return F.when(ok, F.element_at(parts, i)).otherwise(F.lit(""))
 
-    return {
+    fields = {
         "radar_code": F.lower(field(1)),
         "data_type": field(2),
         "year": field(3),
@@ -55,6 +64,9 @@ def parse_odim_filename(name: Column) -> dict[str, Column]:
         "hour": field(6),
         "minute": field(7),
     }
+    return df.select("*", F.split(packed, "\t").alias(_ODIM_PARTS)).select(
+        *[F.col(c) for c in df.columns], *[v.alias(k) for k, v in fields.items()]
+    )
 
 
 def inventory_path_features(file: Column) -> dict[str, Column]:
@@ -68,34 +80,9 @@ def inventory_path_features(file: Column) -> dict[str, Column]:
     }
 
 
-def daily_group_cols(file: Column) -> list[Column]:
-    """The radar-day grouping key derived from a full S3 key
-    (reference: src/vptstools/s3.py:51-71, 177-225): source and file_type
-    come from the path segments, but radar_code/year/month/day come from the
-    FILENAME grammar — a misfiled object (directory date ≠ filename date)
-    groups under its filename date, exactly as `OdimFilePath.from_inventory`
-    does (proven by the golden coverage fixture, tests/test_golden.py).
-
-    A filename that does not match the grammar parses to empty-string keys;
-    `operators.inventory.parse_inventory` fails on those rows so malformed
-    names never silently pool into one coverage group — the reference raises
-    ValueError on the same input (s3.py:74-99)."""
-    parts = F.split(file, "/")
-    name = F.element_at(parts, -1)
-    parsed = parse_odim_filename(name)
-    return [
-        F.element_at(parts, 1).alias("source"),
-        F.element_at(parts, 2).alias("file_type"),
-        parsed["radar_code"].alias("radar_code"),
-        parsed["year"].alias("year"),
-        parsed["month"].alias("month"),
-        parsed["day"].alias("day"),
-    ]
-
-
 def radar_day_directory(key: str) -> str:
-    """Driver-side ``daily_group_cols`` joined by ``directory_col``: the
-    radar-day directory ``source/file_type/radar/yyyy/mm/dd`` that
+    """Driver-side ``with_parsed_inventory`` key joined by ``directory_col``:
+    the radar-day directory ``source/file_type/radar/yyyy/mm/dd`` that
     ``operators.inventory.coverage`` groups ``key`` under. Source and
     file_type are the key's first two segments; radar (lower-cased) and date
     come from the filename, so a misfiled object groups under its filename
@@ -115,13 +102,27 @@ def directory_col(*cols: Column) -> Column:
 
 
 def with_parsed_inventory(df: DataFrame, file_col: str = "file") -> DataFrame:
-    """Attach all path-derived columns to an inventory DataFrame in one select
-    (single projection → Catalyst column pruning decides what survives)."""
-    file = F.col(file_col)
+    """Attach the path-derived columns to an inventory DataFrame: source,
+    filename and suffix (``inventory_path_features``, a column ``df``
+    already has keeps its value), then the radar-day grouping key
+    (reference: src/vptstools/s3.py:51-71, 177-225). Source and file_type
+    come from the path segments, but radar_code/year/month/day come from the
+    FILENAME grammar (``parse_odim_filename``, one regex per key) — a
+    misfiled object (directory date ≠ filename date) groups under its
+    filename date, exactly as `OdimFilePath.from_inventory` does (proven by
+    the golden coverage fixture, tests/test_golden.py). Catalyst column
+    pruning decides what survives.
+
+    A filename that does not match the grammar parses to empty-string keys;
+    `operators.inventory.parse_inventory` fails on those rows so malformed
+    names never silently pool into one coverage group — the reference raises
+    ValueError on the same input (s3.py:74-99)."""
+    segments = F.split(F.col(file_col), "/")
     named: dict[str, Column] = {c: F.col(c) for c in df.columns}
-    for name, expr in inventory_path_features(file).items():
+    for name, expr in inventory_path_features(F.col(file_col)).items():
         named.setdefault(name, expr)
-    group_names = ["source", "file_type", "radar_code", "year", "month", "day"]
-    for name, col in zip(group_names, daily_group_cols(file)):
-        named.setdefault(name, col)
-    return df.select(*[expr.alias(name) for name, expr in named.items()])
+    named.setdefault("file_type", F.element_at(segments, 2))
+    keyed = df.select(*[expr.alias(name) for name, expr in named.items()])
+    return parse_odim_filename(keyed, F.element_at(segments, -1)).select(
+        *named, "radar_code", "year", "month", "day"
+    )

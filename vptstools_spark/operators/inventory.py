@@ -81,10 +81,8 @@ def modified_window(df_parsed: DataFrame, days: int, now=None) -> DataFrame:
 
 def days_to_create_vpts(df_parsed: DataFrame, days: int, now=None) -> DataFrame:
     """Radar-days needing (re)derivation A3 (reference: src/vptstools/s3.py:368-382):
-    group-count of the window-filtered subset. This is the incremental
-    partition-selection input: it is radar-days-sized, so callers collect
-    its ``directory`` values and hand them to ``pipeline.daily_vpts_job``
-    and ``pipeline.monthly_vpts_job``."""
+    group-count of the window-filtered subset, as a frame of its own;
+    ``handle_manifest`` takes the same days from its one aggregate."""
     return coverage(modified_window(df_parsed, days, now))
 
 
@@ -119,15 +117,18 @@ def handle_manifest(
     key_to_path=None,
 ):
     """Manifest → (full coverage, days to recreate) — the reference's
-    `handle_manifest` e2e contract (src/vptstools/s3.py:386-443): coverage
-    aggregates the WHOLE inventory; days_to_create_vpts group-counts only
-    the files modified inside the lookback window.
+    `handle_manifest` e2e contract (src/vptstools/s3.py:386-443), which
+    returns two pandas frames: coverage aggregates the WHOLE inventory; the
+    days to recreate count only the files modified inside the lookback
+    window.
 
     Both come from ONE per-radar-day aggregate, ``count(*)`` next to
-    ``count_if(modified_since)``, materialized once with
-    ``localCheckpoint``: the inventory is gzip-scanned and regex-parsed once,
-    not once per result. Both frames are projections of that
-    radar-days-sized checkpoint.
+    ``count_if(modified_since)``, collected once: the inventory is
+    gzip-scanned and regex-parsed once. The aggregate is radar-days-sized,
+    so both results are driver lists sorted by ``directory``: the
+    ``(directory, file_count)`` of every radar-day, and the
+    ``(directory, recent_count)`` of those with a file modified inside the
+    window.
 
     ``key_to_path`` maps a manifest key to a readable path (production: an
     s3:// URL; tests: the fixture directory) — same dependency-injection
@@ -139,8 +140,8 @@ def handle_manifest(
     resolve = key_to_path or (lambda k: os.path.join(root, os.path.basename(k)))
     paths = [resolve(k) for k in list_manifest_file_keys(manifest_path)]
     parsed = parse_inventory(read_inventory(spark, paths))
-    per_day = coverage(parsed, modified_since(modified_days_ago, now)).localCheckpoint()
-    days = per_day.filter(F.col("recent_count") > 0).select(
-        "directory", F.col("recent_count").alias("file_count")
+    per_day = sorted(coverage(parsed, modified_since(modified_days_ago, now)).collect())
+    return (
+        [(r["directory"], r["file_count"]) for r in per_day],
+        [(r["directory"], r["recent_count"]) for r in per_day if r["recent_count"] > 0],
     )
-    return per_day.select("directory", "file_count"), days

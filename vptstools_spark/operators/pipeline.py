@@ -12,8 +12,10 @@ profile row by the radar-day directory of the file it was decoded from
 (``{source}/{file_type}/{radar}/{yyyy}/{mm}/{dd}``), the key the work list
 and the published names use too. The monthly phase is the reference's
 ordered concat, a local-file join of each source's radar-month daily files
-in date order (no Spark job). The published tree is the only
-store, and both phases write with *partition-granularity idempotence*
+in date order (no Spark job), and ``coverage.csv`` is written on the
+driver from the inventory's collected per-radar-day aggregate. The
+published tree is the only store, and both phases write with
+*partition-granularity idempotence*
 (SURVEY §2.8): a radar-day or radar-month is always recomputed whole and
 ``os.replace``d onto its published name, which makes re-runs and
 late-arriving files exactly-once-by-idempotence — no row-level upsert state.
@@ -21,6 +23,7 @@ late-arriving files exactly-once-by-idempotence — no row-level upsert state.
 
 from __future__ import annotations
 
+import csv
 import glob
 import gzip
 import json
@@ -192,6 +195,22 @@ def monthly_vpts_job(destination: str, day_dirs: list[str]) -> int:
                     shutil.copyfileobj(src, out)
         os.replace(tmp, target)
     return len(headers)
+
+
+def write_coverage(destination: str, rows: list[tuple[str, int]]) -> None:
+    """Coverage sink K3 (reference: bin/vph5_to_vpts.py:146-151, a pandas
+    ``to_csv``): ``coverage.csv`` under ``destination``, a
+    ``directory,file_count`` header and one line per ``rows`` item in the
+    given order, each field quoted only where it needs to be, as pandas
+    does. The rows are radar-days-sized, so the driver writes them beside
+    the published name and ``os.replace``s the file onto it."""
+    target = os.path.join(destination, "coverage.csv")
+    tmp = _beside(target)
+    with open(tmp, "w", encoding="utf-8", newline="") as fh:
+        out = csv.writer(fh, lineterminator="\n")
+        out.writerow(("directory", "file_count"))
+        out.writerows(rows)
+    os.replace(tmp, target)
 
 
 def write_descriptor(path: str, vpts_csv_version: str = "v1.0") -> str:
