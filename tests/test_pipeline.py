@@ -186,3 +186,43 @@ def test_sources_sharing_a_radar_day_publish_their_own_rows(spark, tmp_path):
         daily = os.path.join(out, source, "daily", radar, y, f"{radar}_vpts_{y}{m}{d}.csv")
         with open(daily, newline="") as fh:
             assert fh.read() == "\n".join([odim_fleet.CSV_HEADER, *lines]) + "\n"
+
+
+def test_all_nodata_and_all_undetect_profiles_publish_and_validate(spark, tmp_path):
+    """Two ODIM files whose every quantity but HGHT is nodata (NaN) in one
+    and undetect (+inf) in the other publish every measurement cell, counts
+    included, as "" and "NaN", with an empty ``gap``; the re-read daily file
+    passes ``validate_vpts``."""
+    import random
+
+    import numpy as np
+
+    from vptstools_spark.operators.vpts import validate_vpts
+    from vptstools_spark.schemas import VPTS_CSV_V1
+    from vptstools_spark.sources.odim import read_vp_files
+
+    radar = odim_fleet.Radar("nodat", random.Random(1))
+    day_dir = "baltrad/hdf5/nodat/2023/03/11"
+    os.makedirs(tmp_path / day_dir)
+    expected = {}
+    for minute, fill, cell in [(0, np.nan, ""), (5, np.inf, "NaN")]:
+        ts = datetime.datetime(2023, 3, 11, 0, minute)
+        profile = {q: np.full(odim_fleet.N_LEVELS, fill) for q, _kind in odim_fleet.QUANTITIES[1:]}
+        profile["HGHT"] = np.arange(odim_fleet.N_LEVELS, dtype=np.float64) * odim_fleet.INTERVAL
+        name = f"nodat_vp_{ts:%Y%m%dT%H%M}00Z_0x9.h5"
+        (tmp_path / day_dir / name).write_bytes(odim_fleet.vp_file_bytes(radar, ts, profile))
+        expected[name] = cell
+    out = str(tmp_path / "out")
+    profiles = read_vp_files(spark, str(tmp_path / day_dir))
+    assert daily_vpts_job(spark, profiles, [day_dir], out) == 1
+    daily = read_daily_csv_string_preserving(
+        spark, os.path.join(out, "baltrad", "daily", "nodat", "2023", "nodat_vpts_20230311.csv")
+    )
+    rows = daily.collect()
+    assert len(rows) == 2 * odim_fleet.N_LEVELS
+    assert len(VPTS_CSV_V1.measurement_columns) == 14
+    for row in rows:
+        cell = expected[row["source_file"]]
+        assert {row[m] for m in VPTS_CSV_V1.measurement_columns} == {cell}
+        assert row["gap"] == ""
+    assert validate_vpts(daily).collect() == []

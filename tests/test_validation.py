@@ -13,7 +13,7 @@ from vptstools_spark.operators.vpts import (
     validate_vpts,
     validate_vpts_order,
 )
-from vptstools_spark.schemas import V1_FIELD_RULES, VPTS_CSV_V1, get_vpts_version
+from vptstools_spark.schemas import VPTS_CSV_V1, get_vpts_version
 from vptstools_spark.sources.odim import profiles_from_records
 
 
@@ -35,9 +35,13 @@ def test_clean_table_validates(clean):
     assert _rules(clean) == {}
 
 
-def test_rules_cover_all_26_columns():
-    assert set(V1_FIELD_RULES) == set(VPTS_CSV_V1.columns)
-    assert len(V1_FIELD_RULES) == 26
+def test_rules_cover_all_26_columns(clean):
+    # a non-missing "x" in every cell breaks the type rule of every typed
+    # column; the two string columns have none ("x" is a safe source_file)
+    got = _rules(clean.select(*[F.lit("x").alias(c) for c in clean.columns]))
+    assert len(VPTS_CSV_V1.columns) == 26
+    assert {rule.rsplit("_", 1)[0] for rule in got} == set(VPTS_CSV_V1.columns) - {"radar", "source_file"}
+    assert set(got.values()) == {3}
 
 
 @pytest.mark.parametrize(

@@ -134,34 +134,6 @@ def test_empty_input(spark):
     assert tuple(df.columns) == VPTS_CSV_V1.columns
 
 
-def test_validate_order_guard_and_per_file(spark, tmp_path):
-    """validate_vpts_order refuses table-scale inputs for the global
-    one-task check and offers a parallel per-file mode (VERDICT r5
-    watch-point)."""
-    import pytest
-
-    from vptstools_spark.operators.vpts import validate_vpts_order
-
-    rows = [("r1", f"2024-01-01T{h:02d}:00:00Z", str(h * 100), "a.h5")
-            for h in range(10)]
-    df = spark.createDataFrame(
-        rows, "radar string, datetime string, height string, source_file string"
-    )
-    assert validate_vpts_order(df) == 0
-    with pytest.raises(ValueError, match="one-task"):
-        validate_vpts_order(df, max_rows=5)
-    # per-file mode: write two files, one sorted, one inverted
-    p = str(tmp_path / "files")
-    df.coalesce(1).write.mode("overwrite").csv(p + "/f1", header=True)
-    spark.createDataFrame(
-        list(reversed(rows)),
-        "radar string, datetime string, height string, source_file string",
-    ).coalesce(1).write.mode("overwrite").csv(p + "/f2", header=True)
-    back = spark.read.option("header", True).csv(p + "/f*")
-    n_bad = validate_vpts_order(back, per_file=True)
-    assert n_bad == 9  # every adjacent pair in the reversed file inverts
-
-
 def _named_transform(path):
     return "renamed_" + os.path.basename(path)
 

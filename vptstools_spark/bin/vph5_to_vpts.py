@@ -86,9 +86,8 @@ def run(
             f"Applying the vpts conversion to all files within {path_folder}. "
             "Ignoring the modified date of the files."
         )
-        names = glob.glob(
-            os.path.join(h5_root, path_folder, "**", "*.h5"), recursive=True
-        ) + glob.glob(os.path.join(h5_root, path_folder, "*.h5"))
+        # "**" matches no directory too, so this lists the folder's own files
+        names = glob.glob(os.path.join(h5_root, path_folder, "**", "*.h5"), recursive=True)
         if not names:
             raise click.ClickException(
                 f"No h5 files could be found in the current path "

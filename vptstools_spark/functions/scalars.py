@@ -72,14 +72,10 @@ def check_source_file(source_file: Column, regex: str) -> Column:
     """Guard source_file against path traversal
     (reference: src/vptstools/vpts_csv.py:97-129, regex at :241).
 
-    The reference raises per profile; at scale we surface violations as NULL
-    plus a boolean you can fail the job on (see operators/vpts.py).
+    The reference raises per profile; at scale we surface violations as NULL,
+    which ``validate_vpts``' ``source_file_safe`` rule counts.
     """
     return F.when(source_file.rlike(regex), source_file)
-
-
-def source_file_is_valid(source_file: Column, regex: str) -> Column:
-    return source_file.rlike(regex)
 
 
 def source_str_to_map(source: Column) -> Column:

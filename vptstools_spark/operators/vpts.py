@@ -12,6 +12,11 @@ already, rendered bit-exact with CPython `repr` where the ODIM file is
 decoded (`sources.odim.render_double`; the reference renders via numpy
 `.tolist()` → pandas `to_csv`, vpts.py:58-63, which Java's
 `Double.toString` does not reproduce).
+
+Validation (`validate_vpts`) reads its rules from the version's vendored
+frictionless Table Schema, the same file `schemas.VptsCsvSpec` takes its
+columns from, or from a descriptor the caller supplies, and runs them as one
+Spark aggregate.
 """
 
 from __future__ import annotations
@@ -28,13 +33,13 @@ from vptstools_spark.functions.scalars import (
     datetime_to_proper8601,
     int_to_nodata,
     round6,
-    source_file_is_valid,
 )
 from vptstools_spark.schemas import (
     STATE_NODATA,
     STATE_UNDETECT,
     VptsCsvSpec,
     get_vpts_version,
+    load_vendored_descriptor,
 )
 
 
@@ -121,8 +126,8 @@ def vp(
     ``source_file`` is resolved on the driver by ``resolve_source_file``."""
     from vptstools_spark.sources.odim import read_vp_files
 
-    profiles = read_vp_files(
-        spark, file_path, source_file=resolve_source_file(file_path, source_file), on_error="fail"
+    profiles = read_vp_files(spark, file_path, on_error="fail").withColumn(
+        "source_file", F.lit(resolve_source_file(file_path, source_file))
     )
     return to_vpts_table(profiles, vpts_csv_version)
 
@@ -170,218 +175,75 @@ def vpts_to_csv(df: DataFrame, path: str) -> None:
     shutil.rmtree(tmp)
 
 
-def load_vendored_descriptor(vpts_csv_version: str = "v1.0") -> dict:
-    """The vendored frictionless Table Schema for a VPTS CSV version
-    (vptstools_spark/resources/) — the no-network stand-in for the
-    reference's remote fetch (src/vptstools/vpts.py:320-343, which reads
-    raw.githubusercontent.com/aloftdata/vpts-csv/<version>/...). Swap the
-    file for the canonical download where network exists; the parity
-    check below is format-compatible with the real descriptor."""
-    import json as _json
-    import os as _os
-
-    p = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-        "resources",
-        f"vpts_csv_{vpts_csv_version}_table_schema.json",
-    )
-    if not _os.path.exists(p):
-        raise FileNotFoundError(
-            f"no vendored Table Schema for VPTS CSV {vpts_csv_version!r} "
-            f"(expected {p}); vendor the published descriptor there"
-        )
-    with open(p) as fh:
-        return _json.load(fh)
-
-
-def descriptor_field_rules(
-    descriptor: dict,
-) -> dict[str, tuple[str, bool, float | None, float | None]]:
-    """Project a frictionless Table Schema descriptor onto the engine's
-    rule shape {col: (kind, required, min, max)} — the common ground on
-    which `check_descriptor_parity` compares."""
-    out = {}
-    for f in descriptor.get("fields", []):
-        cons = f.get("constraints") or {}
-        out[f["name"]] = (
-            f.get("type", "string"),
-            bool(cons.get("required", False)),
-            cons.get("minimum"),
-            cons.get("maximum"),
-        )
-    return out
-
-
-def check_descriptor_parity(
-    descriptor: dict | None = None, vpts_csv_version: str = "v1.0"
-) -> list[str]:
-    """Mechanical drift detector between a (vendored or downloaded)
-    frictionless Table Schema and the engine's native constraint set
-    (schemas.V1_FIELD_RULES + the version spec): returns a list of
-    mismatch descriptions — empty means the Spark validator enforces
-    exactly the descriptor's field/constraint list. A future VPTS CSV
-    v2 whose descriptor gains/renames/re-bounds a field is caught here
-    before the validator silently under-checks (VERDICT r6 #7;
-    reference behavior: src/vptstools/vpts.py:297-343 delegates to
-    frictionless against the published schema)."""
-    from vptstools_spark.schemas import V1_FIELD_RULES
-
-    desc = descriptor or load_vendored_descriptor(vpts_csv_version)
-    spec = get_vpts_version(vpts_csv_version)
-    problems: list[str] = []
-    desc_rules = descriptor_field_rules(desc)
-    desc_order = [f["name"] for f in desc.get("fields", [])]
-    if desc_order != list(spec.columns):
-        problems.append(
-            f"column order differs: descriptor {desc_order} vs spec "
-            f"{list(spec.columns)}"
-        )
-    for name in sorted(set(desc_rules) | set(V1_FIELD_RULES)):
-        if name not in V1_FIELD_RULES:
-            problems.append(f"descriptor field {name!r} has no engine rule")
-            continue
-        if name not in desc_rules:
-            problems.append(f"engine rule {name!r} absent from descriptor")
-            continue
-        dk, dr, dmn, dmx = desc_rules[name]
-        ek, er, emn, emx = V1_FIELD_RULES[name]
-        if dk != ek:
-            problems.append(f"{name}: type {dk!r} != engine {ek!r}")
-        if dr != er:
-            problems.append(f"{name}: required {dr} != engine {er}")
-        for label, d, e in (("minimum", dmn, emn), ("maximum", dmx, emx)):
-            if (d is None) != (e is None) or (
-                d is not None and float(d) != float(e)
-            ):
-                problems.append(f"{name}: {label} {d} != engine {e}")
-    # per-field missingValues ["", "NaN"] must mark exactly the spec's
-    # tri-state measurement columns
-    desc_nan = {
-        f["name"]
-        for f in desc.get("fields", [])
-        if "NaN" in (f.get("missingValues") or [])
-    }
-    if desc_nan != set(spec.measurement_columns):
-        problems.append(
-            "NaN-missing fields differ: descriptor "
-            f"{sorted(desc_nan)} vs spec {sorted(spec.measurement_columns)}"
-        )
-    pat = next(
-        (
-            (f.get("constraints") or {}).get("pattern")
-            for f in desc.get("fields", [])
-            if f["name"] == "source_file"
-        ),
-        None,
-    )
-    if pat is not None and pat != spec.source_file_regex:
-        problems.append(
-            f"source_file pattern {pat!r} != engine {spec.source_file_regex!r}"
-        )
-    return problems
-
-
 def validate_vpts(
     df: DataFrame,
     vpts_csv_version: str = "v1.0",
     descriptor: dict | None = None,
 ) -> DataFrame:
-    """Schema-conformance check K5: the FULL VPTS CSV v1.0 Table Schema
-    re-expressed as Spark constraints (reference delegates to frictionless
-    against the published vpts-csv v1.0 schema, src/vptstools/vpts.py:297-343;
-    rules encoded in schemas.V1_FIELD_RULES).
+    """Schema-conformance check K5: a frictionless Table Schema — the
+    version's vendored one unless ``descriptor`` is given — expressed as
+    Spark constraints (the reference validates with frictionless against the
+    published vpts-csv schema, src/vptstools/vpts.py:297-343).
 
-    Per column: required / type (number, strictly-integral integer,
-    TRUE/FALSE boolean, ISO-8601 datetime) / range (dd∈[0,360],
-    lat∈[-90,90], lon∈[-180,180], non-negative counts and magnitudes), with
-    tri-state missing cells ("" everywhere, "NaN" on measurement columns
-    only) exempt — mirroring the schema's missingValues. File sort order is
-    a separate check (`validate_vpts_order`) because a DataFrame carries no
-    row order.
+    Per field: ``{name}_required``; the type rule of its ``type`` (number,
+    strictly-integral integer: ``{name}_type``; ISO-8601 datetime:
+    ``{name}_iso8601``; TRUE/FALSE boolean: ``{name}_bool``); ``{name}_range``
+    from its ``minimum``/``maximum``; and ``{name}_safe`` from its
+    ``pattern``, where a NULL cell (the guard's rendering of an unsafe
+    ``source_file``) is a violation too. A cell equal to one of the field's
+    ``missingValues`` (else the schema's) is exempt from the type and range
+    rules. ``columns_present`` fires when a schema field is absent from
+    ``df``. File sort order is a separate check (`validate_vpts_order`)
+    because a DataFrame carries no row order.
 
     Returns a DataFrame of (rule, n_violations); empty ⇒ valid. All rules
     evaluate in ONE aggregate pass over the data — no driver-side collect,
     no per-rule scans.
     """
-    from vptstools_spark.schemas import V1_FIELD_RULES
-
-    if descriptor is not None:
-        # caller supplied a Table Schema (vendored or downloaded): refuse
-        # to validate with rules that don't match it — silent
-        # under-checking against a drifted standard is the failure mode
-        # the reference avoids by always fetching the schema it validates
-        # against (src/vptstools/vpts.py:297-343)
-        drift = check_descriptor_parity(descriptor, vpts_csv_version)
-        if drift:
-            raise ValueError(
-                "engine constraint set does not match the supplied "
-                "descriptor:\n  " + "\n  ".join(drift)
-            )
-    spec = get_vpts_version(vpts_csv_version)
-    measurements = set(spec.measurement_columns)
+    schema = descriptor or load_vendored_descriptor(get_vpts_version(vpts_csv_version).version)
+    fields = [f for f in schema["fields"] if f["name"] in df.columns]
     checks: list[tuple[str, Column]] = [
-        ("columns_present", F.lit(0) if set(spec.columns) <= set(df.columns) else F.lit(1)),
-        (
-            "datetime_iso8601",
-            (~F.col("datetime").rlike(r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}Z$")).cast("int"),
-        ),
-        (
-            "gap_bool",
-            (~(F.col("gap").isin("TRUE", "FALSE") | F.col("gap").isNull())).cast("int"),
-        ),
-        (
-            # NULL source_file counts as a violation: check_source_file nulls
-            # traversal-unsafe paths, so they must surface here
-            "source_file_safe",
-            (
-                F.col("source_file").isNull()
-                | ~source_file_is_valid(F.col("source_file"), spec.source_file_regex)
-            ).cast("int"),
-        ),
+        ("columns_present", F.lit(len(fields) < len(schema["fields"]))),
     ]
-    for name, (kind, required, lo, hi) in V1_FIELD_RULES.items():
-        if name not in df.columns:
-            continue
+    for field in fields:
+        name, kind = field["name"], field.get("type", "string")
+        constraints = field.get("constraints") or {}
         col = F.col(name)
-        # tri-state missingness: "" (nodata) everywhere; "NaN" (undetect)
-        # only on measurement columns — elsewhere a literal NaN is a type
-        # violation, which the cast checks below surface
-        missing = col.isNull() | (col == "")
-        if name in measurements:
-            missing = missing | (col == "NaN")
-        if required:
-            checks.append((f"{name}_required", missing.cast("int")))
-        if kind in ("number", "integer"):
+        missing = col.isNull()
+        for value in field.get("missingValues", schema.get("missingValues", [""])):
+            missing = missing | (col == value)
+        if constraints.get("required"):
+            checks.append((f"{name}_required", missing))
+        if kind == "datetime":
+            checks.append((f"{name}_iso8601", ~missing & ~col.rlike(r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}Z$")))
+        elif kind == "boolean":
+            checks.append((f"{name}_bool", ~missing & ~col.isin("TRUE", "FALSE")))
+        elif kind in ("number", "integer"):
             # try_cast, not cast: ANSI mode (Spark 4 default) aborts the job
             # on the first malformed cell — the validator must COUNT them
-            typ = "int" if kind == "integer" else "double"
-            bad_type = ~missing & col.try_cast(typ).isNull()
+            v = col.try_cast("double")
             if kind == "integer":
                 # 12.5 casts to int fine in Spark (truncates) — reject
                 # non-integral text explicitly
-                bad_type = bad_type | (~missing & ~col.rlike(r"^-?\d+$"))
+                bad_type = col.try_cast("int").isNull() | ~col.rlike(r"^-?\d+$")
             else:
-                # try_cast parses literal "NaN"/"Infinity" as doubles; on a
-                # NON-measurement column those are type violations (the
-                # schema's NaN missing-value applies to measurements only)
-                bad_type = bad_type | (~missing & F.isnan(col.try_cast("double")))
-            checks.append((f"{name}_type", bad_type.cast("int")))
+                # try_cast parses literal "NaN"/"Infinity" as doubles; where
+                # "NaN" is not a missing value they are type violations
+                bad_type = v.isNull() | F.isnan(v)
+            checks.append((f"{name}_type", ~missing & bad_type))
+            lo, hi = constraints.get("minimum"), constraints.get("maximum")
             if lo is not None or hi is not None:
-                v = col.try_cast("double")
                 in_range = F.lit(True)
                 if lo is not None:
                     in_range = in_range & (v >= F.lit(float(lo)))
                 if hi is not None:
                     in_range = in_range & (v <= F.lit(float(hi)))
-                checks.append(
-                    (
-                        f"{name}_range",
-                        (~missing & v.isNotNull() & ~F.isnan(v) & ~in_range).cast("int"),
-                    )
-                )
-    agg = df.agg(
-        *[F.sum(expr).alias(name) for name, expr in checks]
-    )
+                checks.append((f"{name}_range", ~missing & v.isNotNull() & ~F.isnan(v) & ~in_range))
+        if "pattern" in constraints:
+            checks.append(
+                (f"{name}_safe", col.isNull() | ~col.rlike(constraints["pattern"]))
+            )
+    agg = df.agg(*[F.sum(expr.cast("int")).alias(name) for name, expr in checks])
     long = agg.selectExpr(
         "stack({n}, {pairs}) as (rule, n_violations)".format(
             n=len(checks),
@@ -391,27 +253,15 @@ def validate_vpts(
     return long.filter(F.col("n_violations") > 0)
 
 
-def validate_vpts_order(
-    df: DataFrame,
-    vpts_csv_version: str = "v1.0",
-    per_file: bool = False,
-    max_rows: int = 5_000_000,
-) -> int:
+def validate_vpts_order(df: DataFrame, vpts_csv_version: str = "v1.0") -> int:
     """Sort-order rule of the v1.0 schema: rows ordered by (radar, datetime,
     height::int, source_file). Returns the count of adjacent inversions in
     the DataFrame's current row order (0 ⇒ sorted).
 
     Row order is taken from ``monotonically_increasing_id`` — faithful to
-    file order for CSV reads (partition ids follow file offsets). The
-    default check windows over that id GLOBALLY — a one-task sort — which
-    is right for its target (an individual published VPTS file) and wrong
-    for a fact table; since the API accepts any DataFrame, a `max_rows`
-    ceiling (one count job) refuses inputs past file scale with guidance
-    instead of silently serializing the lake through one task (VERDICT
-    r5 watch-point). `per_file=True` is the whole-lake audit mode:
-    windows partition by `input_file_name()`, checking each file's
-    internal order in parallel (cross-file ordering is per-file published
-    data's contract, not a property to validate)."""
+    file order for CSV reads (partition ids follow file offsets). The check
+    windows over that id globally, a one-task sort, which suits its target:
+    one published VPTS file."""
     from pyspark.sql import Window
 
     spec = get_vpts_version(vpts_csv_version)
@@ -421,29 +271,6 @@ def validate_vpts_order(
             for name, typ in spec.sort
         ]
     )
-    if per_file:
-        flagged = df.select(key.alias("_k"), F.input_file_name().alias("_f"))
-        flagged = flagged.withColumn(
-            "_bad",
-            (
-                F.lag("_k").over(
-                    Window.partitionBy("_f").orderBy(
-                        F.monotonically_increasing_id()
-                    )
-                )
-                > F.col("_k")
-            ).cast("int"),
-        )
-        return flagged.agg(F.sum("_bad")).first()[0] or 0
-    n = df.count()
-    if n > max_rows:
-        raise ValueError(
-            f"validate_vpts_order's global-order check is a one-task sort; "
-            f"input has {n} rows (> max_rows={max_rows}). Use "
-            "per_file=True for a whole-lake audit (per-file windows, "
-            "parallel), or raise max_rows explicitly for a known-small "
-            "input."
-        )
     w = Window.orderBy(F.monotonically_increasing_id())
     flagged = df.select(key.alias("_k")).withColumn(
         "_bad", (F.lag("_k").over(w) > F.col("_k")).cast("int")

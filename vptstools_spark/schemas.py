@@ -2,9 +2,14 @@
 
 The reference pins the output schema with one class per exchange-standard
 version (reference: src/vptstools/vpts_csv.py:240-295, registry at 142-161).
-Here a version is *data*: a ``VptsCsvSpec`` describing column order, logical
-types, sentinel renderings and sort keys. Catalyst expressions are built from
-the spec at plan time (see operators/vpts.py) — no subclass hierarchy needed.
+Here a version is *data*, stated once: its vendored frictionless Table
+Schema (``resources/vpts_csv_<version>_table_schema.json``, the reference's
+published descriptor) gives each column's name, order, type, constraints and
+missing values, and a ``VptsCsvSpec`` adds only what the schema does not say
+— the sentinel renderings, the sort keys and the vcp nodata values. Catalyst
+expressions are built from the spec at plan time (see operators/vpts.py), and
+``validate_vpts`` reads its rules from the same schema — no subclass
+hierarchy and no second copy of the column list.
 
 Tri-state cell semantics (reference: src/vptstools/vpts.py:17-18,53-66):
 every measurement is exactly one of value | nodata | undetect. Internally we
@@ -20,7 +25,10 @@ Catalyst cast reproduces.
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass
+from functools import cache
 
 from pyspark.sql import types as T
 
@@ -54,113 +62,67 @@ V1_QUANTITIES: dict[str, tuple[str, T.DataType]] = {
 STATE_VALUE, STATE_NODATA, STATE_UNDETECT = 0, 1, 2
 
 
+@cache
+def load_vendored_descriptor(version: str = "v1.0") -> dict:
+    """The vendored frictionless Table Schema of a VPTS CSV version
+    (vptstools_spark/resources/), read once per process and shared: do not
+    mutate it. It stands in for the reference's remote fetch
+    (src/vptstools/vpts.py:320-343, which reads
+    raw.githubusercontent.com/aloftdata/vpts-csv/<version>/...); the
+    canonical download can replace the file where network exists."""
+    path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "resources",
+        f"vpts_csv_{version}_table_schema.json",
+    )
+    with open(path) as fh:
+        return json.load(fh)
+
+
 @dataclass(frozen=True)
 class VptsCsvSpec:
-    """One VPTS CSV exchange-standard version, as data."""
+    """One VPTS CSV exchange-standard version, as data: what its Table
+    Schema does not say. The column facts are read from the schema."""
 
     version: str
     nodata: str  # string rendering of the 'nodata' state
     undetect: str  # string rendering of the 'undetect' state
-    #: output column order (normative; reference tests/test_vpts.py:75-82)
-    columns: tuple[str, ...] = ()
     #: sort keys with the type used for comparison
     #: (reference: src/vptstools/vpts_csv.py:254-256)
     sort: tuple[tuple[str, str], ...] = ()
-    #: columns that are tri-state measurements (subset of `columns`)
-    measurement_columns: tuple[str, ...] = ()
-    #: guard regex for source_file (reference: src/vptstools/vpts_csv.py:241)
-    source_file_regex: str = ".*"
     #: vcp values treated as nodata (reference: src/vptstools/vpts_csv.py:287)
     vcp_nodata_values: tuple[str, ...] = ("NULL", "0")
+
+    @property
+    def fields(self) -> list[dict]:
+        """The Table Schema's field descriptors, in column order."""
+        return load_vendored_descriptor(self.version)["fields"]
+
+    @property
+    def columns(self) -> tuple[str, ...]:
+        """Output column order (normative; reference tests/test_vpts.py:75-82)."""
+        return tuple(f["name"] for f in self.fields)
+
+    @property
+    def measurement_columns(self) -> tuple[str, ...]:
+        """The tri-state measurements: the fields that take ``undetect`` as a
+        missing value."""
+        return tuple(f["name"] for f in self.fields if self.undetect in f.get("missingValues", ()))
+
+    @property
+    def source_file_regex(self) -> str:
+        """Guard regex for source_file: its field's ``pattern``
+        (reference: src/vptstools/vpts_csv.py:241)."""
+        (field,) = (f for f in self.fields if f["name"] == "source_file")
+        return field["constraints"]["pattern"]
 
 
 VPTS_CSV_V1 = VptsCsvSpec(
     version="v1.0",
     nodata="",
     undetect="NaN",
-    columns=(
-        "radar",
-        "datetime",
-        "height",
-        "u",
-        "v",
-        "w",
-        "ff",
-        "dd",
-        "sd_vvp",
-        "gap",
-        "eta",
-        "dens",
-        "dbz",
-        "dbz_all",
-        "n",
-        "n_dbz",
-        "n_all",
-        "n_dbz_all",
-        "rcs",
-        "sd_vvp_threshold",
-        "vcp",
-        "radar_latitude",
-        "radar_longitude",
-        "radar_height",
-        "radar_wavelength",
-        "source_file",
-    ),
     sort=(("radar", "string"), ("datetime", "string"), ("height", "int"), ("source_file", "string")),
-    measurement_columns=(
-        "u",
-        "v",
-        "w",
-        "ff",
-        "dd",
-        "sd_vvp",
-        "eta",
-        "dens",
-        "dbz",
-        "dbz_all",
-        "n",
-        "n_dbz",
-        "n_all",
-        "n_dbz_all",
-    ),
-    source_file_regex=r"^(?=^[^.\/~])(^((?!\.{2}).)*$).*$",
 )
-
-#: Per-field validation rules of the VPTS CSV v1.0 Table Schema
-#: (reference round-trips these through frictionless against the published
-#: vpts-csv v1.0 table schema, src/vptstools/vpts.py:297-343; encoded here
-#: as (kind, required, min, max) so validation runs as ONE Spark aggregate).
-#: kind ∈ {string, datetime, integer, number, boolean}. Tri-state missing
-#: values ("" nodata everywhere, "NaN" undetect on measurement columns) are
-#: exempt from type/range rules, mirroring the schema's missingValues.
-V1_FIELD_RULES: dict[str, tuple[str, bool, float | None, float | None]] = {
-    "radar": ("string", True, None, None),
-    "datetime": ("datetime", True, None, None),
-    "height": ("integer", True, 0, None),
-    "u": ("number", False, None, None),
-    "v": ("number", False, None, None),
-    "w": ("number", False, None, None),
-    "ff": ("number", False, 0, None),
-    "dd": ("number", False, 0, 360),
-    "sd_vvp": ("number", False, 0, None),
-    "gap": ("boolean", False, None, None),
-    "eta": ("number", False, 0, None),
-    "dens": ("number", False, 0, None),
-    "dbz": ("number", False, None, None),
-    "dbz_all": ("number", False, None, None),
-    "n": ("integer", False, 0, None),
-    "n_dbz": ("integer", False, 0, None),
-    "n_all": ("integer", False, 0, None),
-    "n_dbz_all": ("integer", False, 0, None),
-    "rcs": ("number", False, 0, None),
-    "sd_vvp_threshold": ("number", False, 0, None),
-    "vcp": ("integer", False, None, None),
-    "radar_latitude": ("number", False, -90, 90),
-    "radar_longitude": ("number", False, -180, 180),
-    "radar_height": ("integer", False, None, None),
-    "radar_wavelength": ("number", False, 0, None),
-    "source_file": ("string", False, None, None),
-}
 
 _VERSIONS: dict[str, VptsCsvSpec] = {"v1.0": VPTS_CSV_V1, "v1": VPTS_CSV_V1}
 

@@ -127,13 +127,14 @@ def _open_h5(content: bytes):
         return H5File(content)
 
 
-def parse_odim_bytes(name: str, content: bytes, source_file: str | None = None) -> list[dict]:
+def parse_odim_bytes(name: str, content: bytes) -> list[dict]:
     """Parse one ODIM HDF5 VP file (as bytes) into long-format row dicts.
 
     Mirrors reference BirdProfile.from_odim + to_vp explode
     (src/vptstools/vpts.py:138-177) but emits cells + state flags instead of
     an all-string frame: double measurements as ``render_double`` text,
-    counts as ints, ``gap`` as bool; every row's ``path`` is ``name``. Uses
+    counts as ints, ``gap`` as bool; every row's ``path`` is ``name`` and
+    its ``source_file`` the basename of ``name``. Uses
     h5py when installed; otherwise the bundled pure-Python HDF5 reader
     (sources/hdf5.py) — same subset API, so the byte path runs everywhere.
     """
@@ -183,7 +184,7 @@ def parse_odim_bytes(name: str, content: bytes, source_file: str | None = None) 
 
         base = {
             "path": name,
-            "source_file": source_file or name.rsplit("/", 1)[-1],
+            "source_file": name.rsplit("/", 1)[-1],
             "radar": identifiers.get("NOD", ""),
             "ts": ts,
             "rcs": _as_float(how.get("rcs_bird")),
@@ -250,7 +251,6 @@ def check_on_error(on_error: str) -> None:
 def decode_files(
     files: Iterable[tuple[str, Callable[[], bytes]]],
     on_error: str,
-    source_file: str | None = None,
 ) -> Iterator["pa.RecordBatch"]:
     """Decode ``(path, read)`` pairs, ``read()`` returning the file's bytes,
     into Arrow record batches of ``profile_long_schema()`` — the one
@@ -269,7 +269,7 @@ def decode_files(
     rows: list[dict] = []
     for n, (path, read) in enumerate(files, 1):
         try:
-            rows.extend(parse_odim_bytes(path, read(), source_file))
+            rows.extend(parse_odim_bytes(path, read()))
         except Exception as exc:  # per-file boundary: the scan goes on under warn
             if on_error == "fail":
                 raise
@@ -284,7 +284,6 @@ def decode_files(
 def read_vp_files(
     spark: SparkSession,
     path: str | list[str],
-    source_file: str | None = None,
     on_error: str = "warn",
 ) -> DataFrame:
     """Scan ODIM HDF5 VP files into the typed long-format profile DataFrame:
@@ -299,7 +298,7 @@ def read_vp_files(
             for b in batches
             for p, c in zip(b.column("path").to_pylist(), b.column("content").to_pylist())
         )
-        return decode_files(files, on_error, source_file)
+        return decode_files(files, on_error)
 
     return binary.select("path", "content").mapInArrow(parse, schema=profile_long_schema())
 
